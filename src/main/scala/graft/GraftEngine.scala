@@ -7,7 +7,7 @@ import graft.datatest.DataTester
 import graft.detect.RelationshipDetector
 import graft.render.ErdRenderer
 import graft.state.IncrementalState
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, when}
 
 /** End-to-end engine facade — the reference's main pipeline (main.py:78-306,
@@ -27,38 +27,54 @@ class GraftEngine(
     val namingRules: Seq[NamingRule] = Nil,
     val cfg: DetectionConfig = DetectionConfig()) {
 
-  lazy val catalog = ParquetCatalog.catalog(spark, dir,
+  /** The catalog's tables, driver-resident; every metadata consumer below
+    * reads this Seq.
+    */
+  lazy val tables: Seq[TableMeta] = ParquetCatalog.tables(spark, dir,
     includeViews = cfg.includeViews, includeExternal = cfg.includeExternal)
 
-  private def memoKey(kind: String): String =
-    s"$kind#${spark.sparkContext.applicationId}#${System.identityHashCode(spark)}" +
-      s"#$dir#$customRules#$namingRules#$cfg"
+  lazy val catalog: Dataset[TableMeta] = {
+    import spark.implicits._
+    spark.createDataset(tables)
+  }
+
+  // Catalog-derived results live in ParquetCatalog's memo, keyed on what
+  // they read: rules, config and the catalog's content (not its directory).
+  private def memo(kind: String, inputs: Any*)(build: => DataFrame): DataFrame =
+    ParquetCatalog.memo(spark,
+      (kind, customRules, namingRules, cfg, ParquetCatalog.contentKey(tables), inputs))(build)
 
   lazy val classifiedColumns: DataFrame =
-    GraftEngine.memo(memoKey("classify")) {
+    memo("classify") {
       ParquetCatalog.localized(
         KeyClassifier.classify(ParquetCatalog.columnRefs(catalog).toDF(), cfg))
     }
 
   /** Name-based detection only (RelationshipDetector path, §3.1 step 4).
-    * Memoized per (session, dir, config) and pinned local — the in-memory
-    * tier of the reference's relationship cache (relationship_cache.py:36-68
-    * keeps a memory map in front of the disk files; its ENHANCED_FEATURES.md
-    * advertises 50-90% faster subsequent runs). Detection is pure
-    * catalog-metadata work, so the result is a few hundred rows at most.
+    * Memoized per (session, rules, config, catalog content) and pinned
+    * local — the in-memory tier of the reference's relationship cache
+    * (relationship_cache.py:36-68 keeps a memory map in front of the disk
+    * files; its ENHANCED_FEATURES.md advertises 50-90% faster subsequent
+    * runs). Detection is pure catalog-metadata work, so the result is a few
+    * hundred rows at most.
     */
   lazy val relationships: DataFrame =
-    GraftEngine.memo(memoKey("detect")) {
+    memo("detect") {
       ParquetCatalog.localized(
         RelationshipDetector.detect(classifiedColumns, customRules, namingRules, cfg))
     }
+
+  // Data testing reads rows, so its results also key on the directory and
+  // every table's part files.
+  private def rowsRead: (String, Seq[Seq[(String, Long, Long)]]) =
+    (dir, tables.map(t => ParquetCatalog.fileStamps(t.path)))
 
   /** Enhanced path (§3.2): detection + per-edge data testing + confidence
     * adjustment, keeping edges that survive the threshold on ADJUSTED
     * confidence (enhanced_relationship_detector.py:137-251).
     */
   def enhancedRelationships(sampleFraction: Double = 1.0): DataFrame =
-    GraftEngine.memo(memoKey(s"enhanced#$sampleFraction")) {
+    memo("enhanced", sampleFraction, rowsRead) {
       enhancedRelationshipsUncached(sampleFraction, Map.empty)
     }
 
@@ -68,7 +84,7 @@ class GraftEngine(
     */
   def adaptiveSampleFractions(
       confidenceLevel: Double = 0.95, marginOfError: Double = 0.05): Map[String, Double] =
-    catalog.collect().map(t =>
+    tables.map(t =>
       t.tableName -> DataTester.cochranFraction(t.numRows, confidenceLevel, marginOfError)).toMap
 
   /** Enhanced path with the reference's adaptive sampling
@@ -77,14 +93,14 @@ class GraftEngine(
     */
   def enhancedRelationshipsAdaptive(
       confidenceLevel: Double = 0.95, marginOfError: Double = 0.05): DataFrame =
-    GraftEngine.memo(memoKey(s"enhancedAdaptive#$confidenceLevel#$marginOfError")) {
+    memo("enhancedAdaptive", confidenceLevel, marginOfError, rowsRead) {
       enhancedRelationshipsUncached(1.0, adaptiveSampleFractions(confidenceLevel, marginOfError))
     }
 
   /** The uncached enhanced pipeline; `enhancedRelationships` memoizes it per
-    * (session, dir, config) — the reference caches exactly this per-pair
-    * data-test outcome (relationship_cache.py:69-96, 24 h TTL; cross-run
-    * persistence is `state.RelationshipCache`).
+    * (session, rules, config, catalog, part files) — the reference caches
+    * exactly this per-pair data-test outcome (relationship_cache.py:69-96,
+    * 24 h TTL; cross-run persistence is `state.RelationshipCache`).
     */
   private def enhancedRelationshipsUncached(
       sampleFraction: Double, sampleFractions: Map[String, Double]): DataFrame = {
@@ -99,7 +115,7 @@ class GraftEngine(
     // over footer row counts — same bounded-work intent, partition-skew-free.
     val sizeFractions: Map[String, Double] =
       if (cfg.dataTestSampleSize <= 0) Map.empty
-      else catalog.collect().map(t => t.tableName -> (
+      else tables.map(t => t.tableName -> (
         if (t.numRows <= 0) 1.0
         else math.min(1.0, cfg.dataTestSampleSize.toDouble / t.numRows))).toMap
     val metrics = DataTester.testRelationships(
@@ -150,7 +166,6 @@ class GraftEngine(
   def renderErd(format: String, layout: String = "grid",
       showColumnTypes: Boolean = true, showNullable: Boolean = false,
       theme: String = "default"): String = {
-    val tables = catalog.collect().toSeq
     val rels = collectRelationships(relationships)
     format match {
       case "mermaid" =>
@@ -166,27 +181,28 @@ class GraftEngine(
     * edge set from `cachePath` while entries are fresher than the
     * configured TTL (`performance.cache_ttl_hours` →
     * [[graft.core.DetectionConfig.cacheTtlHours]]); otherwise re-detect and
-    * upsert. The cache file is catalog-scale (post-top-k edges), so the
-    * freshness probe is a footer-sized read.
+    * upsert. The cache file is catalog-scale (post-top-k edges), so one
+    * collect reads it whole and freshness is decided on the driver.
     */
   def relationshipsCached(
       cachePath: String, nowMs: Long = System.currentTimeMillis()): DataFrame = {
     if (!cfg.cacheEnabled) return relationships // performance.cache_enabled=false
-    val cache = graft.state.RelationshipCache.load(spark, cachePath).cache()
+    import scala.jdk.CollectionConverters._
+    val file = graft.state.RelationshipCache.load(spark, cachePath)
+    val rows = file.collect()
+    val cache = spark.createDataFrame(rows.toSeq.asJava, file.schema)
     // Serve the cache only when it is non-empty AND wholly fresh. A
     // mixed-age file (reachable via the per-pair RelationshipCache.put API)
     // must trigger re-detection: serving just the fresh subset would
     // silently drop the expired pairs from the edge set, where the
     // reference re-validates TTL per cache entry (relationship_cache.py).
-    val total = cache.count()
-    val freshCount =
-      cache.filter(col("cached_at_ms") >= nowMs - cfg.cacheTtlMs).count()
-    val out = if (freshCount == 0 || freshCount < total) {
+    if (rows.nonEmpty &&
+        rows.forall(_.getAs[Long]("cached_at_ms") >= nowMs - cfg.cacheTtlMs))
+      cache.drop("cached_at_ms")
+    else {
       graft.state.RelationshipCache.put(cache, relationships, cachePath, nowMs, cfg.cacheTtlMs)
       relationships
-    } else ParquetCatalog.localized(cache.drop("cached_at_ms"))
-    cache.unpersist()
-    out
+    }
   }
 
   /** A8 — one-row statistics over this engine's processing state and
@@ -202,8 +218,7 @@ class GraftEngine(
     val state = statePath
       .map(p => IncrementalState.loadState(spark, p))
       .filter(s => !s.isEmpty)
-      .getOrElse(IncrementalState.schemaChecksums(catalog)
-        .withColumn("processed_at_ms", lit(nowMs)))
+      .getOrElse(checksums.withColumn("processed_at_ms", lit(nowMs)))
     val base = IncrementalState.relationshipStats(state, relationships)
     cachePath.map { p =>
       base.crossJoin(graft.state.RelationshipCache.stats(
@@ -215,14 +230,13 @@ class GraftEngine(
     * (§3.2 step 1).
     */
   def changedTables(statePath: String): DataFrame =
-    IncrementalState.tablesToProcess(
-      IncrementalState.schemaChecksums(catalog),
-      IncrementalState.loadState(spark, statePath))
+    IncrementalState.tablesToProcess(checksums, IncrementalState.loadState(spark, statePath))
 
   def saveProcessedState(statePath: String, nowMs: Long): Unit =
     IncrementalState.saveState(
-      IncrementalState.schemaChecksums(catalog),
-      IncrementalState.loadState(spark, statePath), statePath, nowMs)
+      checksums, IncrementalState.loadState(spark, statePath), statePath, nowMs)
+
+  private lazy val checksums: DataFrame = IncrementalState.schemaChecksums(spark, tables)
 
   /** SQL surface: register every catalog table as a temp view and run ANSI
     * SQL against the lake — the `spark.sql` face of the engine (views are
@@ -234,34 +248,9 @@ class GraftEngine(
   }
 
   def registerViews(): Unit =
-    catalog.collect().foreach { t =>
+    tables.foreach { t =>
       spark.read.parquet(t.path).createOrReplaceTempView(t.tableName)
     }
-}
-
-object GraftEngine {
-  // Session-scoped memo for catalog-derived frames (classified columns,
-  // detected edges): the in-memory cache tier of S10. Values are
-  // LocalRelations, so memory cost is bounded by catalog size, not data.
-  // A cached frame bound to a STOPPED session (test suites start/stop many)
-  // is rebuilt, not returned — identity hash keys can recycle.
-  private val memoMap =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  // get-then-put, NOT computeIfAbsent: a build can memo() again (enhanced →
-  // relationships), and a nested compute on the same ConcurrentHashMap
-  // throws "Recursive update" whenever both keys share a hash bin. The
-  // benign race (two threads building the same value once each) is fine —
-  // the frames are immutable and derivation is deterministic.
-  private[graft] def memo(key: String)(build: => DataFrame): DataFrame = {
-    val cached = memoMap.get(key)
-    if (cached != null && !cached.sparkSession.sparkContext.isStopped) cached
-    else {
-      val built = build
-      memoMap.put(key, built)
-      built
-    }
-  }
 }
 
 /** CLI mirroring the reference's entry point options (main.py:119-151):

@@ -18,7 +18,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object SparkEntry {
 
-  import graft.analyze.KeyClassifier
   import graft.catalog.ParquetCatalog
   import graft.core.CustomRule
   import graft.datatest.DataTester
@@ -3990,54 +3989,41 @@ object SparkEntry {
   private val lakeCustomRules =
     Seq(CustomRule("events", "user_id", "customer", "c_custkey"))
 
-  // Memoized per (session, dir): the classified column catalog feeds many
-  // queries (q13-q16, q29, q31, q33, q39); classification itself is pure
-  // metadata work, so one computed LocalRelation serves them all.
-  private val classifiedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+  // The classified column catalog feeds many queries (q13-q16, q29, q31,
+  // q33, q39); the engine memoizes it in ParquetCatalog's memo.
   private def classifiedCols(s: SparkSession, dir: String): DataFrame =
-    classifiedCache.compute(
-      s"${s.sparkContext.applicationId}#${System.identityHashCode(s)}#$dir",
-      (_, cached) =>
-        if (cached != null && !cached.sparkSession.sparkContext.isStopped) cached
-        else ParquetCatalog.localized(KeyClassifier.classify(
-          ParquetCatalog.columnRefs(ParquetCatalog.catalog(s, dir)).toDF())))
+    new GraftEngine(s, dir).classifiedColumns
 
   /** Shared render-model slice for q29/q31/q39: the three ERD dialects render
-    * the SAME detected subgraph, so the scoped detect runs once per
-    * (session, dir) — mirroring the engine's renderErd path, where one
-    * collect feeds all driver-side formatters (SURVEY §3.1 steps 5-6).
+    * the SAME detected subgraph, so the scoped detect runs once per catalog
+    * — mirroring the engine's renderErd path, where one collect feeds all
+    * driver-side formatters (SURVEY §3.1 steps 5-6).
     */
   private case class RenderModel(
       tables: Seq[graft.core.TableMeta], rels: Seq[graft.core.Relationship],
       pks: Set[(String, String)], fks: Set[(String, String)])
 
-  private val renderModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, RenderModel]()
-
-  private def renderModel(s: SparkSession, dir: String): RenderModel =
-    renderModelCache.computeIfAbsent(
-      s"${System.identityHashCode(s)}#$dir",
-      _ => {
-        val scope = Set("region", "nation", "customer")
-        val cat = ParquetCatalog.catalog(s, dir).collect().toSeq
-          .filter(t => scope(t.tableName))
-        val cols = ParquetCatalog.localized(
-          classifiedCols(s, dir).filter(col("tableName").isin(scope.toSeq: _*)))
-        def keySet(flag: String) = cols.filter(col(flag))
-          .select("tableName", "columnName").collect()
-          .map(r => (r.getString(0), r.getString(1))).toSet
-        val rels = RelationshipDetector.detect(cols)
-          .filter(col("source_table").isin(scope.toSeq: _*) &&
-            col("target_table").isin(scope.toSeq: _*))
-          .collect().toSeq.map(r => graft.core.Relationship(
-            r.getAs[String]("source_table"), r.getAs[String]("source_column"),
-            r.getAs[String]("target_table"), r.getAs[String]("target_column"),
-            r.getAs[String]("relationship_type"), r.getAs[Double]("confidence"),
-            r.getAs[String]("detection_method"), r.getAs[Boolean]("is_custom")))
-        RenderModel(cat, rels, keySet("is_pk_candidate"), keySet("is_fk_candidate"))
-      })
+  private def renderModel(s: SparkSession, dir: String): RenderModel = {
+    val engine = new GraftEngine(s, dir)
+    ParquetCatalog.memo(s, ("renderModel", engine.tables)) {
+      val scope = Set("region", "nation", "customer")
+      val cat = engine.tables.filter(t => scope(t.tableName))
+      val cols = ParquetCatalog.localized(
+        engine.classifiedColumns.filter(col("tableName").isin(scope.toSeq: _*)))
+      def keySet(flag: String) = cols.filter(col(flag))
+        .select("tableName", "columnName").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSet
+      val rels = RelationshipDetector.detect(cols)
+        .filter(col("source_table").isin(scope.toSeq: _*) &&
+          col("target_table").isin(scope.toSeq: _*))
+        .collect().toSeq.map(r => graft.core.Relationship(
+          r.getAs[String]("source_table"), r.getAs[String]("source_column"),
+          r.getAs[String]("target_table"), r.getAs[String]("target_column"),
+          r.getAs[String]("relationship_type"), r.getAs[Double]("confidence"),
+          r.getAs[String]("detection_method"), r.getAs[Boolean]("is_custom")))
+      RenderModel(cat, rels, keySet("is_pk_candidate"), keySet("is_fk_candidate"))
+    }
+  }
 
   /** The detected edges the datatest queries validate (kept in sync with
     * q15's golden output).

@@ -30,14 +30,16 @@ object ParquetCatalog {
     * directory per table), bounded like the reference's MAX_RESULTS
     * (config.py:45).
     */
-  def listTables(dir: String, maxResults: Int = 1000): Seq[String] =
-    new File(dir)
-      .listFiles()
-      .toSeq
+  def listTables(dir: String, maxResults: Int = 1000): Seq[String] = {
+    val entries = new File(dir).listFiles()
+    if (entries == null)
+      throw new IllegalArgumentException(s"not a readable directory: $dir")
+    entries.toSeq
       .filter(f => f.getName.endsWith(".parquet"))
       .map(_.getName.stripSuffix(".parquet"))
       .sorted
       .take(maxResults)
+  }
 
   /** P8: table types from an optional `_tabletypes.json` sidecar in the data
     * directory (`{"name": "VIEW" | "EXTERNAL", ...}`) — the parquet-lake
@@ -59,17 +61,21 @@ object ParquetCatalog {
     }
   }
 
-  /** S2+S3: schema + stats for one table, footer-only. `types` takes the
-    * directory's sidecar map so catalog construction parses
-    * `_tabletypes.json` once, not once per table.
+  /** S2+S3: schema + stats for one table, footer-only. Memoized on what it
+    * reads — the part files' (name, length, mtime) and the table's type — so
+    * an in-place rewrite re-reads only the rewritten table's footers.
+    * `types` takes the directory's sidecar map so catalog construction
+    * parses `_tabletypes.json` once, not once per table.
     */
   def tableMeta(spark: SparkSession, dir: String, name: String,
       types: Map[String, String]): TableMeta = {
     val path = s"$dir/$name.parquet"
-    val schema = spark.read.parquet(path).schema
-    val (rows, bytes) = footerStats(path)
-    TableMeta(name, path, types.getOrElse(name, "TABLE"),
-      toColumnMeta(schema), rows, bytes)
+    val tableType = types.getOrElse(name, "TABLE")
+    memo(spark, ("tableMeta", path, tableType, fileStamps(path))) {
+      val parts = partFiles(path)
+      TableMeta(name, path, tableType, toColumnMeta(spark.read.parquet(path).schema),
+        footerRows(parts), parts.map(_.length).sum)
+    }
   }
 
   def tableMeta(spark: SparkSession, dir: String, name: String): TableMeta =
@@ -112,37 +118,52 @@ object ParquetCatalog {
     }
   }
 
-  /** Row count + byte size from parquet footers; no data pages are read. */
-  private def footerStats(path: String): (Long, Long) = {
+  /** A table's parquet part files: the file itself, or a directory's
+    * `*.parquet` entries.
+    */
+  private def partFiles(path: String): Seq[File] = {
     val f = new File(path)
-    val files =
-      if (f.isDirectory) f.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
-      else Seq(f)
-    val conf = new Configuration()
-    var rows = 0L
-    var bytes = 0L
-    files.foreach { part =>
-      val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(part.getPath), conf)
-      val reader = ParquetFileReader.open(in)
-      try {
-        rows += reader.getRecordCount
-        bytes += part.length()
-      } finally reader.close()
-    }
-    (rows, bytes)
+    if (f.isDirectory) f.listFiles().filter(_.getName.endsWith(".parquet")).toSeq.sortBy(_.getName)
+    else Seq(f)
   }
 
-  // Footer metadata is immutable for a given snapshot directory; memoize
-  // per-dir so repeated catalog queries in one session skip re-reading
-  // footers (the reference's S10 in-memory cache analog for metadata).
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[TableMeta]]()
-
-  /** S4: all table schemas as a catalog Dataset. VIEW/EXTERNAL tables (per
-    * the `_tabletypes.json` sidecar) are excluded unless requested —
-    * reference include_views/include_external semantics
-    * (bigquery_connector.py:222-233, both default false).
+  /** (name, length, mtime) of each part file of the table at `path` — the
+    * memo key of anything that reads the table.
     */
+  private[graft] def fileStamps(path: String): Seq[(String, Long, Long)] =
+    partFiles(path).map(f => (f.getName, f.length, f.lastModified))
+
+  /** Row count from parquet footers; no data pages are read. */
+  private def footerRows(parts: Seq[File]): Long = {
+    val conf = new Configuration()
+    parts.map { part =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(part.getPath), conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
+  }
+
+  /** S4: all table schemas, driver-resident. VIEW/EXTERNAL tables (per the
+    * `_tabletypes.json` sidecar) are excluded unless requested — reference
+    * include_views/include_external semantics (bigquery_connector.py:222-233,
+    * both default false).
+    */
+  def tables(
+      spark: SparkSession,
+      dir: String,
+      maxResults: Int = 1000,
+      includeViews: Boolean = false,
+      includeExternal: Boolean = false): Seq[TableMeta] = {
+    val types = tableTypes(dir) // one sidecar parse for the whole catalog
+    def kept(name: String): Boolean = types.getOrElse(name, "TABLE") match {
+      case "VIEW" => includeViews
+      case "EXTERNAL" => includeExternal
+      case _ => true
+    }
+    listTables(dir, maxResults).filter(kept).map(tableMeta(spark, dir, _, types))
+  }
+
+  /** [[tables]] as a catalog Dataset. */
   def catalog(
       spark: SparkSession,
       dir: String,
@@ -150,19 +171,49 @@ object ParquetCatalog {
       includeViews: Boolean = false,
       includeExternal: Boolean = false): Dataset[TableMeta] = {
     import spark.implicits._
-    val metas = metaCache.computeIfAbsent(
-      s"$dir#$maxResults",
-      _ => {
-        val types = tableTypes(dir) // one sidecar parse for the whole catalog
-        listTables(dir, maxResults).map(tableMeta(spark, dir, _, types))
-      })
-    val kept = metas.filter(t =>
-      t.tableType match {
-        case "VIEW" => includeViews
-        case "EXTERNAL" => includeExternal
-        case _ => true
-      })
-    spark.createDataset(kept)
+    spark.createDataset(tables(spark, dir, maxResults, includeViews, includeExternal))
+  }
+
+  /** What metadata-only results (classified columns, detected edges) read of
+    * a catalog: each table's name, type, columns and row count. Paths and
+    * byte sizes stay out, so a table restored to an earlier schema meets the
+    * results computed for that schema.
+    */
+  private[graft] def contentKey(tables: Seq[TableMeta]): Seq[Any] =
+    tables.map(t => (t.tableName, t.tableType, t.columns, t.numRows))
+
+  private val MemoCapacity = 2048
+
+  // The only memo of catalog-derived state: table metadata and every result
+  // derived from it (the reference's S10 in-memory cache tier). Callers key
+  // an entry on everything its result reads, so a changed input is a new key
+  // and nothing needs invalidating; stale entries age out of the
+  // access-ordered LRU. Values are catalog-scale.
+  private val memoEntries =
+    new java.util.LinkedHashMap[(SparkSession, Any), AnyRef](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(SparkSession, Any), AnyRef]): Boolean =
+        size() > MemoCapacity
+    }
+
+  /** `build`'s value memoized under (`spark`, `key`); `key` must cover every
+    * input the value reads. Never serves a stopped session.
+    */
+  private[graft] def memo[T <: AnyRef](spark: SparkSession, key: Any)(build: => T): T = {
+    val k = (spark, key)
+    val hit = memoEntries.synchronized(memoEntries.get(k))
+    if (hit != null && !spark.sparkContext.isStopped) hit.asInstanceOf[T]
+    else {
+      // built outside the lock: builds nest (detect → classify → table
+      // metadata) and run Spark jobs. Two threads may each build one value;
+      // derivation is deterministic, so either result serves.
+      val built = build
+      memoEntries.synchronized {
+        memoEntries.keySet.removeIf(_._1.sparkContext.isStopped)
+        memoEntries.put(k, built)
+      }
+      built
+    }
   }
 
   /** Materialize a small metadata frame into a LocalRelation: catalog-scale

@@ -1,6 +1,7 @@
 package graft.state
 
 import graft.core.TableMeta
+import org.apache.commons.codec.digest.DigestUtils
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -31,17 +32,20 @@ object IncrementalState {
       }
       .mkString(",")
 
-  /** Current checksums as a DataFrame (table_name, schema_hash) — computed
-    * with the engine's md5 so it can run distributed over a huge catalog.
+  /** Current checksums as a local DataFrame (table_name, schema_hash),
+    * computed on the driver: the catalog is driver-resident metadata. The
+    * hash is the md5 hex Spark's `md5` gives, so saved states stay
+    * comparable whichever side computed them.
     */
-  def schemaChecksums(catalog: Dataset[TableMeta]): DataFrame = {
-    val spark = catalog.sparkSession
+  def schemaChecksums(spark: SparkSession, tables: Seq[TableMeta]): DataFrame = {
     import spark.implicits._
-    catalog
-      .map(t => (t.tableName, canonicalSchema(t)))
-      .toDF("table_name", "canonical_schema")
-      .select(col("table_name"), md5(col("canonical_schema")).as("schema_hash"))
+    tables
+      .map(t => (t.tableName, DigestUtils.md5Hex(canonicalSchema(t))))
+      .toDF("table_name", "schema_hash")
   }
+
+  def schemaChecksums(catalog: Dataset[TableMeta]): DataFrame =
+    schemaChecksums(catalog.sparkSession, catalog.collect().toSeq)
 
   /** Load persisted state; empty-schema DataFrame when absent. */
   def loadState(spark: SparkSession, statePath: String): DataFrame =

@@ -47,6 +47,19 @@ class CatalogSpec extends SparkSpec {
     val types = ParquetCatalog.catalog(spark, dir, includeViews = true, includeExternal = true)
       .collect().map(t => t.tableName -> t.tableType).toMap
     assert(types === Map("base" -> "TABLE", "v_latest" -> "VIEW", "ext_raw" -> "EXTERNAL"))
+    // rewriting the sidecar in place re-types the tables on the next read
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(dir, "_tabletypes.json"), """{"base": "VIEW"}""")
+    assert(names(iv = false, ie = false) === Set("v_latest", "ext_raw"))
+    assert(new GraftEngine(spark, dir).tables.map(_.tableName).toSet === Set("v_latest", "ext_raw"))
+  }
+
+  test("listTables rejects a missing or non-directory path by name") {
+    val file = java.nio.file.Files.createTempFile("graft_not_a_dir", ".txt").toString
+    for (path <- Seq(s"$file.missing", file)) {
+      val e = intercept[IllegalArgumentException](ParquetCatalog.listTables(path))
+      assert(e.getMessage.contains(path))
+    }
   }
 
   test("key classification sees dotted nested keys") {

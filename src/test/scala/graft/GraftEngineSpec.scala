@@ -1,8 +1,10 @@
 package graft
 
+import java.io.File
 import java.nio.file.Files
 
 import graft.core.CustomRule
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 
 class GraftEngineSpec extends SparkSpec {
@@ -124,5 +126,79 @@ class GraftEngineSpec extends SparkSpec {
     assert(engine.changedTables(statePath).count() === 10)
     engine.saveProcessedState(statePath, nowMs = 42L)
     assert(engine.changedTables(statePath).count() === 0)
+  }
+
+  /** A two-table lake with one FK edge (orders.o_custkey → customer). */
+  private def writeLake(): String = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_drift").toString
+    Seq((1L, "ann"), (2L, "bob"), (3L, "cy")).toDF("c_custkey", "c_name")
+      .write.parquet(s"$dir/customer.parquet")
+    Seq((10L, 1L), (11L, 2L), (12L, 2L), (13L, 3L)).toDF("o_orderkey", "o_custkey")
+      .write.parquet(s"$dir/orders.parquet")
+    dir
+  }
+
+  /** Swaps a table directory in place, as an upstream writer does: the new
+    * version is written beside it, then renamed over it.
+    */
+  private def swapIn(table: String)(write: String => Unit): Unit = {
+    val tmp = s"$table.rewrite"
+    write(tmp)
+    FileUtils.deleteDirectory(new File(table))
+    assert(new File(tmp).renameTo(new File(table)))
+  }
+
+  private def drift(dir: String): Unit = {
+    val orders = s"$dir/orders.parquet"
+    swapIn(orders)(tmp => spark.read.parquet(orders)
+      .withColumn("drift_note", lit("late")).write.parquet(tmp))
+  }
+
+  private def changed(engine: GraftEngine, statePath: String): Set[String] =
+    engine.changedTables(statePath).collect().map(_.getString(0)).toSet
+
+  test("an in-place table rewrite is visible to the next engine; restoring it is a change again") {
+    val dir = writeLake()
+    val state = Files.createTempDirectory("graft_drift_state").toString + "/state.parquet"
+    val backup = Files.createTempDirectory("graft_drift_backup").toString + "/orders.parquet"
+    FileUtils.copyDirectory(new File(s"$dir/orders.parquet"), new File(backup))
+    val before = new GraftEngine(spark, dir)
+    assert(changed(before, state) === Set("customer", "orders"))
+    before.saveProcessedState(state, nowMs = 1L)
+    assert(!before.renderErd("mermaid").contains("drift_note"))
+
+    drift(dir)
+    val drifted = new GraftEngine(spark, dir)
+    assert(drifted.catalog.collect().find(_.tableName == "orders").get
+      .columns.map(_.name).contains("drift_note"))
+    assert(drifted.renderErd("mermaid").contains("drift_note"))
+    assert(changed(drifted, state) === Set("orders"))
+    drifted.saveProcessedState(state, nowMs = 2L)
+    assert(changed(new GraftEngine(spark, dir), state).isEmpty)
+
+    swapIn(s"$dir/orders.parquet")(tmp => FileUtils.copyDirectory(new File(backup), new File(tmp)))
+    val restored = new GraftEngine(spark, dir)
+    assert(changed(restored, state) === Set("orders"))
+    assert(!restored.renderErd("mermaid").contains("drift_note"))
+  }
+
+  test("catalog-derived results are shared by content: unchanged and restored lakes hit the memo") {
+    val dir = writeLake()
+    val first = new GraftEngine(spark, dir).relationships
+    assert(first.collect().map(_.getAs[String]("source_column")).toSeq === Seq("o_custkey"))
+    assert(new GraftEngine(spark, dir).relationships eq first)
+    val orders = s"$dir/orders.parquet"
+    val snapshot = Files.createTempDirectory("graft_memo_snap").toString + "/orders"
+    spark.read.parquet(orders).write.parquet(snapshot)
+
+    drift(dir)
+    val drifted = new GraftEngine(spark, dir)
+    assert(!(drifted.relationships eq first))
+    assert(drifted.classifiedColumns.filter(col("columnName") === "drift_note").count() === 1)
+
+    // restore through a rewrite (new part files), to the pre-drift schema
+    swapIn(orders)(tmp => spark.read.parquet(snapshot).write.parquet(tmp))
+    assert(new GraftEngine(spark, dir).relationships eq first)
   }
 }

@@ -4,13 +4,17 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import graft.catalog.ParquetCatalog
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, md5}
 
 class IncrementalStateSpec extends SparkSpec {
 
   test("checksum change detection: only changed tables reprocess") {
     val catalog = ParquetCatalog.catalog(spark, sf0001)
     val current = IncrementalState.schemaChecksums(catalog).cache()
+    // driver-side checksums are Spark's md5 hex, so saved states stay valid
+    val sparkMd5 = catalog.collect().map(t => t.tableName ->
+      spark.range(1).select(md5(lit(IncrementalState.canonicalSchema(t)))).head.getString(0)).toMap
+    assert(current.collect().map(r => r.getString(0) -> r.getString(1)).toMap === sparkMd5)
     val dir = Files.createTempDirectory("graft_state").toString
     val statePath = s"$dir/state.parquet"
 
