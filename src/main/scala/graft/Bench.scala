@@ -178,6 +178,9 @@ object Bench {
       // JVM-compile-cache setting (same class of effect as the JIT warmup
       // the bench already embraces), scale-neutral, and applied identically
       // at every SPARK_GRAFT_CPUS the driver measures with.
+      // GraftSession.builder() ships a 1024-entry cache sized for one warm
+      // session's working set; this suite builds its own session and keeps
+      // its own, larger setting because one pass compiles far more classes.
       .config("spark.sql.codegen.cache.maxEntries", "65536")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

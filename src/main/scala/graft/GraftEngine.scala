@@ -181,16 +181,14 @@ class GraftEngine(
     * edge set from `cachePath` while entries are fresher than the
     * configured TTL (`performance.cache_ttl_hours` →
     * [[graft.core.DetectionConfig.cacheTtlHours]]); otherwise re-detect and
-    * upsert. The cache file is catalog-scale (post-top-k edges), so one
-    * collect reads it whole and freshness is decided on the driver.
+    * upsert. The cache file is catalog-scale (post-top-k edges), so the
+    * driver reads it whole and decides freshness itself.
     */
   def relationshipsCached(
       cachePath: String, nowMs: Long = System.currentTimeMillis()): DataFrame = {
     if (!cfg.cacheEnabled) return relationships // performance.cache_enabled=false
-    import scala.jdk.CollectionConverters._
-    val file = graft.state.RelationshipCache.load(spark, cachePath)
-    val rows = file.collect()
-    val cache = spark.createDataFrame(rows.toSeq.asJava, file.schema)
+    val cache = graft.state.RelationshipCache.load(spark, cachePath) // a local frame
+    val rows = cache.collect()
     // Serve the cache only when it is non-empty AND wholly fresh. A
     // mixed-age file (reachable via the per-pair RelationshipCache.put API)
     // must trigger re-detection: serving just the fresh subset would

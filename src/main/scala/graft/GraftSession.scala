@@ -8,8 +8,23 @@ import org.apache.spark.sql.SparkSession
   * cluster where `master` comes from spark-submit. AQE stays on so join
   * strategies and partition counts re-plan at runtime (skew joins, broadcast
   * demotion/promotion) — essential at 100 TB where static estimates are wrong.
+  *
+  * A long-lived session repeats the same analyses, so its generated classes
+  * are reused only if they stay in Spark's codegen cache between requests.
+  * Spark's default of 100 entries is below one pass's working set (about 165
+  * classes for a corpus curation pass, about 300 for a minute of ERD serving
+  * with onboardings), so its LRU evicts every class before reuse and each
+  * pass recompiles everything. [[CodegenCacheEntries]] holds both working
+  * sets with headroom and bounds the heap the cache can retain. The setting
+  * is a static conf that `CodeGenerator` reads once per JVM, when it first
+  * generates code: it takes effect here because the builder sets it before
+  * any query runs, but a plain `SparkSession` that generates code first in
+  * the same JVM fixes the cache at Spark's 100-entry default. Callers may
+  * still override it with `.config(...)` on the returned builder.
   */
 object GraftSession {
+  val CodegenCacheEntries = 1024
+
   def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession
       .builder()
@@ -19,6 +34,7 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       // Catalyst extensions: approx-distinct rewrite rule (off unless
       // spark.graft.approxDistinct.enabled) + graft_dot SQL function.
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")

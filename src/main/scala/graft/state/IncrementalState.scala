@@ -2,9 +2,11 @@ package graft.state
 
 import graft.core.TableMeta
 import org.apache.commons.codec.digest.DigestUtils
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** Incremental-processing state + relationship cache (SURVEY §2.8/S9/S10,
   * §4) — the reference's IncrementalProcessor (incremental_processor
@@ -15,6 +17,9 @@ import org.apache.spark.sql.functions._
   * Table-level change detection is the catalog analog of partition pruning:
   * an anti-join of current schema checksums against stored state yields the
   * work list; unchanged tables short-circuit to their cached relationships.
+  * Both tables are catalog-scale (one row per table or per edge), so they
+  * are read, merged and written on the driver ([[LocalParquet]]) and a
+  * steady refresh runs no Spark job.
   */
 object IncrementalState {
 
@@ -47,9 +52,11 @@ object IncrementalState {
   def schemaChecksums(catalog: Dataset[TableMeta]): DataFrame =
     schemaChecksums(catalog.sparkSession, catalog.collect().toSeq)
 
-  /** Load persisted state; empty-schema DataFrame when absent. */
+  /** Load persisted state as a local frame; empty-schema DataFrame when
+    * absent.
+    */
   def loadState(spark: SparkSession, statePath: String): DataFrame =
-    if (new java.io.File(statePath).exists()) spark.read.parquet(statePath)
+    if (new java.io.File(statePath).exists()) LocalParquet.read(spark, statePath)
     else {
       import spark.implicits._
       Seq.empty[(String, String, Long)].toDF("table_name", "schema_hash", "processed_at_ms")
@@ -57,12 +64,17 @@ object IncrementalState {
 
   /** Changed-or-new tables: current checksums anti-joined against state on
     * (table_name, schema_hash) — the incremental gate
-    * (incremental_processor.py:116-136).
+    * (incremental_processor.py:116-136). Both sides are collected and the
+    * anti-join runs on the driver; as with a join, a null key never matches.
     */
-  def tablesToProcess(current: DataFrame, state: DataFrame): DataFrame =
-    current.join(
-      state.select("table_name", "schema_hash"),
-      Seq("table_name", "schema_hash"), "left_anti")
+  def tablesToProcess(current: DataFrame, state: DataFrame): DataFrame = {
+    def key(r: Row, t: Int, h: Int): Option[(String, String)] =
+      if (r.isNullAt(t) || r.isNullAt(h)) None else Some((r.getString(t), r.getString(h)))
+    val seen = state.select("table_name", "schema_hash").collect().flatMap(key(_, 0, 1)).toSet
+    val (t, h) = (current.schema.fieldIndex("table_name"), current.schema.fieldIndex("schema_hash"))
+    val rows = current.collect().filterNot(r => key(r, t, h).exists(seen))
+    current.sparkSession.createDataFrame(rows.toSeq.asJava, current.schema)
+  }
 
   /** A8 — stats over the incremental state + relationship graph
     * (incremental_processor.py:182-204's `get_relationship_stats`), as one
@@ -88,34 +100,41 @@ object IncrementalState {
     stateAgg.crossJoin(relAgg)
   }
 
-  /** Upsert processed tables into state (last writer wins per table). */
+  /** Upsert processed tables into state: the newest entry per table wins,
+    * the current one on a tie. Merged on the driver and rewritten as one
+    * file; at a scale where the state outgrows the driver this would be a
+    * Delta upsert.
+    */
   def saveState(
       current: DataFrame, prior: DataFrame, statePath: String, nowMs: Long): Unit = {
-    val merged = current
-      .withColumn("processed_at_ms", lit(nowMs))
-      .unionByName(prior.select("table_name", "schema_hash", "processed_at_ms"))
-    val w = Window.partitionBy("table_name").orderBy(col("processed_at_ms").desc)
-    val latest = merged
-      .withColumn("rk", row_number().over(w)).filter(col("rk") === 1).drop("rk")
-    // state tables are small (one row per table): single-file rewrite is the
-    // idiomatic durable form; at catalog scale this would be a Delta upsert.
-    val tmp = statePath + ".tmp"
-    latest.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    val target = new java.io.File(statePath)
-    if (target.exists()) org.apache.commons.io.FileUtils.deleteDirectory(target)
-    new java.io.File(tmp).renameTo(target)
+    val fresh = current.select("table_name", "schema_hash").collect()
+      .map(r => Row(r.getString(0), r.getString(1), nowMs))
+    val old = prior.select("table_name", "schema_hash", "processed_at_ms").collect()
+    val latest = (fresh ++ old).toSeq
+      .sortBy(_.getLong(2))(Ordering[Long].reverse)
+      .distinctBy(_.getString(0))
+    LocalParquet.write(statePath, StateSchema, latest)
   }
+
+  private val StateSchema = StructType(Seq(
+    StructField("table_name", StringType), StructField("schema_hash", StringType),
+    StructField("processed_at_ms", LongType)))
 }
 
 /** Cross-run relationship cache keyed by table pair with a TTL
   * (relationship_cache.py:28: 24 h default), as a keyed parquet table:
   * `get` = TTL filter + pair lookup, `put` = last-writer-wins upsert.
+  *
+  * The cache is catalog-scale (post-top-k edges), so `get` and `put` apply
+  * the TTL and the newest-per-edge merge to collected rows on the driver.
+  * As a Column predicate over a local frame, `nowMs` would be inlined into
+  * a freshly compiled class on every call that no later request can reuse.
   */
 object RelationshipCache {
   val DefaultTtlMs: Long = 24L * 3600 * 1000
 
   def load(spark: SparkSession, path: String): DataFrame =
-    if (new java.io.File(path).exists()) spark.read.parquet(path)
+    if (new java.io.File(path).exists()) LocalParquet.read(spark, path)
     else {
       import spark.implicits._
       Seq.empty[(String, String, String, String, String, Double, String, Boolean, Long)]
@@ -125,10 +144,12 @@ object RelationshipCache {
 
   /** Fresh cached relationships for the given pairs (TTL-filtered). */
   def get(cache: DataFrame, pairs: DataFrame, nowMs: Long,
-      ttlMs: Long = DefaultTtlMs): DataFrame =
-    cache
-      .filter(col("cached_at_ms") >= nowMs - ttlMs)
+      ttlMs: Long = DefaultTtlMs): DataFrame = {
+    val ts = cache.schema.fieldIndex("cached_at_ms")
+    val live = cache.collect().filter(_.getLong(ts) >= nowMs - ttlMs)
+    cache.sparkSession.createDataFrame(live.toSeq.asJava, cache.schema)
       .join(pairs, Seq("source_table", "target_table"), "left_semi")
+  }
 
   /** A8 — cache statistics (relationship_cache.py:142-156's
     * `get_cache_stats`): entry count split into fresh vs TTL-expired at
@@ -144,21 +165,22 @@ object RelationshipCache {
         .as("n_cache_expired"))
       .withColumn("cache_ttl_hours", lit(ttlMs / (3600L * 1000)))
 
-  /** Upsert: newest entry per edge wins; stale rows (TTL-expired) dropped. */
+  /** Upsert: newest entry per edge wins (the new entry on a tie); stale
+    * rows (TTL-expired) dropped.
+    */
   def put(cache: DataFrame, fresh: DataFrame, path: String, nowMs: Long,
       ttlMs: Long = DefaultTtlMs): Unit = {
-    val merged = fresh.withColumn("cached_at_ms", lit(nowMs))
-      .unionByName(cache)
-      .filter(col("cached_at_ms") >= nowMs - ttlMs)
-    val w = Window
-      .partitionBy("source_table", "source_column", "target_table", "target_column")
-      .orderBy(col("cached_at_ms").desc)
-    val latest = merged.withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1).drop("rk")
-    val tmp = path + ".tmp"
-    latest.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    val target = new java.io.File(path)
-    if (target.exists()) org.apache.commons.io.FileUtils.deleteDirectory(target)
-    new java.io.File(tmp).renameTo(target)
+    val schema = StructType(
+      (fresh.schema.fields :+ StructField("cached_at_ms", LongType)).map(_.copy(nullable = true)))
+    val ts = schema.fieldIndex("cached_at_ms")
+    val edge = Seq("source_table", "source_column", "target_table", "target_column")
+      .map(schema.fieldIndex)
+    val merged = fresh.collect().map(r => Row.fromSeq(r.toSeq :+ nowMs)) ++
+      cache.select(schema.fieldNames.toSeq.map(col): _*).collect()
+    val rows = merged.toSeq
+      .filter(_.getLong(ts) >= nowMs - ttlMs)
+      .sortBy(_.getLong(ts))(Ordering[Long].reverse)
+      .distinctBy(r => edge.map(r.get))
+    LocalParquet.write(path, schema, rows)
   }
 }

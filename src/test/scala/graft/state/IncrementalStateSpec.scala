@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import graft.catalog.ParquetCatalog
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions.{col, lit, md5}
 
 class IncrementalStateSpec extends SparkSpec {
@@ -68,6 +69,45 @@ class IncrementalStateSpec extends SparkSpec {
     RelationshipCache.put(RelationshipCache.load(spark, path), rel2, path, nowMs = 3000L)
     val latest = RelationshipCache.get(RelationshipCache.load(spark, path), pairs, nowMs = 4000L)
     assert(latest.head.getAs[Double]("confidence") === 1.0)
+  }
+
+  test("relationship cache: put and get at a new nowMs compile no new classes") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft_cache_codegen").toString + "/cache.parquet"
+    val rel = Seq(("a", "x", "b", "y", "many_to_one", 0.9, "exact_match", false))
+      .toDF("source_table", "source_column", "target_table", "target_column",
+        "relationship_type", "confidence", "detection_method", "is_custom")
+    val pairs = Seq(("a", "b")).toDF("source_table", "target_table")
+    def putGet(nowMs: Long): Unit = {
+      RelationshipCache.put(RelationshipCache.load(spark, path), rel, path, nowMs)
+      val got = RelationshipCache.get(RelationshipCache.load(spark, path), pairs, nowMs).collect()
+      assert(got.map(_.getAs[Long]("cached_at_ms")).toSeq === Seq(nowMs))
+    }
+    putGet(1000L) // warm-up
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    putGet(1000L + 2 * RelationshipCache.DefaultTtlMs)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles)
+  }
+
+  test("state files: the driver-side parquet reads what Spark wrote and Spark reads what it wrote") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_local_parquet").toString
+    val df = Seq(
+      (Some("a"), Some(1L), Some(0.5), Some(true)),
+      (None, None, None, None),
+      (Some("é"), Some(Long.MinValue), Some(-0.0), Some(false)))
+      .toDF("s", "l", "d", "b")
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    val nullable = org.apache.spark.sql.types.StructType(df.schema.map(_.copy(nullable = true)))
+    df.coalesce(1).write.parquet(s"$dir/spark")
+    val local = LocalParquet.read(spark, s"$dir/spark")
+    assert(local.schema === nullable)
+    assert(rows(local) === rows(df))
+    LocalParquet.write(s"$dir/local", df.schema, df.collect().toSeq)
+    val back = spark.read.parquet(s"$dir/local")
+    assert(back.schema === nullable)
+    assert(rows(back) === rows(df))
+    assert(!new java.io.File(s"$dir/local.tmp").exists())
   }
 
   test("A8: relationshipStats aggregates state + typed edge breakdown into one row") {
