@@ -6,7 +6,7 @@ import graft.core._
 import graft.datatest.DataTester
 import graft.detect.RelationshipDetector
 import graft.render.ErdRenderer
-import graft.state.IncrementalState
+import graft.state.{IncrementalState, RelationshipCache}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, when}
 
@@ -40,7 +40,7 @@ class GraftEngine(
 
   // Catalog-derived results live in ParquetCatalog's memo, keyed on what
   // they read: rules, config and the catalog's content (not its directory).
-  private def memo(kind: String, inputs: Any*)(build: => DataFrame): DataFrame =
+  private def memo[T <: AnyRef](kind: String, inputs: Any*)(build: => T): T =
     ParquetCatalog.memo(spark,
       (kind, customRules, namingRules, cfg, ParquetCatalog.contentKey(tables), inputs))(build)
 
@@ -145,17 +145,16 @@ class GraftEngine(
       .filter(col("adjusted_confidence") >= cfg.minConfidence)
   }
 
-  private def collectRelationships(df: DataFrame): Seq[Relationship] =
-    df.collect().toSeq.map(r => Relationship(
-      r.getAs[String]("source_table"), r.getAs[String]("source_column"),
-      r.getAs[String]("target_table"), r.getAs[String]("target_column"),
-      r.getAs[String]("relationship_type"), r.getAs[Double]("confidence"),
-      r.getAs[String]("detection_method"), r.getAs[Boolean]("is_custom")))
+  // What a render or a cache write reads of the detection, as driver values.
+  private lazy val detectedEdges: Seq[Relationship] =
+    memo("detectedEdges")(RelationshipCache.collectEdges(relationships))
 
-  private def keySet(flag: String): Set[(String, String)] =
-    classifiedColumns.filter(col(flag))
+  private lazy val keySets: (Set[(String, String)], Set[(String, String)]) = memo("keySets") {
+    def keySet(flag: String) = classifiedColumns.filter(col(flag))
       .select("tableName", "columnName").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
+    (keySet("is_pk_candidate"), keySet("is_fk_candidate"))
+  }
 
   /** Render the detected graph in the requested dialect (§3.1 steps 5-6).
     * `layout` applies to drawio: grid | force | hierarchical (the
@@ -166,12 +165,11 @@ class GraftEngine(
   def renderErd(format: String, layout: String = "grid",
       showColumnTypes: Boolean = true, showNullable: Boolean = false,
       theme: String = "default"): String = {
-    val rels = collectRelationships(relationships)
+    val (pks, fks) = keySets
     format match {
-      case "mermaid" =>
-        ErdRenderer.mermaid(tables, rels, keySet("is_pk_candidate"), keySet("is_fk_candidate"))
-      case "plantuml" => ErdRenderer.plantUml(tables, rels, keySet("is_pk_candidate"))
-      case "drawio"   => ErdRenderer.drawio(tables, rels, layout = layout,
+      case "mermaid"  => ErdRenderer.mermaid(tables, detectedEdges, pks, fks)
+      case "plantuml" => ErdRenderer.plantUml(tables, detectedEdges, pks)
+      case "drawio"   => ErdRenderer.drawio(tables, detectedEdges, layout = layout,
         showColumnTypes = showColumnTypes, showNullable = showNullable, theme = theme)
       case other      => throw new IllegalArgumentException(s"unknown format: $other")
     }
@@ -187,18 +185,16 @@ class GraftEngine(
   def relationshipsCached(
       cachePath: String, nowMs: Long = System.currentTimeMillis()): DataFrame = {
     if (!cfg.cacheEnabled) return relationships // performance.cache_enabled=false
-    val cache = graft.state.RelationshipCache.load(spark, cachePath) // a local frame
-    val rows = cache.collect()
+    val cache = RelationshipCache.load(cachePath)
     // Serve the cache only when it is non-empty AND wholly fresh. A
     // mixed-age file (reachable via the per-pair RelationshipCache.put API)
     // must trigger re-detection: serving just the fresh subset would
     // silently drop the expired pairs from the edge set, where the
     // reference re-validates TTL per cache entry (relationship_cache.py).
-    if (rows.nonEmpty &&
-        rows.forall(_.getAs[Long]("cached_at_ms") >= nowMs - cfg.cacheTtlMs))
-      cache.drop("cached_at_ms")
+    if (cache.nonEmpty && cache.forall(_.freshAt(nowMs, cfg.cacheTtlMs)))
+      RelationshipCache.edgeFrame(spark, cache.map(_.edge))
     else {
-      graft.state.RelationshipCache.put(cache, relationships, cachePath, nowMs, cfg.cacheTtlMs)
+      RelationshipCache.put(cachePath, cache, detectedEdges, nowMs, cfg.cacheTtlMs)
       relationships
     }
   }
@@ -207,34 +203,30 @@ class GraftEngine(
     * detected relationship graph (incremental_processor.py:182-204), plus
     * the relationship cache's fresh/expired split when `cachePath` is given
     * (relationship_cache.py:142-156). With no saved state the live catalog
-    * stands in (every table processed "now").
+    * stands in (every table processed "now"). Computed on the driver.
     */
   def stats(
       statePath: Option[String] = None,
       cachePath: Option[String] = None,
       nowMs: Long = System.currentTimeMillis()): DataFrame = {
-    val state = statePath
-      .map(p => IncrementalState.loadState(spark, p))
-      .filter(s => !s.isEmpty)
-      .getOrElse(checksums.withColumn("processed_at_ms", lit(nowMs)))
-    val base = IncrementalState.relationshipStats(state, relationships)
-    cachePath.map { p =>
-      base.crossJoin(graft.state.RelationshipCache.stats(
-        graft.state.RelationshipCache.load(spark, p), nowMs, cfg.cacheTtlMs))
-    }.getOrElse(base)
+    val state = statePath.map(IncrementalState.load).filter(_.nonEmpty)
+      .getOrElse(IncrementalState.checksums(tables, nowMs))
+    val cache = cachePath.toSeq.flatMap(p =>
+      RelationshipCache.stats(RelationshipCache.load(p), nowMs, cfg.cacheTtlMs))
+    IncrementalState.statsFrame(spark,
+      IncrementalState.relationshipStats(state, detectedEdges) ++ cache: _*)
   }
 
   /** Incremental gate: tables whose schema changed since the stored state
-    * (§3.2 step 1).
+    * (§3.2 step 1), as a local (table_name, schema_hash) frame.
     */
   def changedTables(statePath: String): DataFrame =
-    IncrementalState.tablesToProcess(checksums, IncrementalState.loadState(spark, statePath))
+    IncrementalState.checksumFrame(spark, IncrementalState.changed(
+      IncrementalState.checksums(tables, 0L), IncrementalState.load(statePath)))
 
   def saveProcessedState(statePath: String, nowMs: Long): Unit =
-    IncrementalState.saveState(
-      checksums, IncrementalState.loadState(spark, statePath), statePath, nowMs)
-
-  private lazy val checksums: DataFrame = IncrementalState.schemaChecksums(spark, tables)
+    IncrementalState.save(
+      statePath, IncrementalState.checksums(tables, nowMs), IncrementalState.load(statePath))
 
   /** SQL surface: register every catalog table as a temp view and run ANSI
     * SQL against the lake — the `spark.sql` face of the engine (views are

@@ -151,10 +151,12 @@ object SparkEntry {
           sum(col("o_totalprice").cast(DecimalType(18, 4))).cast("double").as("sum_price"))
     },
     // F5/S9: incremental change-detection checksums — md5 over the canonical
-    // schema string per table (engine-portable; the anti-join against stored
+    // schema string per table (engine-portable; the gate against stored
     // state is tested in IncrementalStateSpec).
     "q28_schema_checksums" -> { (s, dir) =>
-      graft.state.IncrementalState.schemaChecksums(ParquetCatalog.catalog(s, dir))
+      import graft.state.IncrementalState
+      IncrementalState.checksumFrame(s,
+        IncrementalState.checksums(ParquetCatalog.tables(s, dir), nowMs = 0L))
     },
     // A8: incremental-state + relationship-cache statistics
     // (incremental_processor.py:182-204, relationship_cache.py:142-156) as
@@ -164,19 +166,17 @@ object SparkEntry {
     // (fresh=refreshed, expired=rest) is deterministic and oracle-derivable
     // from the same first-principles detection CTEs as q15.
     "q53_state_stats" -> { (s, dir) =>
-      import graft.state.{IncrementalState, RelationshipCache}
+      import graft.state.{CachedEdge, IncrementalState, RelationshipCache}
       val t0 = 1700000000000L
-      val state = IncrementalState.schemaChecksums(ParquetCatalog.catalog(s, dir))
-        .withColumn("processed_at_ms", lit(t0))
-      // pin the (catalog-scale) edge set once: three aggregate branches
-      // reference it, and a live detect plan would re-run per branch
-      val rels = ParquetCatalog.localized(
+      val state = IncrementalState.checksums(ParquetCatalog.tables(s, dir), t0)
+      val rels = RelationshipCache.collectEdges(
         RelationshipDetector.detect(classifiedCols(s, dir), lakeCustomRules))
-      val cache = rels.withColumn("cached_at_ms",
-        when(col("confidence") >= 0.95, lit(t0 + 10L * 3600 * 1000)).otherwise(lit(t0)))
-      IncrementalState.relationshipStats(state, rels)
-        .crossJoin(RelationshipCache.stats(
-          cache, nowMs = t0 + 30L * 3600 * 1000, ttlMs = 24L * 3600 * 1000))
+      val cache = rels.map(r =>
+        CachedEdge(r, if (r.confidence >= 0.95) t0 + 10L * 3600 * 1000 else t0))
+      val cacheStats = RelationshipCache.stats(
+        cache, nowMs = t0 + 30L * 3600 * 1000, ttlMs = 24L * 3600 * 1000)
+      IncrementalState.statsFrame(s,
+        IncrementalState.relationshipStats(state, rels) ++ cacheStats: _*)
     },
     // F10/S11: ERD rendering — mermaid over a 3-table slice of the detected
     // graph, returned as a single (format, erd) row and golden-checked.
@@ -4013,14 +4013,9 @@ object SparkEntry {
       def keySet(flag: String) = cols.filter(col(flag))
         .select("tableName", "columnName").collect()
         .map(r => (r.getString(0), r.getString(1))).toSet
-      val rels = RelationshipDetector.detect(cols)
+      val rels = graft.state.RelationshipCache.collectEdges(RelationshipDetector.detect(cols)
         .filter(col("source_table").isin(scope.toSeq: _*) &&
-          col("target_table").isin(scope.toSeq: _*))
-        .collect().toSeq.map(r => graft.core.Relationship(
-          r.getAs[String]("source_table"), r.getAs[String]("source_column"),
-          r.getAs[String]("target_table"), r.getAs[String]("target_column"),
-          r.getAs[String]("relationship_type"), r.getAs[Double]("confidence"),
-          r.getAs[String]("detection_method"), r.getAs[Boolean]("is_custom")))
+          col("target_table").isin(scope.toSeq: _*)))
       RenderModel(cat, rels, keySet("is_pk_candidate"), keySet("is_fk_candidate"))
     }
   }

@@ -1,12 +1,11 @@
 package graft.state
 
-import java.io.File
-import java.nio.file.{Files, Path}
+import java.io.ByteArrayInputStream
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption}
+import java.util.UUID
 
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.commons.io.FileUtils
 import org.apache.parquet.conf.PlainParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -14,121 +13,136 @@ import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.{ColumnIOFactory, LocalInputFile, LocalOutputFile}
+import org.apache.parquet.io.{ColumnIOFactory, DelegatingSeekableInputStream, InputFile}
+import org.apache.parquet.io.{LocalOutputFile, SeekableInputStream}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, Type, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.types._
 
-/** Driver-side reads and writes of the small flat parquet tables that the
-  * incremental state and the relationship cache keep (one row per table or
-  * per edge), so a steady refresh runs no Spark job at all.
-  *
-  * A Spark job costs more than its tasks' work. Every job broadcasts its
-  * task binary in 4 MB blocks, every task serializes its result into a
-  * 1 MB buffer, a collect adds another 1 MB per partition, and a sort or
-  * hash aggregate takes a 16 MB memory page. On a driver heap of a few GB
-  * G1 allocates each of these as a humongous object, and each humongous
-  * allocation above the occupancy threshold starts a concurrent GC cycle.
-  * With a job per read and write, refresh latency would follow the
-  * collector's state and vary by up to half between otherwise equal runs.
-  * The tables are read and written here with parquet's own reader and
-  * writer, in Spark's layout: a directory of part files with optional
-  * (nullable) columns, readable by `spark.read.parquet` and able to read
-  * what Spark wrote. Columns are flat strings, longs, doubles and booleans,
-  * the types the state and the cache use.
+/** Driver-side reads and writes of the small flat parquet tables of the
+  * incremental state and the relationship cache (one row per table or per
+  * edge), so that a steady refresh runs no Spark job (ARCHITECTURE.md, "A
+  * steady refresh runs no Spark job"). Tables keep Spark's layout, a
+  * directory of part files with optional flat string, long, double and
+  * boolean columns: `spark.read.parquet` reads them, and this reads what
+  * Spark wrote.
   */
 object LocalParquet {
   // Below half of G1's smallest region, so no write buffer is humongous.
   private val PageBytes = 64 * 1024
+  // The one part file of a table written here.
+  private val Part = "part-00000.parquet"
 
-  /** The table at `path` (a part-file directory or a single file) as a
-    * local DataFrame.
+  /** The rows of the part-file directory `path`, each with its schema;
+    * empty when there is no table there yet. A `required` column that a
+    * file lacks or holds a null in fails with an error naming the file and
+    * the column. Each file is read whole through one open, so a concurrent
+    * [[write]] shows this reader the whole old table or the whole new one.
     */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val files = partFiles(path)
-    if (files.isEmpty) throw new IllegalArgumentException(s"no parquet part files under $path")
-    val tables = files.map(readFile)
-    val schema = tables.head._1
-    tables.find(_._1 != schema).foreach { case (other, _) =>
-      throw new IllegalStateException(s"part files under $path disagree on schema: $schema vs $other")
-    }
-    spark.createDataFrame(tables.flatMap(_._2).asJava, schema)
+  def read(path: String, required: Seq[String] = Nil): Seq[Row] = {
+    def once() = partFiles(path).flatMap(readFile(_, required))
+    // the first write over an earlier layout removes its files
+    try once() catch { case _: NoSuchFileException => once() }
   }
 
-  /** Replaces the table at `path` with `rows`: one part file written to a
-    * temporary directory that is then swapped in.
+  /** Replaces the table at `path` with `rows`: they go to a hidden temp
+    * file with a unique name inside the table directory, which an atomic
+    * rename moves over the table's one part file. So a concurrent reader
+    * sees the whole old table or the whole new one, two writers never share
+    * a temp file, and the last rename wins. A process crash leaves the
+    * previous table readable (plus at most a hidden temp file readers skip);
+    * a write that fails in-process removes its temp file. Nothing is
+    * fsynced, so the swap is not durable across a power loss. Files of an
+    * earlier layout (Spark's part files, `_SUCCESS`, checksums) are removed
+    * after the swap.
     */
   def write(path: String, schema: StructType, rows: Seq[Row]): Unit = {
+    val dir = Files.createDirectories(Paths.get(path))
+    val tmp = dir.resolve(s".$Part.${UUID.randomUUID()}.tmp")
     val message = Types.buildMessage()
       .addFields(schema.fields.toSeq.map(parquetField): _*).named("spark_schema")
-    val tmp = new File(path + ".tmp")
-    FileUtils.deleteDirectory(tmp)
-    Files.createDirectories(tmp.toPath)
-    val writer = ExampleParquetWriter
-      .builder(new LocalOutputFile(tmp.toPath.resolve("part-00000.parquet")))
-      .withConf(new PlainParquetConfiguration())
-      .withType(message)
-      .withCompressionCodec(CompressionCodecName.UNCOMPRESSED)
-      .withPageSize(PageBytes)
-      .withDictionaryPageSize(PageBytes)
-      .build()
     val groups = new SimpleGroupFactory(message)
-    try rows.foreach { r =>
-      val g = groups.newGroup()
-      schema.fields.zipWithIndex.foreach { case (f, i) =>
-        if (!r.isNullAt(i)) f.dataType match {
-          case StringType  => g.append(f.name, r.getString(i))
-          case LongType    => g.append(f.name, r.getLong(i))
-          case DoubleType  => g.append(f.name, r.getDouble(i))
-          case BooleanType => g.append(f.name, r.getBoolean(i))
-          case other       => unsupported(f.name, other.simpleString)
+    try {
+      val writer = ExampleParquetWriter
+        .builder(new LocalOutputFile(tmp))
+        .withConf(new PlainParquetConfiguration())
+        .withType(message)
+        .withCompressionCodec(CompressionCodecName.UNCOMPRESSED)
+        .withPageSize(PageBytes)
+        .withDictionaryPageSize(PageBytes)
+        .build()
+      try rows.foreach { r =>
+        val g = groups.newGroup()
+        schema.fields.zipWithIndex.foreach { case (f, i) =>
+          if (!r.isNullAt(i)) f.dataType match {
+            case StringType  => g.append(f.name, r.getString(i))
+            case LongType    => g.append(f.name, r.getLong(i))
+            case DoubleType  => g.append(f.name, r.getDouble(i))
+            case BooleanType => g.append(f.name, r.getBoolean(i))
+            case other       => unsupported(f.name, other.simpleString)
+          }
         }
-      }
-      writer.write(g)
-    } finally writer.close()
-    val target = new File(path)
-    FileUtils.deleteDirectory(target)
-    if (!tmp.renameTo(target)) throw new java.io.IOException(s"could not move $tmp to $target")
+        writer.write(g)
+      } finally writer.close()
+      Files.move(tmp, dir.resolve(Part), StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
+    Option(dir.toFile.listFiles()).toSeq.flatten
+      .filter(f => f.isFile && f.getName != Part && !f.getName.endsWith(".tmp"))
+      .foreach(_.delete())
   }
 
+  // The table's one part file once written here, else every visible one.
   private def partFiles(path: String): Seq[Path] = {
-    val f = new File(path)
-    if (f.isFile) Seq(f.toPath)
-    else Option(f.listFiles()).toSeq.flatten
+    val files = Option(new java.io.File(path).listFiles()).toSeq.flatten
       .filter(p => p.isFile && p.getName.endsWith(".parquet") &&
         !p.getName.startsWith("_") && !p.getName.startsWith("."))
       .sortBy(_.getName).map(_.toPath)
+    files.find(_.getFileName.toString == Part).fold(files)(Seq(_))
   }
 
-  private def readFile(file: Path): (StructType, Seq[Row]) = {
-    val reader = ParquetFileReader.open(new LocalInputFile(file))
+  private def readFile(file: Path, required: Seq[String]): Seq[Row] = {
+    val reader = ParquetFileReader.open(new BytesInputFile(Files.readAllBytes(file)))
     try {
       val message = reader.getFooter.getFileMetaData.getSchema
       val schema = StructType(message.getFields.asScala.toSeq.map(sparkField))
+      required.filterNot(schema.fieldNames.contains)
+        .foreach(c => throw new IllegalStateException(s"$file has no column $c"))
       val io = new ColumnIOFactory().getColumnIO(message)
-      val rows = mutable.ArrayBuffer[Row]()
-      var pages = reader.readNextRowGroup()
-      while (pages != null) {
+      Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null).flatMap { pages =>
         val records = io.getRecordReader(pages, new GroupRecordConverter(message))
-        var n = 0L
-        while (n < pages.getRowCount) { rows += toRow(records.read(), schema); n += 1 }
-        pages = reader.readNextRowGroup()
-      }
-      (schema, rows.toSeq)
+        Iterator.fill(pages.getRowCount.toInt)(toRow(records.read(), schema, file, required))
+      }.toVector
     } finally reader.close()
   }
 
-  private def toRow(g: Group, schema: StructType): Row =
-    Row.fromSeq(schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-      if (g.getFieldRepetitionCount(i) == 0) null
-      else f.dataType match {
+  // A file's bytes as parquet input: one open serves both the length and
+  // the content, so a file replaced mid-read cannot mix two versions.
+  private final class BytesInputFile(bytes: Array[Byte]) extends InputFile {
+    def getLength: Long = bytes.length
+    def newStream(): SeekableInputStream = {
+      val in = new ByteArrayInputStream(bytes)
+      new DelegatingSeekableInputStream(in) {
+        def getPos: Long = bytes.length - in.available()
+        def seek(p: Long): Unit = { in.reset(); in.skip(p) }
+      }
+    }
+  }
+
+  private def toRow(g: Group, schema: StructType, file: Path, required: Seq[String]): Row =
+    new GenericRowWithSchema(schema.fields.zipWithIndex.map { case (f, i) =>
+      if (g.getFieldRepetitionCount(i) == 0) {
+        if (required.contains(f.name))
+          throw new IllegalStateException(s"$file: column ${f.name} is null")
+        null
+      } else f.dataType match {
         case StringType  => g.getString(i, 0)
         case LongType    => g.getLong(i, 0)
         case DoubleType  => g.getDouble(i, 0)
         case _           => g.getBoolean(i, 0)
       }
-    })
+    }, schema)
 
   private def sparkField(t: Type): StructField = {
     val name = t.getName

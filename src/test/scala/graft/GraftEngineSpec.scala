@@ -80,17 +80,18 @@ class GraftEngineSpec extends SparkSpec {
     assert(eng.relationshipsCached(path, nowMs = t0).count() === 8)
     // refresh ONE pair 10h later through the public per-pair put API — the
     // file now holds mixed-age rows (1 @ t0+10h, 7 @ t0)
-    val cache = graft.state.RelationshipCache.load(spark, path)
-    val one = cache.orderBy("source_table", "source_column").limit(1).drop("cached_at_ms")
-    graft.state.RelationshipCache.put(cache, one, path, nowMs = t0 + 10L * 3600 * 1000, ttlMs = ttlMs)
+    val cache = graft.state.RelationshipCache.load(path)
+    val one = cache.map(_.edge).sortBy(e => (e.sourceTable, e.sourceColumn)).take(1)
+    graft.state.RelationshipCache.put(
+      path, cache, one, nowMs = t0 + 10L * 3600 * 1000, ttlMs = ttlMs)
     // 30h after t0 the refreshed pair is still fresh but the other 7 are
     // expired: the engine must NOT serve the 1-row fresh subset — it
     // re-detects the full edge set and rewrites the cache wholly fresh
     val now = t0 + 30L * 3600 * 1000
     assert(eng.relationshipsCached(path, nowMs = now).count() === 8)
-    val rewritten = graft.state.RelationshipCache.load(spark, path)
-    assert(rewritten.count() === 8)
-    assert(rewritten.filter(col("cached_at_ms") === now).count() === 8)
+    val rewritten = graft.state.RelationshipCache.load(path)
+    assert(rewritten.size === 8)
+    assert(rewritten.count(_.cachedAtMs == now) === 8)
   }
 
   test("performance.cache_enabled=false bypasses the cache entirely") {

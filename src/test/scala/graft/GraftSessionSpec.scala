@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import graft.core.DetectionConfig
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 class GraftSessionSpec extends SparkSpec {
 
@@ -61,5 +62,76 @@ class GraftSessionSpec extends SparkSpec {
       // state, cache and render are catalog-scale and served on the driver
       assert(jobs.asScala.takeWhile(_._1 != "marker").map(_._2).toSeq === Seq.empty)
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Runs `body` and returns the ("job" | "sql", call site or description)
+    * of every Spark job and SQL execution it started, in order. Listener
+    * events arrive in order, so once a marker job that runs after `body` is
+    * seen, every event of `body` has been seen too.
+    */
+  private def startedBy(body: => Unit): Seq[(String, String)] = {
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        def prop(k: String) = props.map(_.getProperty(k, "")).getOrElse("")
+        events.add(if (prop("spark.job.description") == "marker") ("marker", "")
+          else ("job", prop("callSite.short")))
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => events.add(("sql", s.description))
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription("marker")
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      def marked = events.asScala.exists(_._1 == "marker")
+      while (!marked && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(marked)
+      events.asScala.toSeq.takeWhile(e => e._1 != "marker" && e._2 != "marker")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("warm ERD refreshes start no SQL execution beyond the caller's own collects") {
+    val dir = Files.createTempDirectory("graft_warm_sql").toString
+    val (state, cache) = (s"$dir/state", s"$dir/cache")
+    val ttlMs = DetectionConfig().cacheTtlMs
+    var nowMs = 1700000000000L
+    def refresh(advanceMs: Long): Unit = {
+      nowMs += advanceMs
+      val engine = new GraftEngine(spark, sf0001)
+      val changed = engine.changedTables(state)
+      val rels = engine.relationshipsCached(cache, nowMs)
+      changed.collect() // the caller's own collects, from this file
+      assert(rels.collect().nonEmpty)
+      assert(engine.renderErd("mermaid").contains("erDiagram"))
+      engine.saveProcessedState(state, nowMs)
+    }
+    // one round: a refresh served from the cache, then one past its TTL
+    def round(): Unit = { refresh(ttlMs / 2); refresh(ttlMs + 1) }
+    refresh(0L)
+    round()
+    val started = startedBy { round(); round() }
+    val own = started.filter(_._2.startsWith("collect at GraftSessionSpec.scala"))
+    assert(own.map(_._1) === Seq.fill(8)("sql"))
+    assert(started === own)
+  }
+
+  test("engine stats at a new probe time compile nothing and start no Spark job") {
+    val cache = Files.createTempDirectory("graft_stats_probe").toString + "/cache"
+    val t0 = 1700000000000L
+    val engine = new GraftEngine(spark, sf0001)
+    engine.relationshipsCached(cache, t0)
+    def probe(nowMs: Long): Long = engine.stats(cachePath = Some(cache), nowMs = nowMs)
+      .collect().head.getAs[Long]("n_cache_fresh")
+    assert(probe(t0) === 7L) // warm-up: every detected edge is fresh
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val started = startedBy(assert(probe(t0 + 25L * 3600 * 1000) === 0L))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles)
+    assert(started.filter(_._1 == "job") === Seq.empty)
   }
 }

@@ -4,84 +4,75 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import graft.catalog.ParquetCatalog
+import graft.core.Relationship
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.functions.{col, lit, md5}
+import org.apache.spark.sql.functions.{lit, md5}
 
 class IncrementalStateSpec extends SparkSpec {
 
+  private val rel = Relationship("a", "x", "b", "y", "many_to_one", 0.9, "exact_match", false)
+
   test("checksum change detection: only changed tables reprocess") {
-    val catalog = ParquetCatalog.catalog(spark, sf0001)
-    val current = IncrementalState.schemaChecksums(catalog).cache()
+    val tables = ParquetCatalog.tables(spark, sf0001)
+    val current = IncrementalState.checksums(tables, nowMs = 1000L)
     // driver-side checksums are Spark's md5 hex, so saved states stay valid
-    val sparkMd5 = catalog.collect().map(t => t.tableName ->
+    val sparkMd5 = tables.map(t => t.tableName ->
       spark.range(1).select(md5(lit(IncrementalState.canonicalSchema(t)))).head.getString(0)).toMap
-    assert(current.collect().map(r => r.getString(0) -> r.getString(1)).toMap === sparkMd5)
+    assert(current.map(e => e.tableName -> e.schemaHash).toMap === sparkMd5)
     val dir = Files.createTempDirectory("graft_state").toString
     val statePath = s"$dir/state.parquet"
 
     // first run: everything is new
-    val prior = IncrementalState.loadState(spark, statePath)
-    assert(IncrementalState.tablesToProcess(current, prior).count() === 10)
-    IncrementalState.saveState(current, prior, statePath, nowMs = 1000L)
+    val prior = IncrementalState.load(statePath)
+    assert(IncrementalState.changed(current, prior).size === 10)
+    IncrementalState.save(statePath, current, prior)
 
     // second run, unchanged: nothing to do (the reference's early-exit,
     // enhanced_relationship_detector.py:73-75)
-    val state2 = IncrementalState.loadState(spark, statePath)
-    assert(IncrementalState.tablesToProcess(current, state2).count() === 0)
+    val state2 = IncrementalState.load(statePath)
+    assert(IncrementalState.changed(current, state2).size === 0)
 
     // simulate one schema change: perturb a hash
-    import org.apache.spark.sql.functions._
-    val mutated = current.withColumn(
-      "schema_hash",
-      when(col("table_name") === "orders", lit("deadbeef")).otherwise(col("schema_hash")))
-    assert(IncrementalState.tablesToProcess(mutated, state2).count() === 1)
+    val mutated = current.map(e =>
+      if (e.tableName == "orders") e.copy(schemaHash = "deadbeef", processedAtMs = 2000L)
+      else e.copy(processedAtMs = 2000L))
+    assert(IncrementalState.changed(mutated, state2).size === 1)
 
     // upsert keeps one row per table, newest processed_at
-    IncrementalState.saveState(mutated, state2, statePath, nowMs = 2000L)
-    val state3 = IncrementalState.loadState(spark, statePath)
-    assert(state3.count() === 10)
-    assert(state3.filter(col("table_name") === "orders")
-      .head.getAs[String]("schema_hash") === "deadbeef")
+    IncrementalState.save(statePath, mutated, state2)
+    val state3 = IncrementalState.load(statePath)
+    assert(state3.size === 10)
+    assert(state3.find(_.tableName == "orders").get.schemaHash === "deadbeef")
   }
 
   test("relationship cache: TTL filters stale entries, upsert keeps newest") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_cache").toString
-    val path = s"$dir/cache.parquet"
-    val rel = Seq(("a", "x", "b", "y", "many_to_one", 0.9, "exact_match", false))
-      .toDF("source_table", "source_column", "target_table", "target_column",
-        "relationship_type", "confidence", "detection_method", "is_custom")
+    val path = Files.createTempDirectory("graft_cache").toString + "/cache.parquet"
+    RelationshipCache.put(path, RelationshipCache.load(path), Seq(rel), nowMs = 1000L)
+    // live entries for the (a, b) pair at `nowMs`
+    def live(nowMs: Long): Seq[CachedEdge] = RelationshipCache.load(path).filter(c =>
+      c.freshAt(nowMs, RelationshipCache.DefaultTtlMs) &&
+        c.edge.sourceTable == "a" && c.edge.targetTable == "b")
 
-    RelationshipCache.put(RelationshipCache.load(spark, path), rel, path, nowMs = 1000L)
-    val pairs = Seq(("a", "b")).toDF("source_table", "target_table")
-
-    val fresh = RelationshipCache.get(RelationshipCache.load(spark, path), pairs, nowMs = 2000L)
-    assert(fresh.count() === 1)
-
+    assert(live(nowMs = 2000L).size === 1)
+    assert(live(nowMs = 1000L + RelationshipCache.DefaultTtlMs).size === 1) // boundary: fresh
     // beyond TTL: stale
-    val stale = RelationshipCache.get(
-      RelationshipCache.load(spark, path), pairs,
-      nowMs = 1000L + RelationshipCache.DefaultTtlMs + 1)
-    assert(stale.count() === 0)
+    assert(live(nowMs = 1000L + RelationshipCache.DefaultTtlMs + 1).size === 0)
 
     // upsert with higher confidence at a later time wins
-    val rel2 = rel.withColumn("confidence", org.apache.spark.sql.functions.lit(1.0))
-    RelationshipCache.put(RelationshipCache.load(spark, path), rel2, path, nowMs = 3000L)
-    val latest = RelationshipCache.get(RelationshipCache.load(spark, path), pairs, nowMs = 4000L)
-    assert(latest.head.getAs[Double]("confidence") === 1.0)
+    RelationshipCache.put(path, RelationshipCache.load(path), Seq(rel.copy(confidence = 1.0)),
+      nowMs = 3000L)
+    val latest = live(nowMs = 4000L)
+    assert(latest.size === 1)
+    assert(latest.head.edge.confidence === 1.0)
   }
 
   test("relationship cache: put and get at a new nowMs compile no new classes") {
-    import spark.implicits._
     val path = Files.createTempDirectory("graft_cache_codegen").toString + "/cache.parquet"
-    val rel = Seq(("a", "x", "b", "y", "many_to_one", 0.9, "exact_match", false))
-      .toDF("source_table", "source_column", "target_table", "target_column",
-        "relationship_type", "confidence", "detection_method", "is_custom")
-    val pairs = Seq(("a", "b")).toDF("source_table", "target_table")
     def putGet(nowMs: Long): Unit = {
-      RelationshipCache.put(RelationshipCache.load(spark, path), rel, path, nowMs)
-      val got = RelationshipCache.get(RelationshipCache.load(spark, path), pairs, nowMs).collect()
-      assert(got.map(_.getAs[Long]("cached_at_ms")).toSeq === Seq(nowMs))
+      RelationshipCache.put(path, RelationshipCache.load(path), Seq(rel), nowMs)
+      val got = RelationshipCache.load(path)
+        .filter(_.freshAt(nowMs, RelationshipCache.DefaultTtlMs))
+      assert(got.map(_.cachedAtMs) === Seq(nowMs))
     }
     putGet(1000L) // warm-up
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -97,51 +88,53 @@ class IncrementalStateSpec extends SparkSpec {
       (None, None, None, None),
       (Some("é"), Some(Long.MinValue), Some(-0.0), Some(false)))
       .toDF("s", "l", "d", "b")
-    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    def rows(rs: Seq[org.apache.spark.sql.Row]) = rs.map(_.toSeq).sortBy(_.toString)
     val nullable = org.apache.spark.sql.types.StructType(df.schema.map(_.copy(nullable = true)))
     df.coalesce(1).write.parquet(s"$dir/spark")
-    val local = LocalParquet.read(spark, s"$dir/spark")
-    assert(local.schema === nullable)
-    assert(rows(local) === rows(df))
+    val local = LocalParquet.read(s"$dir/spark")
+    assert(local.map(_.schema).distinct === Seq(nullable))
+    assert(rows(local) === rows(df.collect().toSeq))
     LocalParquet.write(s"$dir/local", df.schema, df.collect().toSeq)
     val back = spark.read.parquet(s"$dir/local")
     assert(back.schema === nullable)
-    assert(rows(back) === rows(df))
+    assert(rows(back.collect().toSeq) === rows(df.collect().toSeq))
     assert(!new java.io.File(s"$dir/local.tmp").exists())
+    assert(new java.io.File(s"$dir/local").list().toSeq === Seq("part-00000.parquet"))
   }
 
   test("A8: relationshipStats aggregates state + typed edge breakdown into one row") {
-    import spark.implicits._
-    val state = Seq(("t1", "h1", 100L), ("t2", "h2", 300L), ("t3", "h3", 200L))
-      .toDF("table_name", "schema_hash", "processed_at_ms")
+    val state = Seq(StateEntry("t1", "h1", 100L), StateEntry("t2", "h2", 300L),
+      StateEntry("t3", "h3", 200L))
     val rels = Seq(
-      ("a", "x", "b", "y", "many_to_one", 0.9),
-      ("c", "x", "b", "y", "many_to_one", 0.8),
-      ("d", "x", "b", "y", "one_to_one", 0.7))
-      .toDF("source_table", "source_column", "target_table", "target_column",
-        "relationship_type", "confidence")
-    val r = IncrementalState.relationshipStats(state, rels).collect().head
+      rel,
+      rel.copy(sourceTable = "c", confidence = 0.8),
+      rel.copy(sourceTable = "d", relationshipType = "one_to_one", confidence = 0.7))
+    def row(rs: Seq[Relationship]) = IncrementalState.statsFrame(spark,
+      IncrementalState.relationshipStats(state, rs): _*).collect().head
+    val r = row(rels)
     assert(r.getAs[Long]("processed_tables") === 3L)
     assert(r.getAs[Long]("last_processed_at_ms") === 300L)
     assert(r.getAs[Long]("total_relationships") === 3L)
     assert(r.getAs[Long]("n_relationship_types") === 2L)
     assert(r.getAs[String]("relationship_types") === "many_to_one:2,one_to_one:1")
     // empty graph: totals zero, breakdown empty — no nulls leak
-    val empty = IncrementalState.relationshipStats(state, rels.limit(0)).collect().head
+    val empty = row(Nil)
     assert(empty.getAs[Long]("total_relationships") === 0L)
     assert(empty.getAs[String]("relationship_types") === "")
   }
 
   test("A8: cache stats split entries into fresh vs expired at the probe time") {
-    import spark.implicits._
-    val cache = Seq(("a", "b", 1000L), ("c", "d", 5000L), ("e", "f", 9000L))
-      .toDF("source_table", "target_table", "cached_at_ms")
-    val r = RelationshipCache.stats(cache, nowMs = 9000L, ttlMs = 4000L).collect().head
+    val cache = Seq(("a", "b", 1000L), ("c", "d", 5000L), ("e", "f", 9000L)).map {
+      case (s, t, at) => CachedEdge(rel.copy(sourceTable = s, targetTable = t), at)
+    }
+    def row(c: Seq[CachedEdge], nowMs: Long, ttlMs: Long) = IncrementalState.statsFrame(spark,
+      RelationshipCache.stats(c, nowMs, ttlMs): _*).collect().head
+    val r = row(cache, nowMs = 9000L, ttlMs = 4000L)
     assert(r.getAs[Long]("n_cache_entries") === 3L)
     assert(r.getAs[Long]("n_cache_fresh") === 2L) // 5000, 9000 >= 9000-4000
     assert(r.getAs[Long]("n_cache_expired") === 1L)
     assert(r.getAs[Long]("cache_ttl_hours") === 0L) // sub-hour TTL floors
-    val empty = RelationshipCache.stats(cache.limit(0), nowMs = 1L).collect().head
+    val empty = row(Nil, nowMs = 1L, ttlMs = RelationshipCache.DefaultTtlMs)
     assert(empty.getAs[Long]("n_cache_entries") === 0L)
     assert(empty.getAs[Long]("n_cache_fresh") === 0L)
   }
