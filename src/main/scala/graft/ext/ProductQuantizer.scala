@@ -15,10 +15,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale design:
   *   - codebooks are driver constants (m·k·subDim doubles — the PQ model is
-  *     driver-scale by definition) trained by the same one-aggregation-per-
-  *     iteration Lloyd loop as Similarity.ivfTrainedTopK: assignment is
-  *     map-side against literal centroids, the shuffle carries only
-  *     (subspace, code, element) partial sums;
+  *     driver-scale by definition) trained by a one-aggregation-per-
+  *     iteration Lloyd loop: assignment is map-side against literal
+  *     centroids, the shuffle carries only (subspace, code, element)
+  *     partial sums;
   *   - encoding is map-side only (argmin over k literal distances per
   *     subspace) — the corpus never shuffles to be encoded;
   *   - ADC search broadcasts the query distance tables and scans codes;

@@ -387,11 +387,11 @@ object Similarity {
     * and recall at fixed nprobe improves over the raw sample.
     *
     * The training loop is the distributed k-means shape for 100 TB: per
-    * iteration ONE map-side assignment pass (dots against broadcast literal
-    * centroids) + ONE aggregation keyed by (cell, element) — map-side
-    * combined, so the shuffle carries ≤ partitions × nlist × dim rows, never
-    * the corpus. Centroids live on the driver between iterations (nlist ×
-    * dim doubles — the k-means model is driver-scale by definition).
+    * iteration ONE job with no shuffle — a map-side assignment pass (dots
+    * against literal centroids) whose partitions each return nlist × dim
+    * integer sums and counts, added on the driver. Centroids live on the
+    * driver between iterations (nlist × dim doubles — the k-means model is
+    * driver-scale by definition).
     *
     * Determinism/portability: element sums are computed on floor(x·2²⁰)
     * integers — float→double is exact, scaling by a power of two is exact,
@@ -416,14 +416,20 @@ object Similarity {
   }
 
   /** Lloyd's iterations over a `prepared` frame, returning the trained
-    * (centroid, norm) quantizer. Each round is one distributed pass (argmax
-    * assignment map-side, per-(cell,pos) integer sums — floor(x·2²⁰) makes
-    * the means exact across engines); only nlist×dim aggregates reach the
-    * driver. Shared by [[ivfTrainedTopK]] and [[semanticDedup]].
+    * (centroid, norm) quantizer. Each round is ONE job with no shuffle: the
+    * argmax assignment runs map-side, each partition sums floor(x·2²⁰) as
+    * `Long` into per-cell, per-position sum and count arrays (nlist×dim),
+    * and the driver adds the partitions' arrays — the way Spark ML's KMeans
+    * aggregates its sums. Integer sums do not depend on order, so the means
+    * are exact across engines and partitionings. A cell no vector reaches
+    * keeps its previous centroid; a position's count is the number of the
+    * cell's vectors that have it (vectors may differ in length), and a null
+    * element counts without adding to the sum. Shared by
+    * [[ivfTrainedTopK]], [[semanticDedup]] and the other IVF quantizers.
     */
   private[graft] def trainCentroids(
       prep: DataFrame, nlist: Int, iters: Int): IndexedSeq[(IndexedSeq[Double], Double)] = {
-    // the training loop is `iters`+1 eager passes (sample + one collect
+    // the training loop is `iters`+1 eager passes (sample + one job
     // per Lloyd round) over the SAME normalized frame — cache it for the
     // duration of training (guide §5: reuse × recompute cost), and
     // unpersist before returning so no CacheManager entry outlives the
@@ -440,37 +446,72 @@ object Similarity {
       prep: DataFrame, nlist: Int, iters: Int): IndexedSeq[(IndexedSeq[Double], Double)] = {
     var cents = sampleCentroids(prep, nlist)
     for (_ <- 1 to iters) {
-      val assigned = withCellScores(prep, cents)
-        .withColumn("cell",
-          (array_position(col("scores"), array_max(col("scores"))) - 1).cast("int"))
-      val sums = assigned
-        .select(col("cell"), posexplode(col("vec")).as(Seq("pos", "v")))
-        .groupBy("cell", "pos")
-        .agg(
-          sum(floor(col("v").cast("double") * lit(1048576.0)).cast("long")).as("s"),
-          count(lit(1)).as("n"))
+      val nCells = cents.length
+      val (sums, counts) = withCellScores(prep, cents)
+        .select(
+          (array_position(col("scores"), array_max(col("scores"))) - 1).cast("int").as("cell"),
+          col("vec").cast("array<double>"))
+        .queryExecution.toRdd
+        .mapPartitions(rows => Iterator(cellSums(rows, nCells)))
         .collect()
-      val byCell = sums.groupBy(_.getAs[Int]("cell"))
+        .reduce(addCellSums)
       cents = cents.zipWithIndex.map { case ((prev, prevNrm), c) =>
-        byCell.get(c) match {
-          case Some(rows) =>
-            val next = prev.toArray.clone()
-            rows.foreach { r =>
-              next(r.getAs[Int]("pos")) =
-                r.getAs[Long]("s").toDouble / r.getAs[Long]("n") / 1048576.0
-            }
-            (next.toIndexedSeq, foldNorm(next.toIndexedSeq))
-          case None => (prev, prevNrm) // empty cell: keep previous centroid
+        if (counts(c).isEmpty) (prev, prevNrm) // empty cell: keep previous centroid
+        else {
+          val next = prev.toArray.clone()
+          counts(c).indices.foreach { pos =>
+            next(pos) = sums(c)(pos).toDouble / counts(c)(pos) / 1048576.0
+          }
+          (next.toIndexedSeq, foldNorm(next.toIndexedSeq))
         }
       }
     }
     cents
   }
 
+  private type CellSums = (Array[Array[Long]], Array[Array[Long]])
+
+  /** One partition's (cell, vec) rows as per-cell, per-position sums of
+    * floor(x·2²⁰) and element counts. A row with no cell adds nothing.
+    */
+  private def cellSums(
+      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow], nCells: Int): CellSums = {
+    val sums, counts = Array.fill(nCells)(Array.emptyLongArray)
+    rows.foreach { r =>
+      val c = if (r.isNullAt(0) || r.isNullAt(1)) -1 else r.getInt(0)
+      if (c >= 0 && c < nCells) {
+        val v = r.getArray(1)
+        val len = v.numElements()
+        if (len > counts(c).length) {
+          sums(c) = java.util.Arrays.copyOf(sums(c), len)
+          counts(c) = java.util.Arrays.copyOf(counts(c), len)
+        }
+        var i = 0
+        while (i < len) {
+          counts(c)(i) += 1
+          if (!v.isNullAt(i))
+            sums(c)(i) = math.addExact(sums(c)(i), math.floor(v.getDouble(i) * 1048576.0).toLong)
+          i += 1
+        }
+      }
+    }
+    (sums, counts)
+  }
+
+  private def addCellSums(x: CellSums, y: CellSums): CellSums = {
+    def add(a: Array[Long], b: Array[Long]): Array[Long] = {
+      val (long, short) = if (a.length >= b.length) (a.clone(), b) else (b.clone(), a)
+      short.indices.foreach(i => long(i) = math.addExact(long(i), short(i)))
+      long
+    }
+    (x._1.indices.map(c => add(x._1(c), y._1(c))).toArray,
+      x._2.indices.map(c => add(x._2(c), y._2(c))).toArray)
+  }
+
   /** Deterministic quantizer init: the nlist corpus vectors with the
     * smallest md5(id), as (centroid, norm) driver constants.
     */
-  private def sampleCentroids(
+  private[ext] def sampleCentroids(
       prep: DataFrame, nlist: Int): IndexedSeq[(IndexedSeq[Double], Double)] =
     prep
       .withColumn("ck", md5(col("id").cast("string")))
@@ -483,7 +524,7 @@ object Similarity {
     * engine-side norm, so driver-computed centroid norms are bit-identical
     * to what DuckDB's list fold produces.
     */
-  private def foldNorm(v: IndexedSeq[Double]): Double = {
+  private[ext] def foldNorm(v: IndexedSeq[Double]): Double = {
     var s = 0.0
     var i = 0
     while (i < v.length) { s += v(i) * v(i); i += 1 }
@@ -493,7 +534,7 @@ object Similarity {
   /** Cosine of every row's vec against each centroid, as one array column of
     * native dots vs literal weight arrays (map-side only).
     */
-  private def withCellScores(
+  private[ext] def withCellScores(
       prep: DataFrame, centroids: IndexedSeq[(IndexedSeq[Double], Double)]): DataFrame = {
     val spark = prep.sparkSession
     prep.withColumn("scores", array(
@@ -924,8 +965,9 @@ object Similarity {
     * discipline — a hot cell is split into ⌈size/cellCap⌉ blocks joined
     * pairwise, so no single task exceeds cap² dot products and join-key
     * cardinality grows with data instead of being pinned at nlist. The CC
-    * stage is [[graft.ext.Dedup.dedupClusters]]' pointer-jumping loop
-    * (O(log diameter) rounds, lineage-truncated).
+    * stage is [[graft.ext.Dedup.dedupClusters]]: a union-find on the
+    * driver for a small pair graph, the pointer-jumping loop
+    * (O(log diameter) rounds, lineage-truncated) at scale.
     */
   def semanticDedup(
       corpus: DataFrame,

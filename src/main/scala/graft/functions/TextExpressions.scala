@@ -302,24 +302,19 @@ object LangMarkerScores {
 
 object TextNativeFunctions {
 
-  /** Register `graft_repstats` / `graft_ngrams` (idempotent), mirroring
-    * VectorFunctions.
+  /** Register the native text functions once per session, mirroring
+    * VectorFunctions (`GraftExtensions` injects all but `graft_langscores`).
     */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_repstats", exprs => RepetitionStats(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ngrams",
-      exprs => WordNGrams(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
-      exprs => WordShingles(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_chartristats", exprs => CharTrigramStats(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_langscores", exprs => LangMarkerScores(exprs.head), "built-in")
+    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
+      FunctionRegistration.ensure(spark, name, "graft.functions.TextNativeFunctions", builder)
+    ensure("graft_repstats", exprs => RepetitionStats(exprs.head))
+    ensure("graft_ngrams",
+      exprs => WordNGrams(exprs.head, exprs(1).eval().asInstanceOf[Int]))
+    ensure("graft_shingles",
+      exprs => WordShingles(exprs.head, exprs(1).eval().asInstanceOf[Int]))
+    ensure("graft_chartristats", exprs => CharTrigramStats(exprs.head))
+    ensure("graft_langscores", exprs => LangMarkerScores(exprs.head))
   }
 
   /** One-pass repetition counts of a (pre-lowercased) text column, as a

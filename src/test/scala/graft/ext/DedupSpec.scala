@@ -94,10 +94,59 @@ class DedupSpec extends SparkSpec {
     // a 40-edge chain has diameter 40 — min-label propagation alone would
     // need 40 rounds; pointer jumping needs ~log2(40) ≈ 6
     val chain = (0L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val out = Dedup.dedupClusters(chain, maxIters = 10).collect()
+    // (forced onto the distributed path: a cutoff of 0 pairs is what every
+    // pair graph above the driver cutoff sees)
+    val out = Dedup.dedupClusters(chain, maxIters = 10, driverMaxPairs = 0L).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out.size === 41)
     assert(out.values.toSet === Set(0L))
+  }
+
+  test("dedup clusters: a small pair graph resolves on the driver in at most 2 jobs") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("id_a", "id_b")
+    var out = Map.empty[Long, Long]
+    val jobs = startedBy {
+      out = Dedup.dedupClusters(pairs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }.filter(_._1 == "job")
+    assert(out === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
+    // the pin (which counts the pairs) and one collect; the result is local
+    assert(jobs.length <= 2, jobs.mkString("\n"))
+  }
+
+  test("dedup clusters: union-find labels equal the distributed loop's on random pair graphs") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import spark.implicits._
+    // ids from a small range, so duplicate edges, both orientations of an
+    // edge, self-loops and shared nodes are common; a few null ends
+    val end = Gen.frequency(12 -> Gen.choose(0L, 24L).map(Option(_)), 1 -> Gen.const(None))
+    val graph = Gen.choose(0, 30).flatMap(Gen.listOfN(_, Gen.zip(end, end)))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSeq.sortBy(_.toString)
+    (0 until 12).foreach { i =>
+      val g = graph.apply(Gen.Parameters.default, Seed(i.toLong)).get
+      // nullable ids with null ends, and the same edges as non-null ids
+      val nullable = g.toDF("id_a", "id_b")
+      val nonNull = g.collect { case (Some(a), Some(b)) => (a, b) }.toDF("id_a", "id_b")
+      Seq(nullable, nonNull).foreach { pairs =>
+        val local = Dedup.dedupClusters(pairs, 20, Dedup.DriverCcMaxPairs)
+        val distributed = Dedup.dedupClusters(pairs, 20, driverMaxPairs = -1L)
+        assert(local.schema === distributed.schema, s"graph $i: $g")
+        assert(rows(local) === rows(distributed), s"graph $i: $g")
+      }
+    }
+  }
+
+  test("dedup clusters: integer ids resolve on the driver with integer columns") {
+    import spark.implicits._
+    val pairs = Seq((3, 1), (1, 2), (9, 9)).toDF("id_a", "id_b")
+    val local = Dedup.dedupClusters(pairs)
+    val distributed = Dedup.dedupClusters(pairs, 20, driverMaxPairs = -1L)
+    assert(local.schema === distributed.schema)
+    assert(local.collect().toSet === distributed.collect().toSet)
+    assert(local.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap ===
+      Map(1 -> 1, 2 -> 1, 3 -> 1, 9 -> 9))
   }
 
   test("keepBest: quality argmax per cluster, id tiebreak, singletons kept") {

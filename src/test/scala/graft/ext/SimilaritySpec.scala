@@ -424,4 +424,78 @@ class SimilaritySpec extends SparkSpec {
       assert(nLow >= 0L && nLow <= n)
     }
   }
+
+  /** Ten rows, five distinct vectors each twice: three of length 3 (one
+    * with a null element), two of length 2 that point away from them.
+    * Sampling six cells from five distinct vectors puts two copies of one
+    * vector in the sample, so a cell stays empty.
+    */
+  private def centroidFixture = {
+    import spark.implicits._
+    val vecs = Seq(
+      Seq(Some(0.1f), Some(0.2f), Some(0.9f)),
+      Seq(Some(0.3f), Some(-0.1f), Some(0.8f)),
+      Seq(Some(0.2f), None, Some(0.9f)),
+      Seq(Some(0.9f), Some(-0.3f)),
+      Seq(Some(-0.7f), Some(0.6f)))
+    val df = (vecs ++ vecs).zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "vec")
+    df.select(col("id"), col("vec"),
+      sqrt(graft.functions.VectorFunctions.dotNative(spark, col("vec"), col("vec"))).as("nrm"))
+  }
+
+  /** The Lloyd round trainCentroids ran before it became one shuffle-free
+    * job (posexplode, groupBy(cell, pos), collect), kept as the reference
+    * its centroids must equal bit for bit. Also returns how many times a
+    * cell was empty.
+    */
+  private def groupByCentroids(prep: org.apache.spark.sql.DataFrame, nlist: Int, iters: Int)
+      : (IndexedSeq[(IndexedSeq[Double], Double)], Int) = {
+    var cents = Similarity.sampleCentroids(prep, nlist)
+    var emptyCells = 0
+    for (_ <- 1 to iters) {
+      val assigned = Similarity.withCellScores(prep, cents)
+        .withColumn("cell",
+          (array_position(col("scores"), array_max(col("scores"))) - 1).cast("int"))
+      val sums = assigned
+        .select(col("cell"), posexplode(col("vec")).as(Seq("pos", "v")))
+        .groupBy("cell", "pos")
+        .agg(
+          sum(floor(col("v").cast("double") * lit(1048576.0)).cast("long")).as("s"),
+          count(lit(1)).as("n"))
+        .collect()
+      val byCell = sums.groupBy(_.getAs[Int]("cell"))
+      cents = cents.zipWithIndex.map { case ((prev, prevNrm), c) =>
+        byCell.get(c) match {
+          case Some(rows) =>
+            val next = prev.toArray.clone()
+            rows.foreach { r =>
+              next(r.getAs[Int]("pos")) =
+                r.getAs[Long]("s").toDouble / r.getAs[Long]("n") / 1048576.0
+            }
+            (next.toIndexedSeq, Similarity.foldNorm(next.toIndexedSeq))
+          case None => emptyCells += 1; (prev, prevNrm)
+        }
+      }
+    }
+    (cents, emptyCells)
+  }
+
+  test("trainCentroids: bit-identical to the groupBy round with an empty cell, mixed lengths and a null element") {
+    val prep = centroidFixture
+    val (reference, emptyCells) = groupByCentroids(prep, nlist = 6, iters = 3)
+    assert(emptyCells > 0)
+    assert(Similarity.trainCentroids(prep, nlist = 6, iters = 3) === reference)
+    // and on the sf0.001 embeddings, the shape every IVF consumer trains on
+    val emb = Tables.embeddings(spark, sf0001)
+    val embPrep = emb.select(col("vec_id").as("id"), col("embedding").as("vec"),
+      sqrt(graft.functions.VectorFunctions.dotNative(
+        spark, col("embedding"), col("embedding"))).as("nrm"))
+    assert(Similarity.trainCentroids(embPrep, 8, 2) === groupByCentroids(embPrep, 8, 2)._1)
+  }
+
+  test("trainCentroids: one sample job, then one job per Lloyd round") {
+    val prep = centroidFixture
+    val jobs = startedBy(Similarity.trainCentroids(prep, nlist = 6, iters = 3)).filter(_._1 == "job")
+    assert(jobs.length === 1 + 3, jobs.mkString("\n"))
+  }
 }

@@ -62,4 +62,20 @@ class TextFunctionsSpec extends SparkSpec {
       .collect().head
     assert(ct.getLong(0) === 2L && ct.getLong(1) === 4L)
   }
+
+  test("native functions are registered once per session, not replaced on every use") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    val names = Seq("graft_dot", "graft_repstats", "graft_ngrams", "graft_shingles",
+      "graft_chartristats", "graft_langscores")
+    // a registration makes a new ExpressionInfo, so an unchanged instance
+    // means the function was not registered again
+    def infos = names.map(n => registry.lookupFunction(FunctionIdentifier(n)))
+    TextNativeFunctions.register(spark) // graft_langscores is not injected by the extensions
+    val first = infos
+    assert(first.forall(_.isDefined))
+    VectorFunctions.dotNative(spark, col("a"), col("b"))
+    TextNativeFunctions.register(spark)
+    infos.zip(first).foreach { case (now, before) => assert(now.get eq before.get) }
+  }
 }
