@@ -1,6 +1,6 @@
 package graft
 
-import graft.analyze.KeyClassifier
+import graft.analyze.{KeyClassifier, KeyColumn}
 import graft.catalog.ParquetCatalog
 import graft.core._
 import graft.datatest.DataTester
@@ -11,14 +11,18 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, when}
 
 /** End-to-end engine facade — the reference's main pipeline (main.py:78-306,
-  * SURVEY §3.1-3.2) as one lazily-composed Spark job chain:
+  * SURVEY §3.1-3.2):
   *
-  *   catalog scan → column explode → key classification → detection (all
+  *   catalog (footer reads) → key classification → detection (all
   *   strategies ∪ → validate → resolve → top-k) → optional data testing with
   *   confidence adjustment → render / persist state.
   *
-  * Only two engine-crossing points exist: the source scans and the final
-  * collect into the (tiny, post-top-k) render model.
+  * Everything up to the data test is catalog-scale and runs as plain Scala
+  * on the driver, memoized as values in [[ParquetCatalog.memo]]: catalog,
+  * classification, detection, render and the state and cache decisions
+  * start no Spark job. The data test is the one stage sized by the data, and
+  * the one that runs on Spark. Frames are built (locally) only where a
+  * public method returns one.
   */
 class GraftEngine(
     val spark: SparkSession,
@@ -44,25 +48,23 @@ class GraftEngine(
     ParquetCatalog.memo(spark,
       (kind, customRules, namingRules, cfg, ParquetCatalog.contentKey(tables), inputs))(build)
 
-  lazy val classifiedColumns: DataFrame =
-    memo("classify") {
-      ParquetCatalog.localized(
-        KeyClassifier.classify(ParquetCatalog.columnRefs(catalog).toDF(), cfg))
-    }
+  private lazy val keyColumns: Seq[KeyColumn] = memo("classify")(KeyClassifier.classify(tables, cfg))
 
-  /** Name-based detection only (RelationshipDetector path, §3.1 step 4).
-    * Memoized per (session, rules, config, catalog content) and pinned
-    * local — the in-memory tier of the reference's relationship cache
+  lazy val classifiedColumns: DataFrame =
+    memo("classifiedFrame")(KeyClassifier.frame(spark, keyColumns))
+
+  /** Name-based detection only (RelationshipDetector path, §3.1 step 4):
+    * the in-memory tier of the reference's relationship cache
     * (relationship_cache.py:36-68 keeps a memory map in front of the disk
     * files; its ENHANCED_FEATURES.md advertises 50-90% faster subsequent
     * runs). Detection is pure catalog-metadata work, so the result is a few
-    * hundred rows at most.
+    * hundred edges at most.
     */
+  private lazy val detectedEdges: Seq[Relationship] =
+    memo("detect")(RelationshipDetector.detect(keyColumns, customRules, namingRules, cfg))
+
   lazy val relationships: DataFrame =
-    memo("detect") {
-      ParquetCatalog.localized(
-        RelationshipDetector.detect(classifiedColumns, customRules, namingRules, cfg))
-    }
+    memo("detectFrame")(RelationshipCache.edgeFrame(spark, detectedEdges))
 
   // Data testing reads rows, so its results also key on the directory and
   // every table's part files.
@@ -107,9 +109,8 @@ class GraftEngine(
     // DataTestingConfig.enabled gate (enhanced_relationship_detector.py:86):
     // testing off → the name-detected edges pass through untested.
     if (!cfg.dataTestEnabled) return relationships
-    val edges = relationships.collect() // post-top-k: tiny
+    val edges = detectedEdges // post-top-k: tiny
     if (edges.isEmpty) return relationships
-    import spark.implicits._
     // DataTestingConfig.sample_size (the reference's per-endpoint LIMIT,
     // data_relationship_tester.py:115-121) as a per-table uniform fraction
     // over footer row counts — same bounded-work intent, partition-skew-free.
@@ -120,20 +121,13 @@ class GraftEngine(
         else math.min(1.0, cfg.dataTestSampleSize.toDouble / t.numRows))).toMap
     val metrics = DataTester.testRelationships(
       spark, dir,
-      edges.toSeq.map(r => (
-        r.getAs[String]("source_table"), r.getAs[String]("source_column"),
-        r.getAs[String]("target_table"), r.getAs[String]("target_column"))),
+      edges.map(r => (r.sourceTable, r.sourceColumn, r.targetTable, r.targetColumn)),
       sampleFraction = sampleFraction,
       sampleFractions =
         if (sampleFractions.nonEmpty) sampleFractions else sizeFractions)
-    val meta = org.apache.spark.sql.functions.broadcast(
-      edges.toSeq.map(r => (
-        r.getAs[String]("source_table"), r.getAs[String]("source_column"),
-        r.getAs[String]("target_table"), r.getAs[String]("target_column"),
-        r.getAs[Double]("confidence"), r.getAs[String]("relationship_type"),
-        r.getAs[String]("detection_method"), r.getAs[Boolean]("is_custom")))
-        .toDF("source_table", "source_column", "target_table", "target_column",
-          "confidence", "relationship_type", "detection_method", "is_custom"))
+    val meta = org.apache.spark.sql.functions.broadcast(relationships.select(
+      "source_table", "source_column", "target_table", "target_column",
+      "confidence", "relationship_type", "detection_method", "is_custom"))
     // Pin the per-edge metric rows local before the adjust/filter expressions:
     // the result is ≤ one row per post-top-k edge, and filtering on the
     // derived confidence over the live plan makes Catalyst inline the whole
@@ -145,17 +139,6 @@ class GraftEngine(
       .filter(col("adjusted_confidence") >= cfg.minConfidence)
   }
 
-  // What a render or a cache write reads of the detection, as driver values.
-  private lazy val detectedEdges: Seq[Relationship] =
-    memo("detectedEdges")(RelationshipCache.collectEdges(relationships))
-
-  private lazy val keySets: (Set[(String, String)], Set[(String, String)]) = memo("keySets") {
-    def keySet(flag: String) = classifiedColumns.filter(col(flag))
-      .select("tableName", "columnName").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    (keySet("is_pk_candidate"), keySet("is_fk_candidate"))
-  }
-
   /** Render the detected graph in the requested dialect (§3.1 steps 5-6).
     * `layout` applies to drawio: grid | force | hierarchical (the
     * reference's table_layout config, models.py:120); so do the ERDConfig
@@ -165,7 +148,9 @@ class GraftEngine(
   def renderErd(format: String, layout: String = "grid",
       showColumnTypes: Boolean = true, showNullable: Boolean = false,
       theme: String = "default"): String = {
-    val (pks, fks) = keySets
+    def keys(flag: KeyColumn => Boolean) =
+      keyColumns.filter(flag).map(c => (c.tableName, c.columnName)).toSet
+    val (pks, fks) = (keys(_.isPk), keys(_.isFk))
     format match {
       case "mermaid"  => ErdRenderer.mermaid(tables, detectedEdges, pks, fks)
       case "plantuml" => ErdRenderer.plantUml(tables, detectedEdges, pks)
@@ -239,7 +224,7 @@ class GraftEngine(
 
   def registerViews(): Unit =
     tables.foreach { t =>
-      spark.read.parquet(t.path).createOrReplaceTempView(t.tableName)
+      ParquetCatalog.read(spark, t.path).createOrReplaceTempView(t.tableName)
     }
 }
 

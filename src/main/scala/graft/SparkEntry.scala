@@ -407,11 +407,10 @@ object SparkEntry {
     // A7: relationship quality report over the detected edge set — counts
     // per confidence band / detection method / relationship type + totals.
     "q45_quality_report" -> { (s, dir) =>
-      // the report reads the edge set five times (3 dims + 2 totals): pin
-      // the post-top-k edges local instead of re-deriving detect per read
-      RelationshipDetector.qualityReport(ParquetCatalog.localized(
-        RelationshipDetector.detect(classifiedCols(s, dir),
-          customRules = lakeCustomRules)))
+      // detection returns the post-top-k edges as a local frame, so the
+      // report's five reads (3 dims + 2 totals) re-derive nothing
+      RelationshipDetector.qualityReport(
+        RelationshipDetector.detect(classifiedCols(s, dir), customRules = lakeCustomRules))
     },
     // Duplicate-cluster resolution: connected components over the near-dup
     // pair graph; every clustered doc maps to the min reachable doc id (the
@@ -4008,15 +4007,12 @@ object SparkEntry {
     ParquetCatalog.memo(s, ("renderModel", engine.tables)) {
       val scope = Set("region", "nation", "customer")
       val cat = engine.tables.filter(t => scope(t.tableName))
-      val cols = ParquetCatalog.localized(
-        engine.classifiedColumns.filter(col("tableName").isin(scope.toSeq: _*)))
-      def keySet(flag: String) = cols.filter(col(flag))
-        .select("tableName", "columnName").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-      val rels = graft.state.RelationshipCache.collectEdges(RelationshipDetector.detect(cols)
-        .filter(col("source_table").isin(scope.toSeq: _*) &&
-          col("target_table").isin(scope.toSeq: _*)))
-      RenderModel(cat, rels, keySet("is_pk_candidate"), keySet("is_fk_candidate"))
+      val cols = graft.analyze.KeyClassifier.classify(cat, engine.cfg)
+      def keySet(flag: graft.analyze.KeyColumn => Boolean) =
+        cols.filter(flag).map(c => (c.tableName, c.columnName)).toSet
+      val rels = RelationshipDetector.detect(cols, Nil, Nil, engine.cfg)
+        .filter(r => scope(r.sourceTable) && scope(r.targetTable))
+      RenderModel(cat, rels, keySet(_.isPk), keySet(_.isFk))
     }
   }
 
@@ -4048,8 +4044,8 @@ object SparkEntry {
           countDistinct(col("dataType")).as("n_distinct_types"),
           max(col("numRows")).as("num_rows"))
     },
-    // P1-P7: key-candidate classification — regex/pattern rules compiled to
-    // Catalyst boolean exprs (schema_analyzer.py:109-218).
+    // P1-P7: key-candidate classification — regex/pattern rules evaluated on
+    // the driver (schema_analyzer.py:109-218).
     "q14_key_classification" -> { (s, dir) =>
       classifiedCols(s, dir)
         .filter(col("is_pk_candidate") || col("is_fk_candidate"))

@@ -1,18 +1,42 @@
 package graft.analyze
 
-import graft.core.DetectionConfig
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import java.util.Locale
+import java.util.regex.Pattern
+
+import scala.jdk.CollectionConverters._
+
+import graft.core.{ColumnRef, ConfigLoader, DetectionConfig, TableMeta}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types._
+
+/** One catalog column with its key classification: the unit of
+  * relationship detection.
+  */
+case class KeyColumn(
+    tableName: String,
+    columnName: String,
+    dataType: String,
+    nullable: Boolean,
+    isArray: Boolean,
+    ordinal: Int,
+    numRows: Long,
+    baseName: String,
+    keyStem: String,
+    tableBase: String,
+    typeGroup: String,
+    isPk: Boolean,
+    isFk: Boolean)
 
 /** Column-level key classification (SURVEY §2.2 P1-P7).
   *
   * Re-expresses the reference's schema analysis
   * (schema_analyzer.py:42-218: PK/FK candidate predicates, regex pattern
-  * sets; pattern_config.py:187-239: configured indicators) as pure Catalyst
-  * `Column` expressions over the exploded column catalog — the whole rule set
-  * compiles into boolean expressions, UDF-free, so Catalyst can fold, prune
-  * and pipeline it (and it runs identically on a 10-table catalog or a
-  * 10,000-table lake).
+  * sets; pattern_config.py:187-239: configured indicators) as plain Scala
+  * over the catalog's columns, on the driver: the catalog is a few hundred
+  * columns, so no Spark job is worth its start-up. Regexes keep Spark's
+  * semantics (`rlike` is `find`, `regexp_replace` is `replaceAll`), names
+  * lower-case under `Locale.ROOT` and lengths count code points, so the
+  * result equals the earlier Catalyst-expression version row for row.
   *
   * Naming model:
   *   - `base_name`   — column name with an optional 1-2 letter table prefix
@@ -31,69 +55,95 @@ object KeyClassifier {
   /** Type-compatibility groups (relationship_detector.py:929-935 /
     * data_relationship_tester.py:217-234), keyed by Spark typeName.
     */
-  val typeGroup: Column => Column = dt =>
-    when(dt.isin("integer", "bigint", "smallint", "tinyint"), "int")
-      .when(dt.isin("string", "varchar", "char"), "string")
-      .when(dt.isin("double", "float", "decimal"), "float")
-      .when(dt.isin("boolean"), "bool")
-      .otherwise(dt)
+  def typeGroup(dataType: String): String = dataType match {
+    case "integer" | "bigint" | "smallint" | "tinyint" => "int"
+    case "string" | "varchar" | "char" => "string"
+    case "double" | "float" | "decimal" => "float"
+    case "boolean" => "bool"
+    case other => other
+  }
 
-  /** Annotate a column catalog (ColumnRef-shaped DataFrame) with base_name,
-    * key_stem, type_group, is_pk_candidate, is_fk_candidate.
-    */
-  def classify(cols: DataFrame, cfg: DetectionConfig = DetectionConfig()): DataFrame = {
-    val base = regexp_replace(lower(col("columnName")), cfg.prefixStripRegex, "")
-    val stem = regexp_replace(base, cfg.keySuffixRegex, "")
-    val keyTyped = col("dataType").isin(cfg.keyDataTypes.toSeq: _*)
-    val hasKeySuffix = base.rlike(cfg.keySuffixRegex)
+  private[graft] def lower(s: String): String = s.toLowerCase(Locale.ROOT)
+  private[graft] def codePoints(s: String): Int = s.codePointCount(0, s.length)
+  /** Spark's `rlike`: a match anywhere in `s`. */
+  private[graft] def rlike(p: Pattern, s: String): Boolean = p.matcher(s).find()
+  /** Spark's `regexp_replace(s, p, "")`. */
+  private[graft] def strip(p: Pattern, s: String): String = p.matcher(s).replaceAll("")
+  private[graft] val TrailingS = Pattern.compile("s$")
 
-    // Warehouse/data-vault table prefixes (h_/dim_/l_/ref_/fact_/bridge_,
-    // schema_analyzer.py:328-447) strip off for name comparisons.
-    val tableBase =
-      regexp_replace(lower(col("tableName")), "^(h_|dim_|l_|ref_|fact_|bridge_|tbl_|table_)", "")
+  // Warehouse/data-vault table prefixes (h_/dim_/l_/ref_/fact_/bridge_,
+  // schema_analyzer.py:328-447) strip off for name comparisons.
+  private val TablePrefix = Pattern.compile("^(h_|dim_|l_|ref_|fact_|bridge_|tbl_|table_)")
 
-    val withNames = cols
-      .withColumn("base_name", base)
-      .withColumn("key_stem", stem)
-      .withColumn("table_base", tableBase)
-      .withColumn("type_group", typeGroup(col("dataType")))
+  /** The catalog's columns, one per (table, leaf column), classified. */
+  def classify(tables: Seq[TableMeta], cfg: DetectionConfig): Seq[KeyColumn] =
+    classifyRefs(tables.flatMap(t => t.columns.map(c =>
+      ColumnRef(t.tableName, c.name, c.dataType, c.nullable, c.isArray, c.ordinal, t.numRows))), cfg)
 
-    // PK: stem names its own table (order⊑orders, customer⊑dim_customer)
-    // or bare id/key.
-    val stemNamesTable =
-      (length(col("key_stem")) >= 3 && col("table_base").startsWith(col("key_stem"))) ||
-        col("key_stem") === col("table_base") ||
-        col("key_stem") === regexp_replace(col("table_base"), "s$", "")
-    // Configured indicators (P6/P7): wildcard-derived anchored regexes from
-    // ConfigLoader extend the built-in heuristics; empty lists fold to false
-    // and leave behavior untouched. Matched against the LOWERCASED name —
-    // the reference lowercases before matching (pattern_config.py:193,229),
-    // so non-wildcard entries are exact equality on the lowered name.
-    def indicatorHit(regexes: Seq[String]): Column =
-      regexes.foldLeft(lit(false))((acc, p) => acc || lower(col("columnName")).rlike(p))
-
+  private def classifyRefs(refs: Seq[ColumnRef], cfg: DetectionConfig): Seq[KeyColumn] = {
+    val prefix = Pattern.compile(cfg.prefixStripRegex)
+    val suffix = Pattern.compile(cfg.keySuffixRegex)
+    // Configured indicators (P6/P7) extend the built-in heuristics and are
+    // matched against the LOWERCASED name — the reference lowercases before
+    // matching (pattern_config.py:193,229).
+    def compile(regexes: Seq[String]) = regexes.map(Pattern.compile)
+    val (pkIndicators, fkIndicators) = (compile(cfg.pkIndicatorRegexes), compile(cfg.fkIndicatorRegexes))
     // Per-table-class patterns (pattern_config.py:187-239): a column counts
     // as PK/FK when its table name starts with the class prefix AND the
-    // (lowercased) column name matches one of the class's patterns. The
-    // whole config compiles to one literal boolean CASE chain per flag.
-    def tablePatternHit(sel: graft.core.TablePattern => Seq[String]): Column =
-      cfg.tablePatterns.foldLeft(lit(false)) { (acc, tp) =>
-        val colHit = sel(tp).foldLeft(lit(false))((a, p) =>
-          a || lower(col("columnName")).rlike(graft.core.ConfigLoader.wildcardToRegex(p)))
-        acc || (lower(col("tableName")).startsWith(tp.prefix.toLowerCase) && colHit)
-      }
+    // column name matches one of the class's patterns.
+    val classes = cfg.tablePatterns.map(tp => (lower(tp.prefix),
+      compile(tp.pkPatterns.map(ConfigLoader.wildcardToRegex)),
+      compile(tp.fkPatterns.map(ConfigLoader.wildcardToRegex))))
+    refs.map { c =>
+      val name = lower(c.columnName)
+      val table = lower(c.tableName)
+      val base = strip(prefix, name)
+      val stem = strip(suffix, base)
+      val tableBase = strip(TablePrefix, table)
+      val keyed = cfg.keyDataTypes(c.dataType) && rlike(suffix, base)
+      // stem names its own table (order⊑orders, customer⊑dim_customer)
+      val stemNamesTable = (codePoints(stem) >= 3 && tableBase.startsWith(stem)) ||
+        stem == tableBase || stem == strip(TrailingS, tableBase)
+      def hit(ps: Seq[Pattern]) = ps.exists(rlike(_, name))
+      def classHit(pick: ((String, Seq[Pattern], Seq[Pattern])) => Seq[Pattern]) =
+        classes.exists(k => table.startsWith(k._1) && hit(pick(k)))
+      val isPk = !c.isArray && ((keyed && (base == "id" || base == "key" || stemNamesTable)) ||
+        hit(pkIndicators) || classHit(_._2))
+      // FK: key-suffixed, key-typed, not its own table's PK.
+      val isFk = !c.isArray && !isPk && (keyed || hit(fkIndicators) || classHit(_._3))
+      KeyColumn(c.tableName, c.columnName, c.dataType, c.nullable, c.isArray, c.ordinal,
+        c.numRows, base, stem, tableBase, typeGroup(c.dataType), isPk, isFk)
+    }
+  }
 
-    val isPk = !col("isArray") && ((keyTyped && hasKeySuffix &&
-      (col("base_name").isin("id", "key") || stemNamesTable)) ||
-      indicatorHit(cfg.pkIndicatorRegexes) ||
-      tablePatternHit(_.pkPatterns))
+  /** The columns of a classified frame, in [[KeyColumn]]'s field order. */
+  val Schema: StructType = StructType(Seq(
+    StructField("tableName", StringType), StructField("columnName", StringType),
+    StructField("dataType", StringType), StructField("nullable", BooleanType),
+    StructField("isArray", BooleanType), StructField("ordinal", IntegerType),
+    StructField("numRows", LongType), StructField("base_name", StringType),
+    StructField("key_stem", StringType), StructField("table_base", StringType),
+    StructField("type_group", StringType), StructField("is_pk_candidate", BooleanType),
+    StructField("is_fk_candidate", BooleanType)))
 
-    val flagged = withNames.withColumn("is_pk_candidate", isPk)
-    // FK: key-suffixed, key-typed, not its own table's PK.
-    flagged.withColumn(
-      "is_fk_candidate",
-      !col("isArray") && !col("is_pk_candidate") &&
-        ((keyTyped && hasKeySuffix) || indicatorHit(cfg.fkIndicatorRegexes) ||
-          tablePatternHit(_.fkPatterns)))
+  /** `cols` as a local frame with [[Schema]]. */
+  def frame(spark: SparkSession, cols: Seq[KeyColumn]): DataFrame =
+    spark.createDataFrame(cols.map(Row.fromTuple).asJava, Schema)
+
+  /** The rows of a classified frame (a [[frame]], possibly filtered). */
+  def collect(cols: DataFrame): Seq[KeyColumn] =
+    cols.select(Schema.fieldNames.toSeq.map(cols.col): _*).collect().toSeq.map(r =>
+      KeyColumn(r.getString(0), r.getString(1), r.getString(2), r.getBoolean(3),
+        r.getBoolean(4), r.getInt(5), r.getLong(6), r.getString(7), r.getString(8),
+        r.getString(9), r.getString(10), r.getBoolean(11), r.getBoolean(12)))
+
+  /** Annotate a column catalog (ColumnRef-shaped DataFrame) with base_name,
+    * key_stem, table_base, type_group, is_pk_candidate, is_fk_candidate.
+    */
+  def classify(cols: DataFrame, cfg: DetectionConfig = DetectionConfig()): DataFrame = {
+    val refs = cols.select("tableName", "columnName", "dataType", "nullable", "isArray",
+      "ordinal", "numRows").collect().toSeq.map(r => ColumnRef(r.getString(0), r.getString(1),
+      r.getString(2), r.getBoolean(3), r.getBoolean(4), r.getInt(5), r.getLong(6)))
+    frame(cols.sparkSession, classifyRefs(refs, cfg))
   }
 }

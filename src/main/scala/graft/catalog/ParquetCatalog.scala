@@ -2,11 +2,13 @@ package graft.catalog
 
 import java.io.File
 
-import graft.core.{ColumnMeta, ColumnRef, TableMeta}
-import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Dataset, SparkSession}
+import graft.core.{ColumnMeta, TableMeta}
+import graft.state.LocalParquet
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.io.LocalInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.ParquetSchemaBridge
 import org.apache.spark.sql.types.{ArrayType, StructType}
 
 /** Catalog source over a directory of parquet tables ("file lake").
@@ -19,10 +21,10 @@ import org.apache.spark.sql.types.{ArrayType, StructType}
   * numRows/numBytes come from footer row-group metadata.
   *
   * Scale note: footer reads are O(#tables) driver-side metadata operations,
-  * not data scans — same cost profile at 100 TB as at 1 GB. The resulting
-  * catalog is a small Dataset, so every downstream analysis (key
-  * classification, relationship detection) is a Spark job over catalog rows
-  * and broadcast-joins for free.
+  * not data scans — same cost profile at 100 TB as at 1 GB, and no Spark
+  * job. The resulting catalog is a driver-resident `Seq[TableMeta]`; key
+  * classification and relationship detection run over it as plain Scala,
+  * and data reads take its schema instead of inferring one.
   */
 object ParquetCatalog {
 
@@ -71,10 +73,11 @@ object ParquetCatalog {
       types: Map[String, String]): TableMeta = {
     val path = s"$dir/$name.parquet"
     val tableType = types.getOrElse(name, "TABLE")
-    memo(spark, ("tableMeta", path, tableType, fileStamps(path))) {
-      val parts = partFiles(path)
-      TableMeta(name, path, tableType, toColumnMeta(spark.read.parquet(path).schema),
-        footerRows(parts), parts.map(_.length).sum)
+    val key = ("tableMeta", path, tableType, fileStamps(path), ParquetSchemaBridge.settings(spark))
+    memo(spark, key) {
+      val (schema, rows) = footers(spark, path)
+      TableMeta(name, path, tableType, toColumnMeta(schema), rows,
+        partFiles(path).map(_.length).sum)
     }
   }
 
@@ -101,7 +104,7 @@ object ParquetCatalog {
     * isArray=true, preserving the REPEATED-disqualifies-keys rule
     * (schema_analyzer.py:178-179).
     */
-  private def toColumnMeta(schema: StructType): Seq[ColumnMeta] = {
+  private[graft] def toColumnMeta(schema: StructType): Seq[ColumnMeta] = {
     def leaves(prefix: String, st: StructType, inArray: Boolean): Seq[(String, String, Boolean, Boolean)] =
       st.fields.toSeq.flatMap { f =>
         val path = if (prefix.isEmpty) f.name else s"$prefix.${f.name}"
@@ -133,15 +136,40 @@ object ParquetCatalog {
   private[graft] def fileStamps(path: String): Seq[(String, Long, Long)] =
     partFiles(path).map(f => (f.getName, f.length, f.lastModified))
 
-  /** Row count from parquet footers; no data pages are read. */
-  private def footerRows(parts: Seq[File]): Long = {
-    val conf = new Configuration()
-    parts.map { part =>
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(part.getPath), conf))
-      try reader.getRecordCount finally reader.close()
-    }.sum
-  }
+  /** The table at `path` as `spark.read.parquet(path)` would read it, with
+    * the schema taken from the catalog's footer read rather than inferred by
+    * a Spark job.
+    */
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(footers(spark, path)._1).parquet(path)
+
+  /** The schema `spark.read.parquet(path).schema` infers, and the row count,
+    * from the parquet footers alone; no data pages are read and no Spark job
+    * runs. Spark's inference reads the first part file's footer under the
+    * session's conf (INT96, `nanosAsLong`, its own row-metadata key) and
+    * makes every field nullable; so does this. A directory Spark would list
+    * differently (subdirectories such as partitions, summary or other
+    * visible files, no part file) takes Spark's own inference.
+    */
+  private def footers(spark: SparkSession, path: String): (StructType, Long) =
+    memo(spark, ("footers", path, fileStamps(path), ParquetSchemaBridge.settings(spark))) {
+      val parts = partFiles(path)
+      val read = parts.map { part =>
+        val reader = ParquetFileReader.open(new LocalInputFile(part.toPath), LocalParquet.readOptions)
+        try (reader.getFooter, reader.getRecordCount) finally reader.close()
+      }
+      // Spark reads just the part files when the directory holds nothing
+      // else it lists: no subdirectory, summary file or other visible file.
+      def hidden(n: String) = (n.startsWith(".") || n.startsWith("_")) &&
+        !n.startsWith("_metadata") && !n.startsWith("_common_metadata")
+      val plain = Option(new File(path).listFiles()).toSeq.flatten
+        .forall(f => f.isFile && (f.getName.endsWith(".parquet") || hidden(f.getName)))
+      val schema =
+        if (parts.isEmpty || !plain) spark.read.parquet(path).schema
+        else ParquetSchemaBridge.footerSchema(
+          new Footer(new Path(parts.head.getPath), read.head._1), spark)
+      (schema, read.map(_._2).sum)
+    }
 
   /** S4: all table schemas, driver-resident. VIEW/EXTERNAL tables (per the
     * `_tabletypes.json` sidecar) are excluded unless requested — reference
@@ -161,17 +189,6 @@ object ParquetCatalog {
       case _ => true
     }
     listTables(dir, maxResults).filter(kept).map(tableMeta(spark, dir, _, types))
-  }
-
-  /** [[tables]] as a catalog Dataset. */
-  def catalog(
-      spark: SparkSession,
-      dir: String,
-      maxResults: Int = 1000,
-      includeViews: Boolean = false,
-      includeExternal: Boolean = false): Dataset[TableMeta] = {
-    import spark.implicits._
-    spark.createDataset(tables(spark, dir, maxResults, includeViews, includeExternal))
   }
 
   /** What metadata-only results (classified columns, detected edges) read of
@@ -205,8 +222,8 @@ object ParquetCatalog {
     if (hit != null && !spark.sparkContext.isStopped) hit.asInstanceOf[T]
     else {
       // built outside the lock: builds nest (detect → classify → table
-      // metadata) and run Spark jobs. Two threads may each build one value;
-      // derivation is deterministic, so either result serves.
+      // metadata → footers) and read files. Two threads may each build one
+      // value; derivation is deterministic, so either result serves.
       val built = build
       memoEntries.synchronized {
         memoEntries.keySet.removeIf(_._1.sparkContext.isStopped)
@@ -216,31 +233,13 @@ object ParquetCatalog {
     }
   }
 
-  /** Materialize a small metadata frame into a LocalRelation: catalog-scale
-    * results (classified columns, detected edges) are a few hundred rows, so
-    * pinning them local removes re-execution of their derivation from every
-    * downstream plan that references them more than once.
+  /** Materialize a small frame into a LocalRelation: small results (profile
+    * aggregates, per-edge data-test metrics) are a few hundred rows at most,
+    * so pinning them local removes re-execution of their derivation from
+    * every downstream plan that references them more than once.
     */
   def localized(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import scala.jdk.CollectionConverters._
     df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
-  }
-
-  /** Explode the catalog into one row per (table, column) — the input shape
-    * for key classification and relationship detection (SURVEY §2.2 P1).
-    */
-  def columnRefs(catalog: Dataset[TableMeta]): Dataset[ColumnRef] = {
-    val spark = catalog.sparkSession
-    import spark.implicits._
-    // The catalog is driver-resident metadata (a LocalRelation over memoized
-    // footer reads) — explode it driver-side into a new LocalRelation rather
-    // than a typed flatMap, so downstream plans see a plain local scan
-    // instead of 12 repeated Deserialize→MapPartitions→Serialize pipelines
-    // (the detect pipeline references this frame from every strategy).
-    val refs = catalog.collect().toSeq.flatMap { t =>
-      t.columns.map(c =>
-        ColumnRef(t.tableName, c.name, c.dataType, c.nullable, c.isArray, c.ordinal, t.numRows))
-    }
-    spark.createDataset(refs)
   }
 }

@@ -4,8 +4,9 @@ package graft.core
   *
   * Mirrors the semantics of the reference's pydantic models
   * (reference: bigquery-to-erd/src/bigquery_to_erd/models.py:33-173) but as
-  * Scala case classes with Spark `Encoder`s, so catalogs and relationship sets
-  * are `Dataset`s and every analysis step is a distributed Spark job.
+  * Scala case classes with Spark `Encoder`s: catalog-scale values (tables,
+  * columns, edges) stay plain driver values, and become `Dataset`s where a
+  * public method returns a frame.
   */
 
 /** One column of one table (reference ColumnInfo, models.py:33-51).
@@ -30,9 +31,8 @@ case class TableMeta(
     numRows: Long,
     numBytes: Long)
 
-/** Flattened (table, column) row — the unit of key analysis and relationship
-  * detection. The whole catalog explodes into a Dataset[ColumnRef] so the
-  * detection strategies are joins, not loops.
+/** Flattened (table, column) row — the input row of key classification
+  * (`KeyClassifier.classify` over a ColumnRef-shaped frame).
   */
 case class ColumnRef(
     tableName: String,

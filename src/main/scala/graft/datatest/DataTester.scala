@@ -1,5 +1,6 @@
 package graft.datatest
 
+import graft.catalog.ParquetCatalog
 import graft.core.DetectionConfig
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -194,14 +195,16 @@ object DataTester {
     *      cast is injective per column, so per-edge counts are unchanged);
     *   2. a broadcast edges table routes each frequency row to the edges
     *      using it as source (a-side) / target (b-side);
-    *   3. ONE (edge_id, v) equi-join + ONE groupBy(edge_id) yields, per edge,
-    *      `common` = |distinct src ∩ distinct tgt| (the referential-integrity
-    *      intersection, J9) AND the exact-integer distribution delta sum
-    *      (J10) in the same pass.
+    *   3. ONE shuffle by edge id brings each edge's (value, a-count,
+    *      b-count) rows together; a window gives the per-edge totals and ONE
+    *      groupBy(edge_id) yields, per edge, `common` = |distinct src ∩
+    *      distinct tgt| (the referential-integrity intersection, J9) AND the
+    *      exact-integer distribution delta sum (J10) in the same pass.
     *
-    * Shuffle count is CONSTANT in the number of edges (~5), versus ~4 per
-    * edge for naive per-pair testing — the difference between one pass and
-    * thousands over every endpoint on a cluster.
+    * Shuffle count is CONSTANT in the number of edges (two: the frequency
+    * tables and the edge shuffle), versus ~4 per edge for naive per-pair
+    * testing — the difference between one pass and thousands over every
+    * endpoint on a cluster.
     *
     * `sampleFraction < 1` samples every endpoint uniformly — the scale path
     * replacing the reference's LIMIT-based sampling (partition-skew-free).
@@ -226,7 +229,8 @@ object DataTester {
       .flatMap { case (st, sc, tt, tc) => Seq(st -> sc, tt -> tc) }
       .distinct.groupBy(_._1).view.mapValues(_.map(_._2).distinct).toMap
 
-    // 1. one scan per table → (t, c, v, cnt) for every tested column.
+    // 1. one scan per table, stacked into (t, c, v) rows and counted by one
+    // aggregation over all tables → (t, c, v, cnt) for every tested column.
     // Values are canonicalized BEFORE the string cast: all integral widths
     // go through bigint so an int 5 and a bigint 5 render identically
     // ("5"), preserving cross-width joins. Fractional types are rejected
@@ -234,7 +238,7 @@ object DataTester {
     // here, and "5.0" vs "5.00" string drift would silently zero the
     // overlap for anyone bypassing it.
     val stacked = needed.map { case (t, cols0) =>
-      val df0 = spark.read.parquet(s"$dir/$t.parquet")
+      val df0 = ParquetCatalog.read(spark, s"$dir/$t.parquet")
       // per-table fraction (adaptive Cochran wiring) wins over the global one
       val frac = sampleFractions.getOrElse(t, sampleFraction)
       val df = if (frac < 1.0) df0.sample(frac, seed = 42) else df0
@@ -254,42 +258,42 @@ object DataTester {
       df.select(explode(array(pairs: _*)).as("p"))
         .select(lit(t).as("t"), col("p.c").as("c"), col("p.v").as("v"))
         .where(col("v").isNotNull)
-        .groupBy("t", "c", "v").agg(count(lit(1)).as("cnt"))
     }.reduce(_ unionByName _)
-      // four consumers (a-side, b-side, each read twice more for totals and
-      // the overlap join) — pin the per-column frequency tables so the
-      // table scans + stack aggregation run once (guide §2.4); the pinned
-      // frame is frequency-table-sized (distinct values), not data-sized
+      .groupBy("t", "c", "v").agg(count(lit(1)).as("cnt"))
+      // two consumers (a-side, b-side) — pin the per-column frequency tables
+      // so the table scans + stack aggregation run once (guide §2.4); the
+      // pinned frame is frequency-table-sized (distinct values), not
+      // data-sized
       .localCheckpoint()
 
-    // 2. route frequency rows to the edges that use them
-    val aSide = stacked.join(
-        broadcast(edgeDf),
-        col("t") === col("source_table") && col("c") === col("source_column"))
-      .select(col("edge_id"), col("v"), col("cnt").as("cnt_a"))
-    val bSide = stacked.join(
-        broadcast(edgeDf),
-        col("t") === col("target_table") && col("c") === col("target_column"))
-      .select(col("edge_id"), col("v"), col("cnt").as("cnt_b"))
+    // 2. route frequency rows to the edges that use them: each (edge, value)
+    // with its source-side (a) and target-side (b) count, 0 when absent
+    def side(table: String, column: String, cnt: String, other: String) = stacked
+      .join(broadcast(edgeDf), col("t") === col(table) && col("c") === col(column))
+      .select(col("edge_id"), col("v"), col("cnt").as(cnt), lit(0L).as(other))
+    val values = side("source_table", "source_column", "cnt_a", "cnt_b")
+      .unionByName(side("target_table", "target_column", "cnt_b", "cnt_a"))
+      .repartition(col("edge_id"))
+      .groupBy("edge_id", "v").agg(sum("cnt_a").as("cnt_a"), sum("cnt_b").as("cnt_b"))
 
-    val aTot = aSide.groupBy("edge_id")
-      .agg(sum("cnt_a").as("tot_a"), count(lit(1)).as("n_src"))
-    val bTot = bSide.groupBy("edge_id").agg(sum("cnt_b").as("tot_b"))
-
-    // 3. one value join + one per-edge aggregate → RI ∩ and delta sum
-    val overlap = aSide.join(bSide, Seq("edge_id", "v"))
-      .join(broadcast(aTot.select(col("edge_id"), col("tot_a"))), Seq("edge_id"))
-      .join(broadcast(bTot), Seq("edge_id"))
+    // 3. per-edge totals by window, then one per-edge aggregate → n_src, the
+    // RI intersection and the delta sum, all over that one shuffle by edge
+    val edge = Window.partitionBy("edge_id")
+    val both = col("cnt_a") > 0 && col("cnt_b") > 0
+    val perEdge = values
+      .withColumn("tot_a", sum("cnt_a").over(edge))
+      .withColumn("tot_b", sum("cnt_b").over(edge))
       .groupBy("edge_id")
       .agg(
-        count(lit(1)).as("common"),
-        sum(abs(col("cnt_a") * col("tot_b") - col("cnt_b") * col("tot_a"))).as("delta_sum"))
+        count(when(col("cnt_a") > 0, 1)).as("n_src"),
+        max("tot_a").as("tot_a"), max("tot_b").as("tot_b"),
+        count(when(both, 1)).as("common"),
+        sum(when(both, abs(col("cnt_a") * col("tot_b") - col("cnt_b") * col("tot_a"))))
+          .as("delta_sum"))
 
     val tc = lit(if (typeCompatible) 1.0 else 0.0)
     val base = edgeDf
-      .join(aTot, Seq("edge_id"), "left")
-      .join(bTot, Seq("edge_id"), "left")
-      .join(overlap, Seq("edge_id"), "left")
+      .join(perEdge, Seq("edge_id"), "left")
       .na.fill(0L, Seq("n_src", "common", "delta_sum", "tot_a", "tot_b"))
     val ri = when(col("n_src") === 0, 0.0)
       .otherwise(col("common").cast("double") / col("n_src"))

@@ -1,101 +1,96 @@
 package graft.detect
 
-import graft.core.{CustomRule, DetectionConfig, DetectionMethod => M, NamingRule}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import java.util.regex.Pattern
+
+import scala.math.Ordering.Double.TotalOrdering
+
+import graft.analyze.{KeyClassifier, KeyColumn}
+import graft.analyze.KeyClassifier.{codePoints, lower, rlike, strip, TrailingS}
+import graft.core.{ConfigLoader, CustomRule, DetectionConfig, NamingRule, Relationship}
+import graft.core.{DetectionMethod => M}
+import graft.state.RelationshipCache
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Cross-table relationship detection (SURVEY §2.3 J1-J8).
   *
   * The reference detects relationships with five sequential strategies over
   * Python dicts (relationship_detector.py:39-717). Here each strategy is a
-  * relational join over the classified column catalog, the union of their
-  * outputs is conflict-resolved by a windowed argmax, and the priority
-  * cascade becomes a method-priority rank — order-independent and therefore
-  * deterministic under any partitioning (SURVEY §7.4.2-3).
+  * hash join over the classified columns, the union of their outputs is
+  * conflict-resolved by an argmax per edge, and the priority cascade becomes
+  * a method-priority rank — order-independent and therefore deterministic
+  * (SURVEY §7.4.2-3).
   *
-  * Scale: the column catalog is tiny relative to data (even a 10k-table lake
-  * is ~1M rows), so every join here is broadcast-able; Spark's planner picks
-  * BroadcastHashJoin automatically. Nothing in this module touches table
-  * DATA — that's datatest's job.
+  * Scale: the input is the catalog's columns (a few hundred; a 1000-table
+  * lake is tens of thousands), so detection runs as plain Scala on the
+  * driver and starts no Spark job. Nothing in this module touches table
+  * DATA — that's datatest's job. The DataFrame methods are thin wrappers
+  * for callers holding frames: they collect the classified columns, run the
+  * Scala core and return a local frame.
   *
-  * Output schema (all strategies):
-  *   source_table, source_column, target_table, target_column,
-  *   relationship_type, confidence, detection_method, is_custom.
+  * Output (all strategies): [[Relationship]]s; as a frame,
+  * [[graft.state.RelationshipCache.EdgeSchema]]: source_table,
+  * source_column, target_table, target_column, relationship_type,
+  * confidence, detection_method, is_custom.
   */
 object RelationshipDetector {
 
-  private val outCols = Seq(
-    "source_table", "source_column", "target_table", "target_column",
-    "relationship_type", "confidence", "detection_method", "is_custom")
+  private def edge(src: KeyColumn, tgt: KeyColumn, tpe: String, conf: Double, method: String) =
+    Relationship(src.tableName, src.columnName, tgt.tableName, tgt.columnName, tpe, conf, method,
+      isCustom = false)
+
+  private def lift(cols: DataFrame)(f: Seq[KeyColumn] => Seq[Relationship]): DataFrame =
+    RelationshipCache.edgeFrame(cols.sparkSession, f(KeyClassifier.collect(cols)))
+
+  private def liftEdges(rels: DataFrame)(f: Seq[Relationship] => Seq[Relationship]): DataFrame =
+    RelationshipCache.edgeFrame(rels.sparkSession, f(RelationshipCache.collectEdges(rels)))
 
   /** Strategy 1 — exact base-name match (J1/J2a analog, confidence 0.95):
     * an FK-candidate column joins a PK-candidate column in another table on
     * equal base name + compatible type group: `l_orderkey`(orderkey) →
-    * `o_orderkey`(orderkey). Equi-join on (base_name, type_group) — the
-    * reference's "group by data type first" trick (relationship_detector
-    * .py:444-449) IS this join's hash partitioning.
+    * `o_orderkey`(orderkey). The reference's "group by data type first"
+    * trick (relationship_detector.py:444-449) IS this join's hash key.
     */
-  def exactBaseMatch(cols: DataFrame, cfg: DetectionConfig = DetectionConfig()): DataFrame = {
-    val fk = cols.filter(col("is_fk_candidate"))
-      .select(
-        col("tableName").as("source_table"), col("columnName").as("source_column"),
-        col("base_name"), col("type_group"))
-    val pk = cols.filter(col("is_pk_candidate"))
-      .select(
-        col("tableName").as("target_table"), col("columnName").as("target_column"),
-        col("base_name"), col("type_group"))
-    fk.join(pk, Seq("base_name", "type_group"))
-      .filter(col("source_table") =!= col("target_table"))
-      .withColumn("relationship_type", lit("many_to_one"))
-      .withColumn("confidence", lit(cfg.methodConfidence(M.ExactMatch, 0.95)))
-      .withColumn("detection_method", lit(M.ExactMatch))
-      .withColumn("is_custom", lit(false))
-      .select(outCols.map(col): _*)
+  def exactBaseMatch(cols: Seq[KeyColumn], cfg: DetectionConfig): Seq[Relationship] = {
+    val pks = cols.filter(_.isPk).groupBy(c => (c.baseName, c.typeGroup))
+    val conf = cfg.methodConfidence(M.ExactMatch, 0.95)
+    for {
+      fk <- cols if fk.isFk
+      pk <- pks.getOrElse((fk.baseName, fk.typeGroup), Nil) if fk.tableName != pk.tableName
+    } yield edge(fk, pk, "many_to_one", conf, M.ExactMatch)
   }
 
-  /** Strategy 2 — FK suffix → table-name resolution (J1/J4, confidence 0.8):
-    * strip the key suffix, explode the candidate target-table names
-    * ({stem, stem+s, stem+es, stem-minus-s}), equi-join against the table
-    * catalog, and take the PK (or best-scored key column) of the hit table
-    * (relationship_detector.py:88-120, 535-614).
+  /** Each table's best key column by table base name: PK first, then
+    * id/key-named, REQUIRED breaks ties (J11, relationship_detector.py:583-614).
     */
-  def suffixTableMatch(cols: DataFrame, cfg: DetectionConfig = DetectionConfig()): DataFrame = {
-    val fk = cols.filter(col("is_fk_candidate") && length(col("key_stem")) >= 2)
-      .select(
-        col("tableName").as("source_table"), col("columnName").as("source_column"),
-        col("key_stem"), col("type_group").as("src_type_group"))
-      .withColumn(
-        "candidate",
-        explode(array_distinct(array(
-          col("key_stem"),
-          concat(col("key_stem"), lit("s")),
-          concat(col("key_stem"), lit("es")),
-          regexp_replace(col("key_stem"), "s$", "")))))
-    // Best key column per target table: PK first, then id/key-named,
-    // REQUIRED breaks ties (J11, relationship_detector.py:583-614).
-    val wBest = Window.partitionBy(col("tableName")).orderBy(
-      col("is_pk_candidate").desc,
-      col("base_name").isin("id", "key").desc,
-      (!col("nullable")).desc,
-      col("ordinal").asc)
-    val targets = cols
-      .filter(col("is_pk_candidate") || col("is_fk_candidate"))
-      .withColumn("best_rk", row_number().over(wBest))
-      .filter(col("best_rk") === 1)
-      .select(
-        col("table_base").as("candidate"),
-        col("tableName").as("target_table"), col("columnName").as("target_column"),
-        col("type_group").as("tgt_type_group"))
-    fk.join(targets, Seq("candidate"))
-      .filter(col("source_table") =!= col("target_table") &&
-        col("src_type_group") === col("tgt_type_group"))
-      .withColumn("relationship_type", lit("many_to_one"))
-      .withColumn("confidence", lit(cfg.methodConfidence(M.ForeignKey, 0.8)))
-      .withColumn("detection_method", lit(M.ForeignKey))
-      .withColumn("is_custom", lit(false))
-      .select(outCols.map(col): _*)
+  private def bestKeys(cols: Seq[KeyColumn]): Map[String, Seq[KeyColumn]] =
+    cols.filter(c => c.isPk || c.isFk).groupBy(_.tableName).values
+      .map(_.minBy(c => (!c.isPk, !(c.baseName == "id" || c.baseName == "key"), c.nullable, c.ordinal)))
+      .toSeq.groupBy(_.tableBase)
+
+  /** FK candidates with a key stem of ≥ 2 characters matched to the target
+    * whose table base is one of the stem's name forms ({stem, stem+s,
+    * stem+es, stem-minus-s}), same type group, in another table.
+    */
+  private def stemMatches(fks: Seq[KeyColumn], targets: Map[String, Seq[KeyColumn]]) =
+    for {
+      fk <- fks if fk.isFk && codePoints(fk.keyStem) >= 2
+      name <- Seq(fk.keyStem, fk.keyStem + "s", fk.keyStem + "es", strip(TrailingS, fk.keyStem)).distinct
+      t <- targets.getOrElse(name, Nil) if fk.tableName != t.tableName && fk.typeGroup == t.typeGroup
+    } yield (fk, t)
+
+  /** Strategy 2 — FK suffix → table-name resolution (J1/J4, confidence 0.8):
+    * strip the key suffix, try the candidate target-table names and take
+    * the best key column of the hit table (relationship_detector.py:88-120,
+    * 535-614).
+    */
+  def suffixTableMatch(cols: Seq[KeyColumn], cfg: DetectionConfig): Seq[Relationship] = {
+    val conf = cfg.methodConfidence(M.ForeignKey, 0.8)
+    stemMatches(cols, bestKeys(cols))
+      .map { case (fk, t) => edge(fk, t, "many_to_one", conf, M.ForeignKey) }
   }
+
+  private val DvTable = Pattern.compile("^(h_|dim_|l_|ref_|fact_|bridge_)")
 
   /** Strategy 3 — data-vault / warehouse prefix patterns (J2, confidence
     * 0.9): a hub/dim/link column whose stem equals another warehouse table's
@@ -103,25 +98,15 @@ object RelationshipDetector {
     * keyed on the `h_/dim_/l_/ref_` prefix vocabulary
     * (schema_analyzer.py:328-447, relationship_detector.py:260-332).
     */
-  def dataVaultMatch(cols: DataFrame, cfg: DetectionConfig = DetectionConfig()): DataFrame = {
-    val dvTable = col("tableName").rlike("^(h_|dim_|l_|ref_|fact_|bridge_)")
-    val fk = cols.filter(col("is_fk_candidate")).filter(dvTable)
-      .select(
-        col("tableName").as("source_table"), col("columnName").as("source_column"),
-        col("key_stem"), col("type_group").as("src_type_group"))
-    val pk = cols.filter(col("is_pk_candidate")).filter(dvTable)
-      .select(
-        col("table_base").as("key_stem"),
-        col("tableName").as("target_table"), col("columnName").as("target_column"),
-        col("type_group").as("tgt_type_group"))
-    fk.join(pk, Seq("key_stem"))
-      .filter(col("source_table") =!= col("target_table") &&
-        col("src_type_group") === col("tgt_type_group"))
-      .withColumn("relationship_type", lit("many_to_one"))
-      .withColumn("confidence", lit(cfg.methodConfidence(M.DataVault, 0.9)))
-      .withColumn("detection_method", lit(M.DataVault))
-      .withColumn("is_custom", lit(false))
-      .select(outCols.map(col): _*)
+  def dataVaultMatch(cols: Seq[KeyColumn], cfg: DetectionConfig): Seq[Relationship] = {
+    val dv = cols.filter(c => rlike(DvTable, c.tableName))
+    val pks = dv.filter(_.isPk).groupBy(_.tableBase)
+    val conf = cfg.methodConfidence(M.DataVault, 0.9)
+    for {
+      fk <- dv if fk.isFk
+      pk <- pks.getOrElse(fk.keyStem, Nil)
+      if fk.tableName != pk.tableName && fk.typeGroup == pk.typeGroup
+    } yield edge(fk, pk, "many_to_one", conf, M.DataVault)
   }
 
   /** Strategy 3c — per-class table-pattern rules
@@ -134,53 +119,26 @@ object RelationshipDetector {
     *
     * The reference parses these rules into TablePattern but never reads
     * them afterwards (dead config, pattern_config.py:96-106) — here they
-    * are live, and only fire when `cfg.tablePatterns` is configured. One
-    * candidate-explode + equi-join per configured class over the (tiny)
-    * column catalog; all joins broadcast-able.
+    * are live, and only fire when `cfg.tablePatterns` is configured.
     */
-  def tablePatternRuleMatch(cols: DataFrame, cfg: DetectionConfig): DataFrame = {
-    val wBest = Window.partitionBy(col("tableName")).orderBy(
-      col("is_pk_candidate").desc,
-      col("base_name").isin("id", "key").desc,
-      (!col("nullable")).desc,
-      col("ordinal").asc)
-    val bestKeys = cols
-      .filter(col("is_pk_candidate") || col("is_fk_candidate"))
-      .withColumn("best_rk", row_number().over(wBest))
-      .filter(col("best_rk") === 1)
-      .select(
-        col("table_base").as("candidate"),
-        col("tableName").as("target_table"), col("columnName").as("target_column"),
-        col("type_group").as("tgt_type_group"))
-    cfg.tablePatterns.filter(_.relTargetTables.nonEmpty).map { tp =>
-      val tgtHit = tp.relTargetTables.foldLeft(lit(false))((a, w) =>
-        a || lower(col("target_table")).rlike(graft.core.ConfigLoader.wildcardToRegex(w)))
-      cols.filter(col("is_fk_candidate") &&
-          lower(col("tableName")).startsWith(tp.prefix.toLowerCase) &&
-          length(col("key_stem")) >= 2)
-        .select(
-          col("tableName").as("source_table"), col("columnName").as("source_column"),
-          col("key_stem"), col("type_group").as("src_type_group"))
-        .withColumn(
-          "candidate",
-          explode(array_distinct(array(
-            col("key_stem"),
-            concat(col("key_stem"), lit("s")),
-            concat(col("key_stem"), lit("es")),
-            regexp_replace(col("key_stem"), "s$", "")))))
-        .join(bestKeys, Seq("candidate"))
-        .filter(col("source_table") =!= col("target_table") &&
-          col("src_type_group") === col("tgt_type_group") && tgtHit)
-        .withColumn("relationship_type", lit(tp.relType))
-        .withColumn("confidence", lit(tp.relConfidence))
-        .withColumn("detection_method", lit(M.TablePatternRule))
-        .withColumn("is_custom", lit(false))
-        .select(outCols.map(col): _*)
-    }.reduce(_ unionByName _)
+  def tablePatternRuleMatch(cols: Seq[KeyColumn], cfg: DetectionConfig): Seq[Relationship] = {
+    lazy val targets = bestKeys(cols)
+    cfg.tablePatterns.filter(_.relTargetTables.nonEmpty).flatMap { tp =>
+      val hits = tp.relTargetTables.map(w => Pattern.compile(ConfigLoader.wildcardToRegex(w)))
+      stemMatches(cols.filter(c => lower(c.tableName).startsWith(lower(tp.prefix))), targets)
+        .collect { case (fk, t) if hits.exists(rlike(_, lower(t.tableName))) =>
+          edge(fk, t, tp.relType, tp.relConfidence, M.TablePatternRule)
+        }
+    }
   }
 
+  private val LikelyPk = Pattern.compile("(^id$)|(_id$)|(_key$)|(_pk$)|(^pk_)|(_code$)|(_number$)")
+  private val CommonPk = Set("id", "key", "pk", "code", "number", "identifier")
+  private val TableNamePrefixes = Seq("", "h_", "dim_", "l_", "ref_", "fact_", "tbl_", "table_")
+  private val TrailingSs = Pattern.compile("s+$")
+
   /** Strategy 3b — the reference's "enhanced PK-FK" cascade (J2, confidence
-    * 0.9, relationship_detector.py:123-332), re-expressed as ranked joins:
+    * 0.9, relationship_detector.py:123-332):
     *
     *   1. build per-table likely-PK sets from name patterns
     *      (`^id$ | _id$ | _key$ | _pk$ | ^pk_ | _code$ | _number$`, plus
@@ -190,8 +148,8 @@ object RelationshipDetector {
     *      `id`, then ordinal — :583-614);
     *   2. for every column, try target-table names in the reference's exact
     *      attempt order — {stem, stem+s, stem+es, stem-minus-s} × {bare,
-    *      h_, dim_, l_, ref_, fact_, tbl_, table_} (:282-338) — via ONE
-    *      posexplode + equi-join, position = attempt rank;
+    *      h_, dim_, l_, ref_, fact_, tbl_, table_} (:282-338); the attempt's
+    *      position is its priority;
     *   3. optionally (cfg.enhancedTypeFallback) the compatibility fallback
     *      (:246-257): the first other table (name order — the reference's
     *      dict-insertion order made deterministic) holding a compatible
@@ -204,126 +162,62 @@ object RelationshipDetector {
     * on schema-only metadata. One edge per source column (the cascade's
     * first hit), labeled `enhanced_pk_fk` at 0.9.
     */
-  def enhancedPkFkMatch(cols: DataFrame, cfg: DetectionConfig = DetectionConfig()): DataFrame = {
-    val nm = lower(col("columnName"))
-    val likelyPk = nm.rlike("(^id$)|(_id$)|(_key$)|(_pk$)|(^pk_)|(_code$)|(_number$)") ||
-      col("is_pk_candidate") ||
-      nm === concat(col("table_base"), lit("_id")) ||
-      nm === concat(col("table_base"), lit("_key"))
-    val commonPk = nm.isin("id", "key", "pk", "code", "number", "identifier")
-    val wTable = Window.partitionBy("tableName")
-    val annotated = cols
-      .withColumn("lpk", likelyPk)
-      .withColumn("has_lpk", max(col("lpk").cast("int")).over(wTable) === 1)
-      .withColumn("pk_member", col("lpk") || (!col("has_lpk") && commonPk))
-    val wBest = Window.partitionBy("tableName").orderBy(
-      col("is_pk_candidate").desc, (nm === "id").desc, col("ordinal").asc)
-    val targets = annotated.filter(col("pk_member") && !col("isArray"))
-      .withColumn("rk", row_number().over(wBest)).filter(col("rk") === 1)
-      .select(
-        lower(col("tableName")).as("candidate"),
-        col("tableName").as("target_table"), col("columnName").as("target_column"),
-        col("dataType").as("t_dt"), col("nullable").as("t_null"))
-
-    val src = cols.filter(!col("isArray"))
-      .select(
-        col("tableName").as("source_table"), col("columnName").as("source_column"),
-        col("key_stem"), col("dataType").as("s_dt"), col("nullable").as("s_null"))
-    val compat = col("s_dt") === col("t_dt") && col("s_null") === col("t_null")
-
-    // strategies 1+2: ordered name attempts, position encodes priority
-    val prefixes = Seq("", "h_", "dim_", "l_", "ref_", "fact_", "tbl_", "table_")
-    val stems = Seq(
-      col("key_stem"),
-      concat(col("key_stem"), lit("s")),
-      concat(col("key_stem"), lit("es")),
-      regexp_replace(col("key_stem"), "s+$", ""))
-    val attempts = for (s <- stems; p <- prefixes) yield concat(lit(p), s)
-    val nameMatches = src.filter(length(col("key_stem")) >= 2)
-      .select(
-        col("source_table"), col("source_column"), col("s_dt"), col("s_null"),
-        posexplode(array(attempts: _*)).as(Seq("pos", "candidate")))
-      .join(targets, Seq("candidate"))
-      .filter(compat)
-      .drop("candidate")
-    // strategy 3 (opt-in): first compatible likely-PK, table-name order
-    val all =
-      if (!cfg.enhancedTypeFallback) nameMatches
-      else nameMatches.unionByName(
-        src.join(broadcast(targets.drop("candidate")), compat)
-          .withColumn("pos", lit(Int.MaxValue))
-          .select(
-            col("source_table"), col("source_column"), col("s_dt"), col("s_null"),
-            col("pos"), col("target_table"), col("target_column"),
-            col("t_dt"), col("t_null")))
-    val wFirst = Window.partitionBy("source_table", "source_column")
-      .orderBy(col("pos").asc, lower(col("target_table")).asc, col("target_column").asc)
-    all.filter(col("source_table") =!= col("target_table"))
-      .withColumn("rk", row_number().over(wFirst)).filter(col("rk") === 1)
-      .withColumn("relationship_type", lit("many_to_one"))
-      .withColumn("confidence", lit(cfg.methodConfidence(M.EnhancedPkFk, 0.9)))
-      .withColumn("detection_method", lit(M.EnhancedPkFk))
-      .withColumn("is_custom", lit(false))
-      .select(outCols.map(col): _*)
+  def enhancedPkFkMatch(cols: Seq[KeyColumn], cfg: DetectionConfig): Seq[Relationship] = {
+    val targets = cols.groupBy(_.tableName).values.flatMap { table =>
+      def likely(c: KeyColumn) = {
+        val nm = lower(c.columnName)
+        rlike(LikelyPk, nm) || c.isPk || nm == c.tableBase + "_id" || nm == c.tableBase + "_key"
+      }
+      val hasLikely = table.exists(likely)
+      table.filter(c => !c.isArray && (likely(c) || (!hasLikely && CommonPk(lower(c.columnName)))))
+        .minByOption(c => (!c.isPk, lower(c.columnName) != "id", c.ordinal))
+    }.toSeq
+    val byName = targets.groupBy(t => lower(t.tableName))
+    val conf = cfg.methodConfidence(M.EnhancedPkFk, 0.9)
+    cols.filter(!_.isArray).flatMap { s =>
+      val stem = s.keyStem
+      val attempts =
+        if (codePoints(stem) < 2) Nil
+        else for {
+          n <- Seq(stem, stem + "s", stem + "es", strip(TrailingSs, stem))
+          p <- TableNamePrefixes
+        } yield p + n
+      val named = attempts.zipWithIndex
+        .flatMap { case (a, pos) => byName.getOrElse(a, Nil).map(pos -> _) }
+      val fallback = if (cfg.enhancedTypeFallback) targets.map(Int.MaxValue -> _) else Nil
+      (named ++ fallback)
+        .filter { case (_, t) =>
+          t.tableName != s.tableName && t.dataType == s.dataType && t.nullable == s.nullable }
+        .minByOption { case (pos, t) => (pos, lower(t.tableName), t.columnName, t.tableName) }
+        .map { case (_, t) => edge(s, t, "many_to_one", conf, M.EnhancedPkFk) }
+    }
   }
 
   /** Strategy 4 — user naming rules (J7, configured confidence): regex with
     * capture group 1 + target suffix names the target table
     * (relationship_detector.py:677-717).
     */
-  def namingRuleMatch(cols: DataFrame, rules: Seq[NamingRule]): DataFrame = {
-    // Rules are config known at plan time, so each compiles to literal regex
-    // expressions (codegen-friendly, no UDF, no non-literal regexp pattern).
-    val candidates = rules
-      .map { r =>
-        cols.filter(col("is_fk_candidate"))
-          .filter(lower(col("columnName")).rlike(r.pattern))
-          .withColumn(
-            "candidate",
-            concat(regexp_extract(lower(col("columnName")), r.pattern, 1), lit(r.targetSuffix)))
-          .withColumn("rule_confidence", lit(r.confidence))
-      }
-      .reduce(_ unionByName _)
-      .select(
-        col("tableName").as("source_table"), col("columnName").as("source_column"),
-        col("candidate"), col("type_group").as("src_type_group"), col("rule_confidence"))
-    val pk = cols.filter(col("is_pk_candidate"))
-      .select(
-        col("tableName").as("candidate"), col("tableName").as("target_table"),
-        col("columnName").as("target_column"), col("type_group").as("tgt_type_group"))
-    candidates.join(pk, Seq("candidate"))
-      .filter(col("source_table") =!= col("target_table") &&
-        col("src_type_group") === col("tgt_type_group"))
-      .withColumn("relationship_type", lit("many_to_one"))
-      .withColumn("confidence", col("rule_confidence"))
-      .withColumn("detection_method", lit(M.NamingPattern))
-      .withColumn("is_custom", lit(false))
-      .select(outCols.map(col): _*)
+  def namingRuleMatch(cols: Seq[KeyColumn], rules: Seq[NamingRule]): Seq[Relationship] = {
+    val pks = cols.filter(_.isPk).groupBy(_.tableName)
+    rules.flatMap { r =>
+      val p = Pattern.compile(r.pattern)
+      for {
+        fk <- cols if fk.isFk
+        m = p.matcher(lower(fk.columnName)) if m.find()
+        t <- pks.getOrElse(Option(m.group(1)).getOrElse("") + r.targetSuffix, Nil)
+        if fk.tableName != t.tableName && fk.typeGroup == t.typeGroup
+      } yield edge(fk, t, "many_to_one", r.confidence, M.NamingPattern)
+    }
   }
 
-  /** Strategy 5 — explicit custom rules (J6): user-declared edges validated
-    * against the catalog with an inner join to BOTH endpoints
-    * (relationship_detector.py:484-533).
+  /** Strategy 5 — explicit custom rules (J6): user-declared edges kept when
+    * BOTH endpoints exist in the catalog (relationship_detector.py:484-533).
     */
-  def customRuleMatch(cols: DataFrame, rules: Seq[CustomRule]): DataFrame = {
-    val spark = cols.sparkSession
-    import spark.implicits._
-    val ruleDf = spark.createDataset(rules).toDF()
-    val ends = cols.select(col("tableName"), col("columnName"))
-    ruleDf
-      .join(ends,
-        ruleDf("sourceTable") === ends("tableName") &&
-          ruleDf("sourceColumn") === ends("columnName"), "left_semi")
-      .join(ends,
-        ruleDf("targetTable") === ends("tableName") &&
-          ruleDf("targetColumn") === ends("columnName"), "left_semi")
-      .select(
-        col("sourceTable").as("source_table"), col("sourceColumn").as("source_column"),
-        col("targetTable").as("target_table"), col("targetColumn").as("target_column"),
-        col("relationshipType").as("relationship_type"),
-        col("confidence"),
-        lit(M.CustomRule).as("detection_method"),
-        lit(true).as("is_custom"))
+  def customRuleMatch(cols: Seq[KeyColumn], rules: Seq[CustomRule]): Seq[Relationship] = {
+    val ends = cols.map(c => (c.tableName, c.columnName)).toSet
+    rules.filter(r => ends((r.sourceTable, r.sourceColumn)) && ends((r.targetTable, r.targetColumn)))
+      .map(r => Relationship(r.sourceTable, r.sourceColumn, r.targetTable, r.targetColumn,
+        r.relationshipType, r.confidence, M.CustomRule, isCustom = true))
   }
 
   /** Strategy 6 — type-compatibility fallback (J5, confidence 0.4): same
@@ -331,43 +225,46 @@ object RelationshipDetector {
     * min_confidence by default (0.4 < 0.5) exactly as the reference's
     * filtering drops it unless the threshold is lowered.
     */
-  def typeCompatMatch(cols: DataFrame, cfg: DetectionConfig = DetectionConfig()): DataFrame = {
-    val keyed = cols.filter(col("is_pk_candidate") || col("is_fk_candidate"))
-    val a = keyed.select(
-      col("tableName").as("source_table"), col("columnName").as("source_column"),
-      col("base_name").as("a_base"), col("type_group"), col("nullable").as("a_null"))
-    val b = keyed.filter(col("is_pk_candidate")).select(
-      col("tableName").as("target_table"), col("columnName").as("target_column"),
-      col("base_name").as("b_base"), col("type_group"), col("nullable").as("b_null"))
-    a.join(b, Seq("type_group"))
-      .filter(col("source_table") =!= col("target_table") &&
-        (col("a_base") === col("b_base") || col("a_base") === lit("id") ||
-          col("b_base") === lit("id")) &&
-        (!col("a_null") || !col("b_null")))
-      .withColumn("relationship_type", lit("many_to_many"))
-      .withColumn("confidence", lit(cfg.methodConfidence(M.TypeCompat, 0.4)))
-      .withColumn("detection_method", lit(M.TypeCompat))
-      .withColumn("is_custom", lit(false))
-      .select(outCols.map(col): _*)
+  def typeCompatMatch(cols: Seq[KeyColumn], cfg: DetectionConfig): Seq[Relationship] = {
+    val keyed = cols.filter(c => c.isPk || c.isFk)
+    val pks = keyed.filter(_.isPk).groupBy(_.typeGroup)
+    val conf = cfg.methodConfidence(M.TypeCompat, 0.4)
+    for {
+      a <- keyed
+      b <- pks.getOrElse(a.typeGroup, Nil)
+      if a.tableName != b.tableName &&
+        (a.baseName == b.baseName || a.baseName == "id" || b.baseName == "id") &&
+        (!a.nullable || !b.nullable)
+    } yield edge(a, b, "many_to_many", conf, M.TypeCompat)
   }
 
-  /** A6 — conflict resolution: one row per (src,srcCol,tgt,tgtCol), keeping
-    * max confidence, custom first on ties (relationship_detector.py:734-761),
-    * with method priority as the final deterministic tie-break.
+  /** J8 — relationship validation: both endpoints must exist in the catalog
+    * and their type groups must be compatible (relationship_detector
+    * .py:833-941). An edge is kept once per matching endpoint pair, as the
+    * inner joins this replaces kept it.
     */
-  def resolveConflicts(rels: DataFrame): DataFrame = {
-    val methodRank = M.priority.foldLeft(lit(99)) { case (acc, (m, p)) =>
-      when(col("detection_method") === m, p).otherwise(acc)
-    }
-    val w = Window
-      .partitionBy("source_table", "source_column", "target_table", "target_column")
-      .orderBy(col("confidence").desc, col("is_custom").desc, methodRank.asc)
-    rels.withColumn("rk", row_number().over(w)).filter(col("rk") === 1).drop("rk")
+  def validate(rels: Seq[Relationship], cols: Seq[KeyColumn]): Seq[Relationship] = {
+    val groups = cols.groupMap(c => (c.tableName, c.columnName))(_.typeGroup)
+    for {
+      r <- rels
+      s <- groups.getOrElse((r.sourceTable, r.sourceColumn), Nil)
+      t <- groups.getOrElse((r.targetTable, r.targetColumn), Nil) if s == t
+    } yield r
   }
+
+  /** A6 — conflict resolution: one edge per (src,srcCol,tgt,tgtCol), keeping
+    * max confidence, custom first on ties (relationship_detector.py:734-761),
+    * with method priority as the final tie-break.
+    */
+  def resolveConflicts(rels: Seq[Relationship]): Seq[Relationship] =
+    rels.groupBy(r => (r.sourceTable, r.sourceColumn, r.targetTable, r.targetColumn)).values
+      .map(_.minBy(r => (-r.confidence, !r.isCustom, M.priority.getOrElse(r.detectionMethod, 99),
+        r.relationshipType)))
+      .toSeq
 
   /** W1+W2 — the reference's full filter (relationship_detector.py:763-830),
-    * set-oriented and deterministic (SURVEY §7.4.2: Python list order becomes
-    * an explicit total order — confidence desc, then name asc):
+    * deterministic (SURVEY §7.4.2: Python list order becomes an explicit
+    * total order — confidence desc, then name asc):
     *
     *   1. rank edges per source table; keep the top `maxRelationshipsPerTable`
     *      that clear `minConfidence` AND are "meaningful" (preferred detection
@@ -376,57 +273,65 @@ object RelationshipDetector {
     *   2. backfill tables left with < `backfillMin` meaningful edges from the
     *      ≥ minConfidence remainder, in rank order (:811-816);
     *   3. keep the first edge per (source_table, target_table) pair (:822-828).
+    *
+    * Edges come out sorted by endpoints.
     */
-  def filterTopK(rels: DataFrame, cfg: DetectionConfig = DetectionConfig()): DataFrame = {
-    val order = Seq(
-      col("confidence").desc, col("source_column").asc,
-      col("target_table").asc, col("target_column").asc)
-    val wTable = Window.partitionBy("source_table").orderBy(order: _*)
-    val ranked = rels
-      .filter(col("confidence") >= cfg.minConfidence)
-      .withColumn("rk", row_number().over(wTable))
-    val isMeaningful =
-      col("detection_method").isin(cfg.preferredMethods: _*) || col("confidence") >= 0.5
-    val meaningful = ranked
-      .filter(col("rk") <= cfg.maxRelationshipsPerTable && isMeaningful)
-    // 2. backfill: tables with < backfillMin meaningful edges take the best
-    // remaining threshold-clearing edges until they reach backfillMin.
-    val counts = meaningful.groupBy("source_table").agg(count(lit(1)).as("n_kept"))
-    val edgeKey = Seq("source_table", "source_column", "target_table", "target_column")
-    val remainder = ranked
-      .join(meaningful.select(edgeKey.map(col): _*), edgeKey, "left_anti")
-      .withColumn("brk",
-        row_number().over(Window.partitionBy("source_table").orderBy(order: _*)))
-      .join(counts, Seq("source_table"), "left")
-      .na.fill(0, Seq("n_kept"))
-      .filter(col("n_kept") + col("brk") <= cfg.backfillMin)
-      .drop("brk", "n_kept")
-    val kept = meaningful.drop("rk").unionByName(remainder.drop("rk"))
-    // 3. W2 — first edge per (source, target) pair in the same total order.
-    val wPair = Window.partitionBy("source_table", "target_table").orderBy(order: _*)
-    kept.withColumn("prk", row_number().over(wPair))
-      .filter(col("prk") === 1).drop("prk")
+  def filterTopK(rels: Seq[Relationship], cfg: DetectionConfig): Seq[Relationship] = {
+    val rank = (r: Relationship) => (-r.confidence, r.sourceColumn, r.targetTable, r.targetColumn)
+    val key = (r: Relationship) => (r.sourceColumn, r.targetTable, r.targetColumn)
+    val bySource = rels.filter(_.confidence >= cfg.minConfidence).groupBy(_.sourceTable).values
+    val kept = bySource.flatMap { table =>
+      val ranked = table.sortBy(rank)
+      val meaningful = ranked.take(cfg.maxRelationshipsPerTable)
+        .filter(r => cfg.preferredMethods.contains(r.detectionMethod) || r.confidence >= 0.5)
+      val taken = meaningful.map(key).toSet
+      meaningful ++ ranked.filterNot(r => taken(key(r))).take(cfg.backfillMin - meaningful.size)
+    }
+    kept.groupBy(r => (r.sourceTable, r.targetTable)).values.map(_.minBy(rank)).toSeq
+      .sortBy(r => (r.sourceTable, r.sourceColumn, r.targetTable, r.targetColumn))
   }
 
-  /** Full pipeline: all strategies ∪ → validate → resolve → threshold+top-k.
-    * `cols` must be a KeyClassifier.classify output.
-    */
+  /** Full pipeline: all strategies ∪ → validate → resolve → threshold+top-k. */
+  def detect(
+      cols: Seq[KeyColumn],
+      customRules: Seq[CustomRule],
+      namingRules: Seq[NamingRule],
+      cfg: DetectionConfig): Seq[Relationship] = {
+    val all = exactBaseMatch(cols, cfg) ++ suffixTableMatch(cols, cfg) ++
+      dataVaultMatch(cols, cfg) ++ enhancedPkFkMatch(cols, cfg) ++ typeCompatMatch(cols, cfg) ++
+      tablePatternRuleMatch(cols, cfg) ++ namingRuleMatch(cols, namingRules) ++
+      customRuleMatch(cols, customRules)
+    filterTopK(resolveConflicts(validate(all, cols)), cfg)
+  }
+
+  // Frame wrappers: `cols` must be a KeyClassifier.classify output.
+  def exactBaseMatch(cols: DataFrame, cfg: DetectionConfig = DetectionConfig()): DataFrame =
+    lift(cols)(exactBaseMatch(_, cfg))
+  def suffixTableMatch(cols: DataFrame, cfg: DetectionConfig = DetectionConfig()): DataFrame =
+    lift(cols)(suffixTableMatch(_, cfg))
+  def dataVaultMatch(cols: DataFrame, cfg: DetectionConfig = DetectionConfig()): DataFrame =
+    lift(cols)(dataVaultMatch(_, cfg))
+  def tablePatternRuleMatch(cols: DataFrame, cfg: DetectionConfig): DataFrame =
+    lift(cols)(tablePatternRuleMatch(_, cfg))
+  def enhancedPkFkMatch(cols: DataFrame, cfg: DetectionConfig = DetectionConfig()): DataFrame =
+    lift(cols)(enhancedPkFkMatch(_, cfg))
+  def namingRuleMatch(cols: DataFrame, rules: Seq[NamingRule]): DataFrame =
+    lift(cols)(namingRuleMatch(_, rules))
+  def customRuleMatch(cols: DataFrame, rules: Seq[CustomRule]): DataFrame =
+    lift(cols)(customRuleMatch(_, rules))
+  def typeCompatMatch(cols: DataFrame, cfg: DetectionConfig = DetectionConfig()): DataFrame =
+    lift(cols)(typeCompatMatch(_, cfg))
+  def validate(rels: DataFrame, cols: DataFrame): DataFrame =
+    liftEdges(rels)(validate(_, KeyClassifier.collect(cols)))
+  def resolveConflicts(rels: DataFrame): DataFrame = liftEdges(rels)(resolveConflicts)
+  def filterTopK(rels: DataFrame, cfg: DetectionConfig = DetectionConfig()): DataFrame =
+    liftEdges(rels)(filterTopK(_, cfg))
   def detect(
       cols: DataFrame,
       customRules: Seq[CustomRule] = Nil,
       namingRules: Seq[NamingRule] = Nil,
-      cfg: DetectionConfig = DetectionConfig()): DataFrame = {
-    var all = exactBaseMatch(cols, cfg)
-      .unionByName(suffixTableMatch(cols, cfg))
-      .unionByName(dataVaultMatch(cols, cfg))
-      .unionByName(enhancedPkFkMatch(cols, cfg))
-      .unionByName(typeCompatMatch(cols, cfg))
-    if (cfg.tablePatterns.exists(_.relTargetTables.nonEmpty))
-      all = all.unionByName(tablePatternRuleMatch(cols, cfg))
-    if (namingRules.nonEmpty) all = all.unionByName(namingRuleMatch(cols, namingRules))
-    if (customRules.nonEmpty) all = all.unionByName(customRuleMatch(cols, customRules))
-    filterTopK(resolveConflicts(validate(all, cols)), cfg)
-  }
+      cfg: DetectionConfig = DetectionConfig()): DataFrame =
+    lift(cols)(detect(_, customRules, namingRules, cfg))
 
   /** A7 — relationship quality report (enhanced_relationship_detector
     * .py:285-325) as one tidy frame: a row per (dimension, key) with its
@@ -455,28 +360,5 @@ object RelationshipDetector {
         rels.agg(round(avg("confidence") * 1000).cast("long").as("n_edges"))
           .select(lit("total").as("dimension"),
             lit("avg_confidence_x1000").as("key"), col("n_edges")))
-  }
-
-  /** J8 — relationship validation: both endpoints must exist in the catalog
-    * and their type groups must be compatible (relationship_detector
-    * .py:833-941) — two semi-joins against the column catalog.
-    */
-  def validate(rels: DataFrame, cols: DataFrame): DataFrame = {
-    val ends = cols.select(
-      col("tableName"), col("columnName"), col("type_group"))
-    val src = ends
-      .withColumnRenamed("type_group", "src_tg")
-    val tgt = ends
-      .withColumnRenamed("type_group", "tgt_tg")
-    rels
-      .join(src,
-        rels("source_table") === src("tableName") &&
-          rels("source_column") === src("columnName"))
-      .drop("tableName", "columnName")
-      .join(tgt,
-        rels("target_table") === tgt("tableName") &&
-          rels("target_column") === tgt("columnName"))
-      .filter(col("src_tg") === col("tgt_tg"))
-      .select(outCols.map(col): _*)
   }
 }

@@ -47,7 +47,7 @@ object Drift {
     * type_changed / unchanged — [[snapshotDiff]]'s twin at the SCHEMA
     * level (did a producer silently widen a column or drop a table
     * between freezes). Inputs carry (tableName, columnName, dataType)
-    * rows, e.g. `ParquetCatalog.columnRefs` of each snapshot.
+    * rows, e.g. `GraftEngine.classifiedColumns` of each snapshot.
     *
     * Scale: catalog-sized by construction (footer metadata, not data) —
     * one full-outer join over a few thousand rows at most.

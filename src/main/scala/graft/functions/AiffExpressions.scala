@@ -277,12 +277,12 @@ object AiffNativeFunctions {
 
   /** Register the AIFF codec functions (idempotent). */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_aiff_encode",
+    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
+      FunctionRegistration.ensure(spark, name, "graft.functions.AiffNativeFunctions", builder)
+    ensure("graft_aiff_encode",
       exprs => AiffEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_aiff_decode", exprs => AiffDecode(exprs.head), "built-in")
+        exprs(1).eval().asInstanceOf[Int]))
+    ensure("graft_aiff_decode", exprs => AiffDecode(exprs.head))
   }
 
   def aiffEncode(spark: SparkSession, bytes: Column, channels: Int): Column = {

@@ -582,22 +582,18 @@ object AviNativeFunctions {
     * JpegDctNativeFunctions.
     */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_avimjpeg_encode",
+    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
+      FunctionRegistration.ensure(spark, name, "graft.functions.AviNativeFunctions", builder)
+    ensure("graft_avimjpeg_encode",
       exprs => AviMjpegEncode(exprs.head,
         exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_aviav_encode",
+        exprs(2).eval().asInstanceOf[Int]))
+    ensure("graft_aviav_encode",
       exprs => AviAvEncode(exprs.head,
         exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_avimjpeg_decode",
-      exprs => AviDecode(exprs.head, withAudio = false), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_aviav_decode",
-      exprs => AviDecode(exprs.head, withAudio = true), "built-in")
+        exprs(2).eval().asInstanceOf[Int]))
+    ensure("graft_avimjpeg_decode", exprs => AviDecode(exprs.head, withAudio = false))
+    ensure("graft_aviav_decode", exprs => AviDecode(exprs.head, withAudio = true))
   }
 
   def aviMjpegEncode(spark: SparkSession, bytes: Column, width: Int,

@@ -493,20 +493,16 @@ object BmpRleNativeFunctions {
 
   /** Register the RLE BMP codec functions (idempotent). */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bmp_rle8_encode",
+    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
+      FunctionRegistration.ensure(spark, name, "graft.functions.BmpRleNativeFunctions", builder)
+    ensure("graft_bmp_rle8_encode",
       exprs => BmpRle8Encode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bmp_rle8_decode",
-      exprs => BmpRle8Decode(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bmp_rle4_encode",
+        exprs(1).eval().asInstanceOf[Int]))
+    ensure("graft_bmp_rle8_decode", exprs => BmpRle8Decode(exprs.head))
+    ensure("graft_bmp_rle4_encode",
       exprs => BmpRle4Encode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bmp_rle4_decode",
-      exprs => BmpRle4Decode(exprs.head), "built-in")
+        exprs(1).eval().asInstanceOf[Int]))
+    ensure("graft_bmp_rle4_decode", exprs => BmpRle4Decode(exprs.head))
   }
 
   def bmpRle8Encode(spark: SparkSession, bytes: Column, width: Int): Column = {

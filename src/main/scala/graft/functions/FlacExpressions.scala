@@ -1037,18 +1037,17 @@ object FlacNativeFunctions {
 
   /** Register `graft_flac_encode` / `graft_flac_decode` (idempotent). */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_flac_encode",
+    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
+      FunctionRegistration.ensure(spark, name, "graft.functions.FlacNativeFunctions", builder)
+    ensure("graft_flac_encode",
       exprs => FlacEncode(exprs.head,
         if (exprs.length > 1) exprs(1).eval().asInstanceOf[Int] else 0,
         if (exprs.length > 2) exprs(2).eval().asInstanceOf[Boolean]
         else false,
         if (exprs.length > 3) exprs(3).eval().asInstanceOf[Int] else 16,
         if (exprs.length > 4) exprs(4).eval().asInstanceOf[Boolean]
-        else false),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_flac_decode", exprs => FlacDecode(exprs.head), "built-in")
+        else false))
+    ensure("graft_flac_decode", exprs => FlacDecode(exprs.head))
   }
 
   def flacEncode(spark: SparkSession, bytes: Column,

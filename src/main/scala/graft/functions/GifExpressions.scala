@@ -846,8 +846,9 @@ object GifNativeFunctions {
     * animated shapes).
     */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gif_encode",
+    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
+      FunctionRegistration.ensure(spark, name, "graft.functions.GifNativeFunctions", builder)
+    ensure("graft_gif_encode",
       exprs => GifEncode(exprs.head,
         exprs(1).eval().asInstanceOf[Int],
         if (exprs.length > 2) exprs(2).eval().asInstanceOf[Int] else 8,
@@ -856,12 +857,9 @@ object GifNativeFunctions {
         if (exprs.length > 5) exprs(5).eval().asInstanceOf[Boolean]
         else false,
         if (exprs.length > 6) exprs(6).eval().asInstanceOf[Boolean]
-        else false),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gif_decode", exprs => GifDecode(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gif_composite", exprs => GifComposite(exprs.head), "built-in")
+        else false))
+    ensure("graft_gif_decode", exprs => GifDecode(exprs.head))
+    ensure("graft_gif_composite", exprs => GifComposite(exprs.head))
   }
 
   def gifEncode(spark: SparkSession, bytes: Column, width: Int,

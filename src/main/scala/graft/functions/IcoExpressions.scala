@@ -312,12 +312,12 @@ object IcoNativeFunctions {
 
   /** Register the ICO codec functions (idempotent). */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ico_encode",
+    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
+      FunctionRegistration.ensure(spark, name, "graft.functions.IcoNativeFunctions", builder)
+    ensure("graft_ico_encode",
       exprs => IcoEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ico_decode", exprs => IcoDecode(exprs.head), "built-in")
+        exprs(1).eval().asInstanceOf[Int]))
+    ensure("graft_ico_decode", exprs => IcoDecode(exprs.head))
   }
 
   def icoEncode(spark: SparkSession, bytes: Column, width: Int): Column = {

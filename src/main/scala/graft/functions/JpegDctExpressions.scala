@@ -1777,26 +1777,23 @@ object JpegDctNativeFunctions {
     * (idempotent), mirroring QoiNativeFunctions.
     */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jpegdct_encode",
+    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
+      FunctionRegistration.ensure(spark, name, "graft.functions.JpegDctNativeFunctions", builder)
+    ensure("graft_jpegdct_encode",
       exprs => JpegDctEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jpegdct_decode", exprs => JpegDctDecode(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jpegprog_encode",
+        exprs(1).eval().asInstanceOf[Int]))
+    ensure("graft_jpegdct_decode", exprs => JpegDctDecode(exprs.head))
+    ensure("graft_jpegprog_encode",
       exprs => JpegProgEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jpegmeta_encode",
+        exprs(1).eval().asInstanceOf[Int]))
+    ensure("graft_jpegmeta_encode",
       exprs => JpegMetaEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jpegycc_encode",
+        exprs(1).eval().asInstanceOf[Int]))
+    ensure("graft_jpegycc_encode",
       exprs => JpegYccEncode(exprs.head,
         exprs(1).eval().asInstanceOf[Int],
         exprs(2).eval().asInstanceOf[Int],
-        exprs(3).eval().asInstanceOf[Int]), "built-in")
+        exprs(3).eval().asInstanceOf[Int]))
   }
 
   def jpegYccEncode(spark: SparkSession, bytes: Column, lumaH: Int,

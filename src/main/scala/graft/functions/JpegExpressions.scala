@@ -379,12 +379,12 @@ object JpegNativeFunctions {
     * mirroring QoiNativeFunctions.
     */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jpegll_encode",
+    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
+      FunctionRegistration.ensure(spark, name, "graft.functions.JpegNativeFunctions", builder)
+    ensure("graft_jpegll_encode",
       exprs => JpegLosslessEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jpegll_decode", exprs => JpegLosslessDecode(exprs.head), "built-in")
+        exprs(1).eval().asInstanceOf[Int]))
+    ensure("graft_jpegll_decode", exprs => JpegLosslessDecode(exprs.head))
   }
 
   def jpegEncode(spark: SparkSession, bytes: Column, width: Int): Column = {

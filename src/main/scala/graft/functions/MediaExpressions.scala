@@ -652,16 +652,13 @@ object MediaNativeFunctions {
     * mirroring QoiNativeFunctions.
     */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bmp_dhash", exprs => BmpDHashWalk(exprs), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bmp_dhash128", exprs => BmpDHash128Walk(exprs), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_y4m_frames", exprs => Y4mFrameWalk(exprs), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_y4m_header", exprs => Y4mHeaderParse(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ppm_header", exprs => PpmHeaderParse(exprs.head), "built-in")
+    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
+      FunctionRegistration.ensure(spark, name, "graft.functions.MediaNativeFunctions", builder)
+    ensure("graft_bmp_dhash", exprs => BmpDHashWalk(exprs))
+    ensure("graft_bmp_dhash128", exprs => BmpDHash128Walk(exprs))
+    ensure("graft_y4m_frames", exprs => Y4mFrameWalk(exprs))
+    ensure("graft_y4m_header", exprs => Y4mHeaderParse(exprs.head))
+    ensure("graft_ppm_header", exprs => PpmHeaderParse(exprs.head))
   }
 
   def ppmHeaderParse(spark: SparkSession, bytes: Column): Column = {

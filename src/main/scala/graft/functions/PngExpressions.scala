@@ -580,17 +580,17 @@ object PngNativeFunctions {
     * mirroring QoiNativeFunctions.
     */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_png_encode",
+    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
+      FunctionRegistration.ensure(spark, name, "graft.functions.PngNativeFunctions", builder)
+    ensure("graft_png_encode",
       exprs => PngEncode(exprs.head,
         exprs(1).eval().asInstanceOf[Int],
         if (exprs.length > 2) exprs(2).eval().asInstanceOf[Int] else 2,
         if (exprs.length > 3) exprs(3).eval().asInstanceOf[Boolean]
         else false,
         if (exprs.length > 4) exprs(4).eval().asInstanceOf[Int]
-        else 8), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_png_decode", exprs => PngDecode(exprs.head), "built-in")
+        else 8))
+    ensure("graft_png_decode", exprs => PngDecode(exprs.head))
   }
 
   def pngEncode(spark: SparkSession, bytes: Column, width: Int,

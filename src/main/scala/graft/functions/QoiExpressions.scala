@@ -283,12 +283,12 @@ object QoiNativeFunctions {
     * mirroring TextNativeFunctions.
     */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_qoi_encode",
+    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
+      FunctionRegistration.ensure(spark, name, "graft.functions.QoiNativeFunctions", builder)
+    ensure("graft_qoi_encode",
       exprs => QoiEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_qoi_decode", exprs => QoiDecode(exprs.head), "built-in")
+        exprs(1).eval().asInstanceOf[Int]))
+    ensure("graft_qoi_decode", exprs => QoiDecode(exprs.head))
   }
 
   def qoiEncode(spark: SparkSession, bytes: Column, width: Int): Column = {

@@ -762,8 +762,9 @@ object TarNativeFunctions {
 
   /** Register the tar codec functions (idempotent). */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tar_encode",
+    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
+      FunctionRegistration.ensure(spark, name, "graft.functions.TarNativeFunctions", builder)
+    ensure("graft_tar_encode",
       exprs => TarEncode(exprs.head,
         exprs(1).eval().asInstanceOf[Int],
         exprs(2).eval().asInstanceOf[Boolean],
@@ -778,9 +779,8 @@ object TarNativeFunctions {
         if (exprs.length > 7) exprs(7).eval().asInstanceOf[Boolean]
         else false,
         if (exprs.length > 8) exprs(8).eval().asInstanceOf[Boolean]
-        else false), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tar_decode",
+        else false))
+    ensure("graft_tar_decode",
       exprs => TarDecode(exprs.head,
         exprs(1).eval().asInstanceOf[Boolean],
         if (exprs.length > 2) exprs(2).eval().asInstanceOf[Boolean]
@@ -788,11 +788,10 @@ object TarNativeFunctions {
         if (exprs.length > 3) exprs(3).eval().asInstanceOf[Boolean]
         else false,
         if (exprs.length > 4) exprs(4).eval().asInstanceOf[Boolean]
-        else false), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tar_members",
+        else false))
+    ensure("graft_tar_members",
       exprs => TarMembers(exprs.head,
-        exprs(1).eval().asInstanceOf[Boolean]), "built-in")
+        exprs(1).eval().asInstanceOf[Boolean]))
   }
 
   def tarEncode(spark: SparkSession, bytes: Column, memberBytes: Int,

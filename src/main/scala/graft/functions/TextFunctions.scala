@@ -34,10 +34,11 @@ object TextFunctions {
     "graft_quality" -> colFn(cs => TextAnalysis.qualityScore(cs(0))),
     "graft_hamming" -> colFn(cs => Dedup.hammingDist(cs(0), cs(1))))
 
-  /** Idempotent temp-function registration on a live session. */
+  /** Registers the scalars on a live session once (a session built with
+    * `GraftExtensions` already holds them).
+    */
   def register(spark: SparkSession): Unit =
     all.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      FunctionRegistration.ensure(spark, name, "graft.functions.TextFunctions", builder)
     }
 }

@@ -1030,8 +1030,9 @@ object TiffNativeFunctions {
 
   /** Register `graft_tiff_encode` / `graft_tiff_decode` (idempotent). */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tiff_encode",
+    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
+      FunctionRegistration.ensure(spark, name, "graft.functions.TiffNativeFunctions", builder)
+    ensure("graft_tiff_encode",
       exprs => TiffEncode(exprs.head,
         exprs(1).eval().asInstanceOf[Int],
         exprs(2).eval().asInstanceOf[Boolean],
@@ -1046,10 +1047,8 @@ object TiffNativeFunctions {
         if (exprs.length > 8) exprs(8).eval().asInstanceOf[Boolean]
         else false,
         if (exprs.length > 9) exprs(9).eval().asInstanceOf[Boolean]
-        else false),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tiff_decode", exprs => TiffDecode(exprs.head), "built-in")
+        else false))
+    ensure("graft_tiff_decode", exprs => TiffDecode(exprs.head))
   }
 
   def tiffEncode(spark: SparkSession, bytes: Column, width: Int,

@@ -896,17 +896,16 @@ object WarcNativeFunctions {
 
   /** Register `graft_warc_encode` / `graft_warc_decode` (idempotent). */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_warc_encode",
+    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
+      FunctionRegistration.ensure(spark, name, "graft.functions.WarcNativeFunctions", builder)
+    ensure("graft_warc_encode",
       exprs => WarcEncode(exprs.head,
         exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Boolean]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_warc_decode",
+        exprs(2).eval().asInstanceOf[Boolean]))
+    ensure("graft_warc_decode",
       exprs => WarcDecode(exprs.head,
-        exprs(1).eval().asInstanceOf[Boolean]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_warc_http_encode",
+        exprs(1).eval().asInstanceOf[Boolean]))
+    ensure("graft_warc_http_encode",
       exprs => WarcHttpEncode(exprs.head,
         exprs(1).eval().asInstanceOf[Int],
         exprs(2).eval().asInstanceOf[Boolean],
@@ -915,15 +914,13 @@ object WarcNativeFunctions {
         if (exprs.length > 4) exprs(4).eval().asInstanceOf[Boolean]
         else false,
         if (exprs.length > 5) exprs(5).eval().asInstanceOf[Boolean]
-        else false), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_warc_http_stats",
+        else false))
+    ensure("graft_warc_http_stats",
       exprs => WarcHttpStats(exprs.head,
-        exprs(1).eval().asInstanceOf[Boolean]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_warc_http_records",
+        exprs(1).eval().asInstanceOf[Boolean]))
+    ensure("graft_warc_http_records",
       exprs => WarcHttpRecords(exprs.head,
-        exprs(1).eval().asInstanceOf[Boolean]), "built-in")
+        exprs(1).eval().asInstanceOf[Boolean]))
   }
 
   def warcEncode(spark: SparkSession, bytes: Column, recordBytes: Int,

@@ -597,8 +597,9 @@ object ZipNativeFunctions {
 
   /** Register the zip codec functions (idempotent). */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_zip_encode",
+    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
+      FunctionRegistration.ensure(spark, name, "graft.functions.ZipNativeFunctions", builder)
+    ensure("graft_zip_encode",
       exprs => ZipEncode(exprs.head,
         exprs(1).eval().asInstanceOf[Int],
         exprs(2).eval().asInstanceOf[Boolean],
@@ -607,11 +608,9 @@ object ZipNativeFunctions {
         if (exprs.length > 5)
           exprs(5).eval().asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
             .toString
-        else "doc"), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_zip_decode", exprs => ZipDecode(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_zip_members", exprs => ZipMembers(exprs.head), "built-in")
+        else "doc"))
+    ensure("graft_zip_decode", exprs => ZipDecode(exprs.head))
+    ensure("graft_zip_members", exprs => ZipMembers(exprs.head))
   }
 
   def zipMembers(spark: SparkSession, bytes: Column): Column = {

@@ -6,6 +6,7 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.conf.PlainParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -102,8 +103,13 @@ object LocalParquet {
     files.find(_.getFileName.toString == Part).fold(files)(Seq(_))
   }
 
+  // Parquet's defaults without a Hadoop Configuration, which would parse
+  // Hadoop's default XML resources on every read.
+  private[graft] def readOptions: ParquetReadOptions =
+    ParquetReadOptions.builder(new PlainParquetConfiguration()).build()
+
   private def readFile(file: Path, required: Seq[String]): Seq[Row] = {
-    val reader = ParquetFileReader.open(new BytesInputFile(Files.readAllBytes(file)))
+    val reader = ParquetFileReader.open(new BytesInputFile(Files.readAllBytes(file)), readOptions)
     try {
       val message = reader.getFooter.getFileMetaData.getSchema
       val schema = StructType(message.getFields.asScala.toSeq.map(sparkField))

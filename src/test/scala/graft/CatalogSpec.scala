@@ -39,13 +39,13 @@ class CatalogSpec extends SparkSpec {
       java.nio.file.Paths.get(dir, "_tabletypes.json"),
       """{"v_latest": "VIEW", "ext_raw": "EXTERNAL"}""")
     def names(iv: Boolean, ie: Boolean) =
-      ParquetCatalog.catalog(spark, dir, includeViews = iv, includeExternal = ie)
-        .collect().map(_.tableName).toSet
+      ParquetCatalog.tables(spark, dir, includeViews = iv, includeExternal = ie)
+        .map(_.tableName).toSet
     assert(names(iv = false, ie = false) === Set("base")) // reference defaults
     assert(names(iv = true, ie = false) === Set("base", "v_latest"))
     assert(names(iv = true, ie = true) === Set("base", "v_latest", "ext_raw"))
-    val types = ParquetCatalog.catalog(spark, dir, includeViews = true, includeExternal = true)
-      .collect().map(t => t.tableName -> t.tableType).toMap
+    val types = ParquetCatalog.tables(spark, dir, includeViews = true, includeExternal = true)
+      .map(t => t.tableName -> t.tableType).toMap
     assert(types === Map("base" -> "TABLE", "v_latest" -> "VIEW", "ext_raw" -> "EXTERNAL"))
     // rewriting the sidecar in place re-types the tables on the next read
     java.nio.file.Files.writeString(
@@ -69,8 +69,7 @@ class CatalogSpec extends SparkSpec {
       .toDF("id", "customer")
       .select(col("id"), col("customer").cast("struct<customer_id:bigint,note:string>"))
       .write.mode("overwrite").parquet(s"$dir/fact_sales.parquet")
-    val cols = graft.analyze.KeyClassifier.classify(
-      ParquetCatalog.columnRefs(ParquetCatalog.catalog(spark, dir)).toDF())
+    val cols = new graft.GraftEngine(spark, dir).classifiedColumns
     val fk = cols.filter(col("columnName") === "customer.customer_id").collect()
     assert(fk.length === 1)
     assert(fk.head.getAs[Boolean]("is_fk_candidate"),

@@ -202,4 +202,26 @@ class GraftEngineSpec extends SparkSpec {
     swapIn(orders)(tmp => spark.read.parquet(snapshot).write.parquet(tmp))
     assert(new GraftEngine(spark, dir).relationships eq first)
   }
+
+  test("catalog-scale work starts no Spark job") {
+    // catalog, classify, detect, a render after an in-place drift and a
+    // refresh past the cache TTL
+    import spark.implicits._
+    val dir = writeLake()
+    // a table no other lake holds, so no memoized result can serve this one
+    Seq(1L).toDF(s"probe_${System.nanoTime}_id").write.parquet(s"$dir/probe.parquet")
+    val cache = Files.createTempDirectory("graft_jobs_cache").toString + "/cache"
+    val ttlMs = graft.core.DetectionConfig().cacheTtlMs
+    def jobs(body: => Unit) = startedBy(body).filter(_._1 == "job")
+    val engine = new GraftEngine(spark, dir)
+    assert(jobs(assert(engine.catalog.collect().length === 3)) === Seq.empty)
+    assert(jobs(assert(engine.classifiedColumns.collect().length === 5)) === Seq.empty)
+    assert(jobs(assert(engine.relationships.collect().length === 1)) === Seq.empty)
+    assert(jobs(engine.relationshipsCached(cache, 1L).collect()) === Seq.empty)
+    assert(jobs(assert(engine.relationshipsCached(cache, 2L + ttlMs).collect().length === 1))
+      === Seq.empty)
+    drift(dir)
+    val drifted = new GraftEngine(spark, dir)
+    assert(jobs(assert(drifted.renderErd("mermaid").contains("drift_note"))) === Seq.empty)
+  }
 }

@@ -63,11 +63,6 @@ class PlanSpec extends SparkSpec {
     assert(!lsh.contains("BroadcastNestedLoopJoin"), "LSH path: corpus-broadcast BNLJ")
   }
 
-  test("q15: detection joins stay broadcast at catalog scale") {
-    val p = plan("q15_detect_relationships")
-    assert(p.contains("BroadcastHashJoin"))
-  }
-
   test("q16: batched data test scans each table once, no cartesian products") {
     val p = plan("q16_datatest_metrics")
     // 8 distinct tables feed the 8 detected edges. The stacked frequency

@@ -166,8 +166,7 @@ class ConfigLoaderSpec extends SparkSpec {
       "filtering_rules": {"max_relationships_per_table": 3,
                           "min_confidence_threshold": 0.5}
     }""")
-    val cols = KeyClassifier.classify(
-      ParquetCatalog.columnRefs(ParquetCatalog.catalog(spark, sf0001)).toDF())
+    val cols = new graft.GraftEngine(spark, sf0001).classifiedColumns
     val (loadedRules, loadedNaming) = ConfigLoader.loadCustomRules(rulesPath)
     val fromFile = RelationshipDetector
       .detect(cols, loadedRules, loadedNaming, ConfigLoader.loadPatternConfig(patternsPath))

@@ -110,8 +110,8 @@ class DataTesterSpec extends SparkSpec {
       DataTester.cochranSampleSize(1000000).toDouble / 1000000)
     val eng = new graft.GraftEngine(spark, sf0001)
     val fr = eng.adaptiveSampleFractions()
-    val rows = graft.catalog.ParquetCatalog.catalog(spark, sf0001)
-      .collect().map(t => t.tableName -> t.numRows).toMap
+    val rows = graft.catalog.ParquetCatalog.tables(spark, sf0001)
+      .map(t => t.tableName -> t.numRows).toMap
     fr.foreach { case (t, f) =>
       assert(math.abs(f - math.min(1.0, DataTester.cochranSampleSize(rows(t)).toDouble / rows(t))) < 1e-12,
         s"$t fraction $f drifted from Cochran")

@@ -23,8 +23,7 @@ class RelationshipDetectorSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSet
 
   test("end-to-end on sf0.001: the seven TPC-H edges + custom rule") {
-    val cols = KeyClassifier.classify(
-      ParquetCatalog.columnRefs(ParquetCatalog.catalog(spark, sf0001)).toDF())
+    val cols = new graft.GraftEngine(spark, sf0001).classifiedColumns
     val out = RelationshipDetector.detect(
       cols, customRules = Seq(CustomRule("events", "user_id", "customer", "c_custkey")))
     assert(edges(out) === Set(

@@ -78,4 +78,23 @@ class TextFunctionsSpec extends SparkSpec {
     TextNativeFunctions.register(spark)
     infos.zip(first).foreach { case (now, before) => assert(now.get eq before.get) }
   }
+
+  test("media codec and text scalar functions are registered once per session") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    val registers: Seq[org.apache.spark.sql.SparkSession => Unit] = Seq(
+      PngNativeFunctions.register, GifNativeFunctions.register, JpegNativeFunctions.register,
+      AiffNativeFunctions.register, BmpRleNativeFunctions.register, MediaNativeFunctions.register,
+      ZipNativeFunctions.register, FlacNativeFunctions.register, TarNativeFunctions.register,
+      AviNativeFunctions.register, QoiNativeFunctions.register, WarcNativeFunctions.register,
+      TiffNativeFunctions.register, IcoNativeFunctions.register, JpegDctNativeFunctions.register,
+      TextFunctions.register)
+    registers.foreach(_(spark))
+    val names = registry.listFunction().map(_.funcName).filter(_.startsWith("graft_"))
+    def infos = names.map(n => registry.lookupFunction(FunctionIdentifier(n)).get)
+    val first = infos
+    assert(names.size >= 46 + TextFunctions.all.size)
+    registers.foreach(_(spark))
+    infos.zip(first).foreach { case (now, before) => assert(now eq before) }
+  }
 }

@@ -140,7 +140,7 @@ class IncrementalStateSpec extends SparkSpec {
   }
 
   test("canonical schema covers arrays and nullability") {
-    val cat = ParquetCatalog.catalog(spark, sf0001).collect()
+    val cat = ParquetCatalog.tables(spark, sf0001)
     val emb = cat.find(_.tableName == "embeddings").get
     assert(IncrementalState.canonicalSchema(emb) ===
       "embeddings|vec_id:bigint:opt,embedding:array<float>:opt,label:integer:opt")
