@@ -7,7 +7,7 @@ import graft.datatest.DataTester
 import graft.detect.RelationshipDetector
 import graft.render.ErdRenderer
 import graft.state.{IncrementalState, RelationshipCache}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, when}
 
 /** End-to-end engine facade — the reference's main pipeline (main.py:78-306,
@@ -37,10 +37,8 @@ class GraftEngine(
   lazy val tables: Seq[TableMeta] = ParquetCatalog.tables(spark, dir,
     includeViews = cfg.includeViews, includeExternal = cfg.includeExternal)
 
-  lazy val catalog: Dataset[TableMeta] = {
-    import spark.implicits._
-    spark.createDataset(tables)
-  }
+  lazy val catalog: Dataset[TableMeta] =
+    spark.createDataset(tables)(GraftEngine.tableMetaEncoder)
 
   // Catalog-derived results live in ParquetCatalog's memo, keyed on what
   // they read: rules, config and the catalog's content (not its directory).
@@ -226,6 +224,13 @@ class GraftEngine(
     tables.foreach { t =>
       ParquetCatalog.read(spark, t.path).createOrReplaceTempView(t.tableName)
     }
+}
+
+object GraftEngine {
+  /** Derived once: the reflective derivation costs more than the small
+    * Dataset it encodes, and an engine is built per refresh.
+    */
+  private val tableMetaEncoder: Encoder[TableMeta] = Encoders.product[TableMeta]
 }
 
 /** CLI mirroring the reference's entry point options (main.py:119-151):

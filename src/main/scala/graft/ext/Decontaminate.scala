@@ -10,18 +10,20 @@ import org.apache.spark.sql.functions._
   * Scale design: the benchmark side is distinct-hashed and BROADCAST — eval
   * suites are tiny (thousands of documents) next to a 100 TB corpus, so the
   * candidate side streams map-side through a broadcast hash join with no
-  * shuffle of the corpus at all. Per-document gram arrays are built by
-  * codegen'd array expressions (no UDFs); only (doc_id, gram_hash) longs
-  * ever leave the scan, never text. If the benchmark outgrows broadcast,
+  * shuffle of the corpus at all. Per-document gram arrays come from the
+  * native `WordShingles` kernel and each gram is hashed by the codegen'd
+  * `StableHash` (no UDFs, no lambdas); only (doc_id, gram_hash) longs ever
+  * leave the scan, never text. If the benchmark outgrows broadcast,
   * drop `broadcast()` and the same plan degrades to a hash-partitioned
   * semi-join keyed by gram hash (unbounded key cardinality).
   */
 object Decontaminate {
 
-  /** Per-doc (id, gram_hash) rows: the native shingle array EXPLODES first
-    * and the md5-prefix hash runs per ROW (codegen) — hashing inside a
-    * `transform` lambda pays interpreted per-ELEMENT dispatch, measured
-    * multiples slower on corpus-scale gram streams. `explode_outer` + a
+  /** Per-doc (id, gram_hash) rows: the native shingle array (the kernel
+    * q230 and the minhash path share) EXPLODES first and the md5-prefix
+    * hash runs per ROW (codegen) — hashing inside a `transform` lambda pays
+    * interpreted per-ELEMENT dispatch, measured multiples slower on
+    * corpus-scale gram streams. `explode_outer` + a
     * null-guarded hash keep a gram-less document (null text) PRESENT with
     * gh = null, so the per-doc report never silently drops it (count(gh)
     * sees zero grams; a null gh matches nothing in the benchmark join).
@@ -236,8 +238,7 @@ object Decontaminate {
       .select(col("band_idx"), col("band_hash"), col(idCol).as(as))
     def shingleArrays(df: DataFrame, as: String, sh: String) = df.select(
       col(idCol).as(as),
-      graft.functions.TextNativeFunctions.shingles(
-        df.sparkSession, col(textCol), shingleK).as(sh))
+      Dedup.shingles(col(textCol), shingleK).as(sh))
 
     val pairs = buckets(candidates, "corpus_id")
       .join(broadcast(buckets(benchmark, "bench_id")), Seq("band_idx", "band_hash"))

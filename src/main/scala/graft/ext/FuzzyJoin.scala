@@ -196,8 +196,7 @@ object FuzzyJoin {
     // `shingleK` changes ONLY the element space, never matching semantics.
     val elems =
       if (shingleK > 0)
-        graft.functions.TextNativeFunctions.shingles(
-          docs.sparkSession, lower(col(textCol)), shingleK)
+        Dedup.shingles(lower(col(textCol)), shingleK)
       else array_distinct(split(lower(col(textCol)), " "))
     // One parallel, pinned shingle-array table (guide §2.4 — remove
     // repeated work): repartition the docs by id BEFORE the expensive

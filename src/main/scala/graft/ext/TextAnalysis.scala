@@ -357,8 +357,7 @@ object TextAnalysis {
       explode(tokens(lower(col(textCol)))).as("el"))
       .withColumn("space", lit("token"))
     val shing = docs.select(h.as("h"),
-      explode(graft.functions.TextNativeFunctions.shingles(
-        docs.sparkSession, col(textCol), 3)).as("el"))
+      explode(Dedup.shingles(col(textCol), 3)).as("el"))
       .withColumn("space", lit("shingle"))
     toks.unionByName(shing)
       .select(col("space"), col("el"), col("h"),
@@ -828,8 +827,7 @@ object TextAnalysis {
       topK: Int = 20): DataFrame = {
     def shingled = docs.select(
       col(idCol).as("doc_id"),
-      explode(graft.functions.TextNativeFunctions.shingles(
-        docs.sparkSession, col(textCol), spanWords)).as("span"))
+      explode(Dedup.shingles(col(textCol), spanWords)).as("span"))
     val top = shingled
       .select(col("doc_id"), Dedup.stableHash(col("span"), 5).as("h"))
       .groupBy("h")

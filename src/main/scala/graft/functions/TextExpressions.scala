@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -119,10 +120,11 @@ case class WordNGrams(child: Expression, n: Int)
 }
 
 /** Native distinct word-k-shingle builder — the set-semantics twin of
-  * [[WordNGrams]] matching `Dedup.shingles`: distinct k-token windows in
-  * first-occurrence order, or the whole text as one shingle when the doc
-  * has fewer than k tokens. One pass with a linked hash set instead of the
-  * HOF transform + array_distinct's pairwise equality scan.
+  * [[WordNGrams]] and the kernel behind `Dedup.shingles`: distinct k-token
+  * windows in first-occurrence order, or the whole text as one shingle when
+  * the doc has fewer than k tokens. One pass with a linked hash set instead
+  * of the HOF transform + array_distinct's pairwise equality scan (the HOF
+  * form stays in PropertySpec as the reference).
   */
 case class WordShingles(child: Expression, k: Int)
     extends UnaryExpression with CodegenFallback {
@@ -163,6 +165,86 @@ case class WordShingles(child: Expression, k: Int)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/** Native 60-bit stable hash: the first 15 hex digits of
+  * md5(c + "#" + seed) as a Long — bit-identical to the composed
+  * `conv(substr(md5(concat_ws('#', c, seed)), 1, 15), 16, 10)::long` and to
+  * DuckDB's `CAST('0x'||substr(md5(x),1,15) AS BIGINT)`, including
+  * concat_ws's null rule (a null `c` hashes the seed alone, so the result is
+  * never null). The input is a string; `Dedup.stableHash` casts others as
+  * concat_ws does.
+  *
+  * The composed chain is five nodes per value (md5 → 32-char hex string →
+  * substr → conv's string parse → cast); this is one digest of the row's
+  * UTF-8 bytes into a per-task MessageDigest, with the prefix read off the
+  * digest bytes. The seed reaches generated code as a reference, not a
+  * literal, so every seed shares one compiled class.
+  */
+case class StableHash(child: Expression, seed: Int)
+    extends UnaryExpression {
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    if (child.dataType == StringType)
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"graft_stable_hash expects string, got ${child.dataType}")
+
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_stable_hash"
+  override def sql: String = s"$prettyName(${child.sql}, $seed)"
+
+  /** "#seed" — the bytes concat_ws appends; a null input hashes bytes 1.. */
+  @transient private lazy val suffix: Array[Byte] =
+    s"#$seed".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  override def eval(input: InternalRow): Any =
+    StableHash.hash(StableHash.threadDigest.get(),
+      child.eval(input).asInstanceOf[UTF8String], suffix)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    val helper = StableHash.getClass.getName + ".MODULE$"
+    val md = ctx.addMutableState("java.security.MessageDigest", "md5",
+      v => s"$v = $helper.newDigest();")
+    val sfx = ctx.addReferenceObj("stableHashSuffix", suffix, "byte[]")
+    ev.copy(isNull = FalseLiteral, code = code"""
+      |${c.code}
+      |long ${ev.value} = $helper.hash($md, ${c.isNull} ? null : ${c.value}, $sfx);
+      |""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object StableHash {
+  def newDigest(): java.security.MessageDigest =
+    java.security.MessageDigest.getInstance("MD5")
+
+  /** Interpreted evaluation may share one expression across threads. */
+  private[functions] val threadDigest: ThreadLocal[java.security.MessageDigest] =
+    ThreadLocal.withInitial(() => newDigest())
+
+  /** md5 of `s` (absent when null) followed by `suffix`, or of the seed
+    * alone (`suffix` past its '#') when `s` is null; the digest's first 60
+    * bits.
+    */
+  def hash(md: java.security.MessageDigest, s: UTF8String, suffix: Array[Byte]): Long = {
+    if (s == null) md.update(suffix, 1, suffix.length - 1)
+    else {
+      md.update(s.getByteBuffer)
+      md.update(suffix)
+    }
+    val d = md.digest()
+    var h = 0L
+    var i = 0
+    while (i < 7) { h = (h << 8) | (d(i) & 0xffL); i += 1 }
+    (h << 4) | ((d(7) & 0xff) >>> 4)
+  }
 }
 
 /** Native char-trigram Simpson statistics — one hash-counting pass per
@@ -329,12 +411,6 @@ object TextNativeFunctions {
   def ngrams(spark: SparkSession, text: Column, n: Int): Column = {
     register(spark)
     call_function("graft_ngrams", text, org.apache.spark.sql.functions.lit(n))
-  }
-
-  /** One-pass distinct word-k-shingle array (Dedup.shingles semantics). */
-  def shingles(spark: SparkSession, text: Column, k: Int): Column = {
-    register(spark)
-    call_function("graft_shingles", text, org.apache.spark.sql.functions.lit(k))
   }
 
   /** One-pass char-trigram Simpson counts of a (pre-lowercased) text

@@ -2,6 +2,7 @@ package graft.restore
 
 import java.io.File
 
+import graft.catalog.ParquetCatalog
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,11 +34,12 @@ object SnapshotRestore {
   }
 
   /** `FOR SYSTEM_TIME AS OF`: latest version at or before `asOfMs`
-    * (restore_dataset.sh:174-186's CTAS time-travel semantics).
+    * (restore_dataset.sh:174-186's CTAS time-travel semantics). The schema
+    * comes from the snapshot's parquet footer, so no inference job runs.
     */
   def readAsOf(spark: SparkSession, tableRoot: String, asOfMs: Long): Option[DataFrame] =
     listVersions(tableRoot).filter(_ <= asOfMs).lastOption
-      .map(v => spark.read.parquet(s"$tableRoot/_v=$v"))
+      .map(v => ParquetCatalog.read(spark, s"$tableRoot/_v=$v"))
 
   /** S14 — discover affected table names from JSON audit logs: scan a ±1 day
     * window around the snapshot, regex-extract the table id from the

@@ -403,6 +403,28 @@ class PlanSpec extends SparkSpec {
       "the corpus gram stream must never shuffle for the benchmark join")
   }
 
+  test("corpus gram paths run native kernels: no lambda, no md5 -> conv chain") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.{Conv, LambdaFunction, Md5}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.functions.col
+    import graft.ext.{Decontaminate, Dedup}
+    val helper = new AdaptiveSparkPlanHelper {}
+    // every expression node of the executed plan, final AQE stages and
+    // subqueries included
+    def interpreted(df: DataFrame): Seq[String] = {
+      df.collect()
+      helper.collectWithSubqueries(df.queryExecution.executedPlan) { case p => p }
+        .flatMap(_.expressions.flatMap(_.collect {
+          case e @ (_: LambdaFunction | _: Conv | _: Md5) => e.nodeName
+        }))
+    }
+    val docs = Tables.documents(spark, sf0001)
+    val bench = docs.where(col("doc_id") % 5 === 0)
+    assert(interpreted(Decontaminate.contamination(docs, bench)).isEmpty)
+    assert(interpreted(Dedup.minhashSignatures(docs)).isEmpty)
+  }
+
   test("q248: sorted-neighborhood is windows only — no join anywhere") {
     val p = plan("q248_sorted_neighbors")
     assert(p.contains("Window"), "the neighbor scan is a lag window")

@@ -3,6 +3,7 @@ package graft
 import graft.core.{ColumnMeta, TableMeta}
 import graft.detect.RelationshipDetector
 import graft.state.IncrementalState
+import org.apache.spark.sql.Column
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -125,13 +126,24 @@ class PropertySpec extends SparkSpec {
         assert(r.getSeq[String](0) === r.getSeq[String](1), s"ngrams n=$n"))
     }
 
-    // WordShingles(k) == Dedup.shingles HOF build (incl. whole-text case)
+    // WordShingles(k), reached through Dedup.shingles, == the HOF build
+    // (incl. the whole-text case and null / empty text)
+    def hofShingles(text: Column, k: Int): Column = {
+      val toks = split(text, " ")
+      array_distinct(
+        when(size(toks) < k, array(array_join(toks, " ")))
+          .otherwise(transform(
+            sequence(lit(0), size(toks) - k),
+            i => array_join(slice(toks, i + 1, lit(k)), " "))))
+    }
+    val withNull = df.select(col("text")).union(Seq(None, Some("")).toDF("text"))
     for (k <- Seq(2, 3)) {
-      val rows = df.select(
-        Dedup.shingles(col("text"), k).as("hof"),
-        TextNativeFunctions.shingles(spark, col("text"), k).as("native")).collect()
+      val rows = withNull.select(
+        hofShingles(col("text"), k).as("hof"),
+        Dedup.shingles(col("text"), k).as("native")).collect()
+      assert(rows.count(_.isNullAt(0)) === 1, "the null row")
       rows.foreach(r =>
-        assert(r.getSeq[String](0) === r.getSeq[String](1), s"shingles k=$k"))
+        assert(Option(r.getSeq[String](0)) === Option(r.getSeq[String](1)), s"shingles k=$k"))
     }
 
     // RepetitionStats == the size/maxRunCount/array_distinct formulation
@@ -176,6 +188,43 @@ class PropertySpec extends SparkSpec {
     natTri.foreach { case (id, (n, d, s)) =>
       if (n == 0L) assert(!hofTri.contains(id), s"id=$id: explode emitted grams for short text")
       else assert(hofTri(id) === ((n, d, s)), s"id=$id char trigram counts")
+    }
+
+    // StableHash, reached through Dedup.stableHash, == the md5 -> conv
+    // chain it replaces (the DuckDB oracle's CAST('0x'||substr(md5(x),1,15)
+    // AS BIGINT)) at several seeds, over text, non-ASCII text, the empty
+    // string, null and long ids
+    def md5Chain(c: Column, seed: Int): Column =
+      conv(substr(md5(concat_ws("#", c, lit(seed))), lit(1), lit(15)), 16, 10).cast("long")
+    val unicode: Gen[String] = for {
+      n <- Gen.choose(0, 12)
+      cs <- Gen.listOfN(n, Gen.oneOf("a", " ", "#", "\u00e9", "\u65e5\u672c", "\ud83d\ude00",
+        "\u0000", "0", "-", "\u00df"))
+    } yield cs.mkString
+    val strs = (samples(textGen, 150) ++ samples(unicode, 150) ++
+      Seq("", " ", "#", "#7", "7")).distinct
+    val ids = (samples(Gen.choose(Long.MinValue, Long.MaxValue), 100) ++
+      Seq(0L, -1L, 1L, Long.MinValue, Long.MaxValue)).distinct
+    val hashDf = strs.map(Option(_)).:+(None).zipWithIndex
+      .map { case (s, i) => (s, if (i < ids.size) Some(ids(i)) else None) }
+      .toDF("s", "id")
+    for (seed <- Seq(0, 7, -3, 123456)) {
+      val rows = hashDf.select(
+        Dedup.stableHash(col("s"), seed), md5Chain(col("s"), seed),
+        Dedup.stableHash(col("id").cast("string"), seed), md5Chain(col("id"), seed),
+        Dedup.stableHash(col("id"), seed),
+        // interpreted evaluation: the hash inside a lambda
+        transform(array(col("s")), x => Dedup.stableHash(x, seed))(0),
+        transform(array(col("s")), x => md5Chain(x, seed))(0)).collect()
+      assert(rows.length === strs.size + 1)
+      rows.foreach { r =>
+        assert(!r.isNullAt(0) && !r.isNullAt(2), s"seed=$seed: never null")
+        assert(r.getLong(0) === r.getLong(1), s"seed=$seed string")
+        assert(r.getLong(2) === r.getLong(3), s"seed=$seed long id")
+        assert(r.getLong(4) === r.getLong(3), s"seed=$seed uncast long id")
+        assert(r.getLong(5) === r.getLong(6), s"seed=$seed interpreted")
+        assert(r.getLong(0) >= 0L && r.getLong(0) < (1L << 60), s"seed=$seed 60 bits")
+      }
     }
   }
 

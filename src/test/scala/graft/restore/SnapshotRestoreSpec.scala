@@ -40,6 +40,17 @@ class SnapshotRestoreSpec extends SparkSpec {
     assert(r4.status === "failed")
   }
 
+  test("readAsOf takes the snapshot's schema from its footer: no inference job") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_snap_schema").toString
+    SnapshotRestore.writeVersion(Seq((1L, "one")).toDF("id", "v"), s"$root/t", 1000L)
+    var df: Option[org.apache.spark.sql.DataFrame] = None
+    assert(startedBy { df = SnapshotRestore.readAsOf(spark, s"$root/t", 1500L) }
+      .filter(_._1 == "job") === Seq.empty)
+    assert(df.get.schema === spark.read.parquet(s"$root/t/_v=1000").schema)
+    assert(df.get.as[(Long, String)].collect() === Array((1L, "one")))
+  }
+
   test("audit-log discovery: regex extraction + distinct union within the window") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_logs").toString
