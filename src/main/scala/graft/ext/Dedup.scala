@@ -459,10 +459,7 @@ object Dedup {
     val p0 = pairs.observe(pObs, count(lit(1)).as("n")).localCheckpoint(true)
     val nPairs = pObs.get("n").asInstanceOf[Long]
     val (a, b) = (p0.schema("id_a"), p0.schema("id_b"))
-    val integral = a.dataType == b.dataType && (a.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    })
+    val integral = a.dataType == b.dataType && isIntegral(a.dataType)
     // one integral id type on both ends: the rounds' union of both
     // orientations has that type, nullable when either end is
     if (integral && nPairs <= driverMaxPairs)
@@ -497,7 +494,23 @@ object Dedup {
         Iterator(PairChunk(ends.result(), nullEnd, partnerMin))
       }
       .collect()
-    val ends = chunks.flatMap(_.ends)
+    val (ids, canonical) = unionFind(chunks.flatMap(_.ends))
+    val out = fromLong(id.dataType)
+    val rows = ids.indices.map(i => Row(out(ids(i)), out(canonical(i))))
+    val nullRow =
+      if (chunks.exists(_.nullEnd))
+        Seq(Row(null, chunks.flatMap(_.nullPartnerMin).minOption.map(out).orNull))
+      else Nil
+    pinned.sparkSession.createDataFrame((rows ++ nullRow).asJava,
+      StructType(Seq(id, id.copy(name = "canonical_id"))))
+  }
+
+  /** Connected components of the graph whose edges are `ends` read in pairs
+    * (a, b, a, b, …): the distinct ids in ascending order and, at the same
+    * index, the minimum id of each one's component. A pair (a, a) adds a
+    * node with no link.
+    */
+  private[ext] def unionFind(ends: Array[Long]): (Array[Long], Array[Long]) = {
     // nodes in ascending id order, so the smallest index in a component is
     // its minimum id: linking every root under the smaller root keeps each
     // root its tree's minimum
@@ -519,19 +532,21 @@ object Dedup {
       if (a < b) parent(b) = a else if (b < a) parent(a) = b
       k += 2
     }
-    val out: Long => Any = id.dataType match {
-      case ByteType => _.toByte
-      case ShortType => _.toShort
-      case IntegerType => _.toInt
-      case _ => identity
-    }
-    val rows = (0 until n).map(i => Row(out(ids(i)), out(ids(find(i)))))
-    val nullRow =
-      if (chunks.exists(_.nullEnd))
-        Seq(Row(null, chunks.flatMap(_.nullPartnerMin).minOption.map(out).orNull))
-      else Nil
-    pinned.sparkSession.createDataFrame((rows ++ nullRow).asJava,
-      StructType(Seq(id, id.copy(name = "canonical_id"))))
+    (java.util.Arrays.copyOf(ids, n), Array.tabulate(n)(i => ids(find(i))))
+  }
+
+  /** Whether ids of this type are collected as `Long` by the driver paths. */
+  private[ext] def isIntegral(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** A `Long` id back in its column's integral type, for a driver result row. */
+  private[ext] def fromLong(dt: DataType): Long => Any = dt match {
+    case ByteType => _.toByte
+    case ShortType => _.toShort
+    case IntegerType => _.toInt
+    case _ => identity
   }
 
   private def pointerJumping(p0: DataFrame, nPairs: Long, maxIters: Int): DataFrame = {

@@ -1,8 +1,15 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.functions.DotProduct
+
+import scala.jdk.CollectionConverters._
 
 /** Similarity search over embedding columns (north-star extension):
   * brute-force cosine top-k as the exact baseline, and an LSH-bucketed
@@ -455,19 +462,28 @@ object Similarity {
         .mapPartitions(rows => Iterator(cellSums(rows, nCells)))
         .collect()
         .reduce(addCellSums)
-      cents = cents.zipWithIndex.map { case ((prev, prevNrm), c) =>
-        if (counts(c).isEmpty) (prev, prevNrm) // empty cell: keep previous centroid
-        else {
-          val next = prev.toArray.clone()
-          counts(c).indices.foreach { pos =>
-            next(pos) = sums(c)(pos).toDouble / counts(c)(pos) / 1048576.0
-          }
-          (next.toIndexedSeq, foldNorm(next.toIndexedSeq))
-        }
-      }
+      cents = lloydUpdate(cents, sums, counts)
     }
     cents
   }
+
+  /** One Lloyd update from the round's per-cell, per-position sums of
+    * floor(x·2²⁰) and element counts: each position's mean is
+    * (sum→double)/count/2²⁰, and its norm is [[foldNorm]]'s.
+    */
+  private def lloydUpdate(
+      cents: IndexedSeq[(IndexedSeq[Double], Double)], sums: Array[Array[Long]],
+      counts: Array[Array[Long]]): IndexedSeq[(IndexedSeq[Double], Double)] =
+    cents.zipWithIndex.map { case ((prev, prevNrm), c) =>
+      if (counts(c).isEmpty) (prev, prevNrm) // empty cell: keep previous centroid
+      else {
+        val next = prev.toArray.clone()
+        counts(c).indices.foreach { pos =>
+          next(pos) = sums(c)(pos).toDouble / counts(c)(pos) / 1048576.0
+        }
+        (next.toIndexedSeq, foldNorm(next.toIndexedSeq))
+      }
+    }
 
   private type CellSums = (Array[Array[Long]], Array[Array[Long]])
 
@@ -479,23 +495,28 @@ object Similarity {
     val sums, counts = Array.fill(nCells)(Array.emptyLongArray)
     rows.foreach { r =>
       val c = if (r.isNullAt(0) || r.isNullAt(1)) -1 else r.getInt(0)
-      if (c >= 0 && c < nCells) {
-        val v = r.getArray(1)
-        val len = v.numElements()
-        if (len > counts(c).length) {
-          sums(c) = java.util.Arrays.copyOf(sums(c), len)
-          counts(c) = java.util.Arrays.copyOf(counts(c), len)
-        }
-        var i = 0
-        while (i < len) {
-          counts(c)(i) += 1
-          if (!v.isNullAt(i))
-            sums(c)(i) = math.addExact(sums(c)(i), math.floor(v.getDouble(i) * 1048576.0).toLong)
-          i += 1
-        }
-      }
+      if (c >= 0 && c < nCells) addToCell(sums, counts, c, r.getArray(1))
     }
     (sums, counts)
+  }
+
+  /** Adds a vector of doubles to cell `c`'s sums: every position counts, and
+    * a non-null element adds floor(x·2²⁰).
+    */
+  private def addToCell(
+      sums: Array[Array[Long]], counts: Array[Array[Long]], c: Int, v: ArrayData): Unit = {
+    val len = v.numElements()
+    if (len > counts(c).length) {
+      sums(c) = java.util.Arrays.copyOf(sums(c), len)
+      counts(c) = java.util.Arrays.copyOf(counts(c), len)
+    }
+    var i = 0
+    while (i < len) {
+      counts(c)(i) += 1
+      if (!v.isNullAt(i))
+        sums(c)(i) = math.addExact(sums(c)(i), math.floor(v.getDouble(i) * 1048576.0).toLong)
+      i += 1
+    }
   }
 
   private def addCellSums(x: CellSums, y: CellSums): CellSums = {
@@ -514,11 +535,16 @@ object Similarity {
   private[ext] def sampleCentroids(
       prep: DataFrame, nlist: Int): IndexedSeq[(IndexedSeq[Double], Double)] =
     prep
-      .withColumn("ck", md5(col("id").cast("string")))
+      .withColumn("ck", initKey(col("id")))
       .orderBy("ck").limit(nlist)
       .select("vec", "nrm").collect()
       .map(r => (r.getSeq[Float](0).map(_.toDouble).toIndexedSeq, r.getDouble(1)))
       .toIndexedSeq
+
+  /** The quantizer init's order: [[sampleCentroids]] takes the rows with
+    * the `nlist` smallest keys.
+    */
+  private def initKey(id: Column): Column = md5(id.cast("string"))
 
   /** Left-to-right double fold of Σx² — the same accumulation order as the
     * engine-side norm, so driver-computed centroid norms are bit-identical
@@ -958,9 +984,38 @@ object Similarity {
     * canonical representative (min id) per semantic cluster. Output is one
     * row per vector: (id, cell, cluster_id, keep).
     *
-    * Why this scales where all-pairs cannot: the pairwise stage is bounded
-    * by Σ_cells size², and nlist grows with the corpus (cells stay
-    * human-sized), so the quadratic term never sees the full n. The
+    * Small corpora run on the driver: at most [[DriverMaxVectors]] vectors
+    * of float elements with integral ids, read in at most as many
+    * partitions as the session has cores. One job with no shuffle collects
+    * (id, vector, norm, init key) as primitive arrays, at most cutoff + 1
+    * rows per partition. The driver then runs the same computation as the
+    * Spark plan with the same kernels: the md5 init order, the `iters`
+    * Lloyd rounds on exact floor(x·2²⁰) sums, the first-maximum argmax
+    * cell, `round(cosine, 4) >= tau` over each cell's pairs and a
+    * union-find ([[graft.ext.Dedup.unionFind]]). The result is a local
+    * frame with the Spark plan's schema, so filtering and collecting it
+    * starts no job. One job in all, instead of one per Lloyd round plus the
+    * pair joins and the CC stage: at this size those cost job and plan
+    * overhead, not data work. An input the driver cannot reproduce bit for
+    * bit runs the Spark plan unchanged: a null id, vector or element, a
+    * duplicate id, a zero norm or other zero denominator, a NaN score, an
+    * overflowing sum, or more rows than the cutoff.
+    *
+    * The cutoff bounds the worst case, every vector in one cell: n(n−1)/2
+    * dot products of `dim` on one driver thread, so after the collect
+    * n²·dim must also stay within DriverMaxVectors²·64. Measured on 4
+    * cores (64-dim Gaussian vectors in one parquet split, τ=0.95, median
+    * of 3 warm calls including the result collect): 4000 vectors in one
+    * cell take 1.0 s on the driver against 5.3 s through the Spark plan,
+    * and 0.25 s against 1.29 s at nlist 8; 8000 vectors in one cell take
+    * 4.7 s against 20.7 s. The Spark plan does not win at these sizes (its
+    * one-cell case shuffles every candidate pair), so the cutoff holds the
+    * driver's worst case near one second of one thread, and the collect
+    * to ~2 MB of vectors.
+    *
+    * Why the Spark plan scales where all-pairs cannot: the pairwise stage
+    * is bounded by Σ_cells size², and nlist grows with the corpus (cells
+    * stay human-sized), so the quadratic term never sees the full n. The
     * intra-cell join reuses [[blockAssignments]]' salted block-pair
     * discipline — a hot cell is split into ⌈size/cellCap⌉ blocks joined
     * pairwise, so no single task exceeds cap² dot products and join-key
@@ -976,9 +1031,158 @@ object Similarity {
       iters: Int = 2,
       idCol: String = "vec_id",
       vecCol: String = "embedding",
-      cellCap: Int = 4096): DataFrame = {
-    val spark = corpus.sparkSession
+      cellCap: Int = 4096): DataFrame =
+    semanticDedup(corpus, tau, nlist, iters, idCol, vecCol, cellCap, DriverMaxVectors)
+
+  /** Largest corpus [[semanticDedup]] runs on the driver. */
+  private[ext] val DriverMaxVectors = 4000
+
+  /** The vector length [[DriverMaxVectors]] was sized at. */
+  private val DriverSizedDim = 64
+
+  private[graft] def semanticDedup(
+      corpus: DataFrame, tau: Double, nlist: Int, iters: Int, idCol: String,
+      vecCol: String, cellCap: Int, driverMaxVectors: Int): DataFrame = {
     val prep = prepared(corpus, idCol, vecCol, "id", "vec", "nrm")
+    semanticDedupOnDriver(prep, tau, nlist, iters, idCol, driverMaxVectors)
+      .getOrElse(semanticDedupOnSpark(prep, tau, nlist, iters, idCol, cellCap))
+  }
+
+  /** One partition's rows as primitive arrays: id, init key, vector as
+    * doubles, norm. `complete` is false, and the arrays empty, when the
+    * partition holds more rows than the cap or a null id, vector or element.
+    */
+  private case class VectorChunk(
+      ids: Array[Long], keys: Array[String], vecs: Array[Array[Double]], nrms: Array[Double],
+      complete: Boolean)
+
+  /** A division the driver path does not reproduce: a zero denominator (null
+    * without ANSI mode, an error with it) or a NaN quotient.
+    */
+  private object NotOnDriver extends scala.util.control.ControlThrowable
+
+  private def quotient(dot: Double, denominator: Double): Double = {
+    val q = dot / denominator
+    if (denominator == 0.0 || q.isNaN) throw NotOnDriver
+    q
+  }
+
+  /** `round(c, 4) >= tau` as Spark's double `Round` decides it (HALF_UP on
+    * `BigDecimal.valueOf`). Rounding moves c by at most 5e-5, so only a c
+    * within 1e-3 of tau needs the decimal.
+    */
+  private def roundedAtLeast(c: Double, tau: Double): Boolean =
+    if (c >= tau + 1e-3) true
+    else if (c <= tau - 1e-3) false
+    else (if (c.isInfinite) c
+      else java.math.BigDecimal.valueOf(c).setScale(4, java.math.RoundingMode.HALF_UP)
+        .doubleValue) >= tau
+
+  private def semanticDedupOnDriver(
+      prep: DataFrame, tau: Double, nlist: Int, iters: Int, idCol: String,
+      maxVectors: Int): Option[DataFrame] = {
+    val idField = prep.schema("id")
+    val floats = prep.schema("vec").dataType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    }
+    if (maxVectors < 1 || nlist < 1 || !floats || !Dedup.isIntegral(idField.dataType)) return None
+    val rdd = prep
+      .select(col("id").cast("long"), col("vec").cast("array<double>"), col("nrm"),
+        initKey(col("id")))
+      .queryExecution.toRdd
+    // each partition may send up to the cutoff's rows: a frame in more
+    // partitions than cores (every corpus at scale) skips the collect
+    if (rdd.getNumPartitions > prep.sparkSession.sparkContext.defaultParallelism) return None
+    val chunks = rdd.mapPartitions { rows =>
+      val ids = Array.newBuilder[Long]
+      val keys = Array.newBuilder[String]
+      val vecs = Array.newBuilder[Array[Double]]
+      val nrms = Array.newBuilder[Double]
+      var n = 0
+      var complete = true
+      while (complete && rows.hasNext) {
+        val r = rows.next()
+        val v = if (r.isNullAt(1)) null else r.getArray(1)
+        complete = n < maxVectors && !r.isNullAt(0) && v != null &&
+          !(0 until v.numElements()).exists(v.isNullAt)
+        if (complete) {
+          ids += r.getLong(0); keys += r.getUTF8String(3).toString
+          vecs += v.toDoubleArray(); nrms += r.getDouble(2)
+          n += 1
+        }
+      }
+      Iterator(
+        if (complete) VectorChunk(ids.result(), keys.result(), vecs.result(), nrms.result(), true)
+        else VectorChunk(Array.emptyLongArray, Array.empty, Array.empty, Array.emptyDoubleArray, false))
+    }.collect()
+    val n = chunks.map(_.ids.length).sum
+    val dim = chunks.iterator.flatMap(_.vecs).map(_.length).maxOption.getOrElse(0)
+    if (!chunks.forall(_.complete) || n == 0 || n > maxVectors ||
+        n.toLong * n * dim > maxVectors.toLong * maxVectors * DriverSizedDim) return None
+    // rows in ascending id order: a pair i < j is then (id_a, id_b), and
+    // the union-find's node order is the row order
+    val sorted = chunks
+      .flatMap(c => c.ids.indices.map(i => (c.ids(i), c.keys(i), c.vecs(i), c.nrms(i))))
+      .sortBy(_._1)
+    val ids = sorted.map(_._1)
+    if ((1 until n).exists(i => ids(i) == ids(i - 1))) return None
+    val vecs: Array[ArrayData] = sorted.map(r => UnsafeArrayData.fromPrimitiveArray(r._3))
+    val nrms = sorted.map(_._4)
+    def cells(cents: IndexedSeq[(IndexedSeq[Double], Double)]): Array[Int] = {
+      val cs = cents.map { case (cv, cn) => (UnsafeArrayData.fromPrimitiveArray(cv.toArray), cn) }
+      Array.tabulate(n) { i =>
+        var best = -1
+        var bestScore = 0.0
+        cs.indices.foreach { c =>
+          val s = quotient(DotProduct.dot(vecs(i), false, cs(c)._1, false), nrms(i) * cs(c)._2)
+          if (best < 0 || s > bestScore) { best = c; bestScore = s }
+        }
+        best
+      }
+    }
+    try {
+      // the init: the rows with the nlist smallest keys, as in sampleCentroids
+      var cents = sorted.sortBy(_._2).take(nlist).map(r => (r._3.toIndexedSeq, r._4)).toIndexedSeq
+      for (_ <- 1 to iters) {
+        val cell = cells(cents)
+        val sums, counts = Array.fill(cents.length)(Array.emptyLongArray)
+        (0 until n).foreach(i => addToCell(sums, counts, cell(i), vecs(i)))
+        cents = lloydUpdate(cents, sums, counts)
+      }
+      val cell = cells(cents)
+      // every vector is a node; each intra-cell pair at or above tau links two
+      val ends = new scala.collection.mutable.ArrayBuilder.ofLong
+      ids.foreach { id => ends += id; ends += id }
+      (0 until n).groupBy(cell(_)).values.foreach { members =>
+        members.indices.foreach { a =>
+          val i = members(a)
+          (a + 1 until members.length).foreach { b =>
+            val j = members(b)
+            val cos = quotient(DotProduct.dot(vecs(i), false, vecs(j), false), nrms(i) * nrms(j))
+            if (roundedAtLeast(cos, tau)) { ends += ids(i); ends += ids(j) }
+          }
+        }
+      }
+      val (_, canonical) = Dedup.unionFind(ends.result())
+      val out = Dedup.fromLong(idField.dataType)
+      val rows = (0 until n).map { i =>
+        Row(out(ids(i)), cell(i), out(canonical(i)), canonical(i) == ids(i))
+      }
+      Some(prep.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+        idField.copy(name = idCol),
+        StructField("cell", IntegerType, nullable = false),
+        StructField("cluster_id", idField.dataType, idField.nullable),
+        StructField("keep", BooleanType, idField.nullable)))))
+    } catch {
+      case NotOnDriver | _: ArithmeticException => None
+    }
+  }
+
+  private def semanticDedupOnSpark(
+      prep: DataFrame, tau: Double, nlist: Int, iters: Int, idCol: String,
+      cellCap: Int): DataFrame = {
+    val spark = prep.sparkSession
     val cents = trainCentroids(prep, nlist, iters)
     // non-nullable cell: it feeds the block-pair JOIN key (`bucket`), and a
     // nullable key's inferred isnotnull filter is pushed into the parquet

@@ -38,22 +38,9 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
   private def elemIsFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    val lf = elemIsFloat(left)
-    val rf = elemIsFloat(right)
-    var sum = 0.0
-    var i = 0
-    while (i < n) {
-      val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      sum += xv * yv
-      i += 1
-    }
-    sum
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotProduct.dot(a.asInstanceOf[ArrayData], elemIsFloat(left),
+      b.asInstanceOf[ArrayData], elemIsFloat(right))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -75,6 +62,27 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object DotProduct {
+
+  /** Σ x(i)·y(i) over the shorter array, each element read as a double and
+    * accumulated left to right: the loop the generated code runs. Shared by
+    * interpreted evaluation and driver-side callers that must match the
+    * engine bit for bit.
+    */
+  def dot(x: ArrayData, xFloat: Boolean, y: ArrayData, yFloat: Boolean): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var sum = 0.0
+    var i = 0
+    while (i < n) {
+      val xv = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
+      val yv = if (yFloat) y.getFloat(i).toDouble else y.getDouble(i)
+      sum += xv * yv
+      i += 1
+    }
+    sum
+  }
 }
 
 object VectorFunctions {

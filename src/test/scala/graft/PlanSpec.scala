@@ -172,7 +172,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q93: semantic dedup never crosses cells — block-keyed equi-joins only") {
-    val p = plan("q93_semantic_dedup")
+    // the sf0.001 corpus is within the driver cutoff, where q93's plan is a
+    // local scan: check the Spark plan that runs above it
+    val p = graft.ext.Similarity
+      .semanticDedup(Tables.embeddings(spark, sf0001), 0.3, 8, 2, "vec_id", "embedding", 4096, -1)
+      .queryExecution.explainString(FormattedMode)
     // the intra-cell pair stage must be the salted (bucket, bi, bj) join,
     // and cell scoring must stay native-dot map-side; a cartesian or BNLJ
     // anywhere means the corpus met itself pairwise

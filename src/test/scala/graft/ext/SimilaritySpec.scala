@@ -299,38 +299,152 @@ class SimilaritySpec extends SparkSpec {
     assert(costs.last === 10L * (n - 1))
   }
 
+  /** semanticDedup at tau 0.3 on the driver path (the sf0.001 corpus is
+    * within the cutoff) and on the forced Spark plan.
+    */
+  private def semanticDedupBothPaths(emb: org.apache.spark.sql.DataFrame) =
+    Seq(Similarity.DriverMaxVectors, -1).map(cutoff =>
+      Similarity.semanticDedup(emb, 0.3, 8, 2, "vec_id", "embedding", 4096, cutoff))
+
   test("semanticDedup: one row per vector, cell-contained clusters, min-id canonical") {
     val emb = Tables.embeddings(spark, sf0001)
     val n = emb.count()
-    val out = Similarity.semanticDedup(emb, tau = 0.3).collect()
-    assert(out.length === n)
-    // canonical = component min, and exactly the keepers carry their own id
-    val byCluster = out.groupBy(_.getAs[Long]("cluster_id"))
-    byCluster.foreach { case (cid, members) =>
-      assert(members.map(_.getAs[Long]("vec_id")).min === cid)
-      assert(members.count(_.getAs[Boolean]("keep")) === 1)
-      assert(members.find(_.getAs[Boolean]("keep")).get.getAs[Long]("vec_id") === cid)
-      // edges are intra-cell only, so every cluster lives in one cell
-      assert(members.map(_.getAs[Int]("cell")).toSet.size === 1)
+    semanticDedupBothPaths(emb).foreach { df =>
+      val out = df.collect()
+      assert(out.length === n)
+      // canonical = component min, and exactly the keepers carry their own id
+      val byCluster = out.groupBy(_.getAs[Long]("cluster_id"))
+      byCluster.foreach { case (cid, members) =>
+        assert(members.map(_.getAs[Long]("vec_id")).min === cid)
+        assert(members.count(_.getAs[Boolean]("keep")) === 1)
+        assert(members.find(_.getAs[Boolean]("keep")).get.getAs[Long]("vec_id") === cid)
+        // edges are intra-cell only, so every cluster lives in one cell
+        assert(members.map(_.getAs[Int]("cell")).toSet.size === 1)
+      }
     }
   }
 
   test("semanticDedup clusters cover every same-cell pair above tau") {
     val emb = Tables.embeddings(spark, sf0001)
-    val out = Similarity.semanticDedup(emb, tau = 0.3)
-    val cells = out.select(col("vec_id"), col("cell"), col("cluster_id"))
-    val pairs = Similarity.cosinePairsAbove(emb, 0.3)
-      .join(cells.select(col("vec_id").as("id_a"), col("cell").as("cell_a"),
-        col("cluster_id").as("cl_a")), Seq("id_a"))
-      .join(cells.select(col("vec_id").as("id_b"), col("cell").as("cell_b"),
-        col("cluster_id").as("cl_b")), Seq("id_b"))
-      .filter(col("cell_a") === col("cell_b"))
-      .collect()
-    assert(pairs.nonEmpty, "expected at least one same-cell pair above tau at sf0.001")
-    pairs.foreach { r =>
-      assert(r.getAs[Long]("cl_a") === r.getAs[Long]("cl_b"),
-        s"same-cell pair above tau split across clusters: $r")
+    semanticDedupBothPaths(emb).foreach { out =>
+      val cells = out.select(col("vec_id"), col("cell"), col("cluster_id"))
+      val pairs = Similarity.cosinePairsAbove(emb, 0.3)
+        .join(cells.select(col("vec_id").as("id_a"), col("cell").as("cell_a"),
+          col("cluster_id").as("cl_a")), Seq("id_a"))
+        .join(cells.select(col("vec_id").as("id_b"), col("cell").as("cell_b"),
+          col("cluster_id").as("cl_b")), Seq("id_b"))
+        .filter(col("cell_a") === col("cell_b"))
+        .collect()
+      assert(pairs.nonEmpty, "expected at least one same-cell pair above tau at sf0.001")
+      pairs.foreach { r =>
+        assert(r.getAs[Long]("cl_a") === r.getAs[Long]("cl_b"),
+          s"same-cell pair above tau split across clusters: $r")
+      }
     }
+  }
+
+  test("semanticDedup: the sf0.001 embeddings take one job, and filtering and collecting the result none") {
+    val emb = Tables.embeddings(spark, sf0001)
+    var out: org.apache.spark.sql.DataFrame = null
+    val jobs = startedBy { out = Similarity.semanticDedup(emb, tau = 0.3) }.filter(_._1 == "job")
+    assert(jobs.length <= 1, jobs.mkString("\n"))
+    var dropped = Array.empty[org.apache.spark.sql.Row]
+    val resultJobs = startedBy {
+      dropped = out.filter(!col("keep")).select("vec_id").collect()
+    }.filter(_._1 == "job")
+    assert(resultJobs.isEmpty, resultJobs.mkString("\n"))
+    assert(dropped.nonEmpty)
+  }
+
+  test("semanticDedup: the driver path equals the Spark plan on random corpora") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import scala.jdk.CollectionConverters._
+    type Vec = Option[Seq[Option[Float]]]
+    // vectors at cosine ≈ tau + off from (1, 0, …), each off along another
+    // axis so that only the rounded cosine links them: off −5e-5 is the
+    // 4-decimal rounding boundary
+    def atCosine(t: Double, axis: Int, dim: Int) = Seq.tabulate(dim)(d =>
+      if (d == 0) t.toFloat else if (d == axis) math.sqrt(1 - t * t).toFloat else 0f)
+    def nearTau(tau: Double, dim: Int) = for {
+      off <- Gen.oneOf(-1e-4, -5.1e-5, -5e-5, -4.9e-5, 0.0)
+      axis <- Gen.choose(1, dim - 1)
+    } yield atCosine(tau + off, axis, dim)
+    def vectors(n: Int, dim: Int, tau: Double, ragged: Boolean): Gen[Seq[Seq[Float]]] = {
+      val random = Gen.choose(if (ragged) math.max(1, dim - 2) else dim, dim)
+        .flatMap(Gen.listOfN(_, Gen.choose(-1f, 1f)))
+      Gen.listOfN(n, Gen.frequency(6 -> random, 3 -> nearTau(tau, dim))).flatMap { vs =>
+        // the reference vector of the near-tau ones, and copies (cosine 1)
+        Gen.listOfN(n / 4, Gen.oneOf(vs)).map(copies =>
+          (Seq(1f) ++ Seq.fill(dim - 1)(0f)) +: (vs ++ copies))
+      }
+    }
+    // one input the driver path leaves to the Spark plan, or none
+    val faults = Seq("none", "null id", "null vector", "null element", "zero vector", "duplicate id")
+    def corpus(ragged: Boolean) = for {
+      tau <- Gen.oneOf(0.3, 0.5, 0.95)
+      n <- Gen.choose(1, 20)
+      dim <- Gen.choose(2, 5)
+      vs <- vectors(n, dim, tau, ragged)
+      ids <- Gen.pick(vs.length, 0L until 1000L).map(_.toSeq)
+      nlist <- Gen.frequency(2 -> Gen.const(1), 3 -> Gen.choose(2, 8),
+        1 -> Gen.const(vs.length + 2))
+      iters <- Gen.choose(0, 2)
+      intIds <- Gen.oneOf(false, true)
+      nullable <- Gen.oneOf(false, true)
+      at <- Gen.choose(0, vs.length - 1)
+    } yield (fault: String) => {
+      val rows: Seq[(Option[Long], Vec)] =
+        ids.map(Option(_)).zip(vs.map(v => Option(v.map(Option(_)))))
+      val faulted = rows.updated(at, fault match {
+        case "null id" => (None, rows(at)._2)
+        case "null vector" => (rows(at)._1, None)
+        case "null element" => (rows(at)._1, rows(at)._2.map(_.updated(0, None)))
+        case "zero vector" => (rows(at)._1, rows(at)._2.map(_.map(_ => Some(0f))))
+        case "duplicate id" => (rows((at + 1) % rows.length)._1, rows(at)._2)
+        case _ => rows(at)
+      })
+      (faulted, tau, nlist, iters, intIds, nullable || fault == "null id", fault)
+    }
+    def outcome(df: => org.apache.spark.sql.DataFrame) =
+      scala.util.Try { val d = df; (d.schema, d.collect().map(_.toString).sorted.toSeq) }
+        .toEither.left.map(_.getClass.getName)
+    // every other corpus is clean, the rest cycle through the faults, and
+    // every third has vectors of mixed lengths
+    val random = (0 until 24).map { i =>
+      corpus(ragged = i % 3 == 0).apply(Gen.Parameters.default, Seed(i.toLong)).get
+        .apply(if (i % 2 == 0) "none" else faults(1 + i / 2 % (faults.length - 1)))
+    }
+    // and one where only the rounding links 1 to 0 and keeps 2 apart
+    val boundaryRows = Seq(
+        0L -> atCosine(1.0, 1, 3), 1L -> atCosine(0.3 - 4.9e-5, 1, 3),
+        2L -> atCosine(0.3 - 5.1e-5, 2, 3))
+      .map { case (id, v) => (Option(id), Option(v.map(Option(_)))) }
+    val boundary = (boundaryRows, 0.3, 1, 0, false, false, "none")
+    def frame(rows: Seq[(Option[Long], Vec)], intIds: Boolean, nullable: Boolean) =
+      spark.createDataFrame(rows.map { case (id, v) =>
+        Row(id.map[Any](x => if (intIds) x.toInt else x).orNull,
+          v.map(_.map(_.map(Float.box).orNull)).orNull)
+      }.asJava, StructType(Seq(
+        StructField("vid", if (intIds) IntegerType else LongType, nullable),
+        StructField("emb", ArrayType(FloatType, containsNull = true)))))
+    (random :+ boundary).zipWithIndex.foreach {
+        case ((rows, tau, nlist, iters, intIds, nullable, fault), i) =>
+      val df = frame(rows, intIds, nullable)
+      def run(cutoff: Int) = outcome(
+        Similarity.semanticDedup(df, tau, nlist, iters, "vid", "emb", 4096, cutoff))
+      val case_ = s"corpus $i ($fault, tau $tau, nlist $nlist, iters $iters): $rows"
+      var local: Either[String, (StructType, Seq[String])] = null
+      val jobs = startedBy { local = run(Similarity.DriverMaxVectors) }.count(_._1 == "job")
+      assert(local === run(-1), case_)
+      // a clean corpus stays on the driver; every fault falls back
+      if (local.isRight) assert((jobs <= 1) === (fault == "none"), s"$jobs jobs, $case_")
+    }
+    val clusters = Similarity.semanticDedup(frame(boundaryRows, false, false), 0.3, 1, 0, "vid", "emb")
+    assert(clusters.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap ===
+      Map(0L -> 0L, 1L -> 0L, 2L -> 2L))
   }
 
   test("hardNegatives: labels always differ, no self, ranks contiguous per query") {
