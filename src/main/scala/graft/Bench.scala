@@ -168,6 +168,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       // The suite compiles ~15k distinct whole-stage/expression classes per
       // pass — two orders of magnitude past the default 100-entry codegen
       // cache, so even the MIN-of-3 pass pays full Janino recompiles (the

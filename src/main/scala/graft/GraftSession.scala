@@ -36,7 +36,8 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       // Catalyst extensions: approx-distinct rewrite rule (off unless
-      // spark.graft.approxDistinct.enabled) + graft_dot SQL function.
+      // spark.graft.approxDistinct.enabled) + graft's SQL functions
+      // (GraftExtensions.functions); the Scala wrappers need neither.
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       // testdata events.ts is parquet timestamp[ns], which Spark refuses by
       // default; read as long (nanos) and convert explicitly where needed.

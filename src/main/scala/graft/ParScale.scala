@@ -43,6 +43,7 @@ object ParScale {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     // warm JVM/codegen so pass-1 mins are comparable across sessions

@@ -18,6 +18,7 @@ object RunOne {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.queries(name)(spark, sfDir)

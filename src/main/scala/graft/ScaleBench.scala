@@ -275,6 +275,7 @@ object ScaleBench {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val metrics = new QueryTaskMetricsListener

@@ -254,13 +254,12 @@ object SparkEntry {
           |WHERE o_orderstatus <> 'F'
           |GROUP BY c_mktsegment""".stripMargin)
     },
-    // §2.9 SQL face of the text operators: the scalars TextFunctions
-    // registers (token/BPE counts, language-ID, fingerprint, quality) run
+    // §2.9 SQL face of the text operators: the scalars GraftExtensions
+    // injects (token/BPE counts, language-ID, fingerprint, quality) run
     // inside `spark.sql` over the lake views — the SAME Column trees as
     // q17/q18/q19/q41, reached through the SQL surface instead of the
     // DataFrame API, so SQL-only users get the full text stack.
     "q56_sql_text" -> { (s, dir) =>
-      graft.functions.TextFunctions.register(s)
       new graft.GraftEngine(s, dir).sql(
         """SELECT doc_id,
           |       graft_lang_id(text) AS lang_pred,

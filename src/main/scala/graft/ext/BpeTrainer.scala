@@ -53,7 +53,7 @@ object BpeTrainer {
       val single = trim(rep(vocab("sp"), lit("  "), lit(" ")))
       val top = vocab
         .select(explode(
-          graft.functions.TextNativeFunctions.ngrams(spark, single, 2)).as("pair"),
+          graft.functions.TextNativeFunctions.ngrams(single, 2)).as("pair"),
           col("wf"))
         .groupBy(col("pair")).agg(sum(col("wf")).cast("long").as("c"))
         .orderBy(col("c").desc, col("pair").asc).limit(1)

@@ -132,7 +132,6 @@ object Decontaminate {
       seed: Int = 7,
       portable: Boolean = true): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark = candidates.sparkSession
     val bench = gramRows(benchmark, idCol, textCol, n, seed, portable)
       .select(col("gh")).distinct().withColumn("__hit", lit(1))
     val hits = Dedup.posGramHashes(candidates, idCol, textCol, n, seed, portable)
@@ -154,7 +153,7 @@ object Decontaminate {
         max(when(col("__rn") === 1, col("len"))).as("longest_run"),
         max(when(col("__rn") === 1, col("start"))).as("longest_start"))
     val totals = candidates.select(col(idCol),
-      size(graft.functions.TextNativeFunctions.ngrams(spark, col(textCol), n))
+      size(graft.functions.TextNativeFunctions.ngrams(col(textCol), n))
         .cast("long").as("n_grams"))
     totals.join(perDoc, Seq(idCol))
       .select(col(idCol), col("n_grams"), col("n_hit"), col("n_islands"),

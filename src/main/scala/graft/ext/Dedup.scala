@@ -773,8 +773,7 @@ object Dedup {
       k: Int, seed: Int, portable: Boolean): DataFrame =
     docs
       .select(col(idCol), posexplode(
-          graft.functions.TextNativeFunctions.ngrams(
-            docs.sparkSession, col(textCol), k))
+          graft.functions.TextNativeFunctions.ngrams(col(textCol), k))
         .as(Seq("__p0", "__g")))
       .select(col(idCol), (col("__p0") + 1).as("pos"),
         stableHash(col("__g"), seed, portable).as("gh"))
@@ -819,8 +818,7 @@ object Dedup {
     val spreadDocs = Spread.byKeyCapped(
       docs.select(col(idCol), col(textCol)), col(idCol))
     val grams = spreadDocs
-      .select(col(idCol), graft.functions.TextNativeFunctions.ngrams(
-        docs.sparkSession, col(textCol), k).as("__gs"))
+      .select(col(idCol), graft.functions.TextNativeFunctions.ngrams(col(textCol), k).as("__gs"))
       .select(col(idCol), size(col("__gs")).cast("long").as("n_grams"),
         posexplode(col("__gs")).as(Seq("__p0", "__g")))
       .select(col(idCol), col("n_grams"), (col("__p0") + 1).as("pos"),

@@ -26,10 +26,9 @@ object EmbeddingStats {
       labelCol: String = "label",
       vecCol: String = "embedding",
       zThreshold: Int = 2): DataFrame = {
-    val spark = corpus.sparkSession
     val q = floor(
-      sqrt(graft.functions.VectorFunctions.dotNative(
-        spark, col(vecCol), col(vecCol))) * 1048576.0).cast("long")
+      sqrt(graft.functions.VectorFunctions.dotNative(col(vecCol), col(vecCol))) * 1048576.0)
+      .cast("long")
     val prep = corpus.select(col(labelCol).cast("int").as("lbl"), q.as("qn"))
     val stats = prep.groupBy("lbl").agg(
       count(lit(1)).as("n"),

@@ -489,11 +489,10 @@ object Multimodal {
     * one call across the struct-field extracts).
     */
   private def ppmHeader(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"), col("bytes"),
         octet_length(col("bytes")).cast("long").as("n"),
-        graft.functions.MediaNativeFunctions.ppmHeaderParse(spark, col("bytes"))
+        graft.functions.MediaNativeFunctions.ppmHeaderParse(col("bytes"))
           .as("__h"))
       .select(col("asset_id"), col("bytes"), col("n"),
         col("__h.w").as("w"), col("__h.hgt").as("hgt"),
@@ -533,7 +532,6 @@ object Multimodal {
     */
   def encodeQoi(assets: DataFrame, width: Int = 6): DataFrame = {
     require(width >= 1, "width must be positive")
-    val spark = assets.sparkSession
     // the drop condition (shorter than one pixel row) is checked on the
     // CHEAP input length, not by filtering the encoder's null output —
     // an isNotNull post-filter gets pushed below the projection and
@@ -541,7 +539,7 @@ object Multimodal {
     assets
       .filter(octet_length(col("bytes")) >= 3 * width)
       .withColumn("bytes",
-        graft.functions.QoiNativeFunctions.qoiEncode(spark, col("bytes"), width))
+        graft.functions.QoiNativeFunctions.qoiEncode(col("bytes"), width))
   }
 
   /** Decode QOI assets natively (E219): full sequential decode — header,
@@ -562,10 +560,9 @@ object Multimodal {
     * HOF-vs-native costs).
     */
   def qoiStats(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        graft.functions.QoiNativeFunctions.qoiDecode(spark, col("bytes")).as("q"))
+        graft.functions.QoiNativeFunctions.qoiDecode(col("bytes")).as("q"))
       .select(col("asset_id"), col("q.is_valid").as("is_valid"),
         col("q.width").as("width"), col("q.height").as("height"),
         col("q.n_pixels").as("n_pixels"), col("q.sum_r").as("sum_r"),
@@ -595,7 +592,6 @@ object Multimodal {
     * every asset whose length is not row-aligned.
     */
   def qoiCompressionBySource(assets: DataFrame, width: Int = 6): DataFrame = {
-    val spark = assets.sparkSession
     import graft.functions.QoiNativeFunctions.{qoiDecode, qoiEncode}
     val rowBytes = 3 * width
     val enc = assets
@@ -603,7 +599,7 @@ object Multimodal {
       .select(col("meta.source").as("source"),
         expr(s"$rowBytes * (octet_length(bytes) div $rowBytes)").cast("long")
           .as("raw_bytes"),
-        qoiDecode(spark, qoiEncode(spark, col("bytes"), width)).as("q"))
+        qoiDecode(qoiEncode(col("bytes"), width)).as("q"))
     enc.groupBy("source")
       .agg(
         count(lit(1L)).as("n_assets"),
@@ -647,11 +643,10 @@ object Multimodal {
     }
     // sub-byte wires (E290) consume one payload byte per pixel
     val bpp = math.max(1, channels * (depth / 8))
-    val spark = assets.sparkSession
     assets
       .filter(octet_length(col("bytes")) >= bpp * width)
       .withColumn("bytes",
-        graft.functions.PngNativeFunctions.pngEncode(spark, col("bytes"),
+        graft.functions.PngNativeFunctions.pngEncode(col("bytes"),
           width, colorType, interlaced, depth))
   }
 
@@ -674,10 +669,9 @@ object Multimodal {
     * explode — the [[qoiStats]] shape exactly.
     */
   def pngStats(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        graft.functions.PngNativeFunctions.pngDecode(spark, col("bytes")).as("q"))
+        graft.functions.PngNativeFunctions.pngDecode(col("bytes")).as("q"))
       .select(col("asset_id"), col("q.is_valid").as("is_valid"),
         col("q.width").as("width"), col("q.height").as("height"),
         col("q.n_pixels").as("n_pixels"), col("q.sum_r").as("sum_r"),
@@ -710,11 +704,10 @@ object Multimodal {
     */
   def encodeJpegLossless(assets: DataFrame, width: Int = 40): DataFrame = {
     require(width >= 1 && width <= 65535, "width must fit the u16 SOF field")
-    val spark = assets.sparkSession
     assets
       .filter(octet_length(col("bytes")) >= width)
       .withColumn("bytes",
-        graft.functions.JpegNativeFunctions.jpegEncode(spark, col("bytes"), width))
+        graft.functions.JpegNativeFunctions.jpegEncode(col("bytes"), width))
   }
 
   /** Decode lossless-JPEG assets natively (E229): marker-segment walk,
@@ -731,10 +724,9 @@ object Multimodal {
     * explode — the [[qoiStats]]/[[pngStats]] shape exactly.
     */
   def jpegStats(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        graft.functions.JpegNativeFunctions.jpegDecode(spark, col("bytes")).as("q"))
+        graft.functions.JpegNativeFunctions.jpegDecode(col("bytes")).as("q"))
       .select(col("asset_id"), col("q.is_valid").as("is_valid"),
         col("q.width").as("width"), col("q.height").as("height"),
         col("q.n_pixels").as("n_pixels"), col("q.sum_v").as("sum_v"),
@@ -766,7 +758,6 @@ object Multimodal {
     */
   def encodeJpegDct(assets: DataFrame, width: Int = 8): DataFrame = {
     require(width >= 8 && width % 8 == 0, "width must be a multiple of 8")
-    val spark = assets.sparkSession
     assets
       // both drop rules mirror the codec's null conditions exactly, on the
       // cheap input length: no full block row (lower), or a height past
@@ -777,8 +768,7 @@ object Multimodal {
       .filter(octet_length(col("bytes")) >= 8 * width &&
         octet_length(col("bytes")) < 8192L * 8 * width)
       .withColumn("bytes",
-        graft.functions.JpegDctNativeFunctions.jpegDctEncode(spark,
-          col("bytes"), width))
+        graft.functions.JpegDctNativeFunctions.jpegDctEncode(col("bytes"), width))
   }
 
   /** Encode each asset's payload as a 3-component YCbCr 4:2:0 baseline
@@ -790,15 +780,13 @@ object Multimodal {
     * up). Assets shorter than one MCU are dropped.
     */
   def encodeJpeg420(assets: DataFrame, restartInterval: Int = 0): DataFrame = {
-    val spark = assets.sparkSession
     assets
       // lower/upper bounds mirror encode420's null rules on the cheap
       // input length: no full MCU, or 16·⌊len/384⌋ > 65535 ⇔ len ≥ 4096·384
       .filter(octet_length(col("bytes")) >= 384 &&
         octet_length(col("bytes")) < 4096L * 384)
       .withColumn("bytes",
-        graft.functions.JpegDctNativeFunctions.jpeg420Encode(spark,
-          col("bytes"), restartInterval))
+        graft.functions.JpegDctNativeFunctions.jpeg420Encode(col("bytes"), restartInterval))
   }
 
   /** Encode each asset's payload as a 3-component YCbCr 4:2:2 baseline
@@ -808,13 +796,11 @@ object Multimodal {
     * .encodeYcc]]'s null rules: no full MCU, or 8·⌊len/256⌋ > 65535.
     */
   def encodeJpeg422(assets: DataFrame, restartInterval: Int = 0): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .filter(octet_length(col("bytes")) >= 256 &&
         octet_length(col("bytes")) < 8192L * 256)
       .withColumn("bytes",
-        graft.functions.JpegDctNativeFunctions.jpegYccEncode(spark,
-          col("bytes"), 2, 1, restartInterval))
+        graft.functions.JpegDctNativeFunctions.jpegYccEncode(col("bytes"), 2, 1, restartInterval))
   }
 
   /** Encode each asset's payload as a 3-component YCbCr 4:1:1 baseline
@@ -824,13 +810,11 @@ object Multimodal {
     * mirror the codec's null rules: no full MCU, or 8·⌊len/384⌋ > 65535.
     */
   def encodeJpeg411(assets: DataFrame, restartInterval: Int = 0): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .filter(octet_length(col("bytes")) >= 384 &&
         octet_length(col("bytes")) < 8192L * 384)
       .withColumn("bytes",
-        graft.functions.JpegDctNativeFunctions.jpegYccEncode(spark,
-          col("bytes"), 4, 1, restartInterval))
+        graft.functions.JpegDctNativeFunctions.jpegYccEncode(col("bytes"), 4, 1, restartInterval))
   }
 
   /** Encode each asset's payload as a 3-component YCbCr 4:4:4 baseline
@@ -839,13 +823,11 @@ object Multimodal {
     * 8 x 8·⌊len/192⌋. Bounds mirror the codec's null rules.
     */
   def encodeJpeg444(assets: DataFrame, restartInterval: Int = 0): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .filter(octet_length(col("bytes")) >= 192 &&
         octet_length(col("bytes")) < 8192L * 192)
       .withColumn("bytes",
-        graft.functions.JpegDctNativeFunctions.jpegYccEncode(spark,
-          col("bytes"), 1, 1, restartInterval))
+        graft.functions.JpegDctNativeFunctions.jpegYccEncode(col("bytes"), 1, 1, restartInterval))
   }
 
   /** Encode each asset's payload as a PROGRESSIVE (SOF2) grayscale JPEG
@@ -858,13 +840,11 @@ object Multimodal {
     */
   def encodeJpegProgressive(assets: DataFrame, width: Int = 8): DataFrame = {
     require(width >= 8 && width % 8 == 0, "width must be a multiple of 8")
-    val spark = assets.sparkSession
     assets
       .filter(octet_length(col("bytes")) >= 8 * width &&
         octet_length(col("bytes")) < 8192L * 8 * width)
       .withColumn("bytes",
-        graft.functions.JpegDctNativeFunctions.jpegProgEncode(spark,
-          col("bytes"), width))
+        graft.functions.JpegDctNativeFunctions.jpegProgEncode(col("bytes"), width))
   }
 
   /** Encode each asset's payload as a WARC web archive (E246) of
@@ -875,12 +855,10 @@ object Multimodal {
   def encodeWarc(assets: DataFrame, recordBytes: Int = 256,
       gz: Boolean = false): DataFrame = {
     require(recordBytes >= 1, "recordBytes must be positive")
-    val spark = assets.sparkSession
     assets
       .filter(octet_length(col("bytes")) >= recordBytes)
       .withColumn("bytes",
-        graft.functions.WarcNativeFunctions.warcEncode(spark,
-          col("bytes"), recordBytes, gz))
+        graft.functions.WarcNativeFunctions.warcEncode(col("bytes"), recordBytes, gz))
   }
 
   /** Demux WARC archives natively (E246): strict record grammar (the
@@ -892,11 +870,9 @@ object Multimodal {
     * the records — both flavours must report identical stats.
     */
   def warcStats(assets: DataFrame, gz: Boolean = false): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        graft.functions.WarcNativeFunctions.warcDecode(spark,
-          col("bytes"), gz).as("q"))
+        graft.functions.WarcNativeFunctions.warcDecode(col("bytes"), gz).as("q"))
       .select(col("asset_id"), col("q.is_valid").as("is_valid"),
         col("q.n_records").as("n_records"),
         col("q.n_responses").as("n_responses"),
@@ -915,12 +891,11 @@ object Multimodal {
       gz: Boolean = false, chunked: Boolean = false,
       mixed: Boolean = false, html: Boolean = false): DataFrame = {
     require(bodyBytes >= 1, "bodyBytes must be positive")
-    val spark = assets.sparkSession
     assets
       .filter(octet_length(col("bytes")) >= bodyBytes)
       .withColumn("bytes",
-        graft.functions.WarcNativeFunctions.warcHttpEncode(spark,
-          col("bytes"), bodyBytes, gz, chunked, mixed, html))
+        graft.functions.WarcNativeFunctions.warcHttpEncode(col("bytes"), bodyBytes, gz,
+          chunked, mixed, html))
   }
 
   /** Parse the HTTP layer of a crawl-shaped WARC (E250): every
@@ -930,11 +905,9 @@ object Multimodal {
     * parse every real crawl consumer runs. One native pass per archive.
     */
   def warcHttpStats(assets: DataFrame, gz: Boolean = false): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        graft.functions.WarcNativeFunctions.warcHttpStats(spark,
-          col("bytes"), gz).as("q"))
+        graft.functions.WarcNativeFunctions.warcHttpStats(col("bytes"), gz).as("q"))
       .select(col("asset_id"), col("q.is_valid").as("is_valid"),
         col("q.n_records").as("n_records"),
         col("q.n_requests").as("n_requests"),
@@ -951,11 +924,9 @@ object Multimodal {
     * crawl-to-documents fan-out a training pipeline runs first.
     */
   def warcHttpRecords(assets: DataFrame, gz: Boolean = false): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        explode(graft.functions.WarcNativeFunctions.warcHttpRecords(spark,
-          col("bytes"), gz)).as("r"))
+        explode(graft.functions.WarcNativeFunctions.warcHttpRecords(col("bytes"), gz)).as("r"))
       .select(col("asset_id"), col("r.rec_idx").as("rec_idx"),
         col("r.status").as("status"), col("r.body_len").as("body_len"),
         col("r.body_sum").as("body_sum"), col("r.body").as("body"),
@@ -1024,13 +995,11 @@ object Multimodal {
       snap: Boolean = false, lz4: Boolean = false,
       gzHdr: Boolean = false): DataFrame = {
     require(memberBytes >= 1, "memberBytes must be positive")
-    val spark = assets.sparkSession
     assets
       .filter(octet_length(col("bytes")) >= memberBytes)
       .withColumn("bytes",
-        graft.functions.TarNativeFunctions.tarEncode(spark,
-          col("bytes"), memberBytes, gz, pax, bgzf, mgz, snap, lz4,
-          gzHdr))
+        graft.functions.TarNativeFunctions.tarEncode(col("bytes"), memberBytes, gz, pax,
+          bgzf, mgz, snap, lz4, gzHdr))
   }
 
   /** Demux USTAR shards natively (E269): header checksum audit, strict
@@ -1042,11 +1011,9 @@ object Multimodal {
   def tarStats(assets: DataFrame, gz: Boolean = false,
       bgzf: Boolean = false, snap: Boolean = false,
       lz4: Boolean = false): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        graft.functions.TarNativeFunctions.tarDecode(spark,
-          col("bytes"), gz, bgzf, snap, lz4).as("q"))
+        graft.functions.TarNativeFunctions.tarDecode(col("bytes"), gz, bgzf, snap, lz4).as("q"))
       .select(col("asset_id"), col("q.is_valid").as("is_valid"),
         col("q.n_members").as("n_members"),
         col("q.content_bytes").as("content_bytes"),
@@ -1059,11 +1026,9 @@ object Multimodal {
     * training pipeline runs first.
     */
   def tarMembers(assets: DataFrame, gz: Boolean = false): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        explode(graft.functions.TarNativeFunctions.tarMembers(spark,
-          col("bytes"), gz)).as("m"))
+        explode(graft.functions.TarNativeFunctions.tarMembers(col("bytes"), gz)).as("m"))
       .select(col("asset_id"), col("m.member_idx").as("member_idx"),
         col("m.name").as("name"), col("m.size").as("size"),
         col("m.member_sum").as("member_sum"), col("m.bytes").as("bytes"),
@@ -1078,11 +1043,9 @@ object Multimodal {
     * blocks and padding skipped correctly), not arithmetic guesses.
     */
   def tarIndex(assets: DataFrame, gz: Boolean = false): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        explode(graft.functions.TarNativeFunctions.tarMembers(spark,
-          col("bytes"), gz)).as("m"))
+        explode(graft.functions.TarNativeFunctions.tarMembers(col("bytes"), gz)).as("m"))
       .select(col("asset_id"), col("m.member_idx").as("member_idx"),
         col("m.name").as("name"), col("m.size").as("size"),
         col("m.data_offset").as("data_offset"))
@@ -1119,13 +1082,11 @@ object Multimodal {
       descriptor: Boolean = false,
       namePrefix: String = "doc"): DataFrame = {
     require(memberBytes >= 1, "memberBytes must be positive")
-    val spark = assets.sparkSession
     assets
       .filter(octet_length(col("bytes")) >= memberBytes)
       .withColumn("bytes",
-        graft.functions.ZipNativeFunctions.zipEncode(spark,
-          col("bytes"), memberBytes, deflate, zip64, descriptor,
-          namePrefix))
+        graft.functions.ZipNativeFunctions.zipEncode(col("bytes"), memberBytes, deflate,
+          zip64, descriptor, namePrefix))
   }
 
   /** Demux ZIP archives natively (E270): central-directory walk with
@@ -1134,11 +1095,9 @@ object Multimodal {
     * sizes. The stored and deflate wires must report IDENTICAL stats.
     */
   def zipStats(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        graft.functions.ZipNativeFunctions.zipDecode(spark,
-          col("bytes")).as("q"))
+        graft.functions.ZipNativeFunctions.zipDecode(col("bytes")).as("q"))
       .select(col("asset_id"), col("q.is_valid").as("is_valid"),
         col("q.n_members").as("n_members"),
         col("q.content_bytes").as("content_bytes"),
@@ -1154,11 +1113,9 @@ object Multimodal {
     * without streaming the rest.
     */
   def zipMembers(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        explode(graft.functions.ZipNativeFunctions.zipMembers(spark,
-          col("bytes"))).as("m"))
+        explode(graft.functions.ZipNativeFunctions.zipMembers(col("bytes"))).as("m"))
       .select(col("asset_id"), col("m.member_idx").as("member_idx"),
         col("m.name").as("name"), col("m.size").as("size"),
         col("m.member_sum").as("member_sum"), col("m.bytes").as("bytes"),
@@ -1173,14 +1130,12 @@ object Multimodal {
     */
   def encodeBmpRle8(assets: DataFrame, width: Int = 40): DataFrame = {
     require(width >= 1 && width <= 0xffff, "width must fit the header")
-    val spark = assets.sparkSession
     assets
       .filter(octet_length(col("bytes")) >= width &&
         octet_length(col("bytes")) <=
           graft.functions.BmpRleCodec.MaxPixels.toLong)
       .withColumn("bytes",
-        graft.functions.BmpRleNativeFunctions.bmpRle8Encode(spark,
-          col("bytes"), width))
+        graft.functions.BmpRleNativeFunctions.bmpRle8Encode(col("bytes"), width))
   }
 
   /** Decode RLE8 BMP assets natively (E287): strict header + palette +
@@ -1190,11 +1145,9 @@ object Multimodal {
     * bottom-up flip proof.
     */
   def bmpRle8Stats(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        graft.functions.BmpRleNativeFunctions.bmpRle8Decode(spark,
-          col("bytes")).as("q"))
+        graft.functions.BmpRleNativeFunctions.bmpRle8Decode(col("bytes")).as("q"))
       .select(col("asset_id"), col("q.is_valid").as("is_valid"),
         col("q.width").as("width"), col("q.height").as("height"),
         col("q.n_pixels").as("n_pixels"), col("q.sum_r").as("sum_r"),
@@ -1210,14 +1163,12 @@ object Multimodal {
     */
   def encodeBmpRle4(assets: DataFrame, width: Int = 40): DataFrame = {
     require(width >= 1 && width <= 0xffff, "width must fit the header")
-    val spark = assets.sparkSession
     assets
       .filter(octet_length(col("bytes")) >= width &&
         octet_length(col("bytes")) <=
           graft.functions.BmpRleCodec.MaxPixels.toLong)
       .withColumn("bytes",
-        graft.functions.BmpRleNativeFunctions.bmpRle4Encode(spark,
-          col("bytes"), width))
+        graft.functions.BmpRleNativeFunctions.bmpRle4Encode(col("bytes"), width))
   }
 
   /** Decode RLE4 BMP assets natively (E291): the RLE8 walk's strictness
@@ -1226,11 +1177,9 @@ object Multimodal {
     * weighting proving the bottom-up flip.
     */
   def bmpRle4Stats(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        graft.functions.BmpRleNativeFunctions.bmpRle4Decode(spark,
-          col("bytes")).as("q"))
+        graft.functions.BmpRleNativeFunctions.bmpRle4Decode(col("bytes")).as("q"))
       .select(col("asset_id"), col("q.is_valid").as("is_valid"),
         col("q.width").as("width"), col("q.height").as("height"),
         col("q.n_pixels").as("n_pixels"), col("q.sum_r").as("sum_r"),
@@ -1271,7 +1220,6 @@ object Multimodal {
       partialFrames: Boolean = false): DataFrame = {
     require(width >= 1 && width <= 65535, "width must fit the u16 field")
     require(palBits >= 1 && palBits <= 8, "palBits must be in 1..8")
-    val spark = assets.sparkSession
     // lower bound mirrors the codec's null rule (no full row / frame);
     // upper bound mirrors the u16 height cap (single image) or the total
     // 2^24-pixel cap (animation), both on the cheap input length
@@ -1283,7 +1231,7 @@ object Multimodal {
       .filter(octet_length(col("bytes")) >= minLen &&
         octet_length(col("bytes")) < maxLen)
       .withColumn("bytes",
-        graft.functions.GifNativeFunctions.gifEncode(spark, col("bytes"),
+        graft.functions.GifNativeFunctions.gifEncode(col("bytes"),
           width, palBits, interlaced, frameHeight, localPalettes,
           partialFrames))
   }
@@ -1299,10 +1247,9 @@ object Multimodal {
     * never buffered — the codec-walk shape.
     */
   def gifStats(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        graft.functions.GifNativeFunctions.gifDecode(spark, col("bytes")).as("q"))
+        graft.functions.GifNativeFunctions.gifDecode(col("bytes")).as("q"))
       .select(col("asset_id"), col("q.is_valid").as("is_valid"),
         col("q.width").as("width"), col("q.height").as("height"),
         col("q.n_pixels").as("n_pixels"), col("q.sum_idx").as("sum_idx"),
@@ -1323,11 +1270,9 @@ object Multimodal {
     * FINAL screen's stats. One buffer-backed native pass per asset.
     */
   def gifComposite(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        graft.functions.GifNativeFunctions.gifComposite(spark,
-          col("bytes")).as("q"))
+        graft.functions.GifNativeFunctions.gifComposite(col("bytes")).as("q"))
       .select(col("asset_id"), col("q.is_valid").as("is_valid"),
         col("q.n_frames").as("n_frames"),
         col("q.n_painted").as("n_painted"),
@@ -1348,13 +1293,12 @@ object Multimodal {
       stereo: Boolean = false, bps: Int = 16,
       varBlock: Boolean = false): DataFrame = {
     require(bps == 16 || bps == 24, "bps must be 16 or 24")
-    val spark = assets.sparkSession
     val minLen = (if (stereo) 2L else 1L) * (bps / 8)
     assets
       .filter(octet_length(col("bytes")) >= minLen &&
         octet_length(col("bytes")) <= 33554432L)
       .withColumn("bytes",
-        graft.functions.FlacNativeFunctions.flacEncode(spark, col("bytes"),
+        graft.functions.FlacNativeFunctions.flacEncode(col("bytes"),
           lpcOrder, stereo, bps, varBlock))
   }
 
@@ -1366,11 +1310,9 @@ object Multimodal {
     * sample sum) is the order-sensitive stat.
     */
   def flacStats(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        graft.functions.FlacNativeFunctions.flacDecode(spark,
-          col("bytes")).as("q"))
+        graft.functions.FlacNativeFunctions.flacDecode(col("bytes")).as("q"))
       .select(col("asset_id"), col("q.is_valid").as("is_valid"),
         col("q.n_frames").as("n_frames"),
         col("q.n_samples").as("n_samples"), col("q.sum_s").as("sum_s"),
@@ -1390,7 +1332,6 @@ object Multimodal {
     require(width >= 1, "width must be positive")
     // E292: RGB rows span width*3 payload bytes
     val rowBytes = width.toLong * (if (rgb) 3 else 1)
-    val spark = assets.sparkSession
     assets
       // lower bound mirrors the codec's null rule (no full row); upper
       // bound mirrors the 2^24-pixel cap, both on the cheap input length
@@ -1399,7 +1340,7 @@ object Multimodal {
         octet_length(col("bytes")) <=
           graft.functions.TiffCodec.MaxPixels.toLong)
       .withColumn("bytes",
-        graft.functions.TiffNativeFunctions.tiffEncode(spark, col("bytes"),
+        graft.functions.TiffNativeFunctions.tiffEncode(col("bytes"),
           width, bigEndian, packBits, lzw, pageHeight, predictor2,
           fillOrder2, tiled, rgb))
   }
@@ -1414,11 +1355,9 @@ object Multimodal {
     * verbatim.
     */
   def tiffStats(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        graft.functions.TiffNativeFunctions.tiffDecode(spark,
-          col("bytes")).as("q"))
+        graft.functions.TiffNativeFunctions.tiffDecode(col("bytes")).as("q"))
       .select(col("asset_id"), col("q.is_valid").as("is_valid"),
         col("q.width").as("width"), col("q.height").as("height"),
         col("q.n_pixels").as("n_pixels"), col("q.sum_v").as("sum_v"),
@@ -1442,15 +1381,13 @@ object Multimodal {
     require(width >= 8 && width % 8 == 0, "width must be a multiple of 8")
     require(frameBytes >= 8 * width && frameBytes % (8 * width) == 0,
       "frameBytes must hold whole block rows")
-    val spark = assets.sparkSession
     assets
       // lower bound mirrors the codec's null rule (no full frame); the
       // upper bound keeps the fixture inside the q272 oracle's byte cap
       .filter(octet_length(col("bytes")) >= frameBytes &&
         octet_length(col("bytes")) < 524288)
       .withColumn("bytes",
-        graft.functions.AviNativeFunctions.aviMjpegEncode(spark,
-          col("bytes"), width, frameBytes))
+        graft.functions.AviNativeFunctions.aviMjpegEncode(col("bytes"), width, frameBytes))
   }
 
   /** Demux + decode MJPEG-AVI assets natively (E240): strict RIFF walk
@@ -1465,11 +1402,9 @@ object Multimodal {
     * shape.
     */
   def mjpegAviStats(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        graft.functions.AviNativeFunctions.aviMjpegDecode(spark,
-          col("bytes")).as("q"))
+        graft.functions.AviNativeFunctions.aviMjpegDecode(col("bytes")).as("q"))
       .select(col("asset_id"), col("q.is_valid").as("is_valid"),
         col("q.n_frames").as("n_frames"), col("q.width").as("width"),
         col("q.frame_height").as("frame_height"),
@@ -1491,13 +1426,11 @@ object Multimodal {
     require(frameBytes >= 8 * width && frameBytes % (8 * width) == 0 &&
       frameBytes % 2 == 0,
       "frameBytes must hold whole block rows and whole 16-bit samples")
-    val spark = assets.sparkSession
     assets
       .filter(octet_length(col("bytes")) >= frameBytes &&
         octet_length(col("bytes")) < 524288)
       .withColumn("bytes",
-        graft.functions.AviNativeFunctions.aviAvEncode(spark,
-          col("bytes"), width, frameBytes))
+        graft.functions.AviNativeFunctions.aviAvEncode(col("bytes"), width, frameBytes))
   }
 
   /** Demux + decode A+V AVI assets natively (E243): [[mjpegAviStats]]'s
@@ -1508,11 +1441,9 @@ object Multimodal {
     * next to the video stats.
     */
   def aviAvStats(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        graft.functions.AviNativeFunctions.aviAvDecode(spark,
-          col("bytes")).as("q"))
+        graft.functions.AviNativeFunctions.aviAvDecode(col("bytes")).as("q"))
       .select(col("asset_id"), col("q.is_valid").as("is_valid"),
         col("q.n_frames").as("n_frames"), col("q.width").as("width"),
         col("q.frame_height").as("frame_height"),
@@ -1528,13 +1459,11 @@ object Multimodal {
     */
   def encodeJpegDctMeta(assets: DataFrame, width: Int = 8): DataFrame = {
     require(width >= 8 && width % 8 == 0, "width must be a multiple of 8")
-    val spark = assets.sparkSession
     assets
       .filter(octet_length(col("bytes")) >= 8 * width &&
         octet_length(col("bytes")) < 8192L * 8 * width)
       .withColumn("bytes",
-        graft.functions.JpegDctNativeFunctions.jpegMetaEncode(spark,
-          col("bytes"), width))
+        graft.functions.JpegDctNativeFunctions.jpegMetaEncode(col("bytes"), width))
   }
 
   /** JPEG metadata surface (E238): JFIF density (units/X/Y) and Exif
@@ -1545,11 +1474,9 @@ object Multimodal {
     * invalidates the asset (strict, like every other codec path).
     */
   def jpegMetadata(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        graft.functions.JpegDctNativeFunctions.jpegDctDecode(spark,
-          col("bytes")).as("q"))
+        graft.functions.JpegDctNativeFunctions.jpegDctDecode(col("bytes")).as("q"))
       .select(col("asset_id"), col("q.is_valid").as("is_valid"),
         col("q.exif_orientation").as("exif_orientation"),
         col("q.jfif_units").as("jfif_units"),
@@ -1567,11 +1494,9 @@ object Multimodal {
     * 2x2-Y + Cb + Cr MCU interleave with per-component DC predictors.
     */
   def jpeg420Stats(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        graft.functions.JpegDctNativeFunctions.jpegDctDecode(spark,
-          col("bytes")).as("q"))
+        graft.functions.JpegDctNativeFunctions.jpegDctDecode(col("bytes")).as("q"))
       .select(col("asset_id"), col("q.is_valid").as("is_valid"),
         col("q.width").as("width"), col("q.height").as("height"),
         col("q.n_pixels").as("n_pixels"),
@@ -1598,11 +1523,9 @@ object Multimodal {
     * explode — the [[qoiStats]]/[[pngStats]]/[[jpegStats]] shape exactly.
     */
   def jpegDctStats(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        graft.functions.JpegDctNativeFunctions.jpegDctDecode(spark,
-          col("bytes")).as("q"))
+        graft.functions.JpegDctNativeFunctions.jpegDctDecode(col("bytes")).as("q"))
       .select(col("asset_id"), col("q.is_valid").as("is_valid"),
         col("q.width").as("width"), col("q.height").as("height"),
         col("q.n_pixels").as("n_pixels"), col("q.sum_v").as("sum_v"),
@@ -1642,13 +1565,11 @@ object Multimodal {
     * 3-long (asset_id, dhash_lo, dhash_hi) row leaves the scan.
     */
   def bmpDHash(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     bmpHeader(assets)
       .filter(col("is_valid") && col("w") >= 9L && col("hgt") >= 8L)
       .select(col("asset_id"),
-        graft.functions.MediaNativeFunctions.bmpDHashWalk(spark,
-          col("bytes"), col("w"), col("hgt"), col("hraw"), col("stride"),
-          col("poff")).as("d"))
+        graft.functions.MediaNativeFunctions.bmpDHashWalk(col("bytes"), col("w"),
+          col("hgt"), col("hraw"), col("stride"), col("poff")).as("d"))
       .select(col("asset_id"), col("d.dhash_lo").as("dhash_lo"),
         col("d.dhash_hi").as("dhash_hi"))
   }
@@ -1673,13 +1594,11 @@ object Multimodal {
     * or undecodable assets are dropped as below grid resolution.
     */
   def bmpDHash128(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     bmpHeader(assets)
       .filter(col("is_valid") && col("w") >= 9L && col("hgt") >= 9L)
       .select(col("asset_id"),
-        graft.functions.MediaNativeFunctions.bmpDHash128Walk(spark,
-          col("bytes"), col("w"), col("hgt"), col("hraw"), col("stride"),
-          col("poff")).as("d"))
+        graft.functions.MediaNativeFunctions.bmpDHash128Walk(col("bytes"), col("w"),
+          col("hgt"), col("hraw"), col("stride"), col("poff")).as("d"))
       .select(col("asset_id"), col("d.d0").as("d0"), col("d.d1").as("d1"),
         col("d.d2").as("d2"), col("d.d3").as("d3"))
   }
@@ -2133,14 +2052,12 @@ object Multimodal {
     // per row inside the executor instead of here
     require(width >= 4 && width <= 255 && width % 4 == 0,
       "width must be 4-aligned and fit the u8 entry field")
-    val spark = assets.sparkSession
     assets
       .filter(octet_length(col("bytes")) >= width * width &&
         octet_length(col("bytes")) <=
           graft.functions.IcoCodec.MaxPixels.toLong)
       .withColumn("bytes",
-        graft.functions.IcoNativeFunctions.icoEncode(spark,
-          col("bytes"), width))
+        graft.functions.IcoNativeFunctions.icoEncode(col("bytes"), width))
   }
 
   /** Decode ICO assets natively (E297): the cross-format container —
@@ -2151,11 +2068,9 @@ object Multimodal {
     * as coverage that never reaches the channel sums.
     */
   def icoStats(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        graft.functions.IcoNativeFunctions.icoDecode(spark,
-          col("bytes")).as("q"))
+        graft.functions.IcoNativeFunctions.icoDecode(col("bytes")).as("q"))
       .select(col("asset_id"), col("q.is_valid").as("is_valid"),
         col("q.n_images").as("n_images"), col("q.n_png").as("n_png"),
         col("q.n_dib").as("n_dib"), col("q.n_pixels").as("n_pixels"),
@@ -2169,12 +2084,10 @@ object Multimodal {
     */
   def encodeAiff(assets: DataFrame, channels: Int = 1): DataFrame = {
     require(channels == 1 || channels == 2, "channels must be 1 or 2")
-    val spark = assets.sparkSession
     assets
       .filter(octet_length(col("bytes")) >= 2 * channels)
       .withColumn("bytes",
-        graft.functions.AiffNativeFunctions.aiffEncode(spark,
-          col("bytes"), channels))
+        graft.functions.AiffNativeFunctions.aiffEncode(col("bytes"), channels))
   }
 
   /** Decode AIFF assets natively (E294): the big-endian container
@@ -2185,11 +2098,9 @@ object Multimodal {
     * oracle replays).
     */
   def aiffStats(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"),
-        graft.functions.AiffNativeFunctions.aiffDecode(spark,
-          col("bytes")).as("q"))
+        graft.functions.AiffNativeFunctions.aiffDecode(col("bytes")).as("q"))
       .select(col("asset_id"), col("q.is_valid").as("is_valid"),
         col("q.n_channels").as("n_channels"),
         col("q.sample_rate").as("sample_rate"),
@@ -2368,11 +2279,10 @@ object Multimodal {
     * bytes, never the payload.
     */
   private def y4mHeader(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     assets
       .select(col("asset_id"), col("bytes"),
         octet_length(col("bytes")).cast("long").as("n"),
-        graft.functions.MediaNativeFunctions.y4mHeaderParse(spark, col("bytes"))
+        graft.functions.MediaNativeFunctions.y4mHeaderParse(col("bytes"))
           .as("__h"))
       .select(col("asset_id"), col("bytes"), col("n"),
         col("__h.w").as("w"), col("__h.hgt").as("hgt"),
@@ -2409,7 +2319,6 @@ object Multimodal {
     * natural output granularity.
     */
   def y4mFrameLuma(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
     y4mHeader(assets)
       .select(col("asset_id"), col("is_valid"),
         when(col("is_valid"), col("w")).as("w"),
@@ -2417,9 +2326,8 @@ object Multimodal {
         // invalid assets skip the walk entirely (null array) and surface
         // below as a single null-stats row via the OUTER posexplode
         when(col("is_valid"),
-          graft.functions.MediaNativeFunctions.y4mFrameWalk(spark,
-            col("bytes"), col("poff"), col("fsize"), col("w"), col("hgt"),
-            col("n_frames"))).as("frames"))
+          graft.functions.MediaNativeFunctions.y4mFrameWalk(col("bytes"), col("poff"),
+            col("fsize"), col("w"), col("hgt"), col("n_frames"))).as("frames"))
       .select(col("asset_id"), col("is_valid"), col("w"), col("hgt"),
         posexplode_outer(col("frames")).as(Seq("f", "fr")))
       .select(col("asset_id"), col("is_valid"),

@@ -66,13 +66,12 @@ object ProductQuantizer {
   private def withSubNorms(
       corpus: DataFrame, vecCol: String, dim: Int,
       cfgs: Seq[(Int, Int)]): DataFrame = {
-    val spark = corpus.sparkSession
     import graft.functions.VectorFunctions.dotNative
     val withSubs = corpus.select(col("*") +: cfgs.map { case (m, mi) =>
       subCol(vecCol, mi, dim / m).as(s"__sub_${m}_$mi")
     }: _*)
     withSubs.select(col("*") +: cfgs.map { case (m, mi) =>
-      dotNative(spark, col(s"__sub_${m}_$mi"), col(s"__sub_${m}_$mi"))
+      dotNative(col(s"__sub_${m}_$mi"), col(s"__sub_${m}_$mi"))
         .as(s"__ssq_${m}_$mi")
     }: _*)
   }
@@ -81,12 +80,11 @@ object ProductQuantizer {
     * hoisted sub/ssq attributes.
     */
   private def distArray(
-      spark: org.apache.spark.sql.SparkSession,
       sub: Column, ssq: Column,
       book: IndexedSeq[(IndexedSeq[Double], Double)]): Column = {
     import graft.functions.VectorFunctions.dotNative
     array(book.map { case (c, cc) =>
-      ssq - lit(2.0) * dotNative(spark, sub, typedlit(c)) + lit(cc)
+      ssq - lit(2.0) * dotNative(sub, typedlit(c)) + lit(cc)
     }: _*)
   }
 
@@ -142,7 +140,6 @@ object ProductQuantizer {
         }
       }
     }.toMap
-    val spark = corpus.sparkSession
     val cfgs = for (m <- ms; mi <- 0 until m) yield (m, mi)
     for (_ <- 1 to iters) {
       // the struct carries the k-entry DISTANCE ARRAY over the hoisted
@@ -158,7 +155,7 @@ object ProductQuantizer {
         struct(
           lit(m).as("cfg"),
           lit(mi).as("m"),
-          distArray(spark, col(s"__sub_${m}_$mi"), col(s"__ssq_${m}_$mi"),
+          distArray(col(s"__sub_${m}_$mi"), col(s"__ssq_${m}_$mi"),
             books(m)(mi)).as("dists"),
           col(s"__sub_${m}_$mi").as("sub"))
       }: _*))
@@ -203,7 +200,6 @@ object ProductQuantizer {
       dim: Int,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val spark = corpus.sparkSession
     val m = books.length
     val cfgs = books.indices.map(mi => (m, mi))
     // hoist subvectors + norms, then distance arrays, then argmins — each
@@ -211,7 +207,7 @@ object ProductQuantizer {
     val withDists = withSubNorms(corpus.select(col(idCol), col(vecCol)),
         vecCol, dim, cfgs)
       .select(col(idCol) +: col(vecCol) +: books.indices.map { mi =>
-        distArray(spark, col(s"__sub_${m}_$mi"), col(s"__ssq_${m}_$mi"),
+        distArray(col(s"__sub_${m}_$mi"), col(s"__ssq_${m}_$mi"),
           books(mi)).as(s"__d$mi")
       }: _*)
     withDists.select(col(idCol), col(vecCol),
@@ -328,7 +324,6 @@ object ProductQuantizer {
       vecCol: String = "embedding"): DataFrame = {
     require(ms.nonEmpty && ms.forall(m => m >= 1 && dim % m == 0),
       s"every m must divide dim=$dim")
-    val spark = corpus.sparkSession
     import graft.functions.VectorFunctions.dotNative
     // exact L2² ground truth, computed once and shared by every m: the
     // same md5-smallest query set pqTopK searches, ranked by the same
@@ -341,9 +336,9 @@ object ProductQuantizer {
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
       .join(queries, col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        (dotNative(spark, col("q_vec"), col("q_vec")) -
-          lit(2.0) * dotNative(spark, col("q_vec"), col("c_vec")) +
-          dotNative(spark, col("c_vec"), col("c_vec"))).as("dist"))
+        (dotNative(col("q_vec"), col("q_vec")) -
+          lit(2.0) * dotNative(col("q_vec"), col("c_vec")) +
+          dotNative(col("c_vec"), col("c_vec"))).as("dist"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("query_id")
           .orderBy(col("dist").asc, col("neighbor_id").asc)))

@@ -43,10 +43,9 @@ object Similarity {
     */
   private def prepared(df: DataFrame, idCol: String, vecCol: String,
       idAlias: String, vecAlias: String, nrmAlias: String): DataFrame = {
-    val spark = df.sparkSession
     df.select(col(idCol).as(idAlias), col(vecCol).as(vecAlias))
       .withColumn(nrmAlias,
-        sqrt(graft.functions.VectorFunctions.dotNative(spark, col(vecAlias), col(vecAlias))))
+        sqrt(graft.functions.VectorFunctions.dotNative(col(vecAlias), col(vecAlias))))
   }
 
   /** Exact brute-force top-k neighbours for each query vector.
@@ -69,8 +68,7 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(
         col("query_id"), col("neighbor_id"),
-        (graft.functions.VectorFunctions.dotNative(
-          corpus.sparkSession, col("q_vec"), col("c_vec")) /
+        (graft.functions.VectorFunctions.dotNative(col("q_vec"), col("c_vec")) /
           (col("q_nrm") * col("c_nrm"))).as("cosine"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
@@ -93,11 +91,10 @@ object Similarity {
     }
 
   def hyperplaneSignature(
-      spark: org.apache.spark.sql.SparkSession,
       vec: Column, dim: Int, numPlanes: Int = 8, seed: Int = 0): Column = {
     val signs = (0 until numPlanes).map { p =>
-      val proj = graft.functions.VectorFunctions.dotNative(
-        spark, vec, typedlit(planeWeights(seed + p, dim)))
+      val proj =
+        graft.functions.VectorFunctions.dotNative(vec, typedlit(planeWeights(seed + p, dim)))
       when(proj >= 0, lit(1)).otherwise(lit(0)).cast("string")
     }
     concat(signs: _*)
@@ -115,13 +112,12 @@ object Similarity {
       numTables: Int = 2,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val spark = corpus.sparkSession
     // Norms once per row BEFORE bucketing/joining: the per-pair work inside a
     // bucket is then a single codegen'd native dot product, not three
     // higher-order-function array folds.
     val prep = prepared(corpus, idCol, vecCol, "id", "vec", "nrm")
     val tables = (0 until numTables).map { t =>
-      val sig = hyperplaneSignature(spark, col("vec"), dim, numPlanes, seed = t * 1000)
+      val sig = hyperplaneSignature(col("vec"), dim, numPlanes, seed = t * 1000)
       prep.select(lit(t).as("tbl"), sig.as("bucket"), col("id"), col("vec"), col("nrm"))
     }
     val bucketed = tables.reduce(_ unionByName _)
@@ -133,7 +129,7 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(
         col("query_id"), col("neighbor_id"),
-        (graft.functions.VectorFunctions.dotNative(spark, col("q_vec"), col("c_vec")) /
+        (graft.functions.VectorFunctions.dotNative(col("q_vec"), col("c_vec")) /
           (col("q_nrm") * col("c_nrm"))).as("cosine"))
       .groupBy("query_id", "neighbor_id").agg(max("cosine").as("cosine"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
@@ -170,11 +166,9 @@ object Similarity {
       vecCol: String = "embedding"): DataFrame = {
     require(probes >= 1 && probes <= numPlanes + 1,
       s"probes must be in [1, numPlanes + 1], got $probes")
-    val spark = corpus.sparkSession
     val prep = prepared(corpus, idCol, vecCol, "id", "vec", "nrm")
       .withColumn("dl", array((0 until numPlanes).map { p =>
-        graft.functions.VectorFunctions.dotNative(
-          spark, col("vec"), typedlit(planeWeights(seed + p, dim)))
+        graft.functions.VectorFunctions.dotNative(col("vec"), typedlit(planeWeights(seed + p, dim)))
       }: _*))
       .withColumn("bucket", concat((0 until numPlanes).map { p =>
         when(element_at(col("dl"), p + 1) >= 0, lit("1")).otherwise(lit("0"))
@@ -204,7 +198,7 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(
         col("query_id"), col("neighbor_id"),
-        (graft.functions.VectorFunctions.dotNative(spark, col("q_vec"), col("c_vec")) /
+        (graft.functions.VectorFunctions.dotNative(col("q_vec"), col("c_vec")) /
           (col("q_nrm") * col("c_nrm"))).as("cosine"))
       .groupBy("query_id", "neighbor_id").agg(max("cosine").as("cosine"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
@@ -253,7 +247,7 @@ object Similarity {
       lit(bins - 1L))
     val counts = a.join(b, col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        (graft.functions.VectorFunctions.dotNative(spark, col("a_vec"), col("b_vec")) /
+        (graft.functions.VectorFunctions.dotNative(col("a_vec"), col("b_vec")) /
           (col("a_nrm") * col("b_nrm"))).as("cos"))
       .select(binCol.as("bin"), explode(array(col("id_a"), col("id_b"))).as("id"))
       .groupBy("bin")
@@ -296,7 +290,6 @@ object Similarity {
   private[graft] def mmrCandidateFrame(
       corpus: DataFrame, queryId: Long,
       idCol: String, vecCol: String): DataFrame = {
-    val spark = corpus.sparkSession
     import graft.functions.VectorFunctions.dotNative
     val prep = prepared(corpus, idCol, vecCol, "id", "vec", "nrm")
     val qRow = prep.filter(col("id") === queryId)
@@ -307,7 +300,7 @@ object Similarity {
     val qn = qRow.getDouble(1)
     prep.filter(col("id") =!= queryId)
       .withColumn("rel",
-        dotNative(spark, col("vec"), typedlit(qv)) / (col("nrm") * lit(qn)))
+        dotNative(col("vec"), typedlit(qv)) / (col("nrm") * lit(qn)))
   }
 
   def mmrSelect(
@@ -336,7 +329,7 @@ object Similarity {
       val ms =
         if (selected.isEmpty) lit(0.0)
         else selected.map { case (_, sv, sn, _, _) =>
-          dotNative(spark, col("vec"), typedlit(sv)) / (col("nrm") * lit(sn))
+          dotNative(col("vec"), typedlit(sv)) / (col("nrm") * lit(sn))
         }.reduce((a, b) => greatest(a, b))
       cand
         .filter(!col("id").isInCollection(selected.map(_._1)))
@@ -529,12 +522,14 @@ object Similarity {
       x._2.indices.map(c => add(x._2(c), y._2(c))).toArray)
   }
 
-  /** Deterministic quantizer init: the nlist corpus vectors with the
-    * smallest md5(id), as (centroid, norm) driver constants.
+  /** Deterministic quantizer init: the nlist non-null corpus vectors with
+    * the smallest md5(id), as (centroid, norm) driver constants. A null
+    * vector is never a centroid; every later step leaves it unassigned.
     */
   private[ext] def sampleCentroids(
       prep: DataFrame, nlist: Int): IndexedSeq[(IndexedSeq[Double], Double)] =
     prep
+      .filter(col("vec").isNotNull)
       .withColumn("ck", initKey(col("id")))
       .orderBy("ck").limit(nlist)
       .select("vec", "nrm").collect()
@@ -562,10 +557,9 @@ object Similarity {
     */
   private[ext] def withCellScores(
       prep: DataFrame, centroids: IndexedSeq[(IndexedSeq[Double], Double)]): DataFrame = {
-    val spark = prep.sparkSession
     prep.withColumn("scores", array(
       centroids.map { case (cv, cn) =>
-        graft.functions.VectorFunctions.dotNative(spark, col("vec"), typedlit(cv)) /
+        graft.functions.VectorFunctions.dotNative(col("vec"), typedlit(cv)) /
           (col("nrm") * cn)
       }: _*))
   }
@@ -578,10 +572,9 @@ object Similarity {
       prep: DataFrame,
       centroids: IndexedSeq[(IndexedSeq[Double], Double)],
       k: Int, nprobe: Int): DataFrame = {
-    val spark = prep.sparkSession
     def cellScores(vec: Column, nrm: Column): Column = array(
       centroids.map { case (cv, cn) =>
-        graft.functions.VectorFunctions.dotNative(spark, vec, typedlit(cv)) / (nrm * cn)
+        graft.functions.VectorFunctions.dotNative(vec, typedlit(cv)) / (nrm * cn)
       }: _*)
     // corpus side: argmax cell (array_position over the score array).
     // The coalesce(-1) makes `cell` NON-NULLABLE so the join's inferred
@@ -644,7 +637,7 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(
         col("query_id"), col("neighbor_id"),
-        (graft.functions.VectorFunctions.dotNative(spark, col("q_vec"), col("c_vec")) /
+        (graft.functions.VectorFunctions.dotNative(col("q_vec"), col("c_vec")) /
           (col("q_nrm") * col("c_nrm"))).as("cosine"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
@@ -742,7 +735,6 @@ object Similarity {
     require(numTables * numPlanes <= 62,
       s"packed-signature path needs numTables*numPlanes <= 62 bits, " +
         s"got $numTables*$numPlanes; lower one or shard into multiple calls")
-    val spark = corpus.sparkSession
     // ALL sign bits in one projection over ONE scan (T·numPlanes native dot
     // products per row) packed into one long; bit t*numPlanes+p is plane p
     // of table t — the same (seed + t*1000 + p) weight family as
@@ -750,7 +742,7 @@ object Similarity {
     val packed = (0 until numTables).flatMap { t =>
       (0 until numPlanes).map { p =>
         val proj = graft.functions.VectorFunctions.dotNative(
-          spark, col("vec"), typedlit(planeWeights(seed + t * 1000 + p, dim)))
+          col("vec"), typedlit(planeWeights(seed + t * 1000 + p, dim)))
         when(proj >= 0, lit(1L << (t * numPlanes + p))).otherwise(lit(0L))
       }
     }.reduce(_ bitwiseOR _)
@@ -840,7 +832,6 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       bucketCap: Int = 4096): DataFrame = {
-    val spark = corpus.sparkSession
     val cand = cosineCandidates(corpus, dim, numPlanes, numTables, 0, idCol, vecCol, bucketCap)
     val a = prepared(corpus, idCol, vecCol, "id_a", "v_a", "n_a")
     val b = prepared(corpus, idCol, vecCol, "id_b", "v_b", "n_b")
@@ -848,7 +839,7 @@ object Similarity {
       .select(
         col("id_a"), col("id_b"),
         round(
-          graft.functions.VectorFunctions.dotNative(spark, col("v_a"), col("v_b")) /
+          graft.functions.VectorFunctions.dotNative(col("v_a"), col("v_b")) /
             (col("n_a") * col("n_b")), 4).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
@@ -906,8 +897,7 @@ object Similarity {
       .select(
         col("id_a"), col("id_b"),
         round(
-          graft.functions.VectorFunctions.dotNative(
-            corpus.sparkSession, col("v_a"), col("v_b")) /
+          graft.functions.VectorFunctions.dotNative(col("v_a"), col("v_b")) /
             (col("n_a") * col("n_b")), 4).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
@@ -940,12 +930,11 @@ object Similarity {
       labelCol: String = "label",
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val spark = corpus.sparkSession
     val prep = corpus.select(
         col(labelCol).cast("int").as("lbl"), col(idCol).as("id"),
         col(vecCol).as("vec"))
       .withColumn("nrm",
-        sqrt(graft.functions.VectorFunctions.dotNative(spark, col("vec"), col("vec"))))
+        sqrt(graft.functions.VectorFunctions.dotNative(col("vec"), col("vec"))))
     val sums = prep
       .select(col("lbl"), posexplode(col("vec")).as(Seq("pos", "v")))
       .groupBy("lbl", "pos")
@@ -965,7 +954,7 @@ object Similarity {
     }
     val scored = prep.withColumn("scores", array(
       centroids.map { case (_, cv, cn) =>
-        graft.functions.VectorFunctions.dotNative(spark, col("vec"), typedlit(cv)) /
+        graft.functions.VectorFunctions.dotNative(col("vec"), typedlit(cv)) /
           (col("nrm") * cn)
       }: _*))
     val labelLits = array(centroids.map(c => lit(c._1)): _*)
@@ -1182,7 +1171,6 @@ object Similarity {
   private def semanticDedupOnSpark(
       prep: DataFrame, tau: Double, nlist: Int, iters: Int, idCol: String,
       cellCap: Int): DataFrame = {
-    val spark = prep.sparkSession
     val cents = trainCentroids(prep, nlist, iters)
     // non-nullable cell: it feeds the block-pair JOIN key (`bucket`), and a
     // nullable key's inferred isnotnull filter is pushed into the parquet
@@ -1219,7 +1207,7 @@ object Similarity {
     val edges = cand.join(va, Seq("id_a")).join(vb, Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         round(
-          graft.functions.VectorFunctions.dotNative(spark, col("v_a"), col("v_b")) /
+          graft.functions.VectorFunctions.dotNative(col("v_a"), col("v_b")) /
             (col("n_a") * col("n_b")), 4).as("cosine"))
       .filter(col("cosine") >= tau)
       .select("id_a", "id_b")
@@ -1253,16 +1241,15 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       labelCol: String = "label"): DataFrame = {
-    val spark = corpus.sparkSession
     val prep = corpus
       .select(col(idCol).as("id"), col(vecCol).as("vec"),
         col(labelCol).cast("int").as("lbl"))
       .withColumn("nrm",
-        sqrt(graft.functions.VectorFunctions.dotNative(spark, col("vec"), col("vec"))))
+        sqrt(graft.functions.VectorFunctions.dotNative(col("vec"), col("vec"))))
     val cents = trainCentroids(prep.select("id", "vec", "nrm"), nlist, iters)
     def cellScores(vec: Column, nrm: Column): Column = array(
       cents.map { case (cv, cn) =>
-        graft.functions.VectorFunctions.dotNative(spark, vec, typedlit(cv)) / (nrm * cn)
+        graft.functions.VectorFunctions.dotNative(vec, typedlit(cv)) / (nrm * cn)
       }: _*)
     // non-nullable cell (same inferred-isnotnull pushdown hazard as
     // ivfSearch; the -1 sentinel joins nothing)
@@ -1306,7 +1293,7 @@ object Similarity {
         col("query_label") =!= col("neighbor_label"))
       .select(
         col("query_id"), col("query_label"), col("neighbor_id"), col("neighbor_label"),
-        (graft.functions.VectorFunctions.dotNative(spark, col("q_vec"), col("c_vec")) /
+        (graft.functions.VectorFunctions.dotNative(col("q_vec"), col("c_vec")) /
           (col("q_nrm") * col("c_nrm"))).as("cos"))
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
@@ -1367,7 +1354,7 @@ object Similarity {
     val cand = probes.join(assigned, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), col("crn"),
-        (graft.functions.VectorFunctions.dotNative(spark, col("q_vec"), col("c_vec")) /
+        (graft.functions.VectorFunctions.dotNative(col("q_vec"), col("c_vec")) /
           (col("q_nrm") * col("c_nrm"))).as("cos"))
       .groupBy("query_id", "neighbor_id")
       .agg(min(col("crn")).as("first_depth"), max(col("cos")).as("cos"))
@@ -1492,10 +1479,9 @@ object Similarity {
       seed: Int = 11,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val spark = corpus.sparkSession
     val signs = jlSigns(seed, inDim, outDim)
     val projections = array(signs.map { sv =>
-      graft.functions.VectorFunctions.dotNative(spark, col(vecCol), typedlit(sv))
+      graft.functions.VectorFunctions.dotNative(col(vecCol), typedlit(sv))
     }: _*)
     corpus
       .select(col(idCol), posexplode(projections).as(Seq("dim", "proj")))

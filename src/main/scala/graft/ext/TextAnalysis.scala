@@ -48,8 +48,7 @@ object TextAnalysis {
     * zero. Deterministic tie-break by the declaration order of langMarkers.
     */
   def langId(text: Column): Column = {
-    val arr = graft.functions.TextNativeFunctions.langScores(
-      org.apache.spark.sql.SparkSession.active, text)
+    val arr = graft.functions.TextNativeFunctions.langScores(text)
     val scores = langMarkers.zipWithIndex.map { case ((l, _), i) =>
       (l, element_at(arr, i + 1))
     }
@@ -68,8 +67,7 @@ object TextAnalysis {
     */
   def langConfusion(
       docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val arr = graft.functions.TextNativeFunctions.langScores(
-      docs.sparkSession, col(textCol))
+    val arr = graft.functions.TextNativeFunctions.langScores(col(textCol))
     val entries = langMarkers.zipWithIndex.map { case ((l, _), i) =>
       struct((lit(0) - element_at(arr, i + 1)).as("ns"),
         lit(i).as("i"), lit(l).as("l"))
@@ -145,8 +143,7 @@ object TextAnalysis {
       // native one-pass n-gram builder (graft.functions.WordNGrams) — the
       // HOF transform/slice/array_join build was interpreted per window;
       // <n-token docs yield an empty array, which explode drops
-      val gram = explode(graft.functions.TextNativeFunctions.ngrams(
-        docs.sparkSession, lower(col(textCol)), n))
+      val gram = explode(graft.functions.TextNativeFunctions.ngrams(lower(col(textCol)), n))
       docs.select(lit(n).as("n"), gram.as("gram"))
     }.reduce(_ unionByName _)
     val w = org.apache.spark.sql.expressions.Window
@@ -172,8 +169,7 @@ object TextAnalysis {
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val vocab = vocabulary(docs, textCol, maxN = 1, topK = vocabSize).select(col("gram"))
     val toks = docs.select(col(idCol),
-      explode(graft.functions.TextNativeFunctions.ngrams(
-        docs.sparkSession, lower(col(textCol)), 1)).as("__tok"))
+      explode(graft.functions.TextNativeFunctions.ngrams(lower(col(textCol)), 1)).as("__tok"))
     toks.join(broadcast(vocab), col("__tok") === col("gram"), "left")
       .groupBy(col(idCol))
       .agg(
@@ -205,8 +201,7 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val g = col(groupCol)
     val toks = docs.select(g,
-      explode(graft.functions.TextNativeFunctions.ngrams(
-        docs.sparkSession, lower(col(textCol)), 1)).as("term"))
+      explode(graft.functions.TextNativeFunctions.ngrams(lower(col(textCol)), 1)).as("term"))
     val cg = toks.groupBy(g, col("term")).agg(count(lit(1)).as("c_g"))
     val ct = cg.groupBy("term").agg(sum(col("c_g")).as("c_tot"))
     val tg = cg.groupBy(g).agg(sum(col("c_g")).as("t_g"))
@@ -245,9 +240,8 @@ object TextAnalysis {
     */
   def lmPlausibility(
       docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val ses = docs.sparkSession
     def grams(n: Int) =
-      explode(graft.functions.TextNativeFunctions.ngrams(ses, lower(col(textCol)), n))
+      explode(graft.functions.TextNativeFunctions.ngrams(lower(col(textCol)), n))
     val uni = docs.select(grams(1).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("cu"))
     val biProb = docs.select(grams(2).as("gram"))
@@ -562,8 +556,7 @@ object TextAnalysis {
     // — the HOF formulation (sort_array+aggregate mode, transform trigrams,
     // array_distinct) computed the same counts at ~1.4 ms/row interpreted;
     // derived ratios/booleans below are identical Column math either way
-    val stats = graft.functions.TextNativeFunctions.repStats(
-      docs.sparkSession, lower(col(textCol)))
+    val stats = graft.functions.TextNativeFunctions.repStats(lower(col(textCol)))
     docs
       .withColumn("__rs", stats)
       .withColumn("n_tokens", col("__rs.n_tokens"))
@@ -641,8 +634,7 @@ object TextAnalysis {
       n: Int = 2): DataFrame = {
     val grams = docs.select(
       col(idCol).as("did"),
-      explode(graft.functions.TextNativeFunctions.ngrams(
-        docs.sparkSession, lower(col(textCol)), n)).as("gram"))
+      explode(graft.functions.TextNativeFunctions.ngrams(lower(col(textCol)), n)).as("gram"))
     val corpusFreq = grams.groupBy("gram").agg(count(lit(1)).as("freq"))
     val perDoc = grams.join(corpusFreq, "gram")
       .groupBy("did")
@@ -676,8 +668,7 @@ object TextAnalysis {
     // the explode formulation shuffled one row PER CHARACTER through two
     // aggregations — this is map-only, zero shuffle, same counts. Docs
     // under 3 chars drop out (they produced no gram rows before).
-    val stats = graft.functions.TextNativeFunctions.charTrigramStats(
-      docs.sparkSession, lower(col(textCol)))
+    val stats = graft.functions.TextNativeFunctions.charTrigramStats(lower(col(textCol)))
     docs
       .select(col(idCol), stats.as("__ts"))
       .where(col("__ts.n_trigrams") > 0)
@@ -697,8 +688,7 @@ object TextAnalysis {
       idCol: String = "doc_id", topK: Int = 5, n: Int = 1): DataFrame = {
     val terms = docs.select(
       col(groupCol).as("grp"), col(idCol).as("did"),
-      explode(graft.functions.TextNativeFunctions.ngrams(
-        docs.sparkSession, lower(col(textCol)), n)).as("term"))
+      explode(graft.functions.TextNativeFunctions.ngrams(lower(col(textCol)), n)).as("term"))
     // Both aggregates derive from the (grp, term, did) pre-aggregate:
     // tf = Σ per-doc counts, and — because a document has exactly one
     // group — df is a PLAIN row count per term (no distinct-aggregate
@@ -743,15 +733,14 @@ object TextAnalysis {
       textCol: String = "text",
       minCount: Long = 5L,
       topK: Int = 20): DataFrame = {
-    val spark = docs.sparkSession
     import graft.functions.TextNativeFunctions.ngrams
     val dec = "decimal(38,0)"
     val uni = docs
-      .select(explode(ngrams(spark, lower(col(textCol)), 1)).as("term"))
+      .select(explode(ngrams(lower(col(textCol)), 1)).as("term"))
       .groupBy("term").agg(count(lit(1)).as("c"))
     val nRow = uni.agg(sum(col("c")).cast("long").as("n_tokens"))
     val biCounts = docs
-      .select(explode(ngrams(spark, lower(col(textCol)), 2)).as("bigram"))
+      .select(explode(ngrams(lower(col(textCol)), 2)).as("bigram"))
       .groupBy("bigram").agg(count(lit(1)).as("c_ab"))
     val bRow = biCounts.agg(sum(col("c_ab")).cast("long").as("n_bigrams"))
     val bi = biCounts

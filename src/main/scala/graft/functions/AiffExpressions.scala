@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Native AIFF codec (E294) — the SECOND audio container family (the
@@ -275,24 +275,9 @@ case class AiffDecode(child: Expression)
 
 object AiffNativeFunctions {
 
-  /** Register the AIFF codec functions (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
-      FunctionRegistration.ensure(spark, name, "graft.functions.AiffNativeFunctions", builder)
-    ensure("graft_aiff_encode",
-      exprs => AiffEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]))
-    ensure("graft_aiff_decode", exprs => AiffDecode(exprs.head))
-  }
+  def aiffEncode(bytes: Column, channels: Int): Column =
+    ColumnBridge.column(AiffEncode(ColumnBridge.expression(bytes), channels))
 
-  def aiffEncode(spark: SparkSession, bytes: Column, channels: Int): Column = {
-    register(spark)
-    call_function("graft_aiff_encode", bytes,
-      org.apache.spark.sql.functions.lit(channels))
-  }
-
-  def aiffDecode(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function("graft_aiff_decode", bytes)
-  }
+  def aiffDecode(bytes: Column): Column =
+    ColumnBridge.column(AiffDecode(ColumnBridge.expression(bytes)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** MJPEG-in-AVI container codec (E240/E243) — the first VIDEO CONTAINER
@@ -578,47 +578,15 @@ case class AviDecode(child: Expression, withAudio: Boolean)
 
 object AviNativeFunctions {
 
-  /** Register the AVI encode/decode functions (idempotent), mirroring
-    * JpegDctNativeFunctions.
-    */
-  def register(spark: SparkSession): Unit = {
-    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
-      FunctionRegistration.ensure(spark, name, "graft.functions.AviNativeFunctions", builder)
-    ensure("graft_avimjpeg_encode",
-      exprs => AviMjpegEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Int]))
-    ensure("graft_aviav_encode",
-      exprs => AviAvEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Int]))
-    ensure("graft_avimjpeg_decode", exprs => AviDecode(exprs.head, withAudio = false))
-    ensure("graft_aviav_decode", exprs => AviDecode(exprs.head, withAudio = true))
-  }
+  def aviMjpegEncode(bytes: Column, width: Int, frameBytes: Int): Column =
+    ColumnBridge.column(AviMjpegEncode(ColumnBridge.expression(bytes), width, frameBytes))
 
-  def aviMjpegEncode(spark: SparkSession, bytes: Column, width: Int,
-      frameBytes: Int): Column = {
-    register(spark)
-    call_function("graft_avimjpeg_encode", bytes,
-      org.apache.spark.sql.functions.lit(width),
-      org.apache.spark.sql.functions.lit(frameBytes))
-  }
+  def aviAvEncode(bytes: Column, width: Int, frameBytes: Int): Column =
+    ColumnBridge.column(AviAvEncode(ColumnBridge.expression(bytes), width, frameBytes))
 
-  def aviAvEncode(spark: SparkSession, bytes: Column, width: Int,
-      frameBytes: Int): Column = {
-    register(spark)
-    call_function("graft_aviav_encode", bytes,
-      org.apache.spark.sql.functions.lit(width),
-      org.apache.spark.sql.functions.lit(frameBytes))
-  }
+  def aviMjpegDecode(bytes: Column): Column =
+    ColumnBridge.column(AviDecode(ColumnBridge.expression(bytes), withAudio = false))
 
-  def aviMjpegDecode(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function("graft_avimjpeg_decode", bytes)
-  }
-
-  def aviAvDecode(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function("graft_aviav_decode", bytes)
-  }
+  def aviAvDecode(bytes: Column): Column =
+    ColumnBridge.column(AviDecode(ColumnBridge.expression(bytes), withAudio = true))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** RLE8 BMP codec (E287) — the compressed half of the BMP family the
@@ -491,39 +491,15 @@ case class BmpRle4Decode(child: Expression)
 
 object BmpRleNativeFunctions {
 
-  /** Register the RLE BMP codec functions (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
-      FunctionRegistration.ensure(spark, name, "graft.functions.BmpRleNativeFunctions", builder)
-    ensure("graft_bmp_rle8_encode",
-      exprs => BmpRle8Encode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]))
-    ensure("graft_bmp_rle8_decode", exprs => BmpRle8Decode(exprs.head))
-    ensure("graft_bmp_rle4_encode",
-      exprs => BmpRle4Encode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]))
-    ensure("graft_bmp_rle4_decode", exprs => BmpRle4Decode(exprs.head))
-  }
+  def bmpRle8Encode(bytes: Column, width: Int): Column =
+    ColumnBridge.column(BmpRle8Encode(ColumnBridge.expression(bytes), width))
 
-  def bmpRle8Encode(spark: SparkSession, bytes: Column, width: Int): Column = {
-    register(spark)
-    call_function("graft_bmp_rle8_encode", bytes,
-      org.apache.spark.sql.functions.lit(width))
-  }
+  def bmpRle8Decode(bytes: Column): Column =
+    ColumnBridge.column(BmpRle8Decode(ColumnBridge.expression(bytes)))
 
-  def bmpRle8Decode(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function("graft_bmp_rle8_decode", bytes)
-  }
+  def bmpRle4Encode(bytes: Column, width: Int): Column =
+    ColumnBridge.column(BmpRle4Encode(ColumnBridge.expression(bytes), width))
 
-  def bmpRle4Encode(spark: SparkSession, bytes: Column, width: Int): Column = {
-    register(spark)
-    call_function("graft_bmp_rle4_encode", bytes,
-      org.apache.spark.sql.functions.lit(width))
-  }
-
-  def bmpRle4Decode(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function("graft_bmp_rle4_decode", bytes)
-  }
+  def bmpRle4Decode(bytes: Column): Column =
+    ColumnBridge.column(BmpRle4Decode(ColumnBridge.expression(bytes)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Native FLAC codec (E253) — lossless compressed audio, the FOURTH
@@ -1035,34 +1035,10 @@ case class FlacDecode(child: Expression)
 
 object FlacNativeFunctions {
 
-  /** Register `graft_flac_encode` / `graft_flac_decode` (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
-      FunctionRegistration.ensure(spark, name, "graft.functions.FlacNativeFunctions", builder)
-    ensure("graft_flac_encode",
-      exprs => FlacEncode(exprs.head,
-        if (exprs.length > 1) exprs(1).eval().asInstanceOf[Int] else 0,
-        if (exprs.length > 2) exprs(2).eval().asInstanceOf[Boolean]
-        else false,
-        if (exprs.length > 3) exprs(3).eval().asInstanceOf[Int] else 16,
-        if (exprs.length > 4) exprs(4).eval().asInstanceOf[Boolean]
-        else false))
-    ensure("graft_flac_decode", exprs => FlacDecode(exprs.head))
-  }
+  def flacEncode(bytes: Column, lpcOrder: Int = 0, stereo: Boolean = false,
+      bps: Int = 16, varBlock: Boolean = false): Column =
+    ColumnBridge.column(FlacEncode(ColumnBridge.expression(bytes), lpcOrder, stereo, bps, varBlock))
 
-  def flacEncode(spark: SparkSession, bytes: Column,
-      lpcOrder: Int = 0, stereo: Boolean = false, bps: Int = 16,
-      varBlock: Boolean = false): Column = {
-    register(spark)
-    call_function("graft_flac_encode", bytes,
-      org.apache.spark.sql.functions.lit(lpcOrder),
-      org.apache.spark.sql.functions.lit(stereo),
-      org.apache.spark.sql.functions.lit(bps),
-      org.apache.spark.sql.functions.lit(varBlock))
-  }
-
-  def flacDecode(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function("graft_flac_decode", bytes)
-  }
+  def flacDecode(bytes: Column): Column =
+    ColumnBridge.column(FlacDecode(ColumnBridge.expression(bytes)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Native GIF codec (E245/E247–E249) — the LZW entropy family, in-engine.
@@ -840,49 +840,15 @@ case class GifComposite(child: Expression)
 
 object GifNativeFunctions {
 
-  /** Register `graft_gif_encode` / `graft_gif_decode` (idempotent). The
-    * encode accepts 2 or 5 args (the 5-arg form adds palBits /
-    * interlaced / frameHeight for the small-palette, interlaced, and
-    * animated shapes).
-    */
-  def register(spark: SparkSession): Unit = {
-    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
-      FunctionRegistration.ensure(spark, name, "graft.functions.GifNativeFunctions", builder)
-    ensure("graft_gif_encode",
-      exprs => GifEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int],
-        if (exprs.length > 2) exprs(2).eval().asInstanceOf[Int] else 8,
-        if (exprs.length > 3) exprs(3).eval().asInstanceOf[Boolean] else false,
-        if (exprs.length > 4) exprs(4).eval().asInstanceOf[Int] else 0,
-        if (exprs.length > 5) exprs(5).eval().asInstanceOf[Boolean]
-        else false,
-        if (exprs.length > 6) exprs(6).eval().asInstanceOf[Boolean]
-        else false))
-    ensure("graft_gif_decode", exprs => GifDecode(exprs.head))
-    ensure("graft_gif_composite", exprs => GifComposite(exprs.head))
-  }
+  def gifEncode(bytes: Column, width: Int, palBits: Int = 8,
+      interlaced: Boolean = false, frameHeight: Int = 0,
+      localPalettes: Boolean = false, partialFrames: Boolean = false): Column =
+    ColumnBridge.column(GifEncode(ColumnBridge.expression(bytes), width, palBits, interlaced,
+      frameHeight, localPalettes, partialFrames))
 
-  def gifEncode(spark: SparkSession, bytes: Column, width: Int,
-      palBits: Int = 8, interlaced: Boolean = false,
-      frameHeight: Int = 0, localPalettes: Boolean = false,
-      partialFrames: Boolean = false): Column = {
-    register(spark)
-    call_function("graft_gif_encode", bytes,
-      org.apache.spark.sql.functions.lit(width),
-      org.apache.spark.sql.functions.lit(palBits),
-      org.apache.spark.sql.functions.lit(interlaced),
-      org.apache.spark.sql.functions.lit(frameHeight),
-      org.apache.spark.sql.functions.lit(localPalettes),
-      org.apache.spark.sql.functions.lit(partialFrames))
-  }
+  def gifDecode(bytes: Column): Column =
+    ColumnBridge.column(GifDecode(ColumnBridge.expression(bytes)))
 
-  def gifDecode(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function("graft_gif_decode", bytes)
-  }
-
-  def gifComposite(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function("graft_gif_composite", bytes)
-  }
+  def gifComposite(bytes: Column): Column =
+    ColumnBridge.column(GifComposite(ColumnBridge.expression(bytes)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Native ICO codec (E297) — the favicon/icon container every web
@@ -310,24 +310,9 @@ case class IcoDecode(child: Expression)
 
 object IcoNativeFunctions {
 
-  /** Register the ICO codec functions (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
-      FunctionRegistration.ensure(spark, name, "graft.functions.IcoNativeFunctions", builder)
-    ensure("graft_ico_encode",
-      exprs => IcoEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]))
-    ensure("graft_ico_decode", exprs => IcoDecode(exprs.head))
-  }
+  def icoEncode(bytes: Column, width: Int): Column =
+    ColumnBridge.column(IcoEncode(ColumnBridge.expression(bytes), width))
 
-  def icoEncode(spark: SparkSession, bytes: Column, width: Int): Column = {
-    register(spark)
-    call_function("graft_ico_encode", bytes,
-      org.apache.spark.sql.functions.lit(width))
-  }
-
-  def icoDecode(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function("graft_ico_decode", bytes)
-  }
+  def icoDecode(bytes: Column): Column =
+    ColumnBridge.column(IcoDecode(ColumnBridge.expression(bytes)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Native BASELINE (lossy, DCT) JPEG codec — ITU-T T.81 sequential DCT,
@@ -1773,62 +1773,23 @@ case class JpegDctDecode(child: Expression)
 
 object JpegDctNativeFunctions {
 
-  /** Register `graft_jpegdct_encode` / `graft_jpegdct_decode`
-    * (idempotent), mirroring QoiNativeFunctions.
-    */
-  def register(spark: SparkSession): Unit = {
-    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
-      FunctionRegistration.ensure(spark, name, "graft.functions.JpegDctNativeFunctions", builder)
-    ensure("graft_jpegdct_encode",
-      exprs => JpegDctEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]))
-    ensure("graft_jpegdct_decode", exprs => JpegDctDecode(exprs.head))
-    ensure("graft_jpegprog_encode",
-      exprs => JpegProgEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]))
-    ensure("graft_jpegmeta_encode",
-      exprs => JpegMetaEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]))
-    ensure("graft_jpegycc_encode",
-      exprs => JpegYccEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Int],
-        exprs(3).eval().asInstanceOf[Int]))
-  }
-
-  def jpegYccEncode(spark: SparkSession, bytes: Column, lumaH: Int,
-      lumaV: Int, restartInterval: Int = 0): Column = {
-    register(spark)
-    call_function("graft_jpegycc_encode", bytes,
-      org.apache.spark.sql.functions.lit(lumaH),
-      org.apache.spark.sql.functions.lit(lumaV),
-      org.apache.spark.sql.functions.lit(restartInterval))
-  }
-
-  def jpeg420Encode(spark: SparkSession, bytes: Column,
+  def jpegYccEncode(bytes: Column, lumaH: Int, lumaV: Int,
       restartInterval: Int = 0): Column =
-    jpegYccEncode(spark, bytes, 2, 2, restartInterval)
+    ColumnBridge.column(
+      JpegYccEncode(ColumnBridge.expression(bytes), lumaH, lumaV, restartInterval))
 
-  def jpegDctEncode(spark: SparkSession, bytes: Column, width: Int): Column = {
-    register(spark)
-    call_function("graft_jpegdct_encode", bytes,
-      org.apache.spark.sql.functions.lit(width))
-  }
+  def jpeg420Encode(bytes: Column, restartInterval: Int = 0): Column =
+    jpegYccEncode(bytes, 2, 2, restartInterval)
 
-  def jpegProgEncode(spark: SparkSession, bytes: Column, width: Int): Column = {
-    register(spark)
-    call_function("graft_jpegprog_encode", bytes,
-      org.apache.spark.sql.functions.lit(width))
-  }
+  def jpegDctEncode(bytes: Column, width: Int): Column =
+    ColumnBridge.column(JpegDctEncode(ColumnBridge.expression(bytes), width))
 
-  def jpegMetaEncode(spark: SparkSession, bytes: Column, width: Int): Column = {
-    register(spark)
-    call_function("graft_jpegmeta_encode", bytes,
-      org.apache.spark.sql.functions.lit(width))
-  }
+  def jpegProgEncode(bytes: Column, width: Int): Column =
+    ColumnBridge.column(JpegProgEncode(ColumnBridge.expression(bytes), width))
 
-  def jpegDctDecode(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function("graft_jpegdct_decode", bytes)
-  }
+  def jpegMetaEncode(bytes: Column, width: Int): Column =
+    ColumnBridge.column(JpegMetaEncode(ColumnBridge.expression(bytes), width))
+
+  def jpegDctDecode(bytes: Column): Column =
+    ColumnBridge.column(JpegDctDecode(ColumnBridge.expression(bytes)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Native JPEG codec for the LOSSLESS process of the public JPEG standard
@@ -375,26 +375,9 @@ case class JpegLosslessDecode(child: Expression)
 
 object JpegNativeFunctions {
 
-  /** Register `graft_jpegll_encode` / `graft_jpegll_decode` (idempotent),
-    * mirroring QoiNativeFunctions.
-    */
-  def register(spark: SparkSession): Unit = {
-    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
-      FunctionRegistration.ensure(spark, name, "graft.functions.JpegNativeFunctions", builder)
-    ensure("graft_jpegll_encode",
-      exprs => JpegLosslessEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]))
-    ensure("graft_jpegll_decode", exprs => JpegLosslessDecode(exprs.head))
-  }
+  def jpegEncode(bytes: Column, width: Int): Column =
+    ColumnBridge.column(JpegLosslessEncode(ColumnBridge.expression(bytes), width))
 
-  def jpegEncode(spark: SparkSession, bytes: Column, width: Int): Column = {
-    register(spark)
-    call_function("graft_jpegll_encode", bytes,
-      org.apache.spark.sql.functions.lit(width))
-  }
-
-  def jpegDecode(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function("graft_jpegll_decode", bytes)
-  }
+  def jpegDecode(bytes: Column): Column =
+    ColumnBridge.column(JpegLosslessDecode(ColumnBridge.expression(bytes)))
 }

@@ -1,12 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Native per-asset media walks — the QoiDecode pattern applied to the two
@@ -648,44 +648,24 @@ case class Y4mFrameWalk(children: Seq[Expression])
 
 object MediaNativeFunctions {
 
-  /** Register `graft_bmp_dhash` / `graft_y4m_frames` (idempotent),
-    * mirroring QoiNativeFunctions.
-    */
-  def register(spark: SparkSession): Unit = {
-    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
-      FunctionRegistration.ensure(spark, name, "graft.functions.MediaNativeFunctions", builder)
-    ensure("graft_bmp_dhash", exprs => BmpDHashWalk(exprs))
-    ensure("graft_bmp_dhash128", exprs => BmpDHash128Walk(exprs))
-    ensure("graft_y4m_frames", exprs => Y4mFrameWalk(exprs))
-    ensure("graft_y4m_header", exprs => Y4mHeaderParse(exprs.head))
-    ensure("graft_ppm_header", exprs => PpmHeaderParse(exprs.head))
-  }
+  def ppmHeaderParse(bytes: Column): Column =
+    ColumnBridge.column(PpmHeaderParse(ColumnBridge.expression(bytes)))
 
-  def ppmHeaderParse(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function("graft_ppm_header", bytes)
-  }
+  def y4mHeaderParse(bytes: Column): Column =
+    ColumnBridge.column(Y4mHeaderParse(ColumnBridge.expression(bytes)))
 
-  def y4mHeaderParse(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function("graft_y4m_header", bytes)
-  }
+  def bmpDHashWalk(bytes: Column, w: Column, hgt: Column, hraw: Column,
+      stride: Column, poff: Column): Column =
+    ColumnBridge.column(BmpDHashWalk(
+      Seq(bytes, w, hgt, hraw, stride, poff).map(ColumnBridge.expression)))
 
-  def bmpDHashWalk(spark: SparkSession, bytes: Column, w: Column, hgt: Column,
-      hraw: Column, stride: Column, poff: Column): Column = {
-    register(spark)
-    call_function("graft_bmp_dhash", bytes, w, hgt, hraw, stride, poff)
-  }
+  def bmpDHash128Walk(bytes: Column, w: Column, hgt: Column, hraw: Column,
+      stride: Column, poff: Column): Column =
+    ColumnBridge.column(BmpDHash128Walk(
+      Seq(bytes, w, hgt, hraw, stride, poff).map(ColumnBridge.expression)))
 
-  def bmpDHash128Walk(spark: SparkSession, bytes: Column, w: Column,
-      hgt: Column, hraw: Column, stride: Column, poff: Column): Column = {
-    register(spark)
-    call_function("graft_bmp_dhash128", bytes, w, hgt, hraw, stride, poff)
-  }
-
-  def y4mFrameWalk(spark: SparkSession, bytes: Column, poff: Column,
-      fsize: Column, w: Column, hgt: Column, nFrames: Column): Column = {
-    register(spark)
-    call_function("graft_y4m_frames", bytes, poff, fsize, w, hgt, nFrames)
-  }
+  def y4mFrameWalk(bytes: Column, poff: Column, fsize: Column, w: Column,
+      hgt: Column, nFrames: Column): Column =
+    ColumnBridge.column(Y4mFrameWalk(
+      Seq(bytes, poff, fsize, w, hgt, nFrames).map(ColumnBridge.expression)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Native PNG codec — the first ENTROPY-CODED image format this engine
@@ -576,36 +576,11 @@ case class PngDecode(child: Expression)
 
 object PngNativeFunctions {
 
-  /** Register `graft_png_encode` / `graft_png_decode` (idempotent),
-    * mirroring QoiNativeFunctions.
-    */
-  def register(spark: SparkSession): Unit = {
-    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
-      FunctionRegistration.ensure(spark, name, "graft.functions.PngNativeFunctions", builder)
-    ensure("graft_png_encode",
-      exprs => PngEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int],
-        if (exprs.length > 2) exprs(2).eval().asInstanceOf[Int] else 2,
-        if (exprs.length > 3) exprs(3).eval().asInstanceOf[Boolean]
-        else false,
-        if (exprs.length > 4) exprs(4).eval().asInstanceOf[Int]
-        else 8))
-    ensure("graft_png_decode", exprs => PngDecode(exprs.head))
-  }
+  def pngEncode(bytes: Column, width: Int, colorType: Int = 2,
+      interlaced: Boolean = false, depth: Int = 8): Column =
+    ColumnBridge.column(
+      PngEncode(ColumnBridge.expression(bytes), width, colorType, interlaced, depth))
 
-  def pngEncode(spark: SparkSession, bytes: Column, width: Int,
-      colorType: Int = 2, interlaced: Boolean = false,
-      depth: Int = 8): Column = {
-    register(spark)
-    call_function("graft_png_encode", bytes,
-      org.apache.spark.sql.functions.lit(width),
-      org.apache.spark.sql.functions.lit(colorType),
-      org.apache.spark.sql.functions.lit(interlaced),
-      org.apache.spark.sql.functions.lit(depth))
-  }
-
-  def pngDecode(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function("graft_png_decode", bytes)
-  }
+  def pngDecode(bytes: Column): Column =
+    ColumnBridge.column(PngDecode(ColumnBridge.expression(bytes)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Native QOI ("Quite OK Image", qoiformat.org — public spec) codec: the
@@ -279,26 +279,9 @@ case class QoiDecode(child: Expression)
 
 object QoiNativeFunctions {
 
-  /** Register `graft_qoi_encode` / `graft_qoi_decode` (idempotent),
-    * mirroring TextNativeFunctions.
-    */
-  def register(spark: SparkSession): Unit = {
-    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
-      FunctionRegistration.ensure(spark, name, "graft.functions.QoiNativeFunctions", builder)
-    ensure("graft_qoi_encode",
-      exprs => QoiEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]))
-    ensure("graft_qoi_decode", exprs => QoiDecode(exprs.head))
-  }
+  def qoiEncode(bytes: Column, width: Int): Column =
+    ColumnBridge.column(QoiEncode(ColumnBridge.expression(bytes), width))
 
-  def qoiEncode(spark: SparkSession, bytes: Column, width: Int): Column = {
-    register(spark)
-    call_function("graft_qoi_encode", bytes,
-      org.apache.spark.sql.functions.lit(width))
-  }
-
-  def qoiDecode(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function("graft_qoi_decode", bytes)
-  }
+  def qoiDecode(bytes: Column): Column =
+    ColumnBridge.column(QoiDecode(ColumnBridge.expression(bytes)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Native TAR shard codec (E269) — the container training corpora are
@@ -760,70 +760,16 @@ case class TarMembers(child: Expression, gz: Boolean)
 
 object TarNativeFunctions {
 
-  /** Register the tar codec functions (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
-      FunctionRegistration.ensure(spark, name, "graft.functions.TarNativeFunctions", builder)
-    ensure("graft_tar_encode",
-      exprs => TarEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Boolean],
-        if (exprs.length > 3) exprs(3).eval().asInstanceOf[Boolean]
-        else false,
-        if (exprs.length > 4) exprs(4).eval().asInstanceOf[Boolean]
-        else false,
-        if (exprs.length > 5) exprs(5).eval().asInstanceOf[Boolean]
-        else false,
-        if (exprs.length > 6) exprs(6).eval().asInstanceOf[Boolean]
-        else false,
-        if (exprs.length > 7) exprs(7).eval().asInstanceOf[Boolean]
-        else false,
-        if (exprs.length > 8) exprs(8).eval().asInstanceOf[Boolean]
-        else false))
-    ensure("graft_tar_decode",
-      exprs => TarDecode(exprs.head,
-        exprs(1).eval().asInstanceOf[Boolean],
-        if (exprs.length > 2) exprs(2).eval().asInstanceOf[Boolean]
-        else false,
-        if (exprs.length > 3) exprs(3).eval().asInstanceOf[Boolean]
-        else false,
-        if (exprs.length > 4) exprs(4).eval().asInstanceOf[Boolean]
-        else false))
-    ensure("graft_tar_members",
-      exprs => TarMembers(exprs.head,
-        exprs(1).eval().asInstanceOf[Boolean]))
-  }
+  def tarEncode(bytes: Column, memberBytes: Int, gz: Boolean,
+      pax: Boolean = false, bgzf: Boolean = false, mgz: Boolean = false,
+      snap: Boolean = false, lz4: Boolean = false, gzHdr: Boolean = false): Column =
+    ColumnBridge.column(TarEncode(ColumnBridge.expression(bytes), memberBytes, gz, pax, bgzf, mgz,
+      snap, lz4, gzHdr))
 
-  def tarEncode(spark: SparkSession, bytes: Column, memberBytes: Int,
-      gz: Boolean, pax: Boolean = false, bgzf: Boolean = false,
-      mgz: Boolean = false, snap: Boolean = false,
-      lz4: Boolean = false, gzHdr: Boolean = false): Column = {
-    register(spark)
-    call_function("graft_tar_encode", bytes,
-      org.apache.spark.sql.functions.lit(memberBytes),
-      org.apache.spark.sql.functions.lit(gz),
-      org.apache.spark.sql.functions.lit(pax),
-      org.apache.spark.sql.functions.lit(bgzf),
-      org.apache.spark.sql.functions.lit(mgz),
-      org.apache.spark.sql.functions.lit(snap),
-      org.apache.spark.sql.functions.lit(lz4),
-      org.apache.spark.sql.functions.lit(gzHdr))
-  }
+  def tarDecode(bytes: Column, gz: Boolean, bgzf: Boolean = false,
+      snap: Boolean = false, lz4: Boolean = false): Column =
+    ColumnBridge.column(TarDecode(ColumnBridge.expression(bytes), gz, bgzf, snap, lz4))
 
-  def tarDecode(spark: SparkSession, bytes: Column, gz: Boolean,
-      bgzf: Boolean = false, snap: Boolean = false,
-      lz4: Boolean = false): Column = {
-    register(spark)
-    call_function("graft_tar_decode", bytes,
-      org.apache.spark.sql.functions.lit(gz),
-      org.apache.spark.sql.functions.lit(bgzf),
-      org.apache.spark.sql.functions.lit(snap),
-      org.apache.spark.sql.functions.lit(lz4))
-  }
-
-  def tarMembers(spark: SparkSession, bytes: Column, gz: Boolean): Column = {
-    register(spark)
-    call_function("graft_tar_members", bytes,
-      org.apache.spark.sql.functions.lit(gz))
-  }
+  def tarMembers(bytes: Column, gz: Boolean): Column =
+    ColumnBridge.column(TarMembers(ColumnBridge.expression(bytes), gz))
 }

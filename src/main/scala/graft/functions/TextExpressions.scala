@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -384,46 +384,23 @@ object LangMarkerScores {
 
 object TextNativeFunctions {
 
-  /** Register the native text functions once per session, mirroring
-    * VectorFunctions (`GraftExtensions` injects all but `graft_langscores`).
-    */
-  def register(spark: SparkSession): Unit = {
-    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
-      FunctionRegistration.ensure(spark, name, "graft.functions.TextNativeFunctions", builder)
-    ensure("graft_repstats", exprs => RepetitionStats(exprs.head))
-    ensure("graft_ngrams",
-      exprs => WordNGrams(exprs.head, exprs(1).eval().asInstanceOf[Int]))
-    ensure("graft_shingles",
-      exprs => WordShingles(exprs.head, exprs(1).eval().asInstanceOf[Int]))
-    ensure("graft_chartristats", exprs => CharTrigramStats(exprs.head))
-    ensure("graft_langscores", exprs => LangMarkerScores(exprs.head))
-  }
-
   /** One-pass repetition counts of a (pre-lowercased) text column, as a
     * struct(n_tokens, top_unigram_n, n_trigrams, n_distinct_trigrams).
     */
-  def repStats(spark: SparkSession, text: Column): Column = {
-    register(spark)
-    call_function("graft_repstats", text)
-  }
+  def repStats(text: Column): Column =
+    ColumnBridge.column(RepetitionStats(ColumnBridge.expression(text)))
 
   /** One-pass word-n-gram array of a (pre-lowercased) text column. */
-  def ngrams(spark: SparkSession, text: Column, n: Int): Column = {
-    register(spark)
-    call_function("graft_ngrams", text, org.apache.spark.sql.functions.lit(n))
-  }
+  def ngrams(text: Column, n: Int): Column =
+    ColumnBridge.column(WordNGrams(ColumnBridge.expression(text), n))
 
   /** One-pass char-trigram Simpson counts of a (pre-lowercased) text
     * column, as a struct(n_trigrams, n_distinct, simpson_num).
     */
-  def charTrigramStats(spark: SparkSession, text: Column): Column = {
-    register(spark)
-    call_function("graft_chartristats", text)
-  }
+  def charTrigramStats(text: Column): Column =
+    ColumnBridge.column(CharTrigramStats(ColumnBridge.expression(text)))
 
   /** One-pass per-language marker scores (langMarkers order), array<double>. */
-  def langScores(spark: SparkSession, text: Column): Column = {
-    register(spark)
-    call_function("graft_langscores", text)
-  }
+  def langScores(text: Column): Column =
+    ColumnBridge.column(LangMarkerScores(ColumnBridge.expression(text)))
 }

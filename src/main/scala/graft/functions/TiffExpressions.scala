@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Native TIFF codec (E252) — the scanner-archive format. Classic TIFF
@@ -1028,49 +1028,13 @@ case class TiffDecode(child: Expression)
 
 object TiffNativeFunctions {
 
-  /** Register `graft_tiff_encode` / `graft_tiff_decode` (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
-      FunctionRegistration.ensure(spark, name, "graft.functions.TiffNativeFunctions", builder)
-    ensure("graft_tiff_encode",
-      exprs => TiffEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Boolean],
-        exprs(3).eval().asInstanceOf[Boolean],
-        if (exprs.length > 4) exprs(4).eval().asInstanceOf[Boolean]
-        else false,
-        if (exprs.length > 5) exprs(5).eval().asInstanceOf[Int] else 0,
-        if (exprs.length > 6) exprs(6).eval().asInstanceOf[Boolean]
-        else false,
-        if (exprs.length > 7) exprs(7).eval().asInstanceOf[Boolean]
-        else false,
-        if (exprs.length > 8) exprs(8).eval().asInstanceOf[Boolean]
-        else false,
-        if (exprs.length > 9) exprs(9).eval().asInstanceOf[Boolean]
-        else false))
-    ensure("graft_tiff_decode", exprs => TiffDecode(exprs.head))
-  }
-
-  def tiffEncode(spark: SparkSession, bytes: Column, width: Int,
-      bigEndian: Boolean, packBits: Boolean,
-      lzw: Boolean = false, pageHeight: Int = 0,
+  def tiffEncode(bytes: Column, width: Int, bigEndian: Boolean,
+      packBits: Boolean, lzw: Boolean = false, pageHeight: Int = 0,
       predictor2: Boolean = false, fillOrder2: Boolean = false,
-      tiled: Boolean = false, rgb: Boolean = false): Column = {
-    register(spark)
-    call_function("graft_tiff_encode", bytes,
-      org.apache.spark.sql.functions.lit(width),
-      org.apache.spark.sql.functions.lit(bigEndian),
-      org.apache.spark.sql.functions.lit(packBits),
-      org.apache.spark.sql.functions.lit(lzw),
-      org.apache.spark.sql.functions.lit(pageHeight),
-      org.apache.spark.sql.functions.lit(predictor2),
-      org.apache.spark.sql.functions.lit(fillOrder2),
-      org.apache.spark.sql.functions.lit(tiled),
-      org.apache.spark.sql.functions.lit(rgb))
-  }
+      tiled: Boolean = false, rgb: Boolean = false): Column =
+    ColumnBridge.column(TiffEncode(ColumnBridge.expression(bytes), width, bigEndian, packBits, lzw,
+      pageHeight, predictor2, fillOrder2, tiled, rgb))
 
-  def tiffDecode(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function("graft_tiff_decode", bytes)
-  }
+  def tiffDecode(bytes: Column): Column =
+    ColumnBridge.column(TiffDecode(ColumnBridge.expression(bytes)))
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Native vector expressions (SURVEY preference order (b): a custom Catalyst
@@ -87,35 +86,7 @@ object DotProduct {
 
 object VectorFunctions {
 
-  /** Register `graft_dot` in the session's function registry unless it
-    * already holds graft's own builder (the session extension injects it);
-    * exposed through `call_function` so no private Column internals are
-    * touched.
-    */
-  def register(spark: SparkSession): Unit =
-    FunctionRegistration.ensure(spark, "graft_dot", classOf[DotProduct].getName,
-      exprs => DotProduct(exprs(0), exprs(1)))
-
   /** Codegen'd dot product of two float/double array columns. */
-  def dotNative(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_dot", a, b)
-  }
-}
-
-private[functions] object FunctionRegistration {
-
-  /** Registers `builder` as `name` unless the session's registry already
-    * holds a builder registered under graft's `className` — by
-    * `GraftExtensions` when the session was built, or by an earlier call.
-    * Re-registering on every use would replace the function each time (and
-    * log a warning each time).
-    */
-  def ensure(spark: SparkSession, name: String, className: String,
-      builder: Seq[Expression] => Expression): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(name)
-    if (!registry.lookupFunction(id).exists(_.getClassName == className))
-      registry.registerFunction(id, new ExpressionInfo(className, name), builder)
-  }
+  def dotNative(a: Column, b: Column): Column =
+    ColumnBridge.column(DotProduct(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** WARC web-archive codec (E246) — the container web-crawl corpora
@@ -894,70 +894,20 @@ case class WarcHttpRecords(child: Expression, gz: Boolean)
 
 object WarcNativeFunctions {
 
-  /** Register `graft_warc_encode` / `graft_warc_decode` (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
-      FunctionRegistration.ensure(spark, name, "graft.functions.WarcNativeFunctions", builder)
-    ensure("graft_warc_encode",
-      exprs => WarcEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Boolean]))
-    ensure("graft_warc_decode",
-      exprs => WarcDecode(exprs.head,
-        exprs(1).eval().asInstanceOf[Boolean]))
-    ensure("graft_warc_http_encode",
-      exprs => WarcHttpEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Boolean],
-        if (exprs.length > 3) exprs(3).eval().asInstanceOf[Boolean]
-        else false,
-        if (exprs.length > 4) exprs(4).eval().asInstanceOf[Boolean]
-        else false,
-        if (exprs.length > 5) exprs(5).eval().asInstanceOf[Boolean]
-        else false))
-    ensure("graft_warc_http_stats",
-      exprs => WarcHttpStats(exprs.head,
-        exprs(1).eval().asInstanceOf[Boolean]))
-    ensure("graft_warc_http_records",
-      exprs => WarcHttpRecords(exprs.head,
-        exprs(1).eval().asInstanceOf[Boolean]))
-  }
+  def warcEncode(bytes: Column, recordBytes: Int, gz: Boolean): Column =
+    ColumnBridge.column(WarcEncode(ColumnBridge.expression(bytes), recordBytes, gz))
 
-  def warcEncode(spark: SparkSession, bytes: Column, recordBytes: Int,
-      gz: Boolean): Column = {
-    register(spark)
-    call_function("graft_warc_encode", bytes,
-      org.apache.spark.sql.functions.lit(recordBytes),
-      org.apache.spark.sql.functions.lit(gz))
-  }
+  def warcDecode(bytes: Column, gz: Boolean): Column =
+    ColumnBridge.column(WarcDecode(ColumnBridge.expression(bytes), gz))
 
-  def warcDecode(spark: SparkSession, bytes: Column, gz: Boolean): Column = {
-    register(spark)
-    call_function("graft_warc_decode", bytes,
-      org.apache.spark.sql.functions.lit(gz))
-  }
+  def warcHttpEncode(bytes: Column, bodyBytes: Int, gz: Boolean,
+      chunked: Boolean = false, mixed: Boolean = false, html: Boolean = false): Column =
+    ColumnBridge.column(
+      WarcHttpEncode(ColumnBridge.expression(bytes), bodyBytes, gz, chunked, mixed, html))
 
-  def warcHttpEncode(spark: SparkSession, bytes: Column, bodyBytes: Int,
-      gz: Boolean, chunked: Boolean = false,
-      mixed: Boolean = false, html: Boolean = false): Column = {
-    register(spark)
-    call_function("graft_warc_http_encode", bytes,
-      org.apache.spark.sql.functions.lit(bodyBytes),
-      org.apache.spark.sql.functions.lit(gz),
-      org.apache.spark.sql.functions.lit(chunked),
-      org.apache.spark.sql.functions.lit(mixed),
-      org.apache.spark.sql.functions.lit(html))
-  }
+  def warcHttpStats(bytes: Column, gz: Boolean): Column =
+    ColumnBridge.column(WarcHttpStats(ColumnBridge.expression(bytes), gz))
 
-  def warcHttpStats(spark: SparkSession, bytes: Column, gz: Boolean): Column = {
-    register(spark)
-    call_function("graft_warc_http_stats", bytes,
-      org.apache.spark.sql.functions.lit(gz))
-  }
-
-  def warcHttpRecords(spark: SparkSession, bytes: Column, gz: Boolean): Column = {
-    register(spark)
-    call_function("graft_warc_http_records", bytes,
-      org.apache.spark.sql.functions.lit(gz))
-  }
+  def warcHttpRecords(bytes: Column, gz: Boolean): Column =
+    ColumnBridge.column(WarcHttpRecords(ColumnBridge.expression(bytes), gz))
 }

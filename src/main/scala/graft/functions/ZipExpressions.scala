@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Native ZIP archive codec (E270) — the other container data lakes
@@ -595,43 +595,15 @@ case class ZipMembers(child: Expression)
 
 object ZipNativeFunctions {
 
-  /** Register the zip codec functions (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
-      FunctionRegistration.ensure(spark, name, "graft.functions.ZipNativeFunctions", builder)
-    ensure("graft_zip_encode",
-      exprs => ZipEncode(exprs.head,
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Boolean],
-        exprs(3).eval().asInstanceOf[Boolean],
-        exprs(4).eval().asInstanceOf[Boolean],
-        if (exprs.length > 5)
-          exprs(5).eval().asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-            .toString
-        else "doc"))
-    ensure("graft_zip_decode", exprs => ZipDecode(exprs.head))
-    ensure("graft_zip_members", exprs => ZipMembers(exprs.head))
-  }
+  def zipMembers(bytes: Column): Column =
+    ColumnBridge.column(ZipMembers(ColumnBridge.expression(bytes)))
 
-  def zipMembers(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function("graft_zip_members", bytes)
-  }
+  def zipEncode(bytes: Column, memberBytes: Int, deflate: Boolean,
+      zip64: Boolean = false, descriptor: Boolean = false,
+      namePrefix: String = "doc"): Column =
+    ColumnBridge.column(ZipEncode(ColumnBridge.expression(bytes), memberBytes, deflate, zip64,
+      descriptor, namePrefix))
 
-  def zipEncode(spark: SparkSession, bytes: Column, memberBytes: Int,
-      deflate: Boolean, zip64: Boolean = false,
-      descriptor: Boolean = false, namePrefix: String = "doc"): Column = {
-    register(spark)
-    call_function("graft_zip_encode", bytes,
-      org.apache.spark.sql.functions.lit(memberBytes),
-      org.apache.spark.sql.functions.lit(deflate),
-      org.apache.spark.sql.functions.lit(zip64),
-      org.apache.spark.sql.functions.lit(descriptor),
-      org.apache.spark.sql.functions.lit(namePrefix))
-  }
-
-  def zipDecode(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function("graft_zip_decode", bytes)
-  }
+  def zipDecode(bytes: Column): Column =
+    ColumnBridge.column(ZipDecode(ColumnBridge.expression(bytes)))
 }

@@ -1,11 +1,15 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, HyperLogLogPlusPlus}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.graftshim.ColumnBridge
+
+import graft.ext.{Dedup, TextAnalysis}
+import graft.functions.{CharTrigramStats, DotProduct, RepetitionStats, WordNGrams, WordShingles}
 
 /** Catalyst optimizer rule: rewrite exact `count(DISTINCT x)` into an
   * HyperLogLog++ sketch when the aggregate's input is large enough that the
@@ -52,39 +56,50 @@ case class ApproxDistinctRewrite(spark: SparkSession) extends Rule[LogicalPlan] 
 }
 
 /** Session extensions entry point (`spark.sql.extensions=graft.plans
-  * .GraftExtensions`): injects the approx-distinct optimizer rule and the
-  * native `graft_dot` expression into SQL — the full custom-plan surface
-  * (brief's preference order (c): Rule + extension registration).
+  * .GraftExtensions`): injects the approx-distinct optimizer rule and
+  * graft's SQL functions, [[GraftExtensions.functions]] — the full
+  * custom-plan surface (brief's preference order (c): Rule + extension
+  * registration). This is the only place graft writes to a function registry.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(ApproxDistinctRewrite)
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[graft.functions.DotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => graft.functions.DotProduct(exprs(0), exprs(1))))
-    // text/dedup scalar surface: same Column trees as the DataFrame API
-    graft.functions.TextFunctions.all.foreach { case (name, builder) =>
+    GraftExtensions.functions.foreach { case (name, builder) =>
       ext.injectFunction((
         FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions.TextFunctions", name),
-        builder))
-    }
-    // native one-pass text expressions (hot-path twins of the HOF builds)
-    val natives: Seq[(String, Seq[Expression] => Expression)] = Seq(
-      "graft_repstats" ->
-        ((exprs: Seq[Expression]) => graft.functions.RepetitionStats(exprs.head)),
-      "graft_chartristats" ->
-        ((exprs: Seq[Expression]) => graft.functions.CharTrigramStats(exprs.head)),
-      "graft_ngrams" -> ((exprs: Seq[Expression]) =>
-        graft.functions.WordNGrams(exprs.head, exprs(1).eval().asInstanceOf[Int])),
-      "graft_shingles" -> ((exprs: Seq[Expression]) =>
-        graft.functions.WordShingles(exprs.head, exprs(1).eval().asInstanceOf[Int])))
-    natives.foreach { case (name, builder) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions.TextNativeFunctions", name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name),
         builder))
     }
   }
+}
+
+object GraftExtensions {
+
+  /** A Column composition as a FunctionRegistry builder. */
+  private def colFn(f: Seq[Column] => Column): Seq[Expression] => Expression =
+    exprs => ColumnBridge.expression(f(exprs.map(ColumnBridge.column)))
+
+  /** An integer literal argument, such as the n of `graft_ngrams(text, n)`. */
+  private def int(e: Expression): Int = e.eval().asInstanceOf[Int]
+
+  /** SQL name → builder for every graft function that SQL text calls. Each
+    * builder makes what the Scala API makes: the text/dedup scalars (§2.9)
+    * are the SAME Column trees — compositions of built-in codegen'd
+    * expressions, so SQL users get identical semantics and DuckDB-oracle
+    * results — and the native expressions are the nodes their
+    * `graft.functions` wrappers construct. Functions no SQL text calls
+    * (the media codecs, `langScores`) are reached through their wrappers only.
+    */
+  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("graft_token_count", colFn(cs => TextAnalysis.tokenCount(cs(0)))),
+    ("graft_bpe_count", colFn(cs => TextAnalysis.bpeTokenCount(cs(0)))),
+    ("graft_lang_id", colFn(cs => TextAnalysis.langId(cs(0)))),
+    ("graft_fingerprint", colFn(cs => TextAnalysis.fingerprint(cs(0)))),
+    ("graft_quality", colFn(cs => TextAnalysis.qualityScore(cs(0)))),
+    ("graft_hamming", colFn(cs => Dedup.hammingDist(cs(0), cs(1)))),
+    ("graft_dot", es => DotProduct(es(0), es(1))),
+    ("graft_repstats", es => RepetitionStats(es(0))),
+    ("graft_chartristats", es => CharTrigramStats(es(0))),
+    ("graft_ngrams", es => WordNGrams(es(0), int(es(1)))),
+    ("graft_shingles", es => WordShingles(es(0), int(es(1)))))
 }

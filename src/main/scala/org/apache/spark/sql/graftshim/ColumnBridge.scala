@@ -4,11 +4,11 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 
-/** Column ⇄ Expression boundary for registering Column-composed functions
-  * in the SQL FunctionRegistry. Spark 4 backs Column with ColumnNode and
-  * keeps the converters `private[sql]` — this shim re-exports just the two
-  * conversions (no other internals touched), the supported pattern for
-  * third-party function registration against the classic session.
+/** Column ⇄ Expression boundary: graft's Column wrappers build their native
+  * Catalyst expressions through it, and `GraftExtensions` turns
+  * Column-composed functions into SQL function builders. Spark 4 backs
+  * Column with ColumnNode and keeps the converters `private[sql]` — this
+  * shim re-exports just the two conversions (no other internals touched).
   *
   * `expression` converts EAGERLY (ColumnNodeToExpressionConverter) rather
   * than via ExpressionUtils' lazy ColumnNodeExpression wrapper: a

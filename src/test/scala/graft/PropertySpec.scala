@@ -121,7 +121,7 @@ class PropertySpec extends SparkSpec {
             i => array_join(slice(toks, i + 1, lit(n)), " ")))
       val rows = df.select(
         hof.as("hof"),
-        TextNativeFunctions.ngrams(spark, col("text"), n).as("native")).collect()
+        TextNativeFunctions.ngrams(col("text"), n).as("native")).collect()
       rows.foreach(r =>
         assert(r.getSeq[String](0) === r.getSeq[String](1), s"ngrams n=$n"))
     }
@@ -154,7 +154,7 @@ class PropertySpec extends SparkSpec {
       TextAnalysis.maxRunCount(uni).as("h_top"),
       size(tri).cast("long").as("h_tri"),
       size(array_distinct(tri)).cast("long").as("h_dis"),
-      TextNativeFunctions.repStats(spark, lower(col("text"))).as("native")).collect()
+      TextNativeFunctions.repStats(lower(col("text"))).as("native")).collect()
     rs.foreach { r =>
       val n = r.getStruct(4)
       assert(r.getLong(0) === n.getLong(0), "n_tokens")
@@ -180,7 +180,7 @@ class PropertySpec extends SparkSpec {
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     val natTri = df.select(col("id"),
-      TextNativeFunctions.charTrigramStats(spark, col("text")).as("t")).collect()
+      TextNativeFunctions.charTrigramStats(col("text")).as("t")).collect()
       .map { r =>
         val t = r.getStruct(1)
         r.getLong(0) -> ((t.getLong(0), t.getLong(1), t.getLong(2)))

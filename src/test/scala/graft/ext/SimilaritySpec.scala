@@ -439,6 +439,13 @@ class SimilaritySpec extends SparkSpec {
       var local: Either[String, (StructType, Seq[String])] = null
       val jobs = startedBy { local = run(Similarity.DriverMaxVectors) }.count(_._1 == "job")
       assert(local === run(-1), case_)
+      // a null vector is left unassigned, never taken as a centroid (mixed
+      // vector lengths still fail the Lloyd update, on both paths)
+      if (fault == "null vector") {
+        assert(local != Left(classOf[NullPointerException].getName), case_)
+        val ragged = rows.flatMap(_._2).map(_.length).distinct.size > 1
+        if (!ragged) assert(local.isRight, s"$local, $case_")
+      }
       // a clean corpus stays on the driver; every fault falls back
       if (local.isRight) assert((jobs <= 1) === (fault == "none"), s"$jobs jobs, $case_")
     }
@@ -554,7 +561,7 @@ class SimilaritySpec extends SparkSpec {
       Seq(Some(-0.7f), Some(0.6f)))
     val df = (vecs ++ vecs).zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "vec")
     df.select(col("id"), col("vec"),
-      sqrt(graft.functions.VectorFunctions.dotNative(spark, col("vec"), col("vec"))).as("nrm"))
+      sqrt(graft.functions.VectorFunctions.dotNative(col("vec"), col("vec"))).as("nrm"))
   }
 
   /** The Lloyd round trainCentroids ran before it became one shuffle-free
@@ -602,8 +609,7 @@ class SimilaritySpec extends SparkSpec {
     // and on the sf0.001 embeddings, the shape every IVF consumer trains on
     val emb = Tables.embeddings(spark, sf0001)
     val embPrep = emb.select(col("vec_id").as("id"), col("embedding").as("vec"),
-      sqrt(graft.functions.VectorFunctions.dotNative(
-        spark, col("embedding"), col("embedding"))).as("nrm"))
+      sqrt(graft.functions.VectorFunctions.dotNative(col("embedding"), col("embedding"))).as("nrm"))
     assert(Similarity.trainCentroids(embPrep, 8, 2) === groupByCentroids(embPrep, 8, 2)._1)
   }
 

@@ -430,7 +430,7 @@ class TextAnalysisSpec extends SparkSpec {
       "",
       null.asInstanceOf[String])
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-    val native = graft.functions.TextNativeFunctions.langScores(spark, col("text"))
+    val native = graft.functions.TextNativeFunctions.langScores(col("text"))
     val checks = TextAnalysis.langMarkers.zipWithIndex.map { case ((l, ms), i) =>
       (element_at(native, i + 1) <=> TextAnalysis.langScore(col("text"), ms)).as(s"eq_$l")
     }

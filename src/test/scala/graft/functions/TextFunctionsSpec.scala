@@ -1,9 +1,11 @@
 package graft.functions
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
-import graft.ext.TextAnalysis
+import graft.ext.{Dedup, TextAnalysis}
+import graft.plans.GraftExtensions
 
 /** §2.9 — the SQL scalar surface is the SAME expression tree as the
   * DataFrame API: results must be identical row-for-row, whichever face the
@@ -12,7 +14,6 @@ import graft.ext.TextAnalysis
 class TextFunctionsSpec extends SparkSpec {
 
   test("SQL scalars equal the DataFrame operators on real documents") {
-    TextFunctions.register(spark)
     val docs = Tables.documents(spark, sf0001)
     docs.createOrReplaceTempView("tf_docs")
     val viaSql = spark.sql(
@@ -35,7 +36,6 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("graft_hamming counts differing bits") {
-    TextFunctions.register(spark)
     val r = spark.sql(
       "SELECT graft_hamming(CAST(5 AS BIGINT), CAST(1 AS BIGINT)) AS h").collect().head
     assert(r.getAs[Number]("h").intValue === 1) // 0b101 vs 0b001
@@ -63,38 +63,77 @@ class TextFunctionsSpec extends SparkSpec {
     assert(ct.getLong(0) === 2L && ct.getLong(1) === 4L)
   }
 
-  test("native functions are registered once per session, not replaced on every use") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
+  test("every wrapper leaves the registry's graft_* names exactly the injected table") {
     val registry = spark.sessionState.functionRegistry
-    val names = Seq("graft_dot", "graft_repstats", "graft_ngrams", "graft_shingles",
-      "graft_chartristats", "graft_langscores")
-    // a registration makes a new ExpressionInfo, so an unchanged instance
-    // means the function was not registered again
-    def infos = names.map(n => registry.lookupFunction(FunctionIdentifier(n)))
-    TextNativeFunctions.register(spark) // graft_langscores is not injected by the extensions
-    val first = infos
-    assert(first.forall(_.isDefined))
-    VectorFunctions.dotNative(spark, col("a"), col("b"))
-    TextNativeFunctions.register(spark)
-    infos.zip(first).foreach { case (now, before) => assert(now.get eq before.get) }
+    def graftNames = registry.listFunction().map(_.funcName).filter(_.startsWith("graft_")).toSet
+    val injected = GraftExtensions.functions.map(_._1).toSet
+    assert(graftNames === injected)
+    val (b, t, v, l) = (col("b"), col("t"), col("v"), col("l"))
+    val wrappers = Seq(
+      AiffNativeFunctions.aiffEncode(b, 1), AiffNativeFunctions.aiffDecode(b),
+      AviNativeFunctions.aviMjpegEncode(b, 8, 64), AviNativeFunctions.aviAvEncode(b, 8, 64),
+      AviNativeFunctions.aviMjpegDecode(b), AviNativeFunctions.aviAvDecode(b),
+      BmpRleNativeFunctions.bmpRle8Encode(b, 4), BmpRleNativeFunctions.bmpRle8Decode(b),
+      BmpRleNativeFunctions.bmpRle4Encode(b, 4), BmpRleNativeFunctions.bmpRle4Decode(b),
+      FlacNativeFunctions.flacEncode(b), FlacNativeFunctions.flacDecode(b),
+      GifNativeFunctions.gifEncode(b, 4), GifNativeFunctions.gifDecode(b),
+      GifNativeFunctions.gifComposite(b),
+      IcoNativeFunctions.icoEncode(b, 4), IcoNativeFunctions.icoDecode(b),
+      JpegDctNativeFunctions.jpegYccEncode(b, 2, 1), JpegDctNativeFunctions.jpeg420Encode(b),
+      JpegDctNativeFunctions.jpegDctEncode(b, 8), JpegDctNativeFunctions.jpegProgEncode(b, 8),
+      JpegDctNativeFunctions.jpegMetaEncode(b, 8), JpegDctNativeFunctions.jpegDctDecode(b),
+      JpegNativeFunctions.jpegEncode(b, 8), JpegNativeFunctions.jpegDecode(b),
+      MediaNativeFunctions.ppmHeaderParse(b), MediaNativeFunctions.y4mHeaderParse(b),
+      MediaNativeFunctions.bmpDHashWalk(b, l, l, l, l, l),
+      MediaNativeFunctions.bmpDHash128Walk(b, l, l, l, l, l),
+      MediaNativeFunctions.y4mFrameWalk(b, l, l, l, l, l),
+      PngNativeFunctions.pngEncode(b, 4), PngNativeFunctions.pngDecode(b),
+      QoiNativeFunctions.qoiEncode(b, 4), QoiNativeFunctions.qoiDecode(b),
+      TarNativeFunctions.tarEncode(b, 64, gz = false), TarNativeFunctions.tarDecode(b, gz = false),
+      TarNativeFunctions.tarMembers(b, gz = false),
+      TextNativeFunctions.repStats(t), TextNativeFunctions.ngrams(t, 2),
+      TextNativeFunctions.charTrigramStats(t), TextNativeFunctions.langScores(t),
+      TextAnalysis.langId(t), Dedup.shingles(t),
+      TiffNativeFunctions.tiffEncode(b, 4, bigEndian = false, packBits = false),
+      TiffNativeFunctions.tiffDecode(b),
+      VectorFunctions.dotNative(v, v),
+      WarcNativeFunctions.warcEncode(b, 64, gz = false), WarcNativeFunctions.warcDecode(b, gz = false),
+      WarcNativeFunctions.warcHttpEncode(b, 64, gz = false),
+      WarcNativeFunctions.warcHttpStats(b, gz = false),
+      WarcNativeFunctions.warcHttpRecords(b, gz = false),
+      ZipNativeFunctions.zipEncode(b, 64, deflate = false), ZipNativeFunctions.zipDecode(b),
+      ZipNativeFunctions.zipMembers(b))
+    spark.range(1)
+      .select(lit(Array[Byte]()).as("b"), lit("a b c").as("t"),
+        array(lit(1f), lit(2f)).as("v"), col("id").as("l"))
+      .select(wrappers: _*)
+      .queryExecution.assertAnalyzed()
+    assert(graftNames === injected)
   }
 
-  test("media codec and text scalar functions are registered once per session") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val registry = spark.sessionState.functionRegistry
-    val registers: Seq[org.apache.spark.sql.SparkSession => Unit] = Seq(
-      PngNativeFunctions.register, GifNativeFunctions.register, JpegNativeFunctions.register,
-      AiffNativeFunctions.register, BmpRleNativeFunctions.register, MediaNativeFunctions.register,
-      ZipNativeFunctions.register, FlacNativeFunctions.register, TarNativeFunctions.register,
-      AviNativeFunctions.register, QoiNativeFunctions.register, WarcNativeFunctions.register,
-      TiffNativeFunctions.register, IcoNativeFunctions.register, JpegDctNativeFunctions.register,
-      TextFunctions.register)
-    registers.foreach(_(spark))
-    val names = registry.listFunction().map(_.funcName).filter(_.startsWith("graft_"))
-    def infos = names.map(n => registry.lookupFunction(FunctionIdentifier(n)).get)
-    val first = infos
-    assert(names.size >= 46 + TextFunctions.all.size)
-    registers.foreach(_(spark))
-    infos.zip(first).foreach { case (now, before) => assert(now eq before) }
+  test("each SQL function builds the same plan as the Scala API it names") {
+    val df = spark.range(4).select(
+      concat(lit("a b a b "), col("id").cast("string")).as("text"),
+      array(col("id").cast("float"), lit(1f)).as("vec"),
+      col("id").as("h"))
+    val t = col("text")
+    val cases: Seq[(String, Column)] = Seq(
+      "graft_token_count(text)" -> TextAnalysis.tokenCount(t),
+      "graft_bpe_count(text)" -> TextAnalysis.bpeTokenCount(t),
+      "graft_lang_id(text)" -> TextAnalysis.langId(t),
+      "graft_fingerprint(text)" -> TextAnalysis.fingerprint(t),
+      "graft_quality(text)" -> TextAnalysis.qualityScore(t),
+      "graft_hamming(h, h)" -> Dedup.hammingDist(col("h"), col("h")),
+      "graft_dot(vec, vec)" -> VectorFunctions.dotNative(col("vec"), col("vec")),
+      "graft_repstats(text)" -> TextNativeFunctions.repStats(t),
+      "graft_chartristats(text)" -> TextNativeFunctions.charTrigramStats(t),
+      "graft_ngrams(text, 2)" -> TextNativeFunctions.ngrams(t, 2),
+      "graft_shingles(text, 3)" -> Dedup.shingles(t, 3))
+    assert(cases.map(_._1.takeWhile(_ != '(')).toSet ===
+      GraftExtensions.functions.map(_._1).toSet)
+    def plan(d: DataFrame) = d.queryExecution.optimizedPlan.canonicalized
+    cases.foreach { case (sql, api) =>
+      assert(plan(df.selectExpr(s"$sql AS x")) === plan(df.select(api.as("x"))), sql)
+    }
   }
 }

@@ -68,7 +68,7 @@ class ScalePathSpec extends SparkSpec {
         org.apache.spark.sql.functions.struct(
           lit(t).as("tbl"),
           graft.ext.Similarity.hyperplaneSignature(
-            spark, col("embedding"), 8, 2, seed = t * 1000).as("bucket"))
+            col("embedding"), 8, 2, seed = t * 1000).as("bucket"))
       }
       val bucketed = skewed(n)
         .select(col("vec_id").as("id"), explode(array(sigs: _*)).as("s"))
