@@ -4,13 +4,16 @@ import org.apache.spark.sql.SparkSession
 /** Dev harness: dump the formatted physical plan of MANY SparkEntry queries
   * to files in one JVM (RunOne's `plan` mode costs a session per query).
   * Usage:
-  *   runMain graft.PlanDump <name[,name...]> [sfDir] [outDir] [suffix]
-  * writes <outDir>/<name>_<suffix>.txt for each query. Plans only — nothing
-  * executes.
+  *   runMain graft.PlanDump <name[,name...] | all> [sfDir] [outDir] [suffix]
+  * writes <outDir>/<name>_<suffix>.txt for each query; `all` names every
+  * query in [[SparkEntry.queries]]. Plans only — nothing executes.
+  * `tools/plandiff.py` compares two such directories.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val names = args(0).split(",").toSeq
+    val names =
+      if (args(0) == "all") SparkEntry.queries.keys.toSeq.sorted
+      else args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 2) args(2) else "plans/r15"
     val suffix = if (args.length > 3) args(3) else "before"

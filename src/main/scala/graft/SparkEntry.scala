@@ -817,7 +817,7 @@ object SparkEntry {
     // cross-multiplied drift numerator — the promote-or-rollback gate.
     "q95_distribution_drift" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
-      val b = pmod(graft.ext.Dedup.stableHash(col("doc_id").cast("string"), 0), lit(100L))
+      val b = pmod(graft.ext.Dedup.stableHash(col("doc_id"), 0), lit(100L))
       graft.ext.Drift.distributionDrift(
         docs.filter(b < 80), docs.filter(b >= 20), "lang")
     },
@@ -827,7 +827,7 @@ object SparkEntry {
     "q96_snapshot_diff" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
         .withColumn("b",
-          pmod(graft.ext.Dedup.stableHash(col("doc_id").cast("string"), 0), lit(100L)))
+          pmod(graft.ext.Dedup.stableHash(col("doc_id"), 0), lit(100L)))
       val oldSnap = docs.filter(col("b") < 80).select("doc_id", "text", "lang")
       val newSnap = docs.filter(col("b") >= 20)
         .select(col("doc_id"),
@@ -968,7 +968,7 @@ object SparkEntry {
     // numerators, bucket-keyed join, snapshots never joined row-to-row.
     "q122_numeric_drift" -> { (s, dir) =>
       val orders = Tables.orders(s, dir)
-      val b = pmod(graft.ext.Dedup.stableHash(col("o_orderkey").cast("string"), 0), lit(100L))
+      val b = pmod(graft.ext.Dedup.stableHash(col("o_orderkey"), 0), lit(100L))
       graft.ext.Drift.numericDrift(
         orders.filter(b < 80), orders.filter(b >= 20),
         "o_totalprice", lo = 0.0, hi = 500000.0, nBuckets = 50)
@@ -1064,7 +1064,7 @@ object SparkEntry {
     // key count, worst-drifting key — the promote/rollback gate value.
     "q107_drift_summary" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
-      val b = pmod(graft.ext.Dedup.stableHash(col("doc_id").cast("string"), 0), lit(100L))
+      val b = pmod(graft.ext.Dedup.stableHash(col("doc_id"), 0), lit(100L))
       graft.ext.Drift.driftSummary(
         graft.ext.Drift.distributionDrift(
           docs.filter(b < 80), docs.filter(b >= 20), "lang"))
@@ -1192,8 +1192,7 @@ object SparkEntry {
     // against brute force in FuzzyJoinSpec.
     "q142_fuzzy_linkage" -> { (s, dir) =>
       val part = Tables.part(s, dir)
-      val b = pmod(
-        graft.ext.Dedup.stableHash(col("p_partkey").cast("string"), 11), lit(100L))
+      val b = pmod(graft.ext.Dedup.stableHash(col("p_partkey"), 11), lit(100L))
       graft.ext.FuzzyJoin.crossPairs(
         part.filter(b < 50), part.filter(b >= 50), "p_name", "p_name", maxDist = 2)
     },
@@ -1422,8 +1421,8 @@ object SparkEntry {
     "q169_cdc_apply" -> { (s, dir) =>
       val log = Tables.events(s, dir).select(col("user_id"),
         graft.streaming.Sessions.nsToUs(col("ts")).as("ts_us"), col("event_id"),
-        when(pmod(graft.ext.Dedup.stableHash(col("event_id").cast("string"), 3),
-          lit(10L)) === 0L, "D").otherwise("U").as("op"),
+        when(pmod(graft.ext.Dedup.stableHash(col("event_id"), 3), lit(10L)) === 0L, "D")
+          .otherwise("U").as("op"),
         col("value"))
       graft.ops.Cdc.latestSnapshot(
         log, "user_id", "ts_us", "event_id", "op", Seq("value"))

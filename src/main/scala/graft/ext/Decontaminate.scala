@@ -29,10 +29,10 @@ object Decontaminate {
     * sees zero grams; a null gh matches nothing in the benchmark join).
     */
   private def gramRows(df: DataFrame, idCol: String, textCol: String,
-      n: Int, seed: Int, portable: Boolean): DataFrame =
+      n: Int, seed: Int): DataFrame =
     df.select(col(idCol), explode_outer(Dedup.shingles(col(textCol), n)).as("__g"))
       .select(col(idCol),
-        when(col("__g").isNotNull, Dedup.stableHash(col("__g"), seed, portable))
+        when(col("__g").isNotNull, Dedup.stableHash(col("__g"), seed))
           .as("gh"))
 
   /** One row per candidate document: n_grams (distinct), n_contaminated
@@ -51,9 +51,8 @@ object Decontaminate {
       textCol: String = "text",
       n: Int = 3,
       threshold: Double = 0.2,
-      seed: Int = 7,
-      portable: Boolean = true): DataFrame = {
-    val bench = gramRows(benchmark, idCol, textCol, n, seed, portable)
+      seed: Int = 7): DataFrame = {
+    val bench = gramRows(benchmark, idCol, textCol, n, seed)
       .select(col("gh")).distinct()
       .withColumn("__hit", lit(1))
     // the corpus gram pass (shingle + explode + hash per doc) is the
@@ -61,7 +60,7 @@ object Decontaminate {
     // pruned candidate rows first (structural no-op at scale)
     val spreadCand = Spread.byKeyPinned(
       candidates.select(col(idCol), col(textCol)), col(idCol))
-    val perDoc = gramRows(spreadCand, idCol, textCol, n, seed, portable)
+    val perDoc = gramRows(spreadCand, idCol, textCol, n, seed)
       .join(broadcast(bench), Seq("gh"), "left")
       .groupBy(col(idCol))
       .agg(count(col("gh")).as("n_grams"), // null gh = gram-less doc kept at 0
@@ -129,12 +128,11 @@ object Decontaminate {
       idCol: String = "doc_id",
       textCol: String = "text",
       n: Int = 3,
-      seed: Int = 7,
-      portable: Boolean = true): DataFrame = {
+      seed: Int = 7): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val bench = gramRows(benchmark, idCol, textCol, n, seed, portable)
+    val bench = gramRows(benchmark, idCol, textCol, n, seed)
       .select(col("gh")).distinct().withColumn("__hit", lit(1))
-    val hits = Dedup.posGramHashes(candidates, idCol, textCol, n, seed, portable)
+    val hits = Dedup.posGramHashes(candidates, idCol, textCol, n, seed)
       .join(broadcast(bench), Seq("gh"))
       .select(col(idCol), col("pos"))
     val w = Window.partitionBy(col(idCol)).orderBy(col("pos"))
@@ -181,11 +179,10 @@ object Decontaminate {
       textCol: String = "text",
       n: Int = 3,
       seed: Int = 7,
-      portable: Boolean = true,
       mask: String = "<masked>"): DataFrame = {
-    val bench = gramRows(benchmark, idCol, textCol, n, seed, portable)
+    val bench = gramRows(benchmark, idCol, textCol, n, seed)
       .select(col("gh")).distinct().withColumn("__hit", lit(1))
-    val covered = Dedup.posGramHashes(candidates, idCol, textCol, n, seed, portable)
+    val covered = Dedup.posGramHashes(candidates, idCol, textCol, n, seed)
       .join(broadcast(bench), Seq("gh"))
       .select(col(idCol), explode(sequence(col("pos"), col("pos") + lit(n - 1)))
         .as("t"))
@@ -228,11 +225,10 @@ object Decontaminate {
       minJaccard: Double = 0.5,
       numHashes: Int = 16,
       rowsPerBand: Int = 4,
-      shingleK: Int = 3,
-      portable: Boolean = true): DataFrame = {
+      shingleK: Int = 3): DataFrame = {
     def buckets(df: DataFrame, as: String) = Dedup
       .lshBuckets(
-        Dedup.minhashSignatures(df, textCol, idCol, numHashes, shingleK, portable),
+        Dedup.minhashSignatures(df, textCol, idCol, numHashes, shingleK),
         idCol, numHashes, rowsPerBand)
       .select(col("band_idx"), col("band_hash"), col(idCol).as(as))
     def shingleArrays(df: DataFrame, as: String, sh: String) = df.select(

@@ -19,12 +19,11 @@ import scala.jdk.CollectionConverters._
   *     brute-forces WITHIN an LSH bucket (shingle→minhash→band→bucket-join,
   *     the standard shuffle-light near-dup layout);
   *   - all hashing is md5-prefix based, so signatures are reproducible in
-  *     any engine (portable oracle), at ~2-3× xxhash64's per-row cost: on
+  *     any engine (portable oracle), at ~2-3× xxHash64's per-row cost: on
   *     one core of a 4-vCPU Xeon host, hashing 2M short strings from a
   *     cached frame took ~0.26-0.33 µs per row with [[stableHash]] and
-  *     ~0.09-0.13 µs with xxhash64, scan included (the md5 → hex → conv
-  *     chain it replaced took ~1.0-1.25 µs). A `portable = false` switch
-  *     drops to xxhash64 for production runs.
+  *     ~0.09-0.13 µs with xxHash64, scan included (the md5 → hex → conv
+  *     chain it replaced took ~1.0-1.25 µs).
   */
 object Dedup {
 
@@ -33,10 +32,8 @@ object Dedup {
     * [[graft.functions.StableHash]] per value. A non-string `c` is cast to
     * string first, as concat_ws casts it (a no-op on strings).
     */
-  def stableHash(c: Column, seed: Int, portable: Boolean = true): Column =
-    if (portable)
-      ColumnBridge.column(StableHash(ColumnBridge.expression(c.cast("string")), seed))
-    else xxhash64(c, lit(seed))
+  def stableHash(c: Column, seed: Int): Column =
+    ColumnBridge.column(StableHash(ColumnBridge.expression(c.cast("string")), seed))
 
   /** Exact dedup: group by content digest, keep the lowest id
     * (hash-groupBy; one shuffle of (digest, id) pairs only).
@@ -90,8 +87,7 @@ object Dedup {
       docs: DataFrame,
       textCol: String = "text",
       idCol: String = "doc_id",
-      segWords: Int = 20,
-      portable: Boolean = true): DataFrame = {
+      segWords: Int = 20): DataFrame = {
     val toks = split(col(textCol), " ")
     val nseg = floor((size(toks) + lit(segWords - 1)) / lit(segWords)).cast("int")
     val segs = docs.select(
@@ -99,7 +95,7 @@ object Dedup {
       posexplode(transform(sequence(lit(0), nseg - 1),
         i => array_join(slice(toks, i * segWords + 1, lit(segWords)), " ")))
         .as(Seq("seg_idx", "seg")))
-      .select(col(idCol), col("seg_idx"), stableHash(col("seg"), 11, portable).as("gh"))
+      .select(col(idCol), col("seg_idx"), stableHash(col("seg"), 11).as("gh"))
     val keepers = segs
       .groupBy("gh")
       .agg(min(struct(col(idCol), col("seg_idx"))).as("first"))
@@ -132,8 +128,7 @@ object Dedup {
       docs: DataFrame,
       textCol: String = "text",
       idCol: String = "doc_id",
-      segWords: Int = 20,
-      portable: Boolean = true): DataFrame = {
+      segWords: Int = 20): DataFrame = {
     val toks = split(col(textCol), " ")
     val nseg = floor((size(toks) + lit(segWords - 1)) / lit(segWords)).cast("int")
     val segs = docs.select(
@@ -141,7 +136,7 @@ object Dedup {
       posexplode(transform(sequence(lit(0), nseg - 1),
         i => array_join(slice(toks, i * segWords + 1, lit(segWords)), " ")))
         .as(Seq("seg_idx", "seg")))
-      .withColumn("gh", stableHash(col("seg"), 11, portable))
+      .withColumn("gh", stableHash(col("seg"), 11))
     val keepers = segs
       .groupBy("gh")
       .agg(min(struct(col(idCol), col("seg_idx"))).as("first"))
@@ -185,11 +180,10 @@ object Dedup {
       textCol: String = "text",
       idCol: String = "doc_id",
       numHashes: Int = 16,
-      shingleK: Int = 3,
-      portable: Boolean = true): DataFrame = {
+      shingleK: Int = 3): DataFrame = {
     val sh = docs
       .select(col(idCol), explode(shingles(col(textCol), shingleK)).as("shingle"))
-      .select(col(idCol), pmod(stableHash(col("shingle"), 0, portable), lit(HashP)).as("hb"))
+      .select(col(idCol), pmod(stableHash(col("shingle"), 0), lit(HashP)).as("hb"))
     val mins = (0 until numHashes).map(i =>
       min(pmod(col("hb") * hashCoeffA(i) + hashCoeffB(i), lit(HashP))).as(s"mh$i"))
     sh.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
@@ -219,10 +213,9 @@ object Dedup {
       idCol: String = "doc_id",
       numHashes: Int = 16,
       rowsPerBand: Int = 4,
-      shingleK: Int = 3,
-      portable: Boolean = true): DataFrame = {
+      shingleK: Int = 3): DataFrame = {
     val buckets =
-      lshBuckets(minhashSignatures(docs, textCol, idCol, numHashes, shingleK, portable),
+      lshBuckets(minhashSignatures(docs, textCol, idCol, numHashes, shingleK),
         idCol, numHashes, rowsPerBand)
     val a = buckets.select(col("band_idx"), col("band_hash"), col(idCol).as("id_a"))
     val b = buckets.select(col("band_idx"), col("band_hash"), col(idCol).as("id_b"))
@@ -628,8 +621,7 @@ object Dedup {
   def simhash(
       docs: DataFrame,
       textCol: String = "text",
-      idCol: String = "doc_id",
-      portable: Boolean = true): DataFrame = {
+      idCol: String = "doc_id"): DataFrame = {
     // the tokenize + 60-bit-sum pass is the corpus-wide work and otherwise
     // rides the scan's few local splits serially (§2.5; no-op at scale)
     val toks = Spread.byKeyCapped(docs.select(col(idCol), col(textCol)),
@@ -637,7 +629,7 @@ object Dedup {
       .select(
         col(idCol),
         explode(array_distinct(split(col(textCol), " "))).as("tok"))
-    val h = stableHash(col("tok"), 0, portable)
+    val h = stableHash(col("tok"), 0)
     val bitSums = (0 until 60).map { b =>
       sum(when(shiftright(h, b).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"s$b")
     }
@@ -684,11 +676,7 @@ object Dedup {
     // exchange via ReuseExchange) and cannot be coalesced; at scale the
     // guard never fires (probe on the input docs frame — bands itself
     // hangs off the signature aggregation, not a file scan).
-    val bands =
-      if (Spread.localTiny(docs))
-        bands0.repartition(docs.sparkSession.sparkContext.defaultParallelism,
-          col("band_idx"), col("band_val"))
-      else bands0
+    val bands = Spread.byKeyPinned(docs, bands0, col("band_idx"), col("band_val"))
     // Hamming-filter BEFORE the pair distinct (§2.3 — filter before the
     // exchange): hamming is a function of the pair's signatures, so the
     // result set is identical, but the xor+popcount kills the ~all-false
@@ -770,13 +758,13 @@ object Dedup {
     */
   private[ext] def posGramHashes(
       docs: DataFrame, idCol: String, textCol: String,
-      k: Int, seed: Int, portable: Boolean): DataFrame =
+      k: Int, seed: Int): DataFrame =
     docs
       .select(col(idCol), posexplode(
           graft.functions.TextNativeFunctions.ngrams(col(textCol), k))
         .as(Seq("__p0", "__g")))
       .select(col(idCol), (col("__p0") + 1).as("pos"),
-        stableHash(col("__g"), seed, portable).as("gh"))
+        stableHash(col("__g"), seed).as("gh"))
 
   /** Winnowed document fingerprints (E210) — the MOSS fingerprint-selection
     * scheme (Schleimer–Wilkerson–Aiken): over each window of `w`
@@ -804,7 +792,7 @@ object Dedup {
     */
   private def winnowedFpRows(
       docs: DataFrame, textCol: String, idCol: String,
-      k: Int, w: Int, seed: Int, portable: Boolean): DataFrame = {
+      k: Int, w: Int, seed: Int): DataFrame = {
     require(k >= 1 && w >= 1, s"need k >= 1 and w >= 1, got $k/$w")
     import org.apache.spark.sql.expressions.Window
     // n_grams is the gram-array size carried through the posexplode — the
@@ -822,7 +810,7 @@ object Dedup {
       .select(col(idCol), size(col("__gs")).cast("long").as("n_grams"),
         posexplode(col("__gs")).as(Seq("__p0", "__g")))
       .select(col(idCol), col("n_grams"), (col("__p0") + 1).as("pos"),
-        stableHash(col("__g"), seed, portable).as("gh"))
+        stableHash(col("__g"), seed).as("gh"))
     val tMax = greatest(col("n_grams") - lit(w - 1), lit(1))
     // Window t covers gram positions [t, t+w-1]: the selected fingerprint
     // (min gh, ties -> rightmost pos) at window t is exactly the sliding
@@ -851,13 +839,12 @@ object Dedup {
       idCol: String = "doc_id",
       k: Int = 4,
       w: Int = 4,
-      seed: Int = 11,
-      portable: Boolean = true): DataFrame = {
+      seed: Int = 11): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // sharing fan-out via a window over gh, NOT a groupBy+join-back — the
     // latter re-evaluates the whole explode pipeline once per branch
     // (the double-branch recomputation trap)
-    val fp = winnowedFpRows(docs, textCol, idCol, k, w, seed, portable)
+    val fp = winnowedFpRows(docs, textCol, idCol, k, w, seed)
       .withColumn("n_docs",
         size(collect_set(col(idCol)).over(Window.partitionBy(col("gh")))).cast("long"))
     fp.groupBy(col(idCol))
@@ -892,12 +879,11 @@ object Dedup {
       idCol: String = "doc_id",
       k: Int = 4,
       w: Int = 4,
-      seed: Int = 11,
-      portable: Boolean = true): DataFrame = {
+      seed: Int = 11): DataFrame = {
     // pinned: three consumers (totals + both join sides) would otherwise
     // re-run the whole winnow pipeline per branch; the distinct
     // (source, fingerprint) projection is vocabulary-scale, not corpus-scale
-    val srcFp = winnowedFpRows(docs, textCol, idCol, k, w, seed, portable)
+    val srcFp = winnowedFpRows(docs, textCol, idCol, k, w, seed)
       .join(docs.select(col(idCol), col(sourceCol).as("__src")), Seq(idCol))
       .select(col("__src"), col("gh"))
       .distinct()
@@ -947,8 +933,8 @@ object Dedup {
     */
   private def winnowPairMatches(
       docs: DataFrame, textCol: String, idCol: String,
-      k: Int, w: Int, seed: Int, portable: Boolean): DataFrame = {
-    val fp = winnowedFpRows(docs, textCol, idCol, k, w, seed, portable)
+      k: Int, w: Int, seed: Int): DataFrame = {
+    val fp = winnowedFpRows(docs, textCol, idCol, k, w, seed)
       .select(col(idCol).as("__id"), col("gh"))
       .distinct()
       .localCheckpoint()
@@ -970,7 +956,7 @@ object Dedup {
     val grams = posGramHashes(
       Spread.byKeyCapped(
         docs.join(ids, Seq(idCol), "left_semi"), col(idCol)),
-      idCol, textCol, k, seed, portable)
+      idCol, textCol, k, seed)
       .localCheckpoint()
     pairs
       .join(grams.select(col(idCol).as("id_a"), col("pos").as("pa"), col("gh")),
@@ -987,10 +973,9 @@ object Dedup {
       idCol: String = "doc_id",
       k: Int = 4,
       w: Int = 4,
-      seed: Int = 11,
-      portable: Boolean = true): DataFrame = {
+      seed: Int = 11): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val m = winnowPairMatches(docs, textCol, idCol, k, w, seed, portable)
+    val m = winnowPairMatches(docs, textCol, idCol, k, w, seed)
     val wd = Window.partitionBy(col("id_a"), col("id_b"), col("diag"))
       .orderBy(col("pa"))
     val runs = m
@@ -1040,9 +1025,8 @@ object Dedup {
       idCol: String = "doc_id",
       k: Int = 4,
       w: Int = 4,
-      seed: Int = 11,
-      portable: Boolean = true): DataFrame = {
-    val m = winnowPairMatches(docs, textCol, idCol, k, w, seed, portable)
+      seed: Int = 11): DataFrame = {
+    val m = winnowPairMatches(docs, textCol, idCol, k, w, seed)
     val covered = m
       .select(col("id_a"), col("id_b"),
         explode(array(
@@ -1384,8 +1368,8 @@ object Dedup {
       "fractions must be percentages in (0, 100]")
     val gated = pairs.select(
         col("id_a"), col("id_b"),
-        pmod(stableHash(col("id_a").cast("string"), seed), lit(100L)).as("ha"),
-        pmod(stableHash(col("id_b").cast("string"), seed), lit(100L)).as("hb"))
+        pmod(stableHash(col("id_a"), seed), lit(100L)).as("ha"),
+        pmod(stableHash(col("id_b"), seed), lit(100L)).as("hb"))
       .select(explode(typedlit(fractions.map(_.toLong))).as("pct"),
         col("id_a"), col("id_b"), col("ha"), col("hb"))
       .filter(col("ha") < col("pct") && col("hb") < col("pct"))
@@ -1444,7 +1428,7 @@ object Dedup {
     require(fractions.nonEmpty && fractions.forall(p => p > 0 && p <= 100),
       "fractions must be percentages in (0, 100]")
     val sub = docs.filter(
-      pmod(stableHash(col(idCol).cast("string"), seed), lit(100L)) < fractions.max)
+      pmod(stableHash(col(idCol), seed), lit(100L)) < fractions.max)
     val pairs = FuzzyJoin
       .setSimJoin(sub, textCol, idCol, tNum, tDen, shingleK)
       .select("id_a", "id_b")

@@ -346,8 +346,7 @@ object Drift {
       df: DataFrame, idCol: String, cols: Seq[String],
       seed: Int = 3): DataFrame = {
     require(cols.nonEmpty, "need at least one column")
-    val half = pmod(graft.ext.Dedup.stableHash(col(idCol).cast("string"), seed),
-      lit(2L))
+    val half = pmod(graft.ext.Dedup.stableHash(col(idCol), seed), lit(2L))
     val aggs = cols.map(c => countDistinct(struct(col(c))).as(s"__d_$c")) :+
       count(lit(1)).as("__n")
     val halves = df.withColumn("__h", half)

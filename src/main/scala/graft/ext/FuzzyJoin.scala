@@ -229,11 +229,7 @@ object FuzzyJoin {
     // (same exchange count — it replaces the planner's own exchange) and
     // cannot be coalesced. At scale the guard never fires and AQE's
     // byte-based sizing stands.
-    val rankedIn =
-      if (Spread.localTiny(docs))
-        toks.join(dfreq, Seq("tok")).repartition(
-          docs.sparkSession.sparkContext.defaultParallelism, col("id"))
-      else toks.join(dfreq, Seq("tok"))
+    val rankedIn = Spread.byKeyPinned(docs, toks.join(dfreq, Seq("tok")), col("id"))
     val ranked = rankedIn
       .withColumn("pos", row_number().over(
         Window.partitionBy(col("id")).orderBy(col("df").asc, col("tok").asc)))

@@ -59,7 +59,7 @@ object Sampling {
     val counts = nonNull.groupBy(stratumCol).agg(count(lit(1)).as("__stratum_n"))
     nonNull.join(broadcast(counts), Seq(stratumCol))
       .filter(
-        pmod(Dedup.stableHash(col(idCol).cast("string"), seed), lit(1000000L)).cast("double") <
+        pmod(Dedup.stableHash(col(idCol), seed), lit(1000000L)).cast("double") <
           least(lit(1.0), lit(targetPerStratum.toDouble) / col("__stratum_n")) * 1000000.0)
       .drop("__stratum_n")
   }
@@ -79,7 +79,7 @@ object Sampling {
   def qualityThin(
       df: DataFrame, scoreCol: String, idCol: String, seed: Int = 0): DataFrame =
     df.filter(
-      pmod(Dedup.stableHash(col(idCol).cast("string"), seed), lit(1000000L)) <
+      pmod(Dedup.stableHash(col(idCol), seed), lit(1000000L)) <
         floor(col(scoreCol).cast("double") * 1000000.0).cast("long"))
 
   /** Deterministic train/val/test assignment: `bucket = hash(id) mod 100`,
@@ -92,7 +92,7 @@ object Sampling {
       df: DataFrame, idCol: String,
       trainPct: Int = 80, valPct: Int = 10, seed: Int = 0): DataFrame = {
     require(trainPct + valPct < 100, "train+val must leave room for test")
-    val bucket = pmod(Dedup.stableHash(col(idCol).cast("string"), seed), lit(100L))
+    val bucket = pmod(Dedup.stableHash(col(idCol), seed), lit(100L))
     df.withColumn("split",
       when(bucket < trainPct, "train")
         .when(bucket < trainPct + valPct, "val")
@@ -209,7 +209,7 @@ object Sampling {
     // implicit)
     df.join(broadcast(counts), Seq(sourceCol))
       .filter(
-        pmod(Dedup.stableHash(col(idCol).cast("string"), seed), lit(1000000L))
+        pmod(Dedup.stableHash(col(idCol), seed), lit(1000000L))
           .cast("decimal(38,0)") * (lit(weightSum) * col("__src_n")) <
           lit(budget).cast("decimal(38,0)") * wcol * 1000000L)
       .drop("__src_n")
@@ -245,7 +245,7 @@ object Sampling {
       .withColumn("cluster_id", coalesce(col("canonical_id"), col(idCol)))
       .drop("canonical_id")
     val bucket =
-      pmod(Dedup.stableHash(col("cluster_id").cast("string"), seed), lit(100L))
+      pmod(Dedup.stableHash(col("cluster_id"), seed), lit(100L))
     withCluster.withColumn("split",
       when(bucket < trainPct, "train")
         .when(bucket < trainPct + valPct, "val")
@@ -340,7 +340,7 @@ object Sampling {
     require(m > 0, s"sample size must be positive, got $m")
     val base = df.select(col(idCol), weight.cast("long").as("w"))
       .filter(col("w") > 0)
-      .withColumn("__h", Dedup.stableHash(col(idCol).cast("string"), seed))
+      .withColumn("__h", Dedup.stableHash(col(idCol), seed))
       .withColumn("__b", ExactMath.floorDiv(col("__h"), lit(1L << 54)))
     val localW = Window.partitionBy(col("__b"))
       .orderBy(col("__h").asc, col(idCol).asc)
@@ -414,7 +414,7 @@ object Sampling {
         greatest(col("id_a"), col("id_b")).as("id_b"))
       .withColumn("label", lit(1))
     val order = Window.partitionBy(col(groupCol))
-      .orderBy(Dedup.stableHash(col(idCol).cast("string"), seed).asc, col(idCol).asc)
+      .orderBy(Dedup.stableHash(col(idCol), seed).asc, col(idCol).asc)
     val neg = docs.select(col(idCol), col(groupCol))
       .withColumn("__rn", row_number().over(order))
       .withColumn("__mate", lead(col(idCol), 1).over(order))
@@ -446,7 +446,7 @@ object Sampling {
     df.select(col(idCol), g)
       .withColumn("__rn", row_number().over(
         Window.partitionBy(g).orderBy(
-          Dedup.stableHash(col(idCol).cast("string"), seed).asc, col(idCol).asc)))
+          Dedup.stableHash(col(idCol), seed).asc, col(idCol).asc)))
       .withColumn("__ng", count(lit(1)).over(Window.partitionBy(g)))
       .select(col(idCol), g,
         when(col("__rn") * 100 <= col("__ng") * trainPct, "train")
@@ -507,8 +507,7 @@ object Sampling {
     require(buckets > 1, "need at least 2 buckets")
     val dec = "decimal(38,0)"
     val b = df.select(
-        pmod(graft.ext.Dedup.stableHash(col(idCol).cast("string"), seed),
-          lit(buckets.toLong)).as("bucket"))
+        pmod(graft.ext.Dedup.stableHash(col(idCol), seed), lit(buckets.toLong)).as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("o"))
     val tot = b.agg(sum(col("o")).cast("long").as("n"),
       count(lit(1)).cast("long").as("n_buckets_used"),
@@ -553,8 +552,7 @@ object Sampling {
     val spark = docs.sparkSession
     import spark.implicits._
     val perShard = docs.select(
-        pmod(graft.ext.Dedup.stableHash(col(idCol).cast("string"), seed),
-          lit(nShards.toLong)).as("shard"),
+        pmod(graft.ext.Dedup.stableHash(col(idCol), seed), lit(nShards.toLong)).as("shard"),
         tokensCol.as("__tok"))
       .groupBy("shard")
       .agg(count(lit(1)).as("n_docs"), sum(col("__tok")).cast("long").as("n_tokens"))

@@ -231,7 +231,7 @@ object Similarity {
     require(bins > 0 && bins % 2 == 0, "bins must be positive and even")
     val spark = corpus.sparkSession
     val sub = corpus.filter(
-      pmod(Dedup.stableHash(col(idCol).cast("string"), seed), lit(100L)) < pct)
+      pmod(Dedup.stableHash(col(idCol), seed), lit(100L)) < pct)
     // Zero-norm vectors are EXCLUDED explicitly: their cosine is NaN, and
     // floor(NaN) would bin to null — pairs silently vanishing from every
     // bin, breaking the "bins partition the subsample pair square"
@@ -470,7 +470,8 @@ object Similarity {
     cents.zipWithIndex.map { case ((prev, prevNrm), c) =>
       if (counts(c).isEmpty) (prev, prevNrm) // empty cell: keep previous centroid
       else {
-        val next = prev.toArray.clone()
+        // a vector longer than the centroid grows it to the longest counted position
+        val next = java.util.Arrays.copyOf(prev.toArray, math.max(prev.length, counts(c).length))
         counts(c).indices.foreach { pos =>
           next(pos) = sums(c)(pos).toDouble / counts(c)(pos) / 1048576.0
         }
@@ -522,14 +523,15 @@ object Similarity {
       x._2.indices.map(c => add(x._2(c), y._2(c))).toArray)
   }
 
-  /** Deterministic quantizer init: the nlist non-null corpus vectors with
-    * the smallest md5(id), as (centroid, norm) driver constants. A null
-    * vector is never a centroid; every later step leaves it unassigned.
+  /** Deterministic quantizer init: the nlist corpus vectors of positive
+    * norm with the smallest md5(id), as (centroid, norm) driver constants.
+    * A null or zero vector is never a centroid; every later step leaves it
+    * unassigned.
     */
   private[ext] def sampleCentroids(
       prep: DataFrame, nlist: Int): IndexedSeq[(IndexedSeq[Double], Double)] =
     prep
-      .filter(col("vec").isNotNull)
+      .filter(col("nrm") > 0)
       .withColumn("ck", initKey(col("id")))
       .orderBy("ck").limit(nlist)
       .select("vec", "nrm").collect()
@@ -553,14 +555,17 @@ object Similarity {
   }
 
   /** Cosine of every row's vec against each centroid, as one array column of
-    * native dots vs literal weight arrays (map-side only).
+    * native dots vs literal weight arrays (map-side only). A zero norm on
+    * either side scores null, as a null vector does: the quotient would
+    * otherwise raise DIVIDE_BY_ZERO under ANSI mode, and a null score never
+    * wins the argmax, so a zero vector stays unassigned.
     */
   private[ext] def withCellScores(
-      prep: DataFrame, centroids: IndexedSeq[(IndexedSeq[Double], Double)]): DataFrame = {
+      prep: DataFrame, centroids: Seq[(IndexedSeq[Double], Double)]): DataFrame = {
     prep.withColumn("scores", array(
       centroids.map { case (cv, cn) =>
-        graft.functions.VectorFunctions.dotNative(col("vec"), typedlit(cv)) /
-          (col("nrm") * cn)
+        try_divide(graft.functions.VectorFunctions.dotNative(col("vec"), typedlit(cv)),
+          col("nrm") * cn)
       }: _*))
   }
 
@@ -572,10 +577,6 @@ object Similarity {
       prep: DataFrame,
       centroids: IndexedSeq[(IndexedSeq[Double], Double)],
       k: Int, nprobe: Int): DataFrame = {
-    def cellScores(vec: Column, nrm: Column): Column = array(
-      centroids.map { case (cv, cn) =>
-        graft.functions.VectorFunctions.dotNative(vec, typedlit(cv)) / (nrm * cn)
-      }: _*)
     // corpus side: argmax cell (array_position over the score array).
     // The coalesce(-1) makes `cell` NON-NULLABLE so the join's inferred
     // isnotnull(cell) filter constant-folds instead of being pushed into
@@ -584,7 +585,7 @@ object Similarity {
     // 445µs/row vs 40µs/row codegen'd; seen verbatim in the scan node).
     // Value-identical: a null cell never joins, and the -1 sentinel
     // matches no probe cell (probe cells are 0..nlist-1).
-    val assigned = prep.withColumn("scores", cellScores(col("vec"), col("nrm")))
+    val assigned = withCellScores(prep, centroids)
       .withColumn("cell",
         coalesce(
           (array_position(col("scores"), array_max(col("scores"))) - 1).cast("int"),
@@ -605,8 +606,7 @@ object Similarity {
     //    split (structural no-op at scale). Spreading the narrow
     //    post-explode rows (not the scan) keeps the planner's
     //    build-side choice and scan stats intact.
-    val probed0 = prep
-      .withColumn("scores", cellScores(col("vec"), col("nrm")))
+    val probed0 = withCellScores(prep, centroids)
       .withColumn("cells",
         transform(
           array_sort(
@@ -952,11 +952,7 @@ object Similarity {
         }
         (lbl, cv.toIndexedSeq, foldNorm(cv.toIndexedSeq))
     }
-    val scored = prep.withColumn("scores", array(
-      centroids.map { case (_, cv, cn) =>
-        graft.functions.VectorFunctions.dotNative(col("vec"), typedlit(cv)) /
-          (col("nrm") * cn)
-      }: _*))
+    val scored = withCellScores(prep, centroids.map { case (_, cv, cn) => (cv, cn) })
     val labelLits = array(centroids.map(c => lit(c._1)): _*)
     scored
       .withColumn("predicted",
@@ -1207,8 +1203,8 @@ object Similarity {
     val edges = cand.join(va, Seq("id_a")).join(vb, Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         round(
-          graft.functions.VectorFunctions.dotNative(col("v_a"), col("v_b")) /
-            (col("n_a") * col("n_b")), 4).as("cosine"))
+          try_divide(graft.functions.VectorFunctions.dotNative(col("v_a"), col("v_b")),
+            col("n_a") * col("n_b")), 4).as("cosine"))
       .filter(col("cosine") >= tau)
       .select("id_a", "id_b")
     val labels = graft.ext.Dedup.dedupClusters(edges)
@@ -1247,13 +1243,9 @@ object Similarity {
       .withColumn("nrm",
         sqrt(graft.functions.VectorFunctions.dotNative(col("vec"), col("vec"))))
     val cents = trainCentroids(prep.select("id", "vec", "nrm"), nlist, iters)
-    def cellScores(vec: Column, nrm: Column): Column = array(
-      cents.map { case (cv, cn) =>
-        graft.functions.VectorFunctions.dotNative(vec, typedlit(cv)) / (nrm * cn)
-      }: _*)
     // non-nullable cell (same inferred-isnotnull pushdown hazard as
     // ivfSearch; the -1 sentinel joins nothing)
-    val assigned = prep.withColumn("scores", cellScores(col("vec"), col("nrm")))
+    val assigned = withCellScores(prep, cents)
       .withColumn("cell",
         coalesce(
           (array_position(col("scores"), array_max(col("scores"))) - 1).cast("int"),
@@ -1263,8 +1255,7 @@ object Similarity {
     // generator input + element_at after the Generate (no duplicated
     // scoring expression in a pushed size-filter), and the post-explode
     // stream spread off the single local scan split
-    val probed0 = prep
-      .withColumn("scores", cellScores(col("vec"), col("nrm")))
+    val probed0 = withCellScores(prep, cents)
       .withColumn("cells",
         transform(
           array_sort(

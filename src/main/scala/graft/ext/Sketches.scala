@@ -35,9 +35,9 @@ object Sketches {
 
   /** The k bit positions of a key: pos_i = stableHash(key, seed+i) mod m. */
   def bloomBits(
-      key: Column, m: Int, k: Int, seed: Int = 31, portable: Boolean = true): Column =
+      key: Column, m: Int, k: Int, seed: Int = 31): Column =
     array((0 until k).map(i =>
-      pmod(Dedup.stableHash(key.cast("string"), seed + i, portable), lit(m.toLong))): _*)
+      pmod(Dedup.stableHash(key, seed + i), lit(m.toLong))): _*)
 
   /** Build the filter over the (small) build side: the distinct set bits,
     * one row each — ≤ m rows regardless of input size, mergeable by
@@ -51,11 +51,10 @@ object Sketches {
       keyCol: String,
       m: Int,
       k: Int,
-      seed: Int = 31,
-      portable: Boolean = true): DataFrame =
+      seed: Int = 31): DataFrame =
     build
       .select(col(keyCol).cast("string").as("__k")).distinct()
-      .select(explode(bloomBits(col("__k"), m, k, seed, portable)).as("bloom_bit"))
+      .select(explode(bloomBits(col("__k"), m, k, seed)).as("bloom_bit"))
       .distinct()
 
   /** Keep only probe rows whose key MIGHT be in the filter (all k bits
@@ -69,8 +68,7 @@ object Sketches {
       bloom: DataFrame,
       m: Int,
       k: Int,
-      seed: Int = 31,
-      portable: Boolean = true): DataFrame = {
+      seed: Int = 31): DataFrame = {
     // Pack the ≤m set-bit rows into ⌈m/64⌉ longs ONCE (one-row aggregate,
     // interpreted HOFs are fine at that cardinality), broadcast the mask,
     // and probe each of the k bits with element_at + bit arithmetic — O(1)
@@ -89,9 +87,7 @@ object Sketches {
             call_function("shiftleft", lit(1L), pmod(b, lit(64L)).cast("int")))))
         .as("__mask"))
     val checks = (0 until k).map { i =>
-      val b = pmod(
-        graft.ext.Dedup.stableHash(col(keyCol).cast("string"), seed + i, portable),
-        lit(m.toLong))
+      val b = pmod(graft.ext.Dedup.stableHash(col(keyCol), seed + i), lit(m.toLong))
       element_at(col("__mask"), (shiftright(b, 6) + 1).cast("int"))
         .bitwiseAND(
           call_function("shiftleft", lit(1L), pmod(b, lit(64L)).cast("int"))) =!= lit(0L)
@@ -113,10 +109,9 @@ object Sketches {
       probeKey: String,
       m: Int,
       k: Int,
-      seed: Int = 31,
-      portable: Boolean = true): DataFrame = {
-    val bloom = bloomBuild(build, buildKey, m, k, seed, portable)
-    val pruned = bloomPrune(probe, probeKey, bloom, m, k, seed, portable)
+      seed: Int = 31): DataFrame = {
+    val bloom = bloomBuild(build, buildKey, m, k, seed)
+    val pruned = bloomPrune(probe, probeKey, bloom, m, k, seed)
     val exact = probe.join(
       build.select(col(buildKey).as(probeKey)).distinct(), Seq(probeKey), "left_semi")
     bloom.agg(count(lit(1)).as("bits_set"))
@@ -144,15 +139,14 @@ object Sketches {
       itemCol: String,
       depth: Int,
       width: Int,
-      seed: Int = 41,
-      portable: Boolean = true): DataFrame = {
+      seed: Int = 41): DataFrame = {
     val counts = items
       .groupBy(col(itemCol).cast("string").as("__item"))
       .agg(count(lit(1)).as("__cnt"))
     counts
       .select(explode(array((0 until depth).map(i => struct(
           lit(i).as("row_i"),
-          pmod(Dedup.stableHash(col("__item"), seed + i, portable), lit(width.toLong))
+          pmod(Dedup.stableHash(col("__item"), seed + i), lit(width.toLong))
             .as("pos"))): _*)).as("__cell"),
         col("__cnt"))
       .groupBy(col("__cell.row_i").as("row_i"), col("__cell.pos").as("pos"))
@@ -177,8 +171,7 @@ object Sketches {
       itemCol: String,
       depth: Int = 4,
       width: Int = 1024,
-      seed: Int = 41,
-      portable: Boolean = true): DataFrame = {
+      seed: Int = 41): DataFrame = {
     // the md5 cell hashes (depth per distinct item, twice: sketch build +
     // estimate probe) run in the stages that read the count aggregate —
     // AQE coalesces that byte-light exchange to one task locally, so the
@@ -190,7 +183,7 @@ object Sketches {
       col("__item"))
     def cells(c: Column) = array((0 until depth).map(i => struct(
       lit(i).as("row_i"),
-      pmod(Dedup.stableHash(c, seed + i, portable), lit(width.toLong)).as("pos"))): _*)
+      pmod(Dedup.stableHash(c, seed + i), lit(width.toLong)).as("pos"))): _*)
     val sketch = counts
       .select(explode(cells(col("__item"))).as("__cell"), col("exact_cnt"))
       .groupBy(col("__cell.row_i").as("row_i"), col("__cell.pos").as("pos"))
@@ -227,12 +220,11 @@ object Sketches {
       sketch: DataFrame,
       depth: Int,
       width: Int,
-      seed: Int = 41,
-      portable: Boolean = true): DataFrame =
+      seed: Int = 41): DataFrame =
     queryItems
       .select(col(itemCol), explode(array((0 until depth).map(i => struct(
         lit(i).as("row_i"),
-        pmod(Dedup.stableHash(col(itemCol).cast("string"), seed + i, portable),
+        pmod(Dedup.stableHash(col(itemCol), seed + i),
           lit(width.toLong)).as("pos"))): _*)).as("__cell"))
       .join(broadcast(sketch),
         col("__cell.row_i") === sketch("row_i") && col("__cell.pos") === sketch("pos"))
@@ -262,10 +254,9 @@ object Sketches {
       df: DataFrame,
       keyCol: String,
       m: Int,
-      seed: Int = 17,
-      portable: Boolean = true): DataFrame = {
+      seed: Int = 17): DataFrame = {
     require(m > 0 && (m & (m - 1)) == 0, "m must be a power of two")
-    val h = Dedup.stableHash(col(keyCol).cast("string"), seed, portable)
+    val h = Dedup.stableHash(col(keyCol), seed)
     df
       .select(pmod(h, lit(m.toLong)).as("bucket"),
         ExactMath.floorDiv(h, lit(m.toLong)).as("__rest"))
@@ -317,10 +308,9 @@ object Sketches {
       groupCol: String,
       keyCol: String,
       m: Int,
-      seed: Int = 17,
-      portable: Boolean = true): DataFrame = {
+      seed: Int = 17): DataFrame = {
     require(m > 0 && (m & (m - 1)) == 0, "m must be a power of two")
-    val h = Dedup.stableHash(col(keyCol).cast("string"), seed, portable)
+    val h = Dedup.stableHash(col(keyCol), seed)
     df
       .select(col(groupCol), pmod(h, lit(m.toLong)).as("bucket"),
         ExactMath.floorDiv(h, lit(m.toLong)).as("__rest"))

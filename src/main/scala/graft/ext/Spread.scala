@@ -39,14 +39,6 @@ object Spread {
   def byKey(df: DataFrame, key: Column): DataFrame =
     if (fewLeafSplits(df)) df.repartition(key) else df
 
-  /** The raw local-tiny probe, for call sites whose frame to spread has no
-    * file-scan leaves of its own (derived streams off a pinned frame): the
-    * operator probes its INPUT docs frame and pins derived exchanges only
-    * when that input arrived in a handful of splits. Same scale semantics
-    * as the guarded spreads — thousands of input splits → never fires.
-    */
-  def localTiny(df: DataFrame): Boolean = fewLeafSplits(df)
-
   /** byKey with the partition count pinned to the session parallelism, for
     * frames whose shuffle BYTES are tiny but whose downstream per-row work
     * is not (md5 sketch passes, dot-product joins, codec walks): a
@@ -55,9 +47,17 @@ object Spread {
     * exists to parallelize. Still a structural no-op at scale (leaf-split
     * guard above).
     */
-  def byKeyPinned(df: DataFrame, key: Column): DataFrame =
-    if (fewLeafSplits(df))
-      df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
+  def byKeyPinned(df: DataFrame, keys: Column*): DataFrame = byKeyPinned(df, df, keys: _*)
+
+  /** [[byKeyPinned]] for a frame with no file-scan leaves of its own
+    * (derived streams off a pinned frame): the operator probes its INPUT
+    * frame `probe` and spreads `df` only when that input arrived in a
+    * handful of splits. Same scale semantics as the guarded spreads —
+    * thousands of input splits → never fires.
+    */
+  def byKeyPinned(probe: DataFrame, df: DataFrame, keys: Column*): DataFrame =
+    if (fewLeafSplits(probe))
+      df.repartition(df.sparkSession.sparkContext.defaultParallelism, keys: _*)
     else df
 
   /** [[byKeyPinned]] with the local fan-out CAPPED below the session
@@ -66,15 +66,18 @@ object Spread {
     * measured 0.75 → 9.2 CPU-s moving the winnow gram pass from 4 to 32
     * concurrent tasks (allocation-rate/memory-bandwidth contention, the
     * same signature as the PQ-training A/B) while wall plateaus across
-    * 4–16 tasks and REGRESSES at full width — so the pin stops at `cap`
-    * tasks (never above the session parallelism). Still a structural
-    * no-op at scale: the leaf-split guard only fires in local-tiny mode.
+    * 4–16 tasks and REGRESSES at full width — so the pin stops at
+    * [[LocalCap]] tasks (never above the session parallelism). Still a
+    * structural no-op at scale: the leaf-split guard only fires in
+    * local-tiny mode.
     */
-  def byKeyCapped(df: DataFrame, key: Column, cap: Int = 8): DataFrame =
+  def byKeyCapped(df: DataFrame, key: Column): DataFrame =
     if (fewLeafSplits(df))
       df.repartition(
-        math.min(cap, df.sparkSession.sparkContext.defaultParallelism), key)
+        math.min(LocalCap, df.sparkSession.sparkContext.defaultParallelism), key)
     else df
+
+  private val LocalCap = 8
 
   /** Lineage pin for a frame reused several times within ONE operator call.
     *

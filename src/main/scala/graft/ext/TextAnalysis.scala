@@ -346,7 +346,7 @@ object TextAnalysis {
       textCol: String = "text"): DataFrame = {
     require(fractions.nonEmpty && fractions.forall(p => p > 0 && p <= 100),
       "fractions must be percentages in (0, 100]")
-    val h = pmod(graft.ext.Dedup.stableHash(col(idCol).cast("string"), seed), lit(100L))
+    val h = pmod(graft.ext.Dedup.stableHash(col(idCol), seed), lit(100L))
     val toks = docs.select(h.as("h"),
       explode(tokens(lower(col(textCol)))).as("el"))
       .withColumn("space", lit("token"))

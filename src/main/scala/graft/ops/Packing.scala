@@ -195,7 +195,7 @@ object Packing {
       seed: Int = 0): DataFrame = {
     require(budget >= 0, "budget must be non-negative")
     // 60-bit hash → 2¹⁶ static buckets of width 2⁴⁴
-    val h = graft.ext.Dedup.stableHash(col(idCol).cast("string"), seed)
+    val h = graft.ext.Dedup.stableHash(col(idCol), seed)
     val rows = docs.select(
       col(idCol).as("id"), col(weightCol).cast("long").as("w"), h.as("h"),
       graft.ext.ExactMath.floorDiv(h, lit(1L << 44)).as("b"))

@@ -439,13 +439,11 @@ class SimilaritySpec extends SparkSpec {
       var local: Either[String, (StructType, Seq[String])] = null
       val jobs = startedBy { local = run(Similarity.DriverMaxVectors) }.count(_._1 == "job")
       assert(local === run(-1), case_)
-      // a null vector is left unassigned, never taken as a centroid (mixed
-      // vector lengths still fail the Lloyd update, on both paths)
-      if (fault == "null vector") {
-        assert(local != Left(classOf[NullPointerException].getName), case_)
-        val ragged = rows.flatMap(_._2).map(_.length).distinct.size > 1
-        if (!ragged) assert(local.isRight, s"$local, $case_")
-      }
+      // a null or zero vector is left unassigned, never taken as a
+      // centroid, and vectors of mixed lengths train like any others
+      val ragged = rows.flatMap(_._2).map(_.length).distinct.size > 1
+      if (ragged || fault == "null vector" || fault == "zero vector")
+        assert(local.isRight, s"$local, $case_")
       // a clean corpus stays on the driver; every fault falls back
       if (local.isRight) assert((jobs <= 1) === (fault == "none"), s"$jobs jobs, $case_")
     }

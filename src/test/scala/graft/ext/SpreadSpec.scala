@@ -13,7 +13,7 @@ class SpreadSpec extends SparkSpec {
   test("byKeyCapped: spreads a small-split scan to min(cap, parallelism), rows unchanged") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select(col("doc_id"), col("source"))
-    val spread = Spread.byKeyCapped(docs, col("doc_id"), cap = 8)
+    val spread = Spread.byKeyCapped(docs, col("doc_id"))
     val parts = spread.rdd.getNumPartitions
     val cores = spark.sparkContext.defaultParallelism
     assert(parts === math.min(8, cores),
