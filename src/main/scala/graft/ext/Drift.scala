@@ -168,12 +168,10 @@ object Drift {
       ref.groupBy(col(keyCol).as("key")).agg(count(lit(1)).as("n_ref")),
       cur.groupBy(col(keyCol).as("key")).agg(count(lit(1)).as("n_cur")))
 
-  /** [[distributionDrift]] over pre-aggregated counts — `ref` carries
-    * (key, n_ref), `cur` carries (key, n_cur). The entry point for callers
-    * that already hold count state (the streaming monitor merges per-batch
-    * counts and compares the running totals without ever re-scanning rows).
+  /** [[distributionDrift]] over pre-aggregated counts — `r` carries
+    * (key, n_ref), `c` carries (key, n_cur).
     */
-  def driftFromCounts(r: DataFrame, c: DataFrame): DataFrame = {
+  private def driftFromCounts(r: DataFrame, c: DataFrame): DataFrame = {
     val joined = r.join(c, Seq("key"), "full_outer")
       .select(col("key"),
         coalesce(col("n_ref"), lit(0L)).as("n_ref"),
@@ -395,11 +393,9 @@ object Drift {
       typeCol)
 
   /** [[changePoint]] over an ALREADY-bucketed (etype, bucket, n) count
-    * table — the entry point mergeable state feeds (the streaming
-    * ShiftMonitor accumulates per-batch bucket counts and re-scores the
-    * cumulative sequence here each micro-batch).
+    * table.
     */
-  def changePointFromCounts(
+  private def changePointFromCounts(
       counts: DataFrame, typeCol: String = "event_type"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byType = Window.partitionBy("etype")

@@ -48,6 +48,30 @@ object Similarity {
         sqrt(graft.functions.VectorFunctions.dotNative(col(vecAlias), col(vecAlias))))
   }
 
+  /** Cosine from precomputed norms: one native dot over the norm product.
+    * A zero norm on either side scores null, as a null vector does — the
+    * quotient would otherwise raise DIVIDE_BY_ZERO under ANSI mode. Every
+    * ranking drops null scores, so a zero or null query has no neighbours
+    * and a zero-norm vector is never a neighbour.
+    */
+  private def guardedCosine(a: Column, aNrm: Column, b: Column, bNrm: Column): Column =
+    try_divide(graft.functions.VectorFunctions.dotNative(a, b), aNrm * bNrm)
+
+  private def qcCosine: Column =
+    guardedCosine(col("q_vec"), col("q_nrm"), col("c_vec"), col("c_nrm"))
+
+  /** Each query's top-k rows of `scored` by score, ties to the lower
+    * neighbor id, null scores dropped. Nulls sort last, so dropping them
+    * after the ranking leaves every other row's rank as it would be without
+    * them; a filter below the window would be pushed into the pair join's
+    * condition and compute each pair's dot product twice.
+    */
+  private def topKPerQuery(scored: DataFrame, k: Int, score: String = "cosine"): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(col(score).desc, col("neighbor_id").asc)
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k && col(score).isNotNull)
+  }
+
   /** Exact brute-force top-k neighbours for each query vector.
     *
     * The query side is expected to be small (a probe set) and is broadcast;
@@ -67,11 +91,8 @@ object Similarity {
     val scored = c.crossJoin(q)
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(
-        col("query_id"), col("neighbor_id"),
-        (graft.functions.VectorFunctions.dotNative(col("q_vec"), col("c_vec")) /
-          (col("q_nrm") * col("c_nrm"))).as("cosine"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+        col("query_id"), col("neighbor_id"), qcCosine.as("cosine"))
+    topKPerQuery(scored, k)
   }
 
   /** Random-hyperplane LSH bucket key: the sign pattern of `numPlanes`
@@ -128,12 +149,9 @@ object Similarity {
     val scored = a.join(b, Seq("tbl", "bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(
-        col("query_id"), col("neighbor_id"),
-        (graft.functions.VectorFunctions.dotNative(col("q_vec"), col("c_vec")) /
-          (col("q_nrm") * col("c_nrm"))).as("cosine"))
+        col("query_id"), col("neighbor_id"), qcCosine.as("cosine"))
       .groupBy("query_id", "neighbor_id").agg(max("cosine").as("cosine"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topKPerQuery(scored, k)
   }
 
   /** Multi-probe hyperplane-LSH top-k: ONE table, but each query also
@@ -197,12 +215,9 @@ object Similarity {
     val scored = probeSide.join(corpusSide, Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(
-        col("query_id"), col("neighbor_id"),
-        (graft.functions.VectorFunctions.dotNative(col("q_vec"), col("c_vec")) /
-          (col("q_nrm") * col("c_nrm"))).as("cosine"))
+        col("query_id"), col("neighbor_id"), qcCosine.as("cosine"))
       .groupBy("query_id", "neighbor_id").agg(max("cosine").as("cosine"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topKPerQuery(scored, k)
   }
 
   /** Cosine threshold sweep (E188): pair counts and touched-doc counts per
@@ -290,7 +305,6 @@ object Similarity {
   private[graft] def mmrCandidateFrame(
       corpus: DataFrame, queryId: Long,
       idCol: String, vecCol: String): DataFrame = {
-    import graft.functions.VectorFunctions.dotNative
     val prep = prepared(corpus, idCol, vecCol, "id", "vec", "nrm")
     val qRow = prep.filter(col("id") === queryId)
       .select(col("vec"), col("nrm")).collect()
@@ -299,8 +313,8 @@ object Similarity {
     val qv = qRow.getSeq[Float](0).map(_.toDouble).toIndexedSeq
     val qn = qRow.getDouble(1)
     prep.filter(col("id") =!= queryId)
-      .withColumn("rel",
-        dotNative(col("vec"), typedlit(qv)) / (col("nrm") * lit(qn)))
+      .withColumn("rel", guardedCosine(col("vec"), col("nrm"), typedlit(qv), lit(qn)))
+      .filter(col("rel").isNotNull)
   }
 
   def mmrSelect(
@@ -314,7 +328,6 @@ object Similarity {
     require(k >= 1 && lamDen > 0 && lamNum >= 0 && lamNum <= lamDen,
       "need k >= 1 and 0 <= lamNum/lamDen <= 1")
     val spark = corpus.sparkSession
-    import graft.functions.VectorFunctions.dotNative
     val cand = mmrCandidateFrame(corpus, queryId, idCol, vecCol)
       // greedy MMR is inherently k sequential argmax jobs over the same
       // candidate frame: persist it so round 2..k read the cached
@@ -329,7 +342,7 @@ object Similarity {
       val ms =
         if (selected.isEmpty) lit(0.0)
         else selected.map { case (_, sv, sn, _, _) =>
-          dotNative(col("vec"), typedlit(sv)) / (col("nrm") * lit(sn))
+          guardedCosine(col("vec"), col("nrm"), typedlit(sv), lit(sn))
         }.reduce((a, b) => greatest(a, b))
       cand
         .filter(!col("id").isInCollection(selected.map(_._1)))
@@ -555,17 +568,15 @@ object Similarity {
   }
 
   /** Cosine of every row's vec against each centroid, as one array column of
-    * native dots vs literal weight arrays (map-side only). A zero norm on
-    * either side scores null, as a null vector does: the quotient would
-    * otherwise raise DIVIDE_BY_ZERO under ANSI mode, and a null score never
-    * wins the argmax, so a zero vector stays unassigned.
+    * native dots vs literal weight arrays (map-side only). A zero or null
+    * vector scores null ([[guardedCosine]]), and a null score never wins
+    * the argmax, so such a vector stays unassigned.
     */
   private[ext] def withCellScores(
       prep: DataFrame, centroids: Seq[(IndexedSeq[Double], Double)]): DataFrame = {
     prep.withColumn("scores", array(
       centroids.map { case (cv, cn) =>
-        try_divide(graft.functions.VectorFunctions.dotNative(col("vec"), typedlit(cv)),
-          col("nrm") * cn)
+        guardedCosine(col("vec"), col("nrm"), typedlit(cv), lit(cn))
       }: _*))
   }
 
@@ -636,11 +647,8 @@ object Similarity {
         Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(
-        col("query_id"), col("neighbor_id"),
-        (graft.functions.VectorFunctions.dotNative(col("q_vec"), col("c_vec")) /
-          (col("q_nrm") * col("c_nrm"))).as("cosine"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+        col("query_id"), col("neighbor_id"), qcCosine.as("cosine"))
+    topKPerQuery(scored, k)
   }
 
   /** Symmetric per-vector int8 quantization — the storage/IO scale path for
@@ -838,9 +846,7 @@ object Similarity {
     cand.join(a, Seq("id_a")).join(b, Seq("id_b"))
       .select(
         col("id_a"), col("id_b"),
-        round(
-          graft.functions.VectorFunctions.dotNative(col("v_a"), col("v_b")) /
-            (col("n_a") * col("n_b")), 4).as("cosine"))
+        round(guardedCosine(col("v_a"), col("n_a"), col("v_b"), col("n_b")), 4).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 
@@ -896,9 +902,7 @@ object Similarity {
       .filter(col("id_a") < col("id_b"))
       .select(
         col("id_a"), col("id_b"),
-        round(
-          graft.functions.VectorFunctions.dotNative(col("v_a"), col("v_b")) /
-            (col("n_a") * col("n_b")), 4).as("cosine"))
+        round(guardedCosine(col("v_a"), col("n_a"), col("v_b"), col("n_b")), 4).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 
@@ -1203,8 +1207,7 @@ object Similarity {
     val edges = cand.join(va, Seq("id_a")).join(vb, Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         round(
-          try_divide(graft.functions.VectorFunctions.dotNative(col("v_a"), col("v_b")),
-            col("n_a") * col("n_b")), 4).as("cosine"))
+          guardedCosine(col("v_a"), col("n_a"), col("v_b"), col("n_b")), 4).as("cosine"))
       .filter(col("cosine") >= tau)
       .select("id_a", "id_b")
     val labels = graft.ext.Dedup.dedupClusters(edges)
@@ -1284,10 +1287,8 @@ object Similarity {
         col("query_label") =!= col("neighbor_label"))
       .select(
         col("query_id"), col("query_label"), col("neighbor_id"), col("neighbor_label"),
-        (graft.functions.VectorFunctions.dotNative(col("q_vec"), col("c_vec")) /
-          (col("q_nrm") * col("c_nrm"))).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+        qcCosine.as("cos"))
+    topKPerQuery(scored, k, "cos")
       .select(col("query_id"), col("query_label"), col("neighbor_id"),
         col("neighbor_label"), round(col("cos"), 4).as("cosine"), col("rank"))
   }
@@ -1344,9 +1345,7 @@ object Similarity {
     // reaches it and its exact cosine
     val cand = probes.join(assigned, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), col("crn"),
-        (graft.functions.VectorFunctions.dotNative(col("q_vec"), col("c_vec")) /
-          (col("q_nrm") * col("c_nrm"))).as("cos"))
+      .select(col("query_id"), col("neighbor_id"), col("crn"), qcCosine.as("cos"))
       .groupBy("query_id", "neighbor_id")
       .agg(min(col("crn")).as("first_depth"), max(col("cos")).as("cos"))
     // ground truth: brute-force top-k over the same probe query set
@@ -1361,7 +1360,7 @@ object Similarity {
       .withColumn("rank", row_number().over(
         Window.partitionBy("nprobe", "query_id")
           .orderBy(col("cos").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= k && col("cos").isNotNull) // as in topKPerQuery
     val hits = topk.join(truth, Seq("query_id", "neighbor_id"))
       .groupBy("nprobe").agg(count(lit(1)).as("sum_hits"))
     val costs = swept.groupBy("nprobe").agg(count(lit(1)).as("n_candidates"))

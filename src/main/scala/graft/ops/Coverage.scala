@@ -228,8 +228,8 @@ object Coverage {
     * hour-of-day) normalized by how many distinct dates of that weekday the
     * feed actually observed — the periodic baseline behind "is Tuesday 3am
     * quiet or is the feed down?". rate_fp = n_events·2²⁰ // n_days is the
-    * expected per-day count for that cell; GapWatch / rollingMadAnomalies
-    * flag deviations, this supplies the baseline they deviate FROM.
+    * expected per-day count for that cell; rollingMadAnomalies flags
+    * deviations, this supplies the baseline they deviate FROM.
     *
     * Weekday is ISO (0 = Monday … 6 = Sunday) — Spark `weekday` ==
     * DuckDB `isodow − 1` — and all time math runs in UTC sessions.

@@ -28,29 +28,13 @@ object StateBackend {
     * previous session setting is restored afterwards (already-running
     * queries are unaffected either way).
     */
-  def using[A](spark: SparkSession, provider: String)(body: => A): A =
-    withConf(spark, ProviderKey, provider)(body)
-
-  val EncodingKey = "spark.sql.streaming.stateStore.encodingFormat"
-
-  /** The Avro state encoding — the format that buys transformWithState
-    * STATE SCHEMA EVOLUTION (add nullable fields, drop fields, widen,
-    * reorder) across a checkpoint restart; the default unsaferow
-    * encoding is byte-layout-bound and rejects any state schema change.
-    * Like the provider, the encoding is read at query START and pinned
-    * into the checkpoint, so it gets the same scoped opt-in.
-    */
-  def usingAvro[A](spark: SparkSession)(body: => A): A =
-    withConf(spark, EncodingKey, "avro")(body)
-
-  private def withConf[A](spark: SparkSession, key: String, value: String)(
-      body: => A): A = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
+  def using[A](spark: SparkSession, provider: String)(body: => A): A = {
+    val prev = spark.conf.getOption(ProviderKey)
+    spark.conf.set(ProviderKey, provider)
     try body
     finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+      case Some(v) => spark.conf.set(ProviderKey, v)
+      case None => spark.conf.unset(ProviderKey)
     }
   }
 }

@@ -299,6 +299,47 @@ class SimilaritySpec extends SparkSpec {
     assert(costs.last === 10L * (n - 1))
   }
 
+  test("a zero vector is neither a query nor a neighbour in any search API") {
+    import spark.implicits._
+    val rows = Seq(
+      (1L, Seq(1.0f, 0.0f), 0), (2L, Seq(0.9f, 0.1f), 1), (3L, Seq(0.0f, 1.0f), 0),
+      (4L, Seq(0.0f, 0.0f), 1), // zero norm
+      (5L, Seq(-1.0f, 0.5f), 1))
+    val emb = rows.toDF("vec_id", "embedding", "label")
+    val nonZero = rows.filter(_._1 != 4L).toDF("vec_id", "embedding", "label")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1)))
+    val topKs = Map(
+      "bruteForceTopK" -> Similarity.bruteForceTopK(emb, emb, k = 2),
+      "ivfTrainedTopK" -> Similarity.ivfTrainedTopK(emb, 2, 2, 1, 1),
+      "ivfTopK" -> Similarity.ivfTopK(emb, k = 2, nlist = 2, nprobe = 1),
+      "lshTopK" -> Similarity.lshTopK(emb, k = 2, dim = 2, numPlanes = 2),
+      "multiProbeTopK" -> Similarity.multiProbeTopK(emb, k = 2, dim = 2, numPlanes = 2, probes = 2),
+      "hardNegatives" -> Similarity.hardNegatives(emb, k = 2, nlist = 2, nprobe = 2, iters = 1))
+    topKs.foreach { case (api, df) =>
+      val ps = pairs(df)
+      assert(ps.nonEmpty, api)
+      assert(ps.forall { case (q, n) => q != 4L && n != 4L }, s"$api: ${ps.toSeq}")
+    }
+    // the other queries rank exactly as on the corpus without the zero vector
+    def ranked(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"),
+        r.getAs[Double]("cosine"), r.getAs[Int]("rank"))).toSet
+    assert(ranked(topKs("bruteForceTopK")) ===
+      ranked(Similarity.bruteForceTopK(nonZero, nonZero, k = 2)))
+    // the curve's queries are the four nonzero vectors, and probing every
+    // cell still finds each one's exact top-k
+    val curve = Similarity.ivfOperatingCurve(emb, k = 2, nlist = 2, nprobes = Seq(1, 2))
+      .collect().sortBy(_.getAs[Long]("nprobe"))
+    assert(curve.forall(_.getAs[Long]("n_queries") === 4L))
+    assert(curve.last.getAs[Long]("recall_fp") === 1048576L)
+    // MMR: a zero query selects nothing, and a zero candidate is never picked
+    assert(Similarity.mmrSelect(emb, queryId = 4L, k = 2).collect().isEmpty)
+    val picked = Similarity.mmrSelect(emb, queryId = 1L, k = 4)
+      .collect().map(_.getAs[Long]("doc_id")).toSet
+    assert(picked === Set(2L, 3L, 5L))
+  }
+
   /** semanticDedup at tau 0.3 on the driver path (the sf0.001 corpus is
     * within the cutoff) and on the forced Spark plan.
     */

@@ -121,35 +121,6 @@ class EventStreamSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() === n1)
   }
 
-  test("upsert sink: newest version per key wins across micro-batches; redelivery is idempotent") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_upsert").toString
-    val (out, ckpt) = (s"$base/table", s"$base/ckpt")
-    val source = MemoryStream[(Long, Long, String)]
-    val df = source.toDF().toDF("user_id", "version", "status")
-    val q = UpsertSink.stream(df, out, Seq("user_id"), "version", ckpt,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-    try {
-      source.addData((1L, 10L, "bronze"), (2L, 10L, "bronze"))
-      q.processAllAvailable()
-      def state() = spark.read.parquet(out).collect()
-        .map(r => r.getAs[Long]("user_id") ->
-          (r.getAs[Long]("version"), r.getAs[String]("status"))).toMap
-      assert(state() === Map(1L -> (10L, "bronze"), 2L -> (10L, "bronze")))
-      // batch 2: newer version for key 1, new key 3
-      source.addData((1L, 20L, "gold"), (3L, 5L, "bronze"))
-      q.processAllAvailable()
-      assert(state() === Map(
-        1L -> (20L, "gold"), 2L -> (10L, "bronze"), 3L -> (5L, "bronze")))
-      // batch 3: an OLD version redelivered for key 1 must not regress it
-      source.addData((1L, 10L, "bronze"))
-      q.processAllAvailable()
-      assert(state()(1L) === (20L, "gold"))
-    } finally q.stop()
-  }
-
   test("watermark drops events later than the 2h bound in append mode") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._

@@ -111,42 +111,6 @@ class RocksDbStateSpec extends SparkSpec {
     }
   }
 
-  test("flatMapGroupsWithState event-time timeouts fire identically under RocksDB") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
-      val source = MemoryStream[(Long, Long)]
-      val df = source.toDF().toDF("user_id", "ts")
-      def ns(min: Long) = (min + 1) * 60L * 1000000000L
-      val q = GapWatch.watch(spark, df, minGapMinutes = 60).writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName("rocksdb_gapwatch").start()
-      try {
-        // one closed 90-min gap for user 1
-        source.addData((1L, ns(0)), (1L, ns(90)))
-        q.processAllAvailable()
-        assert(q.recentProgress.flatMap(_.stateOperators).exists(
-          _.customMetrics.containsKey("rocksdbGetCount")),
-          "gap-watch state operator did not report RocksDB metrics")
-        // user 2 advances the watermark past user 1's silence horizon:
-        // the event-time TIMEOUT must fire exactly one open alert — the
-        // state-store interaction the session test doesn't reach
-        source.addData((2L, ns(600)))
-        q.processAllAvailable()
-        source.addData((2L, ns(601))) // extra batch so the timeout fires
-        q.processAllAvailable()
-        val rows = spark.table("rocksdb_gapwatch").collect()
-        val closed = rows.filter(!_.getAs[Boolean]("open"))
-        val open = rows.filter(_.getAs[Boolean]("open"))
-        assert(closed.length === 1)
-        assert(closed.head.getAs[Long]("gapUs") === 90L * 60 * 1000000)
-        assert(open.length === 1)
-        assert(open.head.getAs[Long]("userId") === 1L)
-      } finally q.stop()
-    }
-  }
-
   test("scoped opt-in + restart: session state survives a checkpoint restart under RocksDB") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._

@@ -54,9 +54,18 @@ def main():
                                 capture_output=True, text=True).stdout.strip()
     except OSError:
         commit = "unknown"
+    # A run made before its change is committed tests sources that differ
+    # from `commit` (staged files included); say so rather than certify it.
+    try:
+        sources_differ = subprocess.run(
+            ["git", "diff", "--quiet", "HEAD", "--", "src", "build.sbt"],
+            cwd=ROOT).returncode != 0
+    except OSError:
+        sources_differ = None
     out = {
         "tool": "tools/test_summary.py",
         "commit": commit,
+        "sources_differ_from_commit": sources_differ,
         "timestamp": datetime.datetime.now(datetime.timezone.utc)
             .isoformat(timespec="seconds"),
         "suites_completed": suites,
