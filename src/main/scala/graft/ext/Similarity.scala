@@ -976,8 +976,8 @@ object Similarity {
     * Small corpora run on the driver: at most [[DriverMaxVectors]] vectors
     * of float elements with integral ids, read in at most as many
     * partitions as the session has cores. One job with no shuffle collects
-    * (id, vector, norm, init key) as primitive arrays, at most cutoff + 1
-    * rows per partition. The driver then runs the same computation as the
+    * (id, vector, norm, init key), at most cutoff rows per partition
+    * ([[BoundedCollect]]). The driver then runs the same computation as the
     * Spark plan with the same kernels: the md5 init order, the `iters`
     * Lloyd rounds on exact floor(x·2²⁰) sums, the first-maximum argmax
     * cell, `round(cosine, 4) >= tau` over each cell's pairs and a
@@ -1037,14 +1037,6 @@ object Similarity {
       .getOrElse(semanticDedupOnSpark(prep, tau, nlist, iters, idCol, cellCap))
   }
 
-  /** One partition's rows as primitive arrays: id, init key, vector as
-    * doubles, norm. `complete` is false, and the arrays empty, when the
-    * partition holds more rows than the cap or a null id, vector or element.
-    */
-  private case class VectorChunk(
-      ids: Array[Long], keys: Array[String], vecs: Array[Array[Double]], nrms: Array[Double],
-      complete: Boolean)
-
   /** A division the driver path does not reproduce: a zero denominator (null
     * without ANSI mode, an error with it) or a NaN quotient.
     */
@@ -1076,48 +1068,23 @@ object Similarity {
       case _ => false
     }
     if (maxVectors < 1 || nlist < 1 || !floats || !Dedup.isIntegral(idField.dataType)) return None
-    val rdd = prep
-      .select(col("id").cast("long"), col("vec").cast("array<double>"), col("nrm"),
-        initKey(col("id")))
-      .queryExecution.toRdd
-    // each partition may send up to the cutoff's rows: a frame in more
-    // partitions than cores (every corpus at scale) skips the collect
-    if (rdd.getNumPartitions > prep.sparkSession.sparkContext.defaultParallelism) return None
-    val chunks = rdd.mapPartitions { rows =>
-      val ids = Array.newBuilder[Long]
-      val keys = Array.newBuilder[String]
-      val vecs = Array.newBuilder[Array[Double]]
-      val nrms = Array.newBuilder[Double]
-      var n = 0
-      var complete = true
-      while (complete && rows.hasNext) {
-        val r = rows.next()
-        val v = if (r.isNullAt(1)) null else r.getArray(1)
-        complete = n < maxVectors && !r.isNullAt(0) && v != null &&
-          !(0 until v.numElements()).exists(v.isNullAt)
-        if (complete) {
-          ids += r.getLong(0); keys += r.getUTF8String(3).toString
-          vecs += v.toDoubleArray(); nrms += r.getDouble(2)
-          n += 1
-        }
-      }
-      Iterator(
-        if (complete) VectorChunk(ids.result(), keys.result(), vecs.result(), nrms.result(), true)
-        else VectorChunk(Array.emptyLongArray, Array.empty, Array.empty, Array.emptyDoubleArray, false))
-    }.collect()
-    val n = chunks.map(_.ids.length).sum
-    val dim = chunks.iterator.flatMap(_.vecs).map(_.length).maxOption.getOrElse(0)
-    if (!chunks.forall(_.complete) || n == 0 || n > maxVectors ||
-        n.toLong * n * dim > maxVectors.toLong * maxVectors * DriverSizedDim) return None
+    // a null id or vector falls back in the collect, a null element here
+    val rows = BoundedCollect(prep, maxVectors, Set(0, 1),
+      col("id").cast("long"), col("vec").cast("array<double>"), col("nrm"), initKey(col("id")))
+      .getOrElse(return None)
+    val n = rows.length
+    val dim = rows.iterator.map(_.getArray(1).numElements()).maxOption.getOrElse(0)
+    if (n == 0 || n > maxVectors ||
+        n.toLong * n * dim > maxVectors.toLong * maxVectors * DriverSizedDim ||
+        rows.exists { r => val v = r.getArray(1); (0 until v.numElements()).exists(v.isNullAt) })
+      return None
     // rows in ascending id order: a pair i < j is then (id_a, id_b), and
     // the union-find's node order is the row order
-    val sorted = chunks
-      .flatMap(c => c.ids.indices.map(i => (c.ids(i), c.keys(i), c.vecs(i), c.nrms(i))))
-      .sortBy(_._1)
-    val ids = sorted.map(_._1)
+    val sorted = rows.sortBy(_.getLong(0))
+    val ids = sorted.map(_.getLong(0))
     if ((1 until n).exists(i => ids(i) == ids(i - 1))) return None
-    val vecs: Array[ArrayData] = sorted.map(r => UnsafeArrayData.fromPrimitiveArray(r._3))
-    val nrms = sorted.map(_._4)
+    val vecs: Array[ArrayData] = sorted.map(_.getArray(1))
+    val nrms = sorted.map(_.getDouble(2))
     def cells(cents: IndexedSeq[(IndexedSeq[Double], Double)]): Array[Int] = {
       val cs = cents.map { case (cv, cn) => (UnsafeArrayData.fromPrimitiveArray(cv.toArray), cn) }
       Array.tabulate(n) { i =>
@@ -1132,7 +1099,8 @@ object Similarity {
     }
     try {
       // the init: the rows with the nlist smallest keys, as in sampleCentroids
-      var cents = sorted.sortBy(_._2).take(nlist).map(r => (r._3.toIndexedSeq, r._4)).toIndexedSeq
+      var cents = sorted.sortBy(_.getUTF8String(3).toString).take(nlist)
+        .map(r => (r.getArray(1).toDoubleArray().toIndexedSeq, r.getDouble(2))).toIndexedSeq
       for (_ <- 1 to iters) {
         val cell = cells(cents)
         val sums, counts = Array.fill(cents.length)(Array.emptyLongArray)

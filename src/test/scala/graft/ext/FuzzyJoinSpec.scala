@@ -1,6 +1,11 @@
 package graft.ext
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types._
+
 import graft.SparkSpec
+
+import scala.jdk.CollectionConverters._
 
 class FuzzyJoinSpec extends SparkSpec {
 
@@ -90,6 +95,17 @@ class FuzzyJoinSpec extends SparkSpec {
     assert(runCross(ls, rs, 1) === bruteCross(ls, rs, 1))
   }
 
+  /** setSimJoin on the driver (asserted), then through the Spark plan. */
+  private def setSimBothPaths(
+      docs: DataFrame, tNum: Int, tDen: Int, shingleK: Int): Seq[DataFrame] = {
+    val local = FuzzyJoin.setSimJoin(docs, tNum = tNum, tDen = tDen, shingleK = shingleK)
+    assert(local.isLocal, "expected the driver path")
+    Seq(local, onSpark(docs, tNum, tDen, shingleK))
+  }
+
+  private def onSpark(docs: DataFrame, tNum: Int, tDen: Int, shingleK: Int) =
+    FuzzyJoin.setSimJoin(docs, "text", "doc_id", tNum, tDen, shingleK, -1, 0L)
+
   test("setSimJoin: prefix filter is lossless — equals brute-force Jaccard join") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
@@ -99,9 +115,9 @@ class FuzzyJoinSpec extends SparkSpec {
       (i.toLong, Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" "))
     }.toDF("doc_id", "text")
 
-    val got = FuzzyJoin.setSimJoin(docs, tNum = 3, tDen = 5).collect()
+    val got = setSimBothPaths(docs, 3, 5, 0).map(_.collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")) ->
-        ((r.getAs[Long]("inter"), r.getAs[Long]("jac_fp")))).toMap
+        ((r.getAs[Long]("inter"), r.getAs[Long]("jac_fp")))).toMap)
 
     // brute force over the same token sets
     val sets = docs.collect().map(r =>
@@ -112,7 +128,7 @@ class FuzzyJoinSpec extends SparkSpec {
       union = sets(a).size + sets(b).size - inter
       if inter * 5 >= 3 * union
     } yield (a, b) -> ((inter.toLong, inter.toLong * 1048576L / union))).toMap
-    assert(got === brute)
+    got.foreach(g => assert(g === brute))
     assert(brute.nonEmpty, "fixture must actually produce similar pairs")
   }
 
@@ -141,9 +157,9 @@ class FuzzyJoinSpec extends SparkSpec {
       (103L, base + " iota"),              // one appended word
       (104L, "prefix " + base)             // one prepended word
     )).toDF("doc_id", "text")
-    val got = FuzzyJoin.setSimJoin(docs, tNum = 1, tDen = 2, shingleK = 3).collect()
+    val got = setSimBothPaths(docs, 1, 2, 3).map(_.collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")) -> r.getAs[Long]("jac_fp"))
-      .toMap
+      .toMap)
     // brute force over the SAME deduped shingle sets
     val sets = docs.collect().map { r =>
       val toks = r.getString(1).split(" ").toSeq
@@ -158,8 +174,90 @@ class FuzzyJoinSpec extends SparkSpec {
       union = sets(a).size + sets(b).size - inter
       if inter * 2 >= union
     } yield (a, b) -> inter.toLong * 1048576L / union).toMap
-    assert(got === brute)
+    got.foreach(g => assert(g === brute))
     assert(brute.nonEmpty, "fixture must produce similar pairs")
+  }
+
+  test("setSimJoin: the driver path equals the Spark plan on random corpora") {
+    // a null id, null text, empty text, doubled spaces and upper case; ids
+    // of both integral types; three vocabularies, the smallest closed (every
+    // pair of its documents shares elements)
+    def corpus(seed: Int) = {
+      val rnd = new scala.util.Random(seed)
+      val vocab = Vector.tabulate(Seq(4, 12, 40)(seed % 3))(i => if (i % 5 == 0) s"W$i" else s"w$i")
+      val n = 1 + rnd.nextInt(30)
+      val ids = rnd.shuffle((0L until 200L).toList).take(n)
+      val texts = Seq.fill(n)(rnd.nextInt(12) match {
+        case 0 => None
+        case 1 => Some("")
+        case 2 => Some("w1  w2 w3")
+        case _ => Some(Seq.fill(1 + rnd.nextInt(9))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+      })
+      // copies of earlier documents, so that every threshold has pairs
+      val copies = texts.map(t => if (rnd.nextInt(4) == 0) texts(rnd.nextInt(n)) else t)
+      val intIds = seed % 2 == 0
+      val rows = ids.zip(copies).zipWithIndex.map { case ((id, t), i) =>
+        Row(if (i == 0 && seed % 3 == 0) null else if (intIds) id.toInt else id, t.orNull)
+      }
+      spark.createDataFrame(rows.asJava, StructType(Seq(
+        StructField("doc_id", if (intIds) IntegerType else LongType, nullable = seed % 3 == 0 || seed % 4 == 1),
+        StructField("text", StringType))))
+    }
+    def outcome(df: DataFrame) = (df.schema, df.collect().map(_.toString).sorted.toSeq)
+    var pairs = 0
+    for (seed <- 0 until 24) {
+      val docs = corpus(seed)
+      val shingleK = if (seed % 2 == 0) 0 else 3
+      val (tNum, tDen) = Seq((1, 2), (3, 5), (1, 1))(seed / 2 % 3)
+      var local: DataFrame = null
+      val jobs = startedBy {
+        local = FuzzyJoin.setSimJoin(docs, tNum = tNum, tDen = tDen, shingleK = shingleK)
+      }.count(_._1 == "job")
+      val case_ = s"corpus $seed (k $shingleK, t $tNum/$tDen): ${docs.collect().mkString(", ")}"
+      assert(local.isLocal, case_)
+      assert(jobs <= 1, case_)
+      val got = outcome(local)
+      assert(got === outcome(onSpark(docs, tNum, tDen, shingleK)), case_)
+      pairs += got._2.length
+    }
+    assert(pairs > 24, "the corpora must produce pairs")
+  }
+
+  test("setSimJoin: duplicate ids, string ids and inputs over a cutoff run the Spark plan") {
+    import spark.implicits._
+    val docs = Seq((1L, "a b c d"), (2L, "a b c"), (3L, "a b c d e"), (4L, "x y")).toDF("doc_id", "text")
+    def run(df: DataFrame, maxDocs: Int = FuzzyJoin.DriverMaxDocs,
+        maxMass: Long = FuzzyJoin.DriverMaxCandidateMass) =
+      FuzzyJoin.setSimJoin(df, "text", "doc_id", 1, 2, 0, maxDocs, maxMass)
+    val expected = onSpark(docs, 1, 2, 0).collect().map(_.toString).sorted.toSeq
+    assert(expected.length === 3)
+    val clean = run(docs)
+    assert(clean.isLocal)
+    assert(clean.collect().map(_.toString).sorted.toSeq === expected)
+    val fallbacks = Seq(
+      "duplicate id" -> run(docs.union(Seq((2L, "q r")).toDF("doc_id", "text"))),
+      "string ids" -> run(docs.withColumn("doc_id", $"doc_id".cast("string"))),
+      "more documents than the cutoff" -> run(docs, maxDocs = 3),
+      "more candidate mass than the cutoff" -> run(docs, maxMass = 0L),
+      "more partitions than cores" -> run(docs.repartition(spark.sparkContext.defaultParallelism + 1)))
+    fallbacks.foreach { case (why, out) => assert(!out.isLocal, why) }
+    assert(fallbacks(1)._2.collect().map(r => (r.getString(0), r.getString(1))).toSet ===
+      Set(("1", "2"), ("1", "3"), ("2", "3")))
+  }
+
+  test("setSimJoin: the sf0.001 documents take one job, and collecting the pairs none") {
+    val docs = graft.Tables.documents(spark, sf0001)
+    var out: DataFrame = null
+    val jobs = startedBy { out = FuzzyJoin.setSimJoin(docs, tNum = 1, tDen = 2, shingleK = 3) }
+      .filter(_._1 == "job")
+    assert(jobs.length <= 1, jobs.mkString("\n"))
+    var rows = Array.empty[Row]
+    val resultJobs = startedBy { rows = out.collect() }.filter(_._1 == "job")
+    assert(resultJobs.isEmpty, resultJobs.mkString("\n"))
+    assert(rows.nonEmpty)
+    val planned = onSpark(docs, 1, 2, 3)
+    assert((out.schema, rows.map(_.toString).sorted.toSeq) ===
+      ((planned.schema, planned.collect().map(_.toString).sorted.toSeq)))
   }
 
   test("thresholdSensitivity: bins by exact jaccard, clamps 1.0, counts pairs and docs") {

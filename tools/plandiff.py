@@ -7,8 +7,10 @@
 
 PlanDump writes <name>_<suffix>.txt per query; files pair up by <name>.
 Ids that differ between two JVMs are masked before comparing: expression
-ids (#123), exchange plan ids (plan_id=12), RDD ids (MapPartitionsRDD[45])
-and source line numbers (Spread.scala:92). Prints each query whose masked
+ids (#123), exchange plan ids (plan_id=12), RDD ids (MapPartitionsRDD[45]),
+source line numbers (Spread.scala:92) and the numbers of lambda variable
+names (lambda x_9#123 reads lambda x_N#N), which a JVM-wide counter hands
+out in planning order. Prints each query whose masked
 plans differ (with a unified diff of the masked plans under --diff), each
 query present on one side only, and a summary line. Exits 1 when any plan
 differs or is missing, else 0.
@@ -24,6 +26,7 @@ MASKS = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"(\w\.scala):\d+"), r"\1:N"),
+    (re.compile(r"(lambda \w+?)_\d+\b"), r"\1_N"),
 ]
 
 
