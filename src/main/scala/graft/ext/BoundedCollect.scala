@@ -2,10 +2,12 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The collect step of the operators that run a small input on the driver
-  * ([[Similarity.semanticDedup]], [[FuzzyJoin.setSimJoin]]): one job with no
-  * shuffle brings the chosen columns to the driver, or the caller learns
+  * ([[Similarity.semanticDedup]], [[FuzzyJoin.setSimJoin]],
+  * [[Dedup.nearDuplicates]], [[Decontaminate.contamination]]): one job with
+  * no shuffle brings the chosen columns to the driver, or the caller learns
   * that its input is not small and runs its Spark plan.
   */
 private[ext] object BoundedCollect {
@@ -34,5 +36,28 @@ private[ext] object BoundedCollect {
       Iterator(if (complete) Some(out.result()) else None)
     }.collect()
     if (parts.forall(_.isDefined)) Some(parts.flatMap(_.get)) else None
+  }
+
+  /** The non-null string arrays at `ordinal` of `rows`, each string
+    * interned as an Int, and the distinct strings in Int order.
+    */
+  def intern(rows: Array[InternalRow], ordinal: Int): (Array[Array[Int]], Array[UTF8String]) = {
+    val distinct = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
+    val ids = scala.collection.mutable.HashMap.empty[UTF8String, Int]
+    val interned = rows.map { r =>
+      val es = r.getArray(ordinal)
+      Array.tabulate(es.numElements()) { i =>
+        val e = es.getUTF8String(i)
+        ids.getOrElseUpdate(e, { distinct += e; distinct.length - 1 })
+      }
+    }
+    (interned, distinct.toArray)
+  }
+
+  /** Whether the non-null `Long`s at `ordinal` of `rows` are all distinct. */
+  def distinctLongs(rows: Array[InternalRow], ordinal: Int): Boolean = {
+    val ids = rows.filterNot(_.isNullAt(ordinal)).map(_.getLong(ordinal))
+    java.util.Arrays.sort(ids)
+    (1 until ids.length).forall(i => ids(i) != ids(i - 1))
   }
 }

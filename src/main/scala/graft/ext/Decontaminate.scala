@@ -1,7 +1,13 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StructField, StructType}
+
+import graft.functions.StableHash
+
+import scala.jdk.CollectionConverters._
 
 /** Benchmark decontamination for training corpora: flag training documents
   * that share word n-grams with a held-out benchmark/eval set — the standard
@@ -10,7 +16,9 @@ import org.apache.spark.sql.functions._
   * Scale design: the benchmark side is distinct-hashed and BROADCAST — eval
   * suites are tiny (thousands of documents) next to a 100 TB corpus, so the
   * candidate side streams map-side through a broadcast hash join with no
-  * shuffle of the corpus at all. Per-document gram arrays come from the
+  * shuffle of the corpus at all. At most 4000 candidates against at most
+  * 4000 benchmark documents are scored on the driver after two collect
+  * jobs instead ([[contamination]]). Per-document gram arrays come from the
   * native `WordShingles` kernel and each gram is hashed by the codegen'd
   * `StableHash` (no UDFs, no lambdas); only (doc_id, gram_hash) longs ever
   * leave the scan, never text. If the benchmark outgrows broadcast,
@@ -43,6 +51,30 @@ object Decontaminate {
     * broadcast LEFT join against the benchmark gram set, and n_grams /
     * n_contaminated fall out of the same aggregation (count vs count of
     * the hit marker) — no second scan, no per-doc re-join.
+    *
+    * Small inputs run on the driver: at most [[DriverMaxCandidates]]
+    * candidates with integral, non-null, distinct ids and at most
+    * [[DriverMaxBenchmark]] benchmark documents, each read in at most as
+    * many partitions as the session has cores. Two jobs with no shuffle
+    * ([[BoundedCollect]]) collect the candidates' (id, gram array) first,
+    * because at scale they are the side over its cutoff, and then the
+    * benchmark's gram arrays, both from the native shingle kernel. The
+    * driver hashes the benchmark grams with the [[graft.functions.StableHash]]
+    * kernel (suffix `#seed`) into a sorted set. For each candidate it counts
+    * its grams (0 for null text) and those whose hash is in the set:
+    * hashes, not strings, as the Spark plan's join compares them. The ratio
+    * and the flag follow the Spark plan's rule. The result is a local frame
+    * with the Spark plan's schema and rows. The Spark plan runs on a null
+    * id (one group there), a duplicate id, a non-integral id type, or
+    * either side over its cutoff.
+    *
+    * Measured on 4 cores (median of 3 warm calls including the result
+    * collect), candidates read from parquet: 600 sf0.1 documents against 40
+    * benchmark documents take 0.095 s on the driver against 0.16 s through
+    * the Spark plan; 4000 against 40 take 0.23 s on both paths, and 4000
+    * against 4000 take 0.35 s against 0.48 s. The candidate cutoff sits
+    * where the driver's one-thread gram hashing stops being cheaper than
+    * the plan's parallel one.
     */
   def contamination(
       candidates: DataFrame,
@@ -51,7 +83,66 @@ object Decontaminate {
       textCol: String = "text",
       n: Int = 3,
       threshold: Double = 0.2,
-      seed: Int = 7): DataFrame = {
+      seed: Int = 7): DataFrame =
+    contamination(candidates, benchmark, idCol, textCol, n, threshold, seed,
+      DriverMaxCandidates, DriverMaxBenchmark)
+
+  /** Most candidate documents [[contamination]] scores on the driver. */
+  private[ext] val DriverMaxCandidates = 4000
+
+  /** Most benchmark documents [[contamination]] reads onto the driver. */
+  private[ext] val DriverMaxBenchmark = 4000
+
+  private[graft] def contamination(
+      candidates: DataFrame, benchmark: DataFrame, idCol: String, textCol: String,
+      n: Int, threshold: Double, seed: Int,
+      driverMaxCandidates: Int, driverMaxBenchmark: Int): DataFrame =
+    contaminationOnDriver(candidates, benchmark, idCol, textCol, n, threshold, seed,
+      driverMaxCandidates, driverMaxBenchmark)
+      .getOrElse(contaminationOnSpark(candidates, benchmark, idCol, textCol, n, threshold, seed))
+
+  private def contaminationOnDriver(
+      candidates: DataFrame, benchmark: DataFrame, idCol: String, textCol: String,
+      n: Int, threshold: Double, seed: Int,
+      maxCandidates: Int, maxBenchmark: Int): Option[DataFrame] = {
+    val id = candidates.select(col(idCol)).schema.head
+    if (maxCandidates < 1 || maxBenchmark < 1 || !Dedup.isIntegral(id.dataType)) return None
+    // the candidates first: at scale they are the side over its cutoff
+    val cands = BoundedCollect(candidates, maxCandidates, Set(0),
+      col(idCol).cast("long"), Dedup.shingles(col(textCol), n)).getOrElse(return None)
+    if (cands.length > maxCandidates || !BoundedCollect.distinctLongs(cands, 0)) return None
+    val bench = BoundedCollect(benchmark, maxBenchmark, Set.empty, Dedup.shingles(col(textCol), n))
+      .getOrElse(return None)
+    if (bench.length > maxBenchmark) return None
+    // grams compared by their stable hashes, as the Spark plan's join
+    // compares them; a null gram array (null text) has no grams
+    val md = StableHash.newDigest()
+    val suffix = s"#$seed".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    def hashes(r: InternalRow, ordinal: Int): Array[Long] =
+      if (r.isNullAt(ordinal)) Array.emptyLongArray
+      else {
+        val grams = r.getArray(ordinal)
+        Array.tabulate(grams.numElements())(i => StableHash.hash(md, grams.getUTF8String(i), suffix))
+      }
+    val benchHashes = bench.flatMap(hashes(_, 0))
+    java.util.Arrays.sort(benchHashes)
+    val out = Dedup.fromLong(id.dataType)
+    val rows = cands.map { r =>
+      val grams = hashes(r, 1)
+      val nContaminated = grams.count(java.util.Arrays.binarySearch(benchHashes, _) >= 0)
+      val ratio = if (grams.isEmpty) 0.0 else nContaminated.toDouble / grams.length.toDouble
+      Row(out(r.getLong(0)), grams.length.toLong, nContaminated.toLong, ratio, ratio >= threshold)
+    }
+    Some(candidates.sparkSession.createDataFrame(rows.toSeq.asJava, StructType(Seq(id,
+      StructField("n_grams", LongType, nullable = false),
+      StructField("n_contaminated", LongType, nullable = false),
+      StructField("contamination", DoubleType),
+      StructField("contaminated", BooleanType)))))
+  }
+
+  private def contaminationOnSpark(
+      candidates: DataFrame, benchmark: DataFrame, idCol: String, textCol: String,
+      n: Int, threshold: Double, seed: Int): DataFrame = {
     val bench = gramRows(benchmark, idCol, textCol, n, seed)
       .select(col("gh")).distinct()
       .withColumn("__hit", lit(1))

@@ -1,5 +1,6 @@
 package graft.ext
 
+import org.apache.commons.codec.digest.DigestUtils
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,7 +18,9 @@ import scala.jdk.CollectionConverters._
   *   - exact dedup shuffles a 16-byte digest, never the document text;
   *   - MinHash shuffles (doc, band) keys — H·|docs| small rows — and only
   *     brute-forces WITHIN an LSH bucket (shingle→minhash→band→bucket-join,
-  *     the standard shuffle-light near-dup layout);
+  *     the standard shuffle-light near-dup layout); a corpus of at most 4000
+  *     documents runs the same buckets and verify on the driver after one
+  *     collect job ([[nearDuplicates]]);
   *   - all hashing is md5-prefix based, so signatures are reproducible in
   *     any engine (portable oracle), at ~2-3× xxHash64's per-row cost: on
   *     one core of a 4-vCPU Xeon host, hashing 2M short strings from a
@@ -361,14 +364,124 @@ object Dedup {
 
   /** MinHash near-dup end to end: LSH candidates verified by exact Jaccard.
     * At scale the verify join touches only candidate pairs.
+    *
+    * Small corpora run on the driver: at most [[DriverNearDupMaxDocs]]
+    * documents with integral ids, read in at most as many partitions as the
+    * session has cores. One job with no shuffle ([[BoundedCollect]])
+    * collects each document's (id, 3-shingle array), so the shingles still
+    * come from the native kernel. The driver interns the shingles, hashes
+    * each once with the [[StableHash]] kernel (seed 0, then mod [[HashP]]),
+    * takes the 16 universal-hash minimums, keys each band of 4 by (band,
+    * md5 of "m0|m1|m2|m3") as [[lshBuckets]] does, and verifies the
+    * distinct pairs id_a < id_b that share a bucket by exact shingle
+    * Jaccard. The result is a local frame with the Spark plan's schema and
+    * rows, so collecting it starts no job. As in the Spark plan, a null id
+    * or null text pairs with nothing. The Spark plan runs unchanged on more
+    * documents than the cutoff, a non-integral id type, a duplicate id, or
+    * a candidate mass Σ C(|bucket|, 2) above [[DriverNearDupMaxMass]],
+    * counted before any verify.
+    *
+    * Measured on 4 cores (median of 3 warm calls including the result
+    * collect): the first 4000 sf0.1 documents (52 shingles each on average,
+    * 159 pairs) take 0.20 s on the driver against 0.52 s through the Spark
+    * plan when read from parquet, and 0.33 s against 0.92 s from one
+    * checkpointed partition; 600 of them take 0.08 s against 0.35 s. The
+    * worst case is a closed vocabulary of copies, where every band of every
+    * document shares one bucket: 724 identical documents (mass 1.05M, 262k
+    * pairs) take 0.57 s on the driver against 4.9 s, and 1024 (mass 2.1M)
+    * take 1.7 s. The mass cutoff holds that case near half a second.
     */
   def nearDuplicates(
       docs: DataFrame,
       textCol: String = "text",
       idCol: String = "doc_id",
-      minJaccard: Double = 0.7): DataFrame = {
-    val cand = minhashCandidates(docs, textCol, idCol)
-    ngramJaccard(docs, textCol, idCol, 3, minJaccard, Some(cand))
+      minJaccard: Double = 0.7): DataFrame =
+    nearDuplicates(docs, textCol, idCol, minJaccard, DriverNearDupMaxDocs, DriverNearDupMaxMass)
+
+  /** Most documents [[nearDuplicates]] verifies on the driver. */
+  private[ext] val DriverNearDupMaxDocs = 4000
+
+  /** Most candidate mass, Σ C(|bucket|, 2), [[nearDuplicates]] verifies on
+    * the driver.
+    */
+  private[ext] val DriverNearDupMaxMass = 1L << 20
+
+  private[graft] def nearDuplicates(
+      docs: DataFrame, textCol: String, idCol: String, minJaccard: Double,
+      driverMaxDocs: Int, driverMaxMass: Long): DataFrame =
+    nearDuplicatesOnDriver(docs, textCol, idCol, minJaccard, driverMaxDocs, driverMaxMass)
+      .getOrElse(ngramJaccard(docs, textCol, idCol, 3, minJaccard,
+        Some(minhashCandidates(docs, textCol, idCol))))
+
+  /** [[nearDuplicates]] with [[minhashCandidates]]' defaults (16 hashes in
+    * 4 bands of 4 rows, word 3-shingles) on the driver.
+    */
+  private def nearDuplicatesOnDriver(
+      docs: DataFrame, textCol: String, idCol: String, minJaccard: Double,
+      maxDocs: Int, maxMass: Long): Option[DataFrame] = {
+    import scala.collection.mutable
+    val id = docs.select(col(idCol)).schema.head
+    if (maxDocs < 1 || !isIntegral(id.dataType)) return None
+    val rows = BoundedCollect(docs, maxDocs, Set.empty, col(idCol).cast("long"), shingles(col(textCol), 3))
+      .getOrElse(return None)
+    if (rows.length > maxDocs || !BoundedCollect.distinctLongs(rows, 0)) return None
+    // a null id or a null or empty shingle array (null text) pairs with
+    // nothing
+    val live = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1) && r.getArray(1).numElements() > 0)
+    val docId = live.map(_.getLong(0))
+    // shingles interned as Ints, each hashed once as minhashSignatures
+    // hashes it: the seed-0 stable hash mod HashP
+    val (sets, distinct) = BoundedCollect.intern(live, 1)
+    sets.foreach(java.util.Arrays.sort)
+    val md = StableHash.newDigest()
+    val seed0 = "#0".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val hb = distinct.map(StableHash.hash(md, _, seed0) % HashP)
+    // each document's bands keyed as lshBuckets keys them:
+    // (band, md5 of "m0|m1|m2|m3")
+    val buckets = mutable.HashMap.empty[(Int, String), mutable.ArrayBuffer[Int]]
+    val sig = new Array[Long](16)
+    sets.indices.foreach { d =>
+      sig.indices.foreach { i =>
+        val (a, b) = (hashCoeffA(i), hashCoeffB(i))
+        var m = Long.MaxValue
+        sets(d).foreach(t => m = math.min(m, (hb(t) * a + b) % HashP))
+        sig(i) = m
+      }
+      (0 until 4).foreach { band =>
+        val key = DigestUtils.md5Hex(sig.slice(4 * band, 4 * band + 4).mkString("|"))
+        buckets.getOrElseUpdate((band, key), mutable.ArrayBuffer.empty) += d
+      }
+    }
+    if (buckets.valuesIterator.map(m => m.length.toLong * (m.length - 1) / 2).sum > maxMass) return None
+    // the candidate pairs as (lower id's index) · n + other index, sorted
+    // so that a pair sharing several buckets is verified once
+    val n = sets.length.toLong
+    val codes = new mutable.ArrayBuilder.ofLong
+    buckets.valuesIterator.foreach { m =>
+      for (i <- m.indices; j <- i + 1 until m.length) {
+        val (x, y) = if (docId(m(i)) < docId(m(j))) (m(i), m(j)) else (m(j), m(i))
+        codes += x * n + y
+      }
+    }
+    val cand = codes.result()
+    java.util.Arrays.sort(cand)
+    val out = fromLong(id.dataType)
+    // the Spark plan's counts are sizes of shingle arrays, null where the
+    // session's size(null) is null and the text is nullable
+    val counted = docs.select(size(shingles(col(textCol), 3))).schema.head.nullable
+    val pairs = cand.indices.iterator.filter(i => i == 0 || cand(i) != cand(i - 1)).map(cand).flatMap { c =>
+      val (a, b) = ((c / n).toInt, (c % n).toInt)
+      val common = FuzzyJoin.intersectionSize(sets(a), sets(b))
+      val (na, nb) = (sets(a).length, sets(b).length)
+      val jaccard = common.toDouble / (na + nb - common)
+      if (jaccard >= minJaccard)
+        Some(Row(out(docId(a)), out(docId(b)), common.toLong, na.toLong, nb.toLong, jaccard))
+      else None
+    }.toSeq
+    Some(docs.sparkSession.createDataFrame(pairs.asJava, StructType(
+      Seq(id.copy(name = "id_a"), id.copy(name = "id_b")) ++
+        Seq("common", "n_a", "n_b").map(StructField(_, LongType, counted)) :+
+        StructField("jaccard", DoubleType))))
   }
 
   /** Cross-source duplication matrix: near-duplicate pair counts grouped by

@@ -3,7 +3,6 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
 
@@ -252,23 +251,14 @@ object FuzzyJoin {
     if (maxDocs < 1 || !Dedup.isIntegral(id.dataType)) return None
     val rows = BoundedCollect(docs, maxDocs, Set.empty, col(idCol).cast("long"), elems)
       .getOrElse(return None)
-    val ids = rows.filterNot(_.isNullAt(0)).map(_.getLong(0)).sorted
-    if (rows.length > maxDocs || (1 until ids.length).exists(i => ids(i) == ids(i - 1))) return None
+    if (rows.length > maxDocs || !BoundedCollect.distinctLongs(rows, 0)) return None
     // a null or empty element array joins nothing; both element spaces are
     // distinct arrays of non-null strings
     val withElems = rows.filter(r => !r.isNullAt(1) && r.getArray(1).numElements() > 0)
     // elements interned as Ints, then renumbered in the Spark plan's rarity
     // order: document frequency (over every document, a null id's too)
     // ascending, then the element's bytes
-    val names = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
-    val interned = scala.collection.mutable.HashMap.empty[UTF8String, Int]
-    val tokens = withElems.map { r =>
-      val es = r.getArray(1)
-      Array.tabulate(es.numElements()) { i =>
-        val e = es.getUTF8String(i)
-        interned.getOrElseUpdate(e, { names += e; names.length - 1 })
-      }
-    }
+    val (tokens, names) = BoundedCollect.intern(withElems, 1)
     val dfreq = new Array[Int](names.length)
     tokens.foreach(_.foreach(t => dfreq(t) += 1))
     val rank = new Array[Int](names.length)
@@ -343,7 +333,7 @@ object FuzzyJoin {
   }
 
   /** |a ∩ b| of two ascending arrays of distinct Ints. */
-  private def intersectionSize(a: Array[Int], b: Array[Int]): Int = {
+  private[ext] def intersectionSize(a: Array[Int], b: Array[Int]): Int = {
     var i = 0
     var j = 0
     var n = 0

@@ -78,7 +78,10 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q38: near-dup verify never joins the global shingle stream") {
-    val p = plan("q38_near_dups")
+    // q38's operator through its Spark plan, which a small input would skip
+    val p = graft.ext.Dedup.nearDuplicates(Tables.documents(spark, sf0001), "text", "doc_id", 0.5, -1, 0L)
+      .queryExecution.explainString(FormattedMode)
+    assert(p.contains("band_hash"), "the Spark plan, not the driver path")
     // candidate generation joins on (band_idx, band_hash); the verify join is
     // on candidate pair ids + shingle ARRAYS. A join keyed on an exploded
     // `shingle` column would be the quadratic all-pairs path coming back.
@@ -425,7 +428,8 @@ class PlanSpec extends SparkSpec {
     }
     val docs = Tables.documents(spark, sf0001)
     val bench = docs.where(col("doc_id") % 5 === 0)
-    assert(interpreted(Decontaminate.contamination(docs, bench)).isEmpty)
+    // the Spark plan, which a small input would skip
+    assert(interpreted(Decontaminate.contamination(docs, bench, "doc_id", "text", 3, 0.2, 7, -1, -1)).isEmpty)
     assert(interpreted(Dedup.minhashSignatures(docs)).isEmpty)
   }
 

@@ -1,7 +1,11 @@
 package graft.ext
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
 
 class DedupSpec extends SparkSpec {
 
@@ -22,12 +26,91 @@ class DedupSpec extends SparkSpec {
     assert(dup.getAs[Long]("keep_id") === 0L)
   }
 
+  /** [[Dedup.nearDuplicates]] through its Spark plan, whatever the input. */
+  private def nearDupsOnSpark(df: DataFrame, minJaccard: Double) =
+    Dedup.nearDuplicates(df, "text", "doc_id", minJaccard, -1, 0L)
+
   test("minhash-LSH finds near-duplicates and skips unrelated docs") {
-    val pairs = Dedup.nearDuplicates(docs, minJaccard = 0.5)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((0L, 4L))) // identical
-    assert(pairs.contains((0L, 1L)) || pairs.contains((1L, 4L))) // near-dup
-    assert(!pairs.exists { case (a, b) => Set(a, b).contains(2L) && Set(a, b).contains(3L) })
+    val local = Dedup.nearDuplicates(docs, minJaccard = 0.5)
+    assert(local.isLocal, "expected the driver path")
+    Seq(local, nearDupsOnSpark(docs, 0.5)).foreach { out =>
+      val pairs = out.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(pairs.contains((0L, 4L))) // identical
+      assert(pairs.contains((0L, 1L)) || pairs.contains((1L, 4L))) // near-dup
+      assert(!pairs.exists { case (a, b) => Set(a, b).contains(2L) && Set(a, b).contains(3L) })
+    }
+  }
+
+  test("nearDuplicates: the driver path equals the Spark plan on random corpora") {
+    // ids of both integral types, nullable and non-null id and text fields,
+    // a null id, null and empty text, exact copies and copies with one word
+    // changed
+    def corpus(seed: Int) = {
+      val rnd = new scala.util.Random(seed)
+      val vocab = Vector.tabulate(Seq(6, 20, 80)(seed % 3))(i => s"w$i")
+      val n = 1 + rnd.nextInt(40)
+      val ids = rnd.shuffle((0L until 300L).toList).take(n)
+      val texts = Seq.fill(n)(rnd.nextInt(12) match {
+        case 0 => None
+        case 1 => Some("")
+        case 2 => Some("w1 w2")
+        case _ => Some(Seq.fill(1 + rnd.nextInt(16))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+      })
+      val copies = texts.map(t => rnd.nextInt(4) match {
+        case 0 => texts(rnd.nextInt(n))
+        case 1 => texts(rnd.nextInt(n)).map(_.split(" ", -1).updated(0, "edited").mkString(" "))
+        case _ => t
+      })
+      val intIds = seed % 2 == 0
+      val rows = ids.zip(copies).zipWithIndex.map { case ((id, t), i) =>
+        Row(if (i == 0 && seed % 3 == 0) null else if (intIds) id.toInt else id,
+          if (seed % 5 == 2) t.getOrElse("") else t.orNull)
+      }
+      spark.createDataFrame(rows.asJava, StructType(Seq(
+        StructField("doc_id", if (intIds) IntegerType else LongType, nullable = seed % 3 == 0 || seed % 4 == 1),
+        StructField("text", StringType, nullable = seed % 5 != 2))))
+    }
+    def outcome(df: DataFrame) = (df.schema, df.collect().map(_.toString).sorted.toSeq)
+    var pairs = 0
+    for (seed <- 0 until 24) {
+      val docs = corpus(seed)
+      val minJaccard = Seq(0.3, 0.5, 0.7, 1.0)(seed / 2 % 4)
+      var local: DataFrame = null
+      val jobs = startedBy { local = Dedup.nearDuplicates(docs, minJaccard = minJaccard) }
+        .count(_._1 == "job")
+      val case_ = s"corpus $seed (jaccard >= $minJaccard): ${docs.collect().mkString(", ")}"
+      assert(local.isLocal, case_)
+      assert(jobs <= 1, case_)
+      val got = outcome(local)
+      assert(got === outcome(nearDupsOnSpark(docs, minJaccard)), case_)
+      pairs += got._2.length
+    }
+    assert(pairs > 24, "the corpora must produce pairs")
+  }
+
+  test("nearDuplicates: duplicate ids, string ids and inputs over a cutoff run the Spark plan") {
+    import spark.implicits._
+    def run(df: DataFrame, maxDocs: Int = Dedup.DriverNearDupMaxDocs,
+        maxMass: Long = Dedup.DriverNearDupMaxMass) =
+      Dedup.nearDuplicates(df, "text", "doc_id", 0.5, maxDocs, maxMass)
+    val expected = nearDupsOnSpark(docs, 0.5).collect().map(_.toString).sorted.toSeq
+    assert(expected.length === 3)
+    val clean = run(docs)
+    assert(clean.isLocal)
+    assert(clean.collect().map(_.toString).sorted.toSeq === expected)
+    // a closed vocabulary of copies: every pair shares every bucket
+    val copies = (1 to 40).map(i => (i.toLong, "a b c d e")).toDF("doc_id", "text")
+    assert(run(copies).isLocal)
+    val fallbacks = Seq(
+      "duplicate id" -> run(docs.union(Seq((2L, "q r")).toDF("doc_id", "text"))),
+      "string ids" -> run(docs.withColumn("doc_id", $"doc_id".cast("string"))),
+      "more documents than the cutoff" -> run(docs, maxDocs = 4),
+      "more candidate mass than the cutoff" -> run(copies, maxMass = 40L * 39 / 2 * 4 - 1),
+      "more partitions than cores" -> run(docs.repartition(spark.sparkContext.defaultParallelism + 1)))
+    fallbacks.foreach { case (why, out) => assert(!out.isLocal, why) }
+    assert(fallbacks(1)._2.select("id_a", "id_b").collect().map(r => (r.getString(0), r.getString(1)))
+      .toSet === Set(("0", "1"), ("0", "4"), ("1", "4")))
+    assert(fallbacks(3)._2.count() === 40L * 39 / 2)
   }
 
   test("ngram jaccard is 1.0 for identical docs, 0 for disjoint") {

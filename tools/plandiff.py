@@ -10,10 +10,18 @@ Ids that differ between two JVMs are masked before comparing: expression
 ids (#123), exchange plan ids (plan_id=12), RDD ids (MapPartitionsRDD[45]),
 source line numbers (Spread.scala:92) and the numbers of lambda variable
 names (lambda x_9#123 reads lambda x_N#N), which a JVM-wide counter hands
-out in planning order. Prints each query whose masked
-plans differ (with a unified diff of the masked plans under --diff), each
-query present on one side only, and a summary line. Exits 1 when any plan
-differs or is missing, else 0.
+out in planning order.
+
+A plan with a distinct-aggregate Expand (several count(DISTINCT ...) in one
+aggregate) numbers its distinct groups (gid) in an order that depends on
+what the JVM planned before it: the Expand projections, the grouping keys
+and the aggregate functions that follow come out permuted. In such a plan
+the gid literals are masked, and the items of every (...) and [...] list
+are compared as a sorted list.
+
+Prints each query whose masked plans differ (with a unified diff of the
+masked plans under --diff), each query present on one side only, and a
+summary line. Exits 1 when any plan differs or is missing, else 0.
 """
 import argparse
 import difflib
@@ -30,9 +38,92 @@ MASKS = [
 ]
 
 
+GID_FILTER = re.compile(r"(gid#N = )\d+")
+NODE = re.compile(r"^\(\d+\) (\w+)")
+CLOSE = {"(": ")", "[": "]"}
+
+
+def sort_lists(line):
+    """line with the items of every (...) and [...] list sorted, innermost
+    first; raises ValueError on unbalanced brackets."""
+    def group(i, close):
+        items, cur = [], []
+        while i < len(line):
+            c = line[i]
+            if c in CLOSE:
+                inner, i = group(i + 1, CLOSE[c])
+                cur.append(c + inner + CLOSE[c])
+                continue
+            if c == close:
+                items.append("".join(cur).strip())
+                return ", ".join(sorted(items)), i + 1
+            if c in ")]":
+                raise ValueError(line)
+            if c == "," and close:
+                items.append("".join(cur).strip())
+                cur = []
+            else:
+                cur.append(c)
+            i += 1
+        if close:
+            raise ValueError(line)
+        return "".join(cur), i
+    return group(0, None)[0]
+
+
+def items(text):
+    """The items of a comma-separated list, split outside brackets."""
+    out, cur, depth = [], [], 0
+    for c in text:
+        depth += (c in "([") - (c in ")]")
+        if c == "," and depth == 0:
+            out.append("".join(cur).strip())
+            cur = []
+        else:
+            cur.append(c)
+    return out + ["".join(cur).strip()]
+
+
+def mask_expand_gid(line):
+    """An Expand's `Arguments: [projections], [output]` line with the gid
+    literal of every projection masked."""
+    head, sep, body = line.partition("Arguments: ")
+    groups = items(body)
+    if not sep or len(groups) != 2:
+        return line
+    outs = items(groups[1][1:-1])
+    gid = [i for i, o in enumerate(outs) if o.startswith("gid#")]
+    projs = [items(p[1:-1]) for p in items(groups[0][1:-1])]
+    if len(gid) != 1 or any(len(p) != len(outs) for p in projs):
+        return line
+    for p in projs:
+        p[gid[0]] = "K"
+    return head + sep + "[" + ", ".join("[" + ", ".join(p) + "]" for p in projs) + "], " + groups[1] + "\n"
+
+
+def canonical_gids(text):
+    """A plan with a distinct-aggregate Expand, with its gid order removed."""
+    out, node = [], None
+    for line in text.splitlines(keepends=True):
+        m = NODE.match(line)
+        if m:
+            node = m.group(1)
+        line = GID_FILTER.sub(r"\1K", line)
+        if node == "Expand":
+            line = mask_expand_gid(line)
+        try:
+            line = sort_lists(line)
+        except ValueError:
+            pass
+        out.append(line)
+    return "".join(out)
+
+
 def mask(text):
     for pattern, repl in MASKS:
         text = pattern.sub(repl, text)
+    if "gid#N" in text and "Expand" in text:
+        text = canonical_gids(text)
     return text
 
 
