@@ -73,10 +73,8 @@ class GraftEngine(
     * adjustment, keeping edges that survive the threshold on ADJUSTED
     * confidence (enhanced_relationship_detector.py:137-251).
     */
-  def enhancedRelationships(sampleFraction: Double = 1.0): DataFrame =
-    memo("enhanced", sampleFraction, rowsRead) {
-      enhancedRelationshipsUncached(sampleFraction, Map.empty)
-    }
+  def enhancedRelationships(): DataFrame =
+    memo("enhanced", rowsRead)(enhancedRelationshipsUncached(Map.empty))
 
   /** Per-table adaptive sampling fractions (A10→S6): Cochran sample size
     * over each table's FOOTER row count — metadata only, no data scan. A
@@ -89,12 +87,12 @@ class GraftEngine(
 
   /** Enhanced path with the reference's adaptive sampling
     * (data_relationship_tester.py:328-358): every tested table samples at
-    * its own Cochran fraction instead of one global knob.
+    * its own Cochran fraction instead of the `dataTestSampleSize` one.
     */
   def enhancedRelationshipsAdaptive(
       confidenceLevel: Double = 0.95, marginOfError: Double = 0.05): DataFrame =
     memo("enhancedAdaptive", confidenceLevel, marginOfError, rowsRead) {
-      enhancedRelationshipsUncached(1.0, adaptiveSampleFractions(confidenceLevel, marginOfError))
+      enhancedRelationshipsUncached(adaptiveSampleFractions(confidenceLevel, marginOfError))
     }
 
   /** The uncached enhanced pipeline; `enhancedRelationships` memoizes it per
@@ -102,8 +100,7 @@ class GraftEngine(
     * exactly this per-pair data-test outcome (relationship_cache.py:69-96,
     * 24 h TTL; cross-run persistence is `state.RelationshipCache`).
     */
-  private def enhancedRelationshipsUncached(
-      sampleFraction: Double, sampleFractions: Map[String, Double]): DataFrame = {
+  private def enhancedRelationshipsUncached(sampleFractions: Map[String, Double]): DataFrame = {
     // DataTestingConfig.enabled gate (enhanced_relationship_detector.py:86):
     // testing off → the name-detected edges pass through untested.
     if (!cfg.dataTestEnabled) return relationships
@@ -120,9 +117,7 @@ class GraftEngine(
     val metrics = DataTester.testRelationships(
       spark, dir,
       edges.map(r => (r.sourceTable, r.sourceColumn, r.targetTable, r.targetColumn)),
-      sampleFraction = sampleFraction,
-      sampleFractions =
-        if (sampleFractions.nonEmpty) sampleFractions else sizeFractions)
+      if (sampleFractions.nonEmpty) sampleFractions else sizeFractions)
     val meta = org.apache.spark.sql.functions.broadcast(relationships.select(
       "source_table", "source_column", "target_table", "target_column",
       "confidence", "relationship_type", "detection_method", "is_custom"))

@@ -76,11 +76,7 @@ object KeyClassifier {
   private val TablePrefix = Pattern.compile("^(h_|dim_|l_|ref_|fact_|bridge_|tbl_|table_)")
 
   /** The catalog's columns, one per (table, leaf column), classified. */
-  def classify(tables: Seq[TableMeta], cfg: DetectionConfig): Seq[KeyColumn] =
-    classifyRefs(tables.flatMap(t => t.columns.map(c =>
-      ColumnRef(t.tableName, c.name, c.dataType, c.nullable, c.isArray, c.ordinal, t.numRows))), cfg)
-
-  private def classifyRefs(refs: Seq[ColumnRef], cfg: DetectionConfig): Seq[KeyColumn] = {
+  def classify(tables: Seq[TableMeta], cfg: DetectionConfig): Seq[KeyColumn] = {
     val prefix = Pattern.compile(cfg.prefixStripRegex)
     val suffix = Pattern.compile(cfg.keySuffixRegex)
     // Configured indicators (P6/P7) extend the built-in heuristics and are
@@ -94,6 +90,8 @@ object KeyClassifier {
     val classes = cfg.tablePatterns.map(tp => (lower(tp.prefix),
       compile(tp.pkPatterns.map(ConfigLoader.wildcardToRegex)),
       compile(tp.fkPatterns.map(ConfigLoader.wildcardToRegex))))
+    val refs = tables.flatMap(t => t.columns.map(c =>
+      ColumnRef(t.tableName, c.name, c.dataType, c.nullable, c.isArray, c.ordinal, t.numRows)))
     refs.map { c =>
       val name = lower(c.columnName)
       val table = lower(c.tableName)
@@ -136,14 +134,4 @@ object KeyClassifier {
       KeyColumn(r.getString(0), r.getString(1), r.getString(2), r.getBoolean(3),
         r.getBoolean(4), r.getInt(5), r.getLong(6), r.getString(7), r.getString(8),
         r.getString(9), r.getString(10), r.getBoolean(11), r.getBoolean(12)))
-
-  /** Annotate a column catalog (ColumnRef-shaped DataFrame) with base_name,
-    * key_stem, table_base, type_group, is_pk_candidate, is_fk_candidate.
-    */
-  def classify(cols: DataFrame, cfg: DetectionConfig = DetectionConfig()): DataFrame = {
-    val refs = cols.select("tableName", "columnName", "dataType", "nullable", "isArray",
-      "ordinal", "numRows").collect().toSeq.map(r => ColumnRef(r.getString(0), r.getString(1),
-      r.getString(2), r.getBoolean(3), r.getBoolean(4), r.getInt(5), r.getLong(6)))
-    frame(cols.sparkSession, classifyRefs(refs, cfg))
-  }
 }

@@ -31,8 +31,8 @@ case class TableMeta(
     numRows: Long,
     numBytes: Long)
 
-/** Flattened (table, column) row — the input row of key classification
-  * (`KeyClassifier.classify` over a ColumnRef-shaped frame).
+/** Flattened (table, column) row — one catalog column with its table's
+  * row count, the input row of key classification.
   */
 case class ColumnRef(
     tableName: String,
@@ -101,22 +101,6 @@ case class TablePattern(
     relTargetTables: Seq[String] = Nil,
     relType: String = RelationshipType.ManyToOne,
     relConfidence: Double = 0.8)
-
-/** Result of validating a relationship against actual data
-  * (reference DataTestResult, data_relationship_tester.py:15-24).
-  */
-case class DataTestResult(
-    sourceTable: String,
-    sourceColumn: String,
-    targetTable: String,
-    targetColumn: String,
-    referentialIntegrity: Double,
-    typeCompatibility: Double,
-    distributionSimilarity: Double,
-    overallConfidence: Double,
-    sampleSize: Long,
-    orphanCount: Long,
-    totalSourceRecords: Long)
 
 /** Detection tuning knobs (reference pattern_config.py:10-65 +
   * config/relationship_patterns.json defaults).

@@ -8,107 +8,16 @@ import org.apache.spark.sql.functions._
 
 /** Data-level relationship validation (SURVEY §2.4 A1-A4, A9-A10; §2.3
   * J9-J10) — the reference's DataRelationshipTester
-  * (data_relationship_tester.py:42-387) re-expressed as Spark jobs.
+  * (data_relationship_tester.py:42-387) re-expressed as one Spark plan over
+  * a whole edge set ([[testRelationships]]).
   *
   * Scale notes (SURVEY §7.4.4): the reference samples each endpoint with a
   * per-pair `LIMIT n` SQL query. A LIMIT at 100 TB reads one partition's
   * skew; we use `sample(fraction)` (uniform across partitions) or the full
   * column — and the distinct-before-join shrinks every shuffle to key
-  * cardinality. Exact distinct can be swapped for HLL
-  * (`approx_count_distinct`) above a cardinality threshold without changing
-  * the interface.
+  * cardinality.
   */
 object DataTester {
-
-  /** J9 — referential integrity: |distinct src ∩ distinct tgt| /
-    * |distinct src|, orphan values via anti-join
-    * (data_relationship_tester.py:153-177, 91).
-    */
-  def referentialIntegrity(
-      src: DataFrame, srcCol: String,
-      tgt: DataFrame, tgtCol: String): DataFrame = {
-    val s = src.select(col(srcCol).as("v")).where(col("v").isNotNull).distinct()
-    val t = tgt.select(col(tgtCol).as("v")).where(col("v").isNotNull).distinct()
-    val counts = s.join(t, Seq("v"), "left_semi").agg(count(lit(1)).as("matched"))
-      .crossJoin(s.agg(count(lit(1)).as("total_src")))
-    counts.select(
-      when(col("total_src") === 0, 0.0)
-        .otherwise(col("matched").cast("double") / col("total_src")).as("ri_ratio"),
-      (col("total_src") - col("matched")).as("orphan_values"),
-      col("total_src"))
-  }
-
-  /** J9 at scale — approximate referential integrity via HLL sketches
-    * (`approx_count_distinct`): no distinct shuffle at all, three partial
-    * aggregates; relative error ~2.3% at the default rsd 0.023. The scale
-    * path SURVEY §7.3 prescribes when exact distinct cardinality itself is
-    * the bottleneck (billions of keys).
-    */
-  def approxReferentialIntegrity(
-      src: DataFrame, srcCol: String,
-      tgt: DataFrame, tgtCol: String,
-      rsd: Double = 0.023): DataFrame = {
-    val s = src.select(col(srcCol).as("v")).where(col("v").isNotNull)
-    val t = tgt.select(col(tgtCol).as("v")).where(col("v").isNotNull)
-    val nSrc = s.agg(approx_count_distinct(col("v"), rsd).as("n_src"))
-    val nUnion = s.union(t).agg(approx_count_distinct(col("v"), rsd).as("n_union"))
-    val nTgt = t.agg(approx_count_distinct(col("v"), rsd).as("n_tgt"))
-    // |A∩B| = |A| + |B| − |A∪B| (inclusion-exclusion over sketch estimates)
-    nSrc.crossJoin(nTgt).crossJoin(nUnion)
-      .select(
-        least(greatest(
-          (col("n_src") + col("n_tgt") - col("n_union")).cast("double") / col("n_src"),
-          lit(0.0)), lit(1.0)).as("ri_ratio_approx"),
-        col("n_src"), col("n_tgt"), col("n_union"))
-  }
-
-  /** A1 — per-value relative frequency of one column. The total comes from a
-    * broadcast single-row aggregate, not a global window — no single-partition
-    * stage at scale.
-    */
-  def valueFrequency(df: DataFrame, c: String): DataFrame = {
-    val freq = df.select(col(c).as("v")).where(col("v").isNotNull)
-      .groupBy("v").agg(count(lit(1)).as("cnt"))
-    freq.crossJoin(broadcast(freq.agg(sum("cnt").as("total"))))
-      .select(col("v"), col("cnt"), (col("cnt").cast("double") / col("total")).as("p"))
-  }
-
-  /** J10 — distribution similarity: inner-join the two frequency tables on
-    * value; similarity = avg(1 − |p_src − p_tgt|) × common-value coverage
-    * (data_relationship_tester.py:243-284).
-    *
-    * Numerically order-independent: rather than summing per-value double
-    * deltas (whose result depends on partition order), the delta sum is the
-    * exact integer Σ|cntA·totB − cntB·totA| and the final similarity is a
-    * handful of double ops over exact integers — bit-identical on any
-    * cluster and in the DuckDB oracle.
-    */
-  def distributionSimilarity(
-      src: DataFrame, srcCol: String,
-      tgt: DataFrame, tgtCol: String): DataFrame = {
-    def freq(df: DataFrame, c: String) =
-      df.select(col(c).as("v")).where(col("v").isNotNull)
-        .groupBy("v").agg(count(lit(1)).as("cnt"))
-    val a = freq(src, srcCol)
-    val b = freq(tgt, tgtCol)
-    val ta = broadcast(a.agg(sum("cnt").as("tot_a"), count(lit(1)).as("n_src")))
-    val tb = broadcast(b.agg(sum("cnt").as("tot_b")))
-    a.join(b.withColumnRenamed("cnt", "cnt_b"), Seq("v"))
-      .crossJoin(ta).crossJoin(tb)
-      .agg(
-        sum(abs(col("cnt") * col("tot_b") - col("cnt_b") * col("tot_a"))).as("delta_sum"),
-        count(lit(1)).as("common"),
-        first("tot_a").as("tot_a"), first("tot_b").as("tot_b"),
-        first("n_src").as("n_src"))
-      .select(
-        when(col("common") === 0 || col("n_src") === 0, lit(0.0))
-          .otherwise(
-            (lit(1.0) - col("delta_sum").cast("double") /
-              (col("tot_a").cast("double") * col("tot_b").cast("double")) / col("common")) *
-              (col("common").cast("double") / col("n_src")))
-          .as("dist_similarity"),
-        col("common"), col("n_src"))
-  }
 
   /** A4 — weighted overall confidence: 0.5·RI + 0.3·type + 0.2·distribution,
     * clamped to [0,1] (data_relationship_tester.py:300-326).
@@ -206,8 +115,9 @@ object DataTester {
     * testing — the difference between one pass and thousands over every
     * endpoint on a cluster.
     *
-    * `sampleFraction < 1` samples every endpoint uniformly — the scale path
-    * replacing the reference's LIMIT-based sampling (partition-skew-free).
+    * A table with an entry in `sampleFractions` below 1 is sampled
+    * uniformly at that fraction — the scale path replacing the reference's
+    * LIMIT-based sampling (partition-skew-free).
     *
     * Numerics: counts and delta sums are exact integers; the few final
     * double ops are written in the same order as the DuckDB oracle, so
@@ -216,8 +126,6 @@ object DataTester {
   def testRelationships(
       spark: SparkSession, dir: String,
       edges: Seq[(String, String, String, String)],
-      typeCompatible: Boolean = true,
-      sampleFraction: Double = 1.0,
       sampleFractions: Map[String, Double] = Map.empty): DataFrame = {
     require(edges.nonEmpty, "testRelationships needs at least one edge")
     import spark.implicits._
@@ -239,12 +147,17 @@ object DataTester {
     // overlap for anyone bypassing it.
     val stacked = needed.map { case (t, cols0) =>
       val df0 = ParquetCatalog.read(spark, s"$dir/$t.parquet")
-      // per-table fraction (adaptive Cochran wiring) wins over the global one
-      val frac = sampleFractions.getOrElse(t, sampleFraction)
+      val frac = sampleFractions.getOrElse(t, 1.0)
       val df = if (frac < 1.0) df0.sample(frac, seed = 42) else df0
       import org.apache.spark.sql.types._
       val pairs = cols0.map { c =>
-        val canonical = df0.schema(c).dataType match {
+        // a dotted name is a nested field, as `col(c)` reads it; walking the
+        // schema costs no Catalyst analysis per column
+        val dataType = c.split('.').foldLeft(df0.schema: DataType) {
+          case (s: StructType, f) => s(f).dataType
+          case (_, f) => throw new IllegalArgumentException(s"$t.$c: no struct holds $f")
+        }
+        val canonical = dataType match {
           case ByteType | ShortType | IntegerType | LongType => col(c).cast("bigint")
           case StringType | BinaryType | BooleanType | DateType => col(c)
           case dt: TimestampType => col(c)
@@ -291,7 +204,9 @@ object DataTester {
         sum(when(both, abs(col("cnt_a") * col("tot_b") - col("cnt_b") * col("tot_a"))))
           .as("delta_sum"))
 
-    val tc = lit(if (typeCompatible) 1.0 else 0.0)
+    // the engine and q16 pass only edges whose endpoint type groups
+    // RelationshipDetector.validate has matched
+    val tc = lit(1.0)
     val base = edgeDf
       .join(perEdge, Seq("edge_id"), "left")
       .na.fill(0L, Seq("n_src", "common", "delta_sum", "tot_a", "tot_b"))
@@ -312,15 +227,4 @@ object DataTester {
       (col("n_src") - col("common")).as("orphan_values"),
       col("n_src").as("total_src"))
   }
-
-  /** Single-edge convenience wrapper over the batched plan. */
-  def testRelationship(
-      spark: SparkSession, dir: String,
-      sourceTable: String, sourceColumn: String,
-      targetTable: String, targetColumn: String,
-      typeCompatible: Boolean = true,
-      sampleFraction: Double = 1.0): DataFrame =
-    testRelationships(
-      spark, dir, Seq((sourceTable, sourceColumn, targetTable, targetColumn)),
-      typeCompatible, sampleFraction)
 }

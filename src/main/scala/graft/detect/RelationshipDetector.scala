@@ -304,21 +304,17 @@ object RelationshipDetector {
     filterTopK(resolveConflicts(validate(all, cols)), cfg)
   }
 
-  // Frame wrappers: `cols` must be a KeyClassifier.classify output.
+  // Frame wrappers: `cols` must be a KeyClassifier.frame output. `detect`
+  // serves q15; the rest serve perfbench's candidate check
+  // (ColdPipeline.candidates).
   def exactBaseMatch(cols: DataFrame, cfg: DetectionConfig = DetectionConfig()): DataFrame =
     lift(cols)(exactBaseMatch(_, cfg))
   def suffixTableMatch(cols: DataFrame, cfg: DetectionConfig = DetectionConfig()): DataFrame =
     lift(cols)(suffixTableMatch(_, cfg))
   def dataVaultMatch(cols: DataFrame, cfg: DetectionConfig = DetectionConfig()): DataFrame =
     lift(cols)(dataVaultMatch(_, cfg))
-  def tablePatternRuleMatch(cols: DataFrame, cfg: DetectionConfig): DataFrame =
-    lift(cols)(tablePatternRuleMatch(_, cfg))
   def enhancedPkFkMatch(cols: DataFrame, cfg: DetectionConfig = DetectionConfig()): DataFrame =
     lift(cols)(enhancedPkFkMatch(_, cfg))
-  def namingRuleMatch(cols: DataFrame, rules: Seq[NamingRule]): DataFrame =
-    lift(cols)(namingRuleMatch(_, rules))
-  def customRuleMatch(cols: DataFrame, rules: Seq[CustomRule]): DataFrame =
-    lift(cols)(customRuleMatch(_, rules))
   def typeCompatMatch(cols: DataFrame, cfg: DetectionConfig = DetectionConfig()): DataFrame =
     lift(cols)(typeCompatMatch(_, cfg))
   def validate(rels: DataFrame, cols: DataFrame): DataFrame =

@@ -52,6 +52,33 @@ class GraftEngineSpec extends SparkSpec {
     assert(out.count(_.getAs[Boolean]("data_validated")) >= 6)
   }
 
+  test("adaptive sampling: rows equal the adjusted data test at each table's Cochran fraction") {
+    import graft.datatest.DataTester
+    def expected(cl: Double, moe: Double) = {
+      val fractions = engine.tables.map(t =>
+        t.tableName -> DataTester.cochranFraction(t.numRows, cl, moe)).toMap
+      val ends = Seq("source_table", "source_column", "target_table", "target_column")
+      val edges = engine.relationships.select(ends.map(col): _*).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSeq
+      DataTester.adjustConfidence(
+        DataTester.testRelationships(spark, sf0001, edges, fractions)
+          .join(engine.relationships, ends), engine.cfg)
+        .filter(col("adjusted_confidence") >= engine.cfg.minConfidence)
+    }
+    def rows(df: org.apache.spark.sql.DataFrame, columns: Array[String]) =
+      df.select(columns.toSeq.map(col): _*).collect().toSet
+    val coarse = engine.enhancedRelationshipsAdaptive(0.95, 0.05)
+    val fine = engine.enhancedRelationshipsAdaptive(0.99, 0.01)
+    assert(rows(coarse, coarse.columns) === rows(expected(0.95, 0.05), coarse.columns))
+    assert(rows(fine, fine.columns) === rows(expected(0.99, 0.01), fine.columns))
+    // one memo entry per (confidence level, margin of error)
+    assert(engine.enhancedRelationshipsAdaptive(0.95, 0.05) eq coarse)
+    assert(!(fine eq coarse))
+    def sampled(df: org.apache.spark.sql.DataFrame) =
+      df.select("source_table", "total_src").collect().toSet
+    assert(sampled(fine) !== sampled(coarse), "the two margins sample the same rows")
+  }
+
   test("cache TTL binds: fresh cache serves edges, expired cache re-detects") {
     val path = Files.createTempDirectory("graft_ttl").toString + "/rels.parquet"
     val eng = new GraftEngine(

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{ColumnMeta, TableMeta}
+import graft.core.{ColumnMeta, Relationship, TableMeta}
 import graft.detect.RelationshipDetector
 import graft.state.IncrementalState
 import org.apache.spark.sql.Column
@@ -23,17 +23,10 @@ class PropertySpec extends SparkSpec {
     tgt <- Gen.oneOf("t1", "t2")
     conf <- Gen.choose(0.1, 1.0)
     method <- Gen.oneOf("exact_match", "foreign_key", "custom_rule")
-  } yield (src, col, tgt, "id", "many_to_one", conf, method, method == "custom_rule")
+  } yield Relationship(src, col, tgt, "id", "many_to_one", conf, method, method == "custom_rule")
 
   test("conflict resolution is order-independent (argmax, not first-wins)") {
-    import spark.implicits._
-    def resolve(rs: Seq[(String, String, String, String, String, Double, String, Boolean)]) =
-      RelationshipDetector.resolveConflicts(
-        rs.toDF("source_table", "source_column", "target_table", "target_column",
-          "relationship_type", "confidence", "detection_method", "is_custom"))
-        .collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3),
-          r.getDouble(5), r.getString(6))).toSet
+    def resolve(rs: Seq[Relationship]) = RelationshipDetector.resolveConflicts(rs).toSet
     samples(Gen.listOfN(12, relGen), 10).foreach { rels =>
       val rng = new scala.util.Random(42)
       assert(resolve(rels) === resolve(rng.shuffle(rels)))

@@ -1,23 +1,23 @@
 package graft.analyze
 
-import graft.SparkSpec
-import graft.core.ColumnRef
-import org.apache.spark.sql.functions.col
+import graft.core.{ColumnMeta, ColumnRef, DetectionConfig, TableMeta}
+import org.scalatest.funsuite.AnyFunSuite
 
 /** Fixtures from FIXTURES.md §1-2 (the reference's de-facto behavioral
   * spec: test_enhanced_features.py:123-142, test_config.py:22-29).
   */
-class KeyClassifierSpec extends SparkSpec {
+class KeyClassifierSpec extends AnyFunSuite {
+  import KeyClassifierSpec.tables
 
   private def refs(rows: (String, String, String)*): Seq[ColumnRef] =
     rows.zipWithIndex.map { case ((t, c, dt), i) =>
       ColumnRef(t, c, dt, nullable = true, isArray = false, ordinal = i, numRows = 100L)
     }
 
-  private def classify(rows: Seq[ColumnRef]) = {
-    import spark.implicits._
-    KeyClassifier.classify(spark.createDataset(rows).toDF()).cache()
-  }
+  private def classify(rows: Seq[ColumnRef], cfg: DetectionConfig = DetectionConfig()) =
+    KeyClassifier.classify(tables(rows), cfg)
+  private def pks(cols: Seq[KeyColumn]) = cols.filter(_.isPk).map(c => (c.tableName, c.columnName)).toSet
+  private def fks(cols: Seq[KeyColumn]) = cols.filter(_.isFk).map(c => (c.tableName, c.columnName)).toSet
 
   test("data-vault fixture: h_customer/dim_customer PKs detected") {
     val out = classify(refs(
@@ -27,20 +27,15 @@ class KeyClassifierSpec extends SparkSpec {
       ("dim_customer", "name", "string"),
       ("l_order", "customer_hk", "string"),
       ("l_order", "order_id", "string")))
-    val pks = out.filter(col("is_pk_candidate"))
-      .select("tableName", "columnName").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(pks.contains(("h_customer", "id")))
-    assert(pks.contains(("dim_customer", "customer_id")))
-    assert(pks.contains(("l_order", "order_id"))) // order_id stems l_order's base
-    val fks = out.filter(col("is_fk_candidate"))
-      .select("tableName", "columnName").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(fks.contains(("l_order", "customer_hk")))
-    assert(!fks.contains(("dim_customer", "name")))
+    assert(pks(out).contains(("h_customer", "id")))
+    assert(pks(out).contains(("dim_customer", "customer_id")))
+    assert(pks(out).contains(("l_order", "order_id"))) // order_id stems l_order's base
+    assert(fks(out).contains(("l_order", "customer_hk")))
+    assert(!fks(out).contains(("dim_customer", "name")))
   }
 
   test("wildcard indicators: customer_* PK and *_ref FK patterns extend the heuristics") {
-    import spark.implicits._
-    import graft.core.{ConfigLoader, DetectionConfig}
+    import graft.core.ConfigLoader
     val rows = refs(
       ("customer", "customer_code", "string"), // no built-in key suffix
       ("customer", "customer_name", "string"),
@@ -49,21 +44,15 @@ class KeyClassifierSpec extends SparkSpec {
     val cfg = DetectionConfig(
       pkIndicatorRegexes = Seq("customer_c*").map(ConfigLoader.wildcardToRegex),
       fkIndicatorRegexes = Seq("*_ref").map(ConfigLoader.wildcardToRegex))
-    val out = KeyClassifier.classify(spark.createDataset(rows).toDF(), cfg)
-    val pks = out.filter(col("is_pk_candidate"))
-      .select("columnName").collect().map(_.getString(0)).toSet
-    val fks = out.filter(col("is_fk_candidate"))
-      .select("columnName").collect().map(_.getString(0)).toSet
-    assert(pks === Set("customer_code"))
-    assert(fks === Set("buyer_ref"))
+    val out = classify(rows, cfg)
+    assert(pks(out) === Set(("customer", "customer_code")))
+    assert(fks(out) === Set(("orders", "buyer_ref")))
     // without indicators nothing here is key-flagged (regression guard)
-    val plain = KeyClassifier.classify(spark.createDataset(rows).toDF())
-    assert(plain.filter(col("is_pk_candidate") || col("is_fk_candidate")).count() === 0)
+    assert(!classify(rows).exists(c => c.isPk || c.isFk))
   }
 
   test("table_patterns: per-prefix PK/FK patterns fire only for matching tables") {
-    import spark.implicits._
-    import graft.core.{DetectionConfig, TablePattern}
+    import graft.core.TablePattern
     // `*_code` / `*_ref` are NOT built-in key suffixes, so nothing below is
     // flagged without config (guarded at the end); with table_patterns the
     // class prefix gates which tables gain the extra patterns
@@ -76,15 +65,10 @@ class KeyClassifierSpec extends SparkSpec {
     val cfg = DetectionConfig(tablePatterns = Seq(
       TablePattern("data_vault", "reference", "ref_", pkPatterns = Seq("*_code")),
       TablePattern("traditional_dw", "fact", "fact_", fkPatterns = Seq("*_ref"))))
-    val out = KeyClassifier.classify(spark.createDataset(rows).toDF(), cfg)
-    val pks = out.filter(col("is_pk_candidate"))
-      .select("tableName", "columnName").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val fks = out.filter(col("is_fk_candidate"))
-      .select("tableName", "columnName").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(pks === Set(("ref_region", "region_code")))
-    assert(fks === Set(("fact_sales", "customer_ref")))
-    val plain = KeyClassifier.classify(spark.createDataset(rows).toDF())
-    assert(plain.filter(col("is_pk_candidate") || col("is_fk_candidate")).count() === 0)
+    val out = classify(rows, cfg)
+    assert(pks(out) === Set(("ref_region", "region_code")))
+    assert(fks(out) === Set(("fact_sales", "customer_ref")))
+    assert(!classify(rows).exists(c => c.isPk || c.isFk))
   }
 
   test("e-commerce fixture: users.id PK, orders.customer_id FK") {
@@ -93,30 +77,39 @@ class KeyClassifierSpec extends SparkSpec {
       ("users", "name", "string"),
       ("orders", "id", "bigint"),
       ("orders", "customer_id", "bigint")))
-    assert(out.filter(col("is_pk_candidate")).count() === 2) // both `id`s
-    val fks = out.filter(col("is_fk_candidate"))
-      .select("columnName").collect().map(_.getString(0)).toSet
-    assert(fks === Set("customer_id"))
+    assert(pks(out) === Set(("users", "id"), ("orders", "id")))
+    assert(fks(out) === Set(("orders", "customer_id")))
   }
 
   test("REPEATED (array) columns are never key candidates") {
-    import spark.implicits._
-    val rows = Seq(
-      ColumnRef("t", "tag_ids", "bigint", nullable = true, isArray = true, 0, 10L))
-    val out = KeyClassifier.classify(spark.createDataset(rows).toDF())
-    assert(out.filter(col("is_pk_candidate") || col("is_fk_candidate")).count() === 0)
+    val out = classify(Seq(
+      ColumnRef("t", "tag_ids", "bigint", nullable = true, isArray = true, 0, 10L)))
+    assert(!out.exists(c => c.isPk || c.isFk))
   }
 
   test("non-key types are never key candidates") {
     val out = classify(refs(("t", "amount_id", "double")))
-    assert(out.filter(col("is_pk_candidate") || col("is_fk_candidate")).count() === 0)
+    assert(!out.exists(c => c.isPk || c.isFk))
   }
 
   test("TPC-H style prefixes: o_custkey bases to custkey, stems to cust") {
     val out = classify(refs(("orders", "o_custkey", "bigint")))
-    val r = out.select("base_name", "key_stem", "is_fk_candidate").collect().head
-    assert(r.getString(0) === "custkey")
-    assert(r.getString(1) === "cust")
-    assert(r.getBoolean(2))
+    val r = out.head
+    assert(r.baseName === "custkey")
+    assert(r.keyStem === "cust")
+    assert(r.isFk)
   }
+}
+
+object KeyClassifierSpec {
+  /** `refs` as catalog tables in first-appearance order, each with its
+    * first column's row count — the input [[KeyClassifier.classify]] takes.
+    */
+  def tables(refs: Seq[ColumnRef]): Seq[TableMeta] =
+    refs.map(_.tableName).distinct.map { t =>
+      val cols = refs.filter(_.tableName == t)
+      TableMeta(t, s"$t.parquet", "TABLE",
+        cols.map(c => ColumnMeta(c.columnName, c.dataType, c.nullable, c.isArray, c.ordinal)),
+        cols.head.numRows, 0L)
+    }
 }

@@ -1,23 +1,35 @@
 package graft.datatest
 
+import java.nio.file.Files
+
 import graft.SparkSpec
-import graft.core.DetectionConfig
-import org.apache.spark.sql.functions.{col, lit}
+import graft.core.{CustomRule, DetectionConfig}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, lit, struct}
 
 class DataTesterSpec extends SparkSpec {
 
-  test("referential integrity: full overlap is 1.0, orphans counted") {
+  /** A lake of one-column (`v`) tables in a fresh directory. */
+  private def lake(tables: (String, Seq[Int])*): String = {
     import spark.implicits._
-    val src = Seq(1, 2, 2, 3).toDF("fk")
-    val tgt = Seq(1, 2, 3, 4).toDF("pk")
-    val r = DataTester.referentialIntegrity(src, "fk", tgt, "pk").collect().head
-    assert(r.getAs[Double]("ri_ratio") === 1.0)
-    assert(r.getAs[Long]("orphan_values") === 0L)
+    val dir = Files.createTempDirectory("graft_dt").toString
+    tables.foreach { case (t, vs) => vs.toDF("v").write.parquet(s"$dir/$t.parquet") }
+    dir
+  }
 
-    val src2 = Seq(1, 5, 6).toDF("fk")
-    val r2 = DataTester.referentialIntegrity(src2, "fk", tgt, "pk").collect().head
-    assert(math.abs(r2.getAs[Double]("ri_ratio") - 1.0 / 3) < 1e-12)
-    assert(r2.getAs[Long]("orphan_values") === 2L)
+  /** `testRelationships` over `v` → `v` edges, one row per source table. */
+  private def tested(dir: String, edges: (String, String)*): Map[String, Row] =
+    DataTester.testRelationships(spark, dir, edges.map { case (s, t) => (s, "v", t, "v") })
+      .collect().map(r => r.getAs[String]("source_table") -> r).toMap
+
+  test("referential integrity: full overlap is 1.0, orphans counted") {
+    val dir = lake("src" -> Seq(1, 2, 2, 3), "src2" -> Seq(1, 5, 6), "tgt" -> Seq(1, 2, 3, 4))
+    val out = tested(dir, "src" -> "tgt", "src2" -> "tgt")
+    assert(out("src").getAs[Double]("ri_ratio") === 1.0)
+    assert(out("src").getAs[Long]("orphan_values") === 0L)
+    assert(out("src2").getAs[Double]("ri_ratio") === 1.0 / 3)
+    assert(out("src2").getAs[Long]("orphan_values") === 2L)
+    assert(out("src2").getAs[Long]("total_src") === 3L)
   }
 
   test("cross-width integral edges join: int fk against bigint pk scores RI 1.0") {
@@ -37,18 +49,17 @@ class DataTesterSpec extends SparkSpec {
   }
 
   test("distribution similarity: identical distributions score 1.0") {
-    import spark.implicits._
-    val a = Seq(1, 1, 2, 3).toDF("v")
-    val r = DataTester.distributionSimilarity(a, "v", a, "v").collect().head
-    assert(r.getAs[Double]("dist_similarity") === 1.0)
+    // a column against itself and against an equal copy
+    val dir = lake("a" -> Seq(1, 1, 2, 3), "b" -> Seq(3, 1, 2, 1))
+    val out = tested(dir, "a" -> "a", "b" -> "a")
+    assert(out("a").getAs[Double]("dist_similarity") === 1.0)
+    assert(out("b").getAs[Double]("dist_similarity") === 1.0)
   }
 
   test("distribution similarity: disjoint distributions score 0.0") {
-    import spark.implicits._
-    val a = Seq(1, 2).toDF("v")
-    val b = Seq(3, 4).toDF("v")
-    val r = DataTester.distributionSimilarity(a, "v", b, "v").collect().head
-    assert(r.getAs[Double]("dist_similarity") === 0.0)
+    val out = tested(lake("a" -> Seq(1, 2), "b" -> Seq(3, 4)), "a" -> "b")
+    assert(out("a").getAs[Double]("dist_similarity") === 0.0)
+    assert(out("a").getAs[Double]("ri_ratio") === 0.0)
   }
 
   test("overall confidence weights 0.5/0.3/0.2 and clamps to [0,1]") {
@@ -128,11 +139,25 @@ class DataTesterSpec extends SparkSpec {
   }
 
   test("negative fixture shape: low-coverage FK scores below threshold on distribution") {
-    import spark.implicits._
     // 2 of 10 target values covered: coverage drags similarity down.
-    val src = Seq(1, 1, 2, 2).toDF("v")
-    val tgt = (1 to 10).toDF("v")
-    val r = DataTester.distributionSimilarity(src, "v", tgt, "v").collect().head
-    assert(r.getAs[Double]("dist_similarity") < 0.7)
+    val out = tested(lake("src" -> Seq(1, 1, 2, 2), "tgt" -> (1 to 10)), "src" -> "tgt")
+    assert(out("src").getAs[Double]("dist_similarity") < 0.7)
+  }
+
+  test("a nested key (struct field) endpoint is data-tested in the onboarding") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_dtnested").toString
+    Seq(1L, 2L, 3L, 4L).toDF("c_custkey").write.parquet(s"$dir/customer.parquet")
+    Seq((10L, 1L), (11L, 2L), (12L, 2L), (13L, 9L)).toDF("o_orderkey", "k")
+      .select(col("o_orderkey"), struct(col("k").as("c_custkey"), lit("n").as("note")).as("ref"))
+      .write.parquet(s"$dir/orders.parquet")
+    val engine = new graft.GraftEngine(spark, dir,
+      customRules = Seq(CustomRule("orders", "ref.c_custkey", "customer", "c_custkey")))
+    val edge = engine.enhancedRelationships().collect()
+      .filter(_.getAs[String]("source_column") == "ref.c_custkey")
+    assert(edge.length === 1)
+    assert(edge.head.getAs[Double]("ri_ratio") === 2.0 / 3)
+    assert(edge.head.getAs[Long]("orphan_values") === 1L)
+    assert(edge.head.getAs[Long]("total_src") === 3L)
   }
 }

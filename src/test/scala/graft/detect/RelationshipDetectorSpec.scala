@@ -1,17 +1,16 @@
 package graft.detect
 
 import graft.SparkSpec
-import graft.analyze.KeyClassifier
-import graft.catalog.ParquetCatalog
-import graft.core.{ColumnRef, CustomRule, DetectionConfig, NamingRule}
+import graft.analyze.{KeyClassifier, KeyClassifierSpec}
+import graft.core.{ColumnRef, CustomRule, DetectionConfig, NamingRule, Relationship}
 import org.apache.spark.sql.functions.col
 
 class RelationshipDetectorSpec extends SparkSpec {
 
-  private def classified(rows: Seq[ColumnRef]) = {
-    import spark.implicits._
-    KeyClassifier.classify(spark.createDataset(rows).toDF())
-  }
+  private def keyColumns(rows: Seq[ColumnRef]) =
+    KeyClassifier.classify(KeyClassifierSpec.tables(rows), DetectionConfig())
+
+  private def classified(rows: Seq[ColumnRef]) = KeyClassifier.frame(spark, keyColumns(rows))
 
   private def refs(rows: (String, String, String)*): Seq[ColumnRef] =
     rows.zipWithIndex.map { case ((t, c, dt), i) =>
@@ -21,6 +20,9 @@ class RelationshipDetectorSpec extends SparkSpec {
   private def edges(df: org.apache.spark.sql.DataFrame): Set[(String, String, String, String)] =
     df.select("source_table", "source_column", "target_table", "target_column")
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSet
+
+  private def edges(rels: Seq[Relationship]): Set[(String, String, String, String)] =
+    rels.map(r => (r.sourceTable, r.sourceColumn, r.targetTable, r.targetColumn)).toSet
 
   test("end-to-end on sf0.001: the seven TPC-H edges + custom rule") {
     val cols = new graft.GraftEngine(spark, sf0001).classifiedColumns
@@ -50,7 +52,6 @@ class RelationshipDetectorSpec extends SparkSpec {
   }
 
   test("enhanced cascade: h_customer/dim_customer fixture emits enhanced_pk_fk at 0.9") {
-    import spark.implicits._
     // the reference's incremental-processor fixture (test_enhanced_features
     // .py:123-142); expected edge and labeling at :211-220
     val rows = Seq(
@@ -58,7 +59,7 @@ class RelationshipDetectorSpec extends SparkSpec {
       ColumnRef("h_customer", "business_key", "string", nullable = false, isArray = false, ordinal = 1, numRows = 10),
       ColumnRef("dim_customer", "customer_id", "string", nullable = false, isArray = false, ordinal = 0, numRows = 10),
       ColumnRef("dim_customer", "name", "string", nullable = true, isArray = false, ordinal = 1, numRows = 10))
-    val cols = KeyClassifier.classify(spark.createDataset(rows).toDF())
+    val cols = classified(rows)
     val out = RelationshipDetector
       .enhancedPkFkMatch(cols, DetectionConfig(enhancedTypeFallback = true)).collect()
     val hit = out.find(r =>
@@ -79,7 +80,7 @@ class RelationshipDetectorSpec extends SparkSpec {
 
   test("table-pattern rules: class prefix + target wildcard emit configured type/confidence") {
     import graft.core.TablePattern
-    val cols = classified(refs(
+    val cols = keyColumns(refs(
       ("fact_sales", "customer_id", "bigint"), // FK in the fact_ class
       ("stage_sales", "customer_id", "bigint"), // FK, but wrong prefix
       ("dim_customer", "customer_id", "bigint"), // target PK; dim_* matches
@@ -87,16 +88,9 @@ class RelationshipDetectorSpec extends SparkSpec {
     val cfg = DetectionConfig(tablePatterns = Seq(TablePattern(
       "traditional_dw", "fact", "fact_",
       relTargetTables = Seq("dim_*"), relType = "many_to_one", relConfidence = 0.85)))
-    val out = RelationshipDetector.tablePatternRuleMatch(cols, cfg).collect()
-    assert(out.length === 1)
-    val r = out.head
-    assert(r.getAs[String]("source_table") === "fact_sales")
-    assert(r.getAs[String]("source_column") === "customer_id")
-    assert(r.getAs[String]("target_table") === "dim_customer")
-    assert(r.getAs[String]("target_column") === "customer_id")
-    assert(r.getAs[String]("detection_method") === "table_pattern")
-    assert(r.getAs[String]("relationship_type") === "many_to_one")
-    assert(r.getAs[Double]("confidence") === 0.85)
+    assert(RelationshipDetector.tablePatternRuleMatch(cols, cfg) === Seq(Relationship(
+      "fact_sales", "customer_id", "dim_customer", "customer_id", "many_to_one", 0.85,
+      "table_pattern", isCustom = false)))
     // detect() only unions the strategy when a pattern carries rule targets.
     // At 0.85 the table_pattern edge loses conflict resolution to the 0.95
     // exact_match edge for the same pair (resolution keeps max confidence) —
@@ -104,17 +98,14 @@ class RelationshipDetectorSpec extends SparkSpec {
     val strongCfg = DetectionConfig(tablePatterns = Seq(TablePattern(
       "traditional_dw", "fact", "fact_",
       relTargetTables = Seq("dim_*"), relType = "many_to_one", relConfidence = 0.97)))
-    val viaDetect = RelationshipDetector.detect(cols, cfg = strongCfg)
-    val survived = viaDetect.filter(col("detection_method") === "table_pattern").collect()
-    assert(survived.length === 1)
-    assert(survived.head.getAs[Double]("confidence") === 0.97)
+    def detect(c: DetectionConfig) = RelationshipDetector.detect(cols, Nil, Nil, c)
+    val survived = detect(strongCfg).filter(_.detectionMethod == "table_pattern")
+    assert(survived.map(_.confidence) === Seq(0.97))
     // ...and at 0.85 resolution correctly prefers exact_match for that pair
-    val resolved = RelationshipDetector.detect(cols, cfg = cfg)
-      .filter(col("source_table") === "fact_sales" && col("source_column") === "customer_id")
-      .collect()
-    assert(resolved.map(_.getAs[String]("detection_method")).toSet === Set("exact_match"))
-    val noRules = RelationshipDetector.detect(cols)
-    assert(noRules.filter(col("detection_method") === "table_pattern").count() === 0)
+    val resolved = detect(cfg)
+      .filter(r => r.sourceTable == "fact_sales" && r.sourceColumn == "customer_id")
+    assert(resolved.map(_.detectionMethod).toSet === Set("exact_match"))
+    assert(!detect(DetectionConfig()).exists(_.detectionMethod == "table_pattern"))
   }
 
   test("confidence_scoring overrides change plan literals and resolve order") {
@@ -142,7 +133,7 @@ class RelationshipDetectorSpec extends SparkSpec {
   }
 
   test("naming rule: (.+)_id with suffix s resolves orders.customer_id") {
-    val cols = classified(refs(
+    val cols = keyColumns(refs(
       ("customers", "customer_id", "bigint"), // customers PK
       ("orders", "customer_id", "bigint"),
       ("orders", "order_id", "bigint")))

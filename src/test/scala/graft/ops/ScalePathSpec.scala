@@ -3,24 +3,12 @@ package graft.ops
 import java.nio.file.Files
 
 import graft.{SparkSpec, Tables}
-import graft.datatest.DataTester
 import org.apache.spark.sql.functions._
 
-/** Tests for the 100 TB paths: HLL approximate RI, bucketed co-located
+/** Tests for the 100 TB paths: bucketed co-located joins, capped candidate
   * joins, and the SQL surface.
   */
 class ScalePathSpec extends SparkSpec {
-
-  test("approx RI tracks exact RI within sketch error") {
-    val orders = Tables.orders(spark, sf0001)
-    val customer = Tables.customer(spark, sf0001)
-    val exact = DataTester.referentialIntegrity(orders, "o_custkey", customer, "c_custkey")
-      .head.getAs[Double]("ri_ratio")
-    val approx = DataTester
-      .approxReferentialIntegrity(orders, "o_custkey", customer, "c_custkey")
-      .head.getAs[Double]("ri_ratio_approx")
-    assert(math.abs(approx - exact) < 0.1, s"approx=$approx exact=$exact")
-  }
 
   test("bucketed tables join without a shuffle exchange") {
     val wh = Files.createTempDirectory("graft_wh").toString

@@ -1,8 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.functions.DistributionDelta
-import org.apache.spark.sql.functions._
 
 class SkewJoinSpec extends SparkSpec {
 
@@ -18,24 +16,5 @@ class SkewJoinSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(salted === plain)
     assert(salted.contains((1L, 10001L)))
-  }
-
-  test("distribution-delta aggregator matches DataTester on a joined frequency table") {
-    import spark.implicits._
-    val src = Seq(1, 1, 1, 2, 3).toDF("v")
-    val tgt = Seq(1, 2, 2, 4).toDF("v")
-    val expected = graft.datatest.DataTester
-      .distributionSimilarity(src, "v", tgt, "v")
-      .head.getAs[Double]("dist_similarity")
-
-    // outer-joined frequency tables -> one-pass aggregator
-    val fa = src.groupBy("v").agg(count(lit(1)).as("ca"))
-    val fb = tgt.groupBy("v").agg(count(lit(1)).as("cb"))
-    val joined = fa.join(fb, Seq("v"), "full_outer")
-      .select(coalesce($"ca", lit(0L)).as("cntSrc"), coalesce($"cb", lit(0L)).as("cntTgt"))
-      .as[DistributionDelta.In]
-    val got = joined.select(DistributionDelta.aggregator.toColumn).head()
-    assert(math.abs(got.distSimilarity - expected) < 1e-12)
-    assert(got.common === 2L) // values 1 and 2 shared
   }
 }
